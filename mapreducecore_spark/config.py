@@ -6,8 +6,9 @@ Reproduces MapReduceSpec (`mapreduce_spec.h:18-26`) and its
 
 - n_workers / worker_ipaddr_ports -> master URL & executor confs (the
   gRPC worker pool is Spark's scheduler now, SURVEY §2.C);
-- map_kilobytes (shard size, file_shard.h:35) -> spark.sql.files.maxPartitionBytes;
-- n_output_files (R) -> shuffle partition count for the output stage.
+- map_kilobytes (shard size, file_shard.h:35) -> spark.sql.files.maxPartitionBytes,
+  set by mapreduce.run for the job's duration;
+- n_output_files (R) -> the partition count of run_job's shuffle.
 """
 
 from __future__ import annotations
@@ -39,12 +40,6 @@ class JobSpec:
     @property
     def max_partition_bytes(self) -> int:
         return self.map_kilobytes * 1024
-
-    def spark_confs(self) -> dict[str, str]:
-        return {
-            "spark.sql.files.maxPartitionBytes": str(self.max_partition_bytes),
-            "spark.sql.shuffle.partitions": str(max(self.n_output_files, 1)),
-        }
 
 
 _LIST_KEYS = {"worker_ipaddr_ports", "input_files"}

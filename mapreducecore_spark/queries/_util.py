@@ -11,6 +11,7 @@ precision is the shared ground truth).
 from __future__ import annotations
 
 import os
+import time
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -290,6 +291,9 @@ def expanding(fn):
 _RECLAIM_MIN_BYTES = int(
     os.environ.get("SPARK_GRAFT_RECLAIM_MIN_BYTES", str(1 << 30))
 )
+# reclaim()'s settle-poll sleep. Tests replace this name, not the global
+# time.sleep, which py4j's gateway threads also call.
+_sleep = time.sleep
 
 
 def _own_blockmgr_dirs(spark) -> list[str] | None:
@@ -439,7 +443,6 @@ def reclaim(spark, settle_secs: float = 20.0) -> None:
     import gc
     import shutil
     import tempfile
-    import time
 
     gc.collect()
     spool = (
@@ -458,7 +461,7 @@ def reclaim(spark, settle_secs: float = 20.0) -> None:
     deadline = time.monotonic() + settle_secs
     stable = 0
     while stable < 2 and time.monotonic() < deadline:
-        time.sleep(0.5)
+        _sleep(0.5)
         now_free = shutil.disk_usage(spool).free
         stable = stable + 1 if now_free <= free else 0
         free = max(free, now_free)

@@ -53,10 +53,11 @@ _MR_ORACLE = f"""
 
 @register("mr_wordcount_contract", oracle=_MR_ORACLE)
 def mr_wordcount_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same workload through the generalized map/reduce contract layer
-    (mapreduce.py): flatMap -> repartitionAndSortWithinPartitions ->
-    streamed sorted reduce. Exercises the (str,str) API of
-    mr_task_factory.h:14-43 end to end."""
+    """Same workload through the map/reduce contract layer
+    (mapreduce.run_mapreduce, the pipeline run_job writes as text):
+    flatMap -> repartitionAndSortWithinPartitions -> streamed sorted
+    reduce. Exercises the (str,str) API of mr_task_factory.h:14-43 end
+    to end."""
     t = load_tables(spark, sf_dir)
     lines = t["documents"].select("text")
     return run_mapreduce(
@@ -82,12 +83,14 @@ _SINK_ORACLE = f"""
 @register("mr_sorted_partition_sink", oracle=_SINK_ORACLE)
 def mr_sorted_partition_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2 sink semantics (mr_tasks.h:109-121): R hash partitions, each
-    key-sorted (tests assert sortedness; the driver's sorted-row compare
-    verifies content + routing). Routed with md5_partitioner so the
-    partition_id column is itself oracle-checkable — the reference's
-    std::hash routing is implementation-defined, so S2's contract is
-    deterministic routing, not specific hash values; portable_hash stays
-    the contract-layer default (tests/test_mapreduce_contract.py)."""
+    key-sorted; partition_id is the output partition of run_job's
+    pipeline, whose part-0000i text file holds the same rows in the same
+    order (tests assert both; the driver's sorted-row compare verifies
+    content + routing). Routed with md5_partitioner so the partition_id
+    column is itself oracle-checkable — the reference's std::hash
+    routing is implementation-defined, so S2's contract is deterministic
+    routing, not specific hash values; portable_hash stays the
+    contract-layer default."""
     from mapreducecore_spark.mapreduce import md5_partitioner
 
     t = load_tables(spark, sf_dir)

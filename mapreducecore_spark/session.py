@@ -1,9 +1,10 @@
 """SparkSession factory with scale-oriented defaults.
 
 The reference's runtime knobs (`mapreduce_spec.h:18-26`: n_workers,
-map_kilobytes shard size, n_output_files R) map onto Spark confs:
-worker count -> master URL / executor confs, shard size ->
-spark.sql.files.maxPartitionBytes, R -> spark.sql.shuffle.partitions.
+map_kilobytes shard size, n_output_files R) map onto Spark: worker
+count -> master URL / executor confs, shard size ->
+spark.sql.files.maxPartitionBytes, R -> the partition count that
+mapreduce.run_job passes to its shuffle (no session conf).
 
 Settings are chosen for a large cluster and scale down fine to local[N]:
 AQE handles partition coalescing and skew joins at runtime, so a fixed

@@ -4,8 +4,6 @@ from mapreducecore_spark.sources.io import (  # noqa: F401
     read_csv,
     read_json,
     read_parquet,
-    read_text_lines,
-    sorted_partitioned_text_sink,
     write_csv,
     write_json,
     write_parquet,

@@ -1,10 +1,7 @@
-"""File sources and sinks.
-
-[REF] rows: text line scan (worker.h:89-103 — Spark's text source with
-maxPartitionBytes split sizing replaces the byte-range sharder
-file_shard.h:28-94, including newline alignment) and the sorted
-hash-partitioned text sink (mr_tasks.h:109-121). [EXT] rows: columnar
-Parquet/CSV/JSON for the relational surface.
+"""Columnar file sources and sinks: Parquet/CSV/JSON for the relational
+surface ([EXT] rows). The reference's text line scan and sorted
+hash-partitioned text sink (S1/S2) are mapreduce.run_job's input and
+output.
 
 All readers take explicit schemas where the format can't self-describe
 — schema inference is a scan of the whole input, unacceptable at scale.
@@ -15,18 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
-
-
-def read_text_lines(
-    spark: SparkSession, paths: list[str] | str, max_partition_bytes: int | None = None
-) -> DataFrame:
-    """S1: newline-delimited text -> DataFrame[value: string]. Split
-    sizing (the reference's map_kilobytes, file_shard.h:35) is
-    spark.sql.files.maxPartitionBytes; Spark's LineRecordReader handles
-    shard-spanning lines exactly like file_shard.h:73-86's alignment."""
-    if max_partition_bytes is not None:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(max_partition_bytes))
-    return spark.read.text(paths if isinstance(paths, list) else [paths])
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -58,28 +43,6 @@ def write_csv(df: DataFrame, path: str, mode: str = "overwrite", header: bool = 
 
 def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).json(path)
-
-
-def sorted_partitioned_text_sink(
-    df: DataFrame,
-    path: str,
-    key_col: str,
-    value_col: str,
-    n_outputs: int = 8,
-    sep: str = " ",
-) -> None:
-    """S2: the reference's result sink — n_outputs hash partitions by
-    key, rows "key value", each partition key-sorted (mr_tasks.h:109-121
-    + sortedness from worker.h:127). Content/sort/count equivalence, not
-    std::hash file-assignment identity (SURVEY §2 S2)."""
-    (
-        df.select(F.col(key_col).cast("string").alias("k"), F.col(value_col).cast("string").alias("v"))
-        .repartition(n_outputs, F.col("k"))
-        .sortWithinPartitions("k")
-        .select(F.concat_ws(sep, "k", "v").alias("value"))
-        .write.mode("overwrite")
-        .text(path)
-    )
 
 
 def write_parquet_observed(

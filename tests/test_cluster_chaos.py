@@ -23,6 +23,8 @@ import sys
 
 import pytest
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 @pytest.mark.slow
 @pytest.mark.parametrize(
@@ -45,7 +47,7 @@ def test_executor_kill_output_identical(tmp_path, query):
     proc = subprocess.run(
         [
             sys.executable,
-            "/root/repo/tools/chaos_retry.py",
+            os.path.join(REPO, "tools", "chaos_retry.py"),
             "/root/testdata/sf0.01",
             query,
         ],
@@ -53,7 +55,7 @@ def test_executor_kill_output_identical(tmp_path, query):
         text=True,
         timeout=900,
         env=env,
-        cwd="/root/repo",
+        cwd=REPO,
     )
     if proc.returncode == 3:
         pytest.skip("local-cluster mode unavailable in this environment")

@@ -26,6 +26,8 @@ import sys
 
 import pytest
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 @pytest.mark.slow
 def test_mapreduce_contract_under_local_cluster():
@@ -35,7 +37,7 @@ def test_mapreduce_contract_under_local_cluster():
     proc = subprocess.run(
         [
             sys.executable,
-            "/root/repo/tools/driver_sim.py",
+            os.path.join(REPO, "tools", "driver_sim.py"),
             "/root/testdata/sf0.01",
             "mr_wordcount_contract",
             "mr_sorted_partition_sink",
@@ -44,7 +46,7 @@ def test_mapreduce_contract_under_local_cluster():
         text=True,
         timeout=900,
         env=env,
-        cwd="/root/repo",
+        cwd=REPO,
     )
     combined = proc.stdout + proc.stderr
     if proc.returncode != 0 and (

@@ -1,11 +1,12 @@
 """Reference-fidelity tests for the MapReduce contract layer
-(SURVEY §5 items 1 & 3): word count on the reference's own inputs vs a
-pure-Python oracle, output-contract invariants, tokenizer properties."""
+(SURVEY §5 items 1 & 3): word count on real text inputs (the
+``mr_corpus`` fixture) vs an exact oracle, output-contract invariants,
+one pipeline behind both sinks, tokenizer properties."""
 
 from __future__ import annotations
 
 import collections
-import glob
+import os
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -16,32 +17,22 @@ from mapreducecore_spark.functions.text import (
     wordcount_mapper,
     wordcount_reducer,
 )
-from mapreducecore_spark.mapreduce import run_mapreduce
-
-REF_INPUTS = sorted(glob.glob("/root/reference/test/input/testdata_*.txt"))
+from mapreducecore_spark.mapreduce import register_tasks, run_job, run_mapreduce
 
 
-def _python_oracle(paths):
-    counts = collections.Counter()
-    for p in paths:
-        with open(p, encoding="utf-8", errors="surrogateescape") as f:
-            for line in f:
-                counts.update(tokenize(line.rstrip("\n")))
-    return counts
-
-
-def test_wordcount_matches_reference_inputs(spark):
+def test_wordcount_matches_reference_inputs(spark, mr_corpus):
     """Exact (word,count) multiset + R partitions + per-partition
-    key-sortedness on the reference's own test data (the rubric's
-    correctness criteria, description.md:56,70-76)."""
-    oracle = _python_oracle(REF_INPUTS)
-    lines = spark.read.text(REF_INPUTS)
+    key-sortedness on real text inputs (the rubric's correctness
+    criteria, description.md:56,70-76)."""
+    paths, oracle = mr_corpus
+    assert oracle, "empty input proves nothing"
+    lines = spark.read.text(paths)
     out = run_mapreduce(
         spark, lines, wordcount_mapper, wordcount_reducer, n_outputs=8, with_partition_id=True
     )
     rows = out.collect()
     got = {r["key"]: int(r["value"]) for r in rows}
-    assert got == dict(oracle)
+    assert got == oracle
 
     by_part = collections.defaultdict(list)
     for r in rows:
@@ -55,15 +46,64 @@ def test_wordcount_matches_reference_inputs(spark):
     assert len(all_keys) == len(set(all_keys))
 
 
-def test_partition_count_invariance(spark):
+def test_partition_count_invariance(spark, mr_corpus):
     """Result multiset is independent of R (shard/partition-count
     invariance, mirrors file_shard.h's every-line-consumed contract)."""
-    lines = spark.read.text(REF_INPUTS[:1])
+    lines = spark.read.text(mr_corpus[0][:1])
     results = []
     for r in (1, 3, 8):
         out = run_mapreduce(spark, lines, wordcount_mapper, wordcount_reducer, n_outputs=r)
         results.append(sorted((row["key"], row["value"]) for row in out.collect()))
+    assert results[0], "empty input proves nothing"
     assert results[0] == results[1] == results[2]
+
+
+def test_one_core_two_sinks(spark, mr_corpus, tmp_path):
+    """run_job's text files and run_mapreduce's rows come from one
+    pipeline: part-0000i holds, line for line and in order, the
+    partition_id == i rows. The S2 sink contract rides along: R files,
+    each key-sorted, content equal to the oracle."""
+    paths, oracle = mr_corpus
+    r = 4
+    register_tasks("one_core_wordcount", wordcount_mapper, wordcount_reducer)
+    out_dir = str(tmp_path / "job")
+    run_job(spark, paths, "one_core_wordcount", out_dir, n_outputs=r)
+    files = sorted(f for f in os.listdir(out_dir) if f.startswith("part-"))
+    assert len(files) == r
+
+    rows = run_mapreduce(
+        spark,
+        spark.read.text(paths),
+        wordcount_mapper,
+        wordcount_reducer,
+        n_outputs=r,
+        with_partition_id=True,
+    ).collect()
+    seen: dict[str, int] = {}
+    for i, name in enumerate(files):
+        with open(os.path.join(out_dir, name), encoding="utf-8") as f:
+            text_lines = f.read().splitlines()
+        keys = [ln.split(" ", 1)[0] for ln in text_lines]
+        assert keys == sorted(keys), f"{name} not key-sorted"
+        assert text_lines == [
+            f"{row['key']} {row['value']}" for row in rows if row["partition_id"] == i
+        ], f"{name} differs from partition {i} of run_mapreduce"
+        for ln in text_lines:
+            k, v = ln.split(" ", 1)
+            seen[k] = int(v)
+    assert oracle, "empty input proves nothing"
+    assert seen == oracle
+
+
+def test_null_lines_never_reach_the_mapper(spark):
+    def strict_mapper(line):
+        if not isinstance(line, str):
+            raise TypeError(f"mapper got {line!r}")
+        return wordcount_mapper(line)
+
+    lines = spark.createDataFrame([("a b",), (None,), ("b",)], "value string")
+    out = run_mapreduce(spark, lines, strict_mapper, wordcount_reducer, n_outputs=2)
+    assert sorted(map(tuple, out.collect())) == [("a", "1"), ("b", "2")]
 
 
 def test_reducer_sees_ascending_keys(spark):

@@ -11,7 +11,6 @@ queries at sf0.1 (VERDICT r10 #2).
 from __future__ import annotations
 
 import os
-import time
 
 from mapreducecore_spark.queries import _util
 
@@ -60,7 +59,7 @@ def _spy_sleep(monkeypatch):
     def spy(secs):
         slept.append(secs)
 
-    monkeypatch.setattr(time, "sleep", spy)
+    monkeypatch.setattr(_util, "_sleep", spy)
     return slept
 
 

@@ -1,18 +1,20 @@
-"""Tests for the config source (S6) and file sources/sinks (S1/S2/S7)."""
+"""Tests for the config source (S6), the config-driven job (S1/S2 via
+mapreduce.run) and the columnar file sources/sinks (S7)."""
 
 from __future__ import annotations
 
-import glob
+from pathlib import Path
 
 import pytest
+from py4j.protocol import Py4JJavaError
 
 from mapreducecore_spark.catalog import load_tables
 from mapreducecore_spark.config import JobSpec, SpecError, read_and_validate_spec
+from mapreducecore_spark.functions.text import wordcount_mapper, wordcount_reducer
+from mapreducecore_spark.mapreduce import register_tasks, run
 from mapreducecore_spark.sources import (
     read_csv,
     read_json,
-    read_text_lines,
-    sorted_partitioned_text_sink,
     write_csv,
     write_json,
 )
@@ -20,22 +22,33 @@ from mapreducecore_spark.sources import (
 REF_CONFIG_FORMAT = """\
 n_workers=6
 worker_ipaddr_ports=localhost:50051,localhost:50052,localhost:50053,localhost:50054,localhost:50055,localhost:50056
-input_files={inp1},{inp2}
+input_files={inputs}
 output_dir={out}
 n_output_files=8
-map_kilobytes=500
-user_id=cs6210
+map_kilobytes={kb}
+user_id={user_id}
 """
 
 
-def test_parse_reference_config_format(tmp_path):
+def _write_config(path, inputs, out, kb=500, user_id="cs6210") -> str:
+    path.write_text(
+        REF_CONFIG_FORMAT.format(inputs=",".join(inputs), out=out, kb=kb, user_id=user_id)
+    )
+    return str(path)
+
+
+def _read_parts(out_dir: Path) -> list[list[str]]:
+    return [p.read_text(encoding="utf-8").splitlines() for p in sorted(out_dir.glob("part-*"))]
+
+
+def test_parse_reference_config_format(tmp_path, mr_corpus):
     """Round-trips the reference's own config.ini shape
     (test/config.ini:1-7 / mapreduce_spec.h:30-83)."""
-    inp = sorted(glob.glob("/root/reference/test/input/testdata_*.txt"))[:2]
-    cfg = tmp_path / "config.ini"
-    out = tmp_path / "output"
-    cfg.write_text(REF_CONFIG_FORMAT.format(inp1=inp[0], inp2=inp[1], out=out))
-    spec = read_and_validate_spec(str(cfg))
+    inp = mr_corpus[0][:2]
+    assert len(inp) == 2
+    cfg = _write_config(tmp_path / "config.ini", inp, tmp_path / "output")
+    spec = read_and_validate_spec(cfg)
+    assert spec.input_files == inp
     assert spec.n_workers == 6
     assert len(spec.worker_ipaddr_ports) == 6
     assert spec.n_output_files == 8
@@ -43,7 +56,6 @@ def test_parse_reference_config_format(tmp_path):
     assert spec.user_id == "cs6210"
     assert spec.master_url == "local[6]"
     assert spec.max_partition_bytes == 500 * 1024
-    assert spec.spark_confs()["spark.sql.shuffle.partitions"] == "8"
 
 
 @pytest.mark.parametrize(
@@ -58,11 +70,11 @@ def test_parse_reference_config_format(tmp_path):
         ({"input_files": ["/does/not/exist.txt"]}, "does not exist"),
     ],
 )
-def test_spec_validation_rejects(mutation, msg):
+def test_spec_validation_rejects(mutation, msg, mr_corpus):
     """Mirrors validate_mr_spec's rejection set (mapreduce_spec.h:87-157)."""
     from mapreducecore_spark.config import validate_spec
 
-    inp = sorted(glob.glob("/root/reference/test/input/testdata_*.txt"))[:1]
+    inp = mr_corpus[0][:1]
     base = dict(
         n_workers=2,
         worker_ipaddr_ports=["a:1", "b:2"],
@@ -77,14 +89,43 @@ def test_spec_validation_rejects(mutation, msg):
         validate_spec(JobSpec(**base))
 
 
-def test_text_scan_split_invariance(spark):
+def test_text_scan_split_invariance(spark, mr_corpus, tmp_path):
     """Every line consumed exactly once regardless of split size —
-    the file_shard.h newline-alignment contract (SURVEY §5 item 3)."""
-    paths = sorted(glob.glob("/root/reference/test/input/testdata_*.txt"))
-    n_lines = sum(1 for p in paths for _ in open(p, errors="surrogateescape"))
-    for mpb in (16 * 1024, 64 * 1024, 8 * 1024 * 1024):
-        df = read_text_lines(spark, paths, max_partition_bytes=mpb)
-        assert df.count() == n_lines, f"split size {mpb} lost/duplicated lines"
+    the file_shard.h newline-alignment contract (SURVEY §5 item 3):
+    run() writes the same files at every map_kilobytes, including a
+    split smaller than the longest line."""
+    paths, oracle = mr_corpus
+    assert oracle, "empty input proves nothing"
+    longest = max(len(line) for p in paths for line in Path(p).read_bytes().splitlines())
+    kbs = (4, 64, 8 * 1024)
+    assert kbs[0] * 1024 < longest, "no line straddles the smallest split"
+    register_tasks("split_wordcount", wordcount_mapper, wordcount_reducer)
+    outputs = []
+    for kb in kbs:
+        out = tmp_path / f"out_{kb}"
+        run(spark, _write_config(tmp_path / f"c{kb}.ini", paths, out, kb, "split_wordcount"))
+        outputs.append(_read_parts(out))
+    assert outputs[0] == outputs[1] == outputs[2]
+    got = dict(ln.split(" ", 1) for part in outputs[0] for ln in part)
+    assert {k: int(v) for k, v in got.items()} == oracle
+
+
+def test_run_leaves_session_conf_unchanged(spark, mr_corpus, tmp_path):
+    """run() sets the shard size for its job only: the session conf is
+    identical afterwards, also when the job raises."""
+
+    def failing_mapper(line):
+        raise RuntimeError("mapper failed")
+
+    register_tasks("conf_ok", wordcount_mapper, wordcount_reducer)
+    register_tasks("conf_fail", failing_mapper, wordcount_reducer)
+    paths = mr_corpus[0][:1]
+    before = spark.conf.getAll
+    run(spark, _write_config(tmp_path / "ok.ini", paths, tmp_path / "ok", 64, "conf_ok"))
+    assert spark.conf.getAll == before
+    with pytest.raises(Py4JJavaError):
+        run(spark, _write_config(tmp_path / "no.ini", paths, tmp_path / "no", 64, "conf_fail"))
+    assert spark.conf.getAll == before
 
 
 def test_csv_json_roundtrip(spark, sf_dir, tmp_path):
@@ -106,28 +147,6 @@ def test_csv_json_roundtrip(spark, sf_dir, tmp_path):
     )
 
 
-def test_sorted_partitioned_text_sink(spark, sf_dir, tmp_path):
-    """S2 sink: n_outputs files, 'key value' rows, each file key-sorted,
-    all content preserved."""
-    out = str(tmp_path / "sink")
-    docs = load_tables(spark, sf_dir)["documents"].selectExpr(
-        "CAST(doc_id AS STRING) AS k", "lang AS v"
-    )
-    sorted_partitioned_text_sink(docs, out, "k", "v", n_outputs=4)
-    files = sorted(glob.glob(out + "/part-*"))
-    assert len(files) == 4
-    seen = {}
-    for f in files:
-        keys = []
-        for line in open(f):
-            k, v = line.rstrip("\n").split(" ", 1)
-            keys.append(k)
-            seen[k] = v
-        assert keys == sorted(keys), f"{f} not key-sorted"
-    expect = {str(r["k"]): r["v"] for r in docs.collect()}
-    assert seen == expect
-
-
 def test_write_parquet_observed_metrics_ride_the_write(spark, tmp_path):
     from mapreducecore_spark.sources.io import write_parquet_observed
 
@@ -140,17 +159,15 @@ def test_write_parquet_observed_metrics_ride_the_write(spark, tmp_path):
     assert spark.read.parquet(out).count() == 3
 
 
-def test_cli_job_runs_reference_config(spark, tmp_path, capsys):
+def test_cli_job_runs_reference_config(spark, tmp_path, capsys, mr_corpus):
     """python -m mapreducecore_spark <config>: the reference demo's
     entry shape (test/main.cc) — INI spec in, key-sorted partition
     files out."""
     from mapreducecore_spark.__main__ import run_cli_job
 
-    inp = sorted(glob.glob("/root/reference/test/input/testdata_*.txt"))[:2]
-    cfg = tmp_path / "config.ini"
     out = tmp_path / "cli_output"
-    cfg.write_text(REF_CONFIG_FORMAT.format(inp1=inp[0], inp2=inp[1], out=out))
-    assert run_cli_job(spark, str(cfg)) == 0
+    cfg = _write_config(tmp_path / "config.ini", mr_corpus[0][:2], out)
+    assert run_cli_job(spark, cfg) == 0
     assert "wrote" in capsys.readouterr().out
     files = sorted(p for p in out.iterdir() if p.name.startswith("part-"))
     assert len(files) == 8
