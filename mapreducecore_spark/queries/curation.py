@@ -41,10 +41,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreducecore_spark.catalog import load_tables
+from mapreducecore_spark.llm.minhash import TOKS, TOKS_DUCK, hash60, hash60_duck
 from mapreducecore_spark.llm.similarity import add_lsh_codes, duck_tables_select
 from mapreducecore_spark.queries import register
 from mapreducecore_spark.queries._util import materialize, spread
-from mapreducecore_spark.queries.llm import _TOKS, _TOKS_DUCK
 
 # ------------------------------------------------------------ SemDeDup
 
@@ -521,16 +521,18 @@ _SPAN_K = 5  # k-gram width (tokens)
 
 _SPAN_ORACLE = f"""
     WITH docs AS (
-      SELECT doc_id, {_TOKS_DUCK} AS toks FROM documents
+      SELECT doc_id, {TOKS_DUCK} AS toks FROM documents
     ), grams AS (
       SELECT doc_id, unnest(generate_series(1, len(toks) - {_SPAN_K - 1})) AS pos,
              toks
       FROM docs WHERE len(toks) >= {_SPAN_K}
     ), g AS (
       SELECT doc_id, pos,
-             CAST(('0x' || substr(md5(
-               concat_ws(' ', {", ".join(f"list_extract(toks, pos + {j})" for j in range(_SPAN_K))})
-             ), 1, 15)) AS BIGINT) AS gram_h
+             {hash60_duck(
+                 "concat_ws(' ', "
+                 + ", ".join(f"list_extract(toks, pos + {j})" for j in range(_SPAN_K))
+                 + ")"
+             )} AS gram_h
       FROM grams
     ), dup AS (
       SELECT gram_h FROM g GROUP BY gram_h HAVING COUNT(DISTINCT doc_id) >= 2
@@ -570,7 +572,7 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairwise jaccard join and its df cap). The island merge is one
     window + one aggregate, both keyed by doc_id."""
     t = load_tables(spark, sf_dir)
-    docs = spread(t["documents"]).selectExpr("doc_id", f"{_TOKS} AS toks")
+    docs = spread(t["documents"]).selectExpr("doc_id", f"{TOKS} AS toks")
     g = (
         docs.filter(F.expr(f"size(toks) >= {_SPAN_K}"))
         .select(
@@ -581,9 +583,12 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .selectExpr(
             "doc_id",
             "pos",
-            "CAST(conv(substring(md5(concat_ws(' ', "
-            + ", ".join(f"element_at(toks, pos + {j})" for j in range(_SPAN_K))
-            + ")), 1, 15), 16, 10) AS BIGINT) AS gram_h",
+            hash60(
+                "concat_ws(' ', "
+                + ", ".join(f"element_at(toks, pos + {j})" for j in range(_SPAN_K))
+                + ")"
+            )
+            + " AS gram_h",
         )
     )
     g = materialize(g, big=True)  # one row per (doc, gram): corpus-sized
@@ -629,10 +634,10 @@ _CLS_WMOD = 2001
 
 _CLS_ORACLE = f"""
     WITH toks AS (
-      SELECT doc_id, unnest({_TOKS_DUCK}) AS token FROM documents
+      SELECT doc_id, unnest({TOKS_DUCK}) AS token FROM documents
     ), feats AS (
       SELECT doc_id,
-             CAST(('0x' || substr(md5(token), 1, 15)) AS BIGINT) % {_CLS_BUCKETS} AS bucket
+             {hash60_duck("token")} % {_CLS_BUCKETS} AS bucket
       FROM toks
     ), scored AS (
       SELECT doc_id,
@@ -664,9 +669,9 @@ def quality_classifier_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle needed (ADVICE r2)."""
     t = load_tables(spark, sf_dir)
     docs = spread(t["documents"])
-    feats = docs.selectExpr("doc_id", f"explode({_TOKS}) AS token").selectExpr(
+    feats = docs.selectExpr("doc_id", f"explode({TOKS}) AS token").selectExpr(
         "doc_id",
-        f"CAST(conv(substring(md5(token), 1, 15), 16, 10) AS BIGINT) % {_CLS_BUCKETS} AS bucket",
+        f"{hash60('token')} % {_CLS_BUCKETS} AS bucket",
     )
     scored = feats.groupBy("doc_id").agg(
         F.count("*").alias("n_toks"),
@@ -840,10 +845,10 @@ def _dsir_oracle_sql(table: str = "documents") -> str:
     survivor set for corpus_curation_pipeline_v3."""
     return f"""
     WITH toks AS (
-      SELECT doc_id, source, unnest({_TOKS_DUCK}) AS token FROM {table}
+      SELECT doc_id, source, unnest({TOKS_DUCK}) AS token FROM {table}
     ), feats AS (
       SELECT doc_id, source,
-             CAST(('0x' || substr(md5(token), 1, 15)) AS BIGINT) % {_CLS_BUCKETS} AS bucket
+             {hash60_duck("token")} % {_CLS_BUCKETS} AS bucket
       FROM toks
     ), raw AS (
       SELECT bucket, COUNT(*) AS cr FROM feats GROUP BY bucket
@@ -887,10 +892,10 @@ def _dsir_oracle_xt(train_table: str, score_table: str) -> str:
     smoothing keeps every bucket finite)."""
     return f"""
     WITH t_toks AS (
-      SELECT doc_id, source, unnest({_TOKS_DUCK}) AS token FROM {train_table}
+      SELECT doc_id, source, unnest({TOKS_DUCK}) AS token FROM {train_table}
     ), t_feats AS (
       SELECT source,
-             CAST(('0x' || substr(md5(token), 1, 15)) AS BIGINT) % {_CLS_BUCKETS} AS bucket
+             {hash60_duck("token")} % {_CLS_BUCKETS} AS bucket
       FROM t_toks
     ), raw AS (
       SELECT bucket, COUNT(*) AS cr FROM t_feats GROUP BY bucket
@@ -909,8 +914,8 @@ def _dsir_oracle_xt(train_table: str, score_table: str) -> str:
       CROSS JOIN nt CROSS JOIN nr
     ), s_feats AS (
       SELECT doc_id,
-             CAST(('0x' || substr(md5(token), 1, 15)) AS BIGINT) % {_CLS_BUCKETS} AS bucket
-      FROM (SELECT doc_id, unnest({_TOKS_DUCK}) AS token FROM {score_table})
+             {hash60_duck("token")} % {_CLS_BUCKETS} AS bucket
+      FROM (SELECT doc_id, unnest({TOKS_DUCK}) AS token FROM {score_table})
     ), agg AS (
       SELECT f.doc_id, COUNT(*) AS n_toks,
              ROUND(CAST(SUM(CAST(lr.lnr AS DECIMAL(28,9))) AS DOUBLE), 6) AS log_weight
@@ -931,9 +936,9 @@ def _dsir_scores_xt(train_docs: DataFrame, score_docs: DataFrame) -> DataFrame:
     broadcast; the only corpus-wide shuffle is the per-doc DECIMAL
     sum. Same rounding discipline as dsir_importance_weights."""
     t_feats = materialize(
-        train_docs.selectExpr("source", f"explode({_TOKS}) AS token").selectExpr(
+        train_docs.selectExpr("source", f"explode({TOKS}) AS token").selectExpr(
             "source",
-            f"CAST(conv(substring(md5(token), 1, 15), 16, 10) AS BIGINT) % {_CLS_BUCKETS} AS bucket",
+            f"{hash60('token')} % {_CLS_BUCKETS} AS bucket",
         )
     )
     spark = train_docs.sparkSession
@@ -960,10 +965,10 @@ def _dsir_scores_xt(train_docs: DataFrame, score_docs: DataFrame) -> DataFrame:
         )
     )
     s_feats = score_docs.selectExpr(
-        "doc_id", f"explode({_TOKS}) AS token"
+        "doc_id", f"explode({TOKS}) AS token"
     ).selectExpr(
         "doc_id",
-        f"CAST(conv(substring(md5(token), 1, 15), 16, 10) AS BIGINT) % {_CLS_BUCKETS} AS bucket",
+        f"{hash60('token')} % {_CLS_BUCKETS} AS bucket",
     )
     agg = (
         s_feats.join(F.broadcast(lr), "bucket")
@@ -1020,10 +1025,10 @@ def _dsir_scores(docs: DataFrame) -> DataFrame:
     gated+deduped+capped survivor set here (the order Xie et al. run);
     the standalone entry feeds the whole documents table."""
     feats = materialize(
-        docs.selectExpr("doc_id", "source", f"explode({_TOKS}) AS token").selectExpr(
+        docs.selectExpr("doc_id", "source", f"explode({TOKS}) AS token").selectExpr(
             "doc_id",
             "source",
-            f"CAST(conv(substring(md5(token), 1, 15), 16, 10) AS BIGINT) % {_CLS_BUCKETS} AS bucket",
+            f"{hash60('token')} % {_CLS_BUCKETS} AS bucket",
         )
     )
     raw = feats.groupBy("bucket").agg(F.count("*").alias("cr"))
@@ -1117,10 +1122,10 @@ _LR_RATE = "0.1"  # learning rate, literal on both engines
 
 _LR_TRAIN_ORACLE = f"""
     WITH toks AS (
-      SELECT doc_id, source, unnest({_TOKS_DUCK}) AS token FROM documents
+      SELECT doc_id, source, unnest({TOKS_DUCK}) AS token FROM documents
     ), feats AS (
       SELECT doc_id,
-             CAST(('0x' || substr(md5(token), 1, 15)) AS BIGINT) % {_CLS_BUCKETS} AS bucket,
+             {hash60_duck("token")} % {_CLS_BUCKETS} AS bucket,
              COUNT(*) AS x
       FROM toks GROUP BY doc_id, bucket
     ), labels AS (
@@ -1196,10 +1201,10 @@ def _lr_train_parts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
     t = load_tables(spark, sf_dir)
     docs = spread(t["documents"])
     feats = materialize(
-        docs.selectExpr("doc_id", f"explode({_TOKS}) AS token")
+        docs.selectExpr("doc_id", f"explode({TOKS}) AS token")
         .selectExpr(
             "doc_id",
-            f"CAST(conv(substring(md5(token), 1, 15), 16, 10) AS BIGINT) % {_CLS_BUCKETS} AS bucket",
+            f"{hash60('token')} % {_CLS_BUCKETS} AS bucket",
         )
         .groupBy("doc_id", "bucket")
         .agg(F.count("*").alias("x"))
@@ -1257,10 +1262,10 @@ def _lr_train_parts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
 _CLS_TRAINED_ORACLE = f"""
     WITH trained AS ({_LR_TRAIN_ORACLE}),
     toks AS (
-      SELECT doc_id, unnest({_TOKS_DUCK}) AS token FROM documents
+      SELECT doc_id, unnest({TOKS_DUCK}) AS token FROM documents
     ), feats AS (
       SELECT doc_id,
-             CAST(('0x' || substr(md5(token), 1, 15)) AS BIGINT) % {_CLS_BUCKETS} AS bucket,
+             {hash60_duck("token")} % {_CLS_BUCKETS} AS bucket,
              COUNT(*) AS x
       FROM toks GROUP BY doc_id, bucket
     ), z AS (

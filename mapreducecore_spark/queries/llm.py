@@ -20,7 +20,17 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreducecore_spark.catalog import load_tables
-from mapreducecore_spark.functions.text import SPLIT_REGEX, SPLIT_REGEX_SQL
+from mapreducecore_spark.llm import minhash
+from mapreducecore_spark.llm.minhash import (
+    MAX_BUCKET,
+    SEEDS,
+    TOKS,
+    TOKS_DUCK,
+    hash60,
+    hash60_duck,
+    shingles,
+    shingles_duck,
+)
 from mapreducecore_spark.queries import register
 from mapreducecore_spark.queries._util import expanding, materialize, reclaim, spread
 
@@ -67,135 +77,17 @@ def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Tokens as a SQL expression shared by the shingle-based ops.
-# (backslash-escape the single quote for Spark SQL string literals)
-_SPLIT_SPARK_SQL = SPLIT_REGEX.replace("'", "\\'")
-_TOKS = f"filter(split(text, '{_SPLIT_SPARK_SQL}'), x -> x <> '')"
-_TOKS_DUCK = f"list_filter(string_split_regex(text, '{SPLIT_REGEX_SQL}'), x -> x <> '')"
-
-
-def _shingles_expr(n: int) -> str:
-    """Spark SQL: distinct n-token shingles (space-joined)."""
-    parts = ", ".join(f"element_at(toks, i + {j})" for j in range(n))
-    return (
-        f"array_distinct(transform(sequence(1, size(toks) - {n - 1}), "
-        f"i -> concat_ws(' ', {parts})))"
-    )
-
-
-def _shingles_duck(n: int) -> str:
-    parts = ", ".join(f"list_extract(toks, i + {j})" for j in range(n))
-    return (
-        f"list_distinct(list_transform(generate_series(1, len(toks) - {n - 1}), "
-        f"i -> concat_ws(' ', {parts})))"
-    )
-
-
-_MINHASH_SEEDS = 8  # 4 bands x 2 rows
-
-# One md5 per shingle -> 60-bit int h; per-seed minhash is a linear
-# permutation (a_s*h + b_s) mod (2^61-1) in DECIMAL(38,0) — exact and
-# identical on both engines, ~8x fewer hash computations than hashing
-# per (seed, shingle).
-_MINHASH_P = 2305843009213693951
-
-
-def _mh_formula(h_expr: str, seed: int) -> str:
-    """(h * a + b) mod P in PURE int64 — bit-identical to the former
-    DECIMAL(38,0) form (property-tested over the full 60-bit h domain)
-    but allocation-free. P = 2^61 - 1 is Mersenne, so h*a (up to 65
-    bits for a <= 15) folds without overflow: with x = (h >> 32) * a,
-    x * 2^32 = (x >> 29) * 2^61 + (x & (2^29-1)) * 2^32 and
-    2^61 ≡ 1 (mod P), every intermediate stays under 2^62. The fourth-
-    decade sweep (round 7) caught the DECIMAL form: precision-38
-    decimals are JVM BigDecimals, and ~5.4B allocating mul/mod calls
-    turned the flagship GC-bound (GCLocker retry storms, 6.1x wall for
-    3x data while shuffle bytes stayed perfectly linear). Measured
-    2.7x end-to-end on a 100M-row x 8-seed microbench (the shared md5
-    dominates what remains). The expression is dialect-neutral: >>,
-    <<, &, % behave identically on BIGINT in Spark and DuckDB, and
-    `h_expr` must be a SIMPLE column/lambda var (it is repeated four
-    times). Both engines inherit the change, so every minhash value —
-    and every oracle built on one — is unchanged."""
-    a, b = 2 * seed + 1, 1000003 * seed + 17
-    h = h_expr
-    return (
-        f"(((({h} >> 32) * {a}) >> 29)"
-        f" + (((({h} >> 32) * {a}) & 536870911) << 32)"
-        f" + ({h} & 4294967295) * {a} + {b}) % {_MINHASH_P}"
-    )
-
-
-def _mh_formula_lambda(h_expr: str, seed: int) -> str:
-    """_mh_formula for Spark SQL LAMBDA bodies: the `>>`/`<<` operator
-    spellings fail to parse inside `x -> ...` (Spark 4 parser quirk —
-    measured, not speculated), so this emits the shiftright()/
-    shiftleft() function forms instead. Arithmetic is identical for
-    the 60-bit non-negative h domain (property-tested against
-    _mh_formula in tests/test_minhash_formula.py). Spark-only — the
-    DuckDB oracles keep the operator form via _mh_formula."""
-    a, b = 2 * seed + 1, 1000003 * seed + 17
-    h = h_expr
-    return (
-        f"(shiftright(shiftright({h}, 32) * {a}, 29)"
-        f" + shiftleft(shiftright({h}, 32) * {a} & 536870911, 32)"
-        f" + ({h} & 4294967295) * {a} + {b}) % {_MINHASH_P}"
-    )
-
-
-# Degenerate-bucket guard: a huge exact-dup cluster puts thousands of
-# docs into one (band_id, sig) bucket; an unguarded self-join emits
-# O(n^2) clique pairs there (the same failure class the simhash band
-# join hit at 10x data — llm/simhash.py:58). For buckets wider than
-# _MINHASH_MAX_BUCKET we emit STAR edges (bucket-min doc_id paired with
-# every other member) instead: O(n) edges, identical connected
-# components downstream (llm.py dedup_connected_components).
-_MINHASH_MAX_BUCKET = 200
-
-# The shared docs -> shingles -> minhash -> bands -> annotated-bucket
-# CTE chain (DuckDB side of _minhash_banded). Parameterized by the
-# source relation so the recall eval can run it over the hash-sampled
-# sdocs CTE (VERDICT r6 #4); `documents` keeps every existing oracle
-# byte-identical.
-def _minhash_banded_duck(src: str = "documents") -> str:
-    return f"""docs AS (
-      SELECT doc_id, {_TOKS_DUCK} AS toks FROM {src}
-    ), sh AS (
-      SELECT doc_id,
-             CAST(('0x' || substr(md5(unnest({_shingles_duck(3)})), 1, 15)) AS BIGINT) AS h
-      FROM docs WHERE len(toks) >= 3
-    ), mh AS (
-      SELECT doc_id,
-             {", ".join(f"MIN({_mh_formula('h', s)}) AS mh{s}" for s in range(_MINHASH_SEEDS))}
-      FROM sh GROUP BY doc_id
-    ), bands AS (
-      SELECT doc_id, band_id, sig FROM (
-        SELECT doc_id,
-               unnest([{", ".join(str(b) for b in range(_MINHASH_SEEDS // 2))}]) AS band_id,
-               unnest([{", ".join(f"CAST(mh{2*b} AS VARCHAR) || ':' || CAST(mh{2*b+1} AS VARCHAR)" for b in range(_MINHASH_SEEDS // 2))}]) AS sig
-        FROM mh)
-    ), banded AS (
-      SELECT doc_id, band_id, sig,
-             COUNT(*) OVER (PARTITION BY band_id, sig) AS bw,
-             MIN(doc_id) OVER (PARTITION BY band_id, sig) AS rep
-      FROM bands
-    )"""
-
-
-_MINHASH_BANDED_DUCK = _minhash_banded_duck()
-
-
 def _minhash_oracle(src: str = "documents") -> str:
     return f"""
-    WITH {_minhash_banded_duck(src)}
+    WITH {minhash.bands_duck(src, banded=True)}
     SELECT DISTINCT doc_a, doc_b FROM (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM banded a JOIN banded b
         ON a.band_id = b.band_id AND a.sig = b.sig AND a.doc_id < b.doc_id
-      WHERE a.bw <= {_MINHASH_MAX_BUCKET}
+      WHERE a.bw <= {MAX_BUCKET}
       UNION ALL
       SELECT rep AS doc_a, doc_id AS doc_b FROM banded
-      WHERE bw > {_MINHASH_MAX_BUCKET} AND doc_id <> rep
+      WHERE bw > {MAX_BUCKET} AND doc_id <> rep
     )
 """
 
@@ -211,13 +103,13 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     All JVM-side (higher-order functions); the band join is the only
     shuffle that grows with candidate count, never a cross join.
 
-    Buckets wider than _MINHASH_MAX_BUCKET (giant exact-dup clusters)
+    Buckets wider than MAX_BUCKET (giant exact-dup clusters)
     emit star edges (bucket representative x member) instead of the
     O(n^2) clique — bounded fan-out, identical connected components;
     only the explicit pair list differs inside oversized buckets, and
     the DuckDB oracle mirrors the same rule."""
     t = load_tables(spark, sf_dir)
-    docs = spread(t["documents"]).selectExpr("doc_id", f"{_TOKS} AS toks")
+    docs = spread(t["documents"]).selectExpr("doc_id", f"{TOKS} AS toks")
     return _minhash_band_pairs(docs)
 
 
@@ -249,53 +141,6 @@ def _minhash_band_pairs(docs: DataFrame, staged: bool = False) -> DataFrame:
     )
 
 
-def _band_signatures(docs: DataFrame) -> DataFrame:
-    """(doc_id, band_id, sig): the raw LSH band membership rows for an
-    arbitrary (doc_id, toks) frame — the schema of the PERSISTED band
-    index a production ingest maintains as a table (see
-    dedup_band_index_build / dedup_incremental_persisted)."""
-    sh = (
-        docs.filter(F.expr("size(toks) >= 3"))
-        .selectExpr("doc_id", f"explode({_shingles_expr(3)}) AS shingle")
-    )
-    # All 8 minhashes in ONE aggregation (8 min() columns) — a single
-    # shuffle keyed by doc_id, no seed explosion/join. Partial min()
-    # runs map-side, so shuffle volume is n_docs x 8 ints regardless of
-    # shingle count; one md5 per shingle, 8 arithmetic permutations.
-    # (Round 11 tried the in-row array_min(transform(...)) form here
-    # and measured it ~1.5x SLOWER at 3000x on the flagship — SQL
-    # higher-order lambdas are interpreted, not codegen'd, and this
-    # mhs-only aggregate has no sort-fallback spill to save. In-row is
-    # only a win for the collect_set branch of _minhash_member_rows.)
-    sh = sh.selectExpr(
-        "doc_id",
-        "CAST(conv(substring(md5(shingle), 1, 15), 16, 10) AS BIGINT) AS h",
-    )
-    mh = sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.expr(_mh_formula("h", s))).alias(f"mh{s}")
-            for s in range(_MINHASH_SEEDS)
-        ]
-    )
-    n_bands = _MINHASH_SEEDS // 2
-    return mh.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.concat_ws(":", F.col(f"mh{2 * b}"), F.col(f"mh{2 * b + 1}")).alias(
-                            "sig"
-                        ),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", "b.band_id", "b.sig")
-
-
 def _bucket_stats(bands: DataFrame) -> DataFrame:
     """Annotate band rows with bucket width + representative via one
     window pass (shuffle keyed on the same (band_id, sig) the pair
@@ -319,21 +164,21 @@ def _minhash_banded(docs: DataFrame) -> DataFrame:
     stage. big=True: 4 band rows per document makes this frame
     corpus-sized (60M rows at the fourth decade) — DISK_ONLY per the
     materialize() protected-storage rule."""
-    return materialize(_bucket_stats(_band_signatures(docs)), big=True)
+    return materialize(_bucket_stats(minhash.bands(minhash.signatures(docs))), big=True)
 
 
 _INCR_NEW_MOD = 10  # docs with doc_id % 10 == 0 form the "new batch"
 
 _INCR_MINHASH_ORACLE = f"""
-    WITH {_MINHASH_BANDED_DUCK}
+    WITH {minhash.bands_duck(banded=True)}
     SELECT DISTINCT new_id, match_id FROM (
       SELECT n.doc_id AS new_id, b.doc_id AS match_id
       FROM banded n JOIN banded b
         ON n.band_id = b.band_id AND n.sig = b.sig AND n.doc_id <> b.doc_id
-      WHERE n.doc_id % {_INCR_NEW_MOD} = 0 AND n.bw <= {_MINHASH_MAX_BUCKET}
+      WHERE n.doc_id % {_INCR_NEW_MOD} = 0 AND n.bw <= {MAX_BUCKET}
       UNION ALL
       SELECT doc_id AS new_id, rep AS match_id FROM banded
-      WHERE doc_id % {_INCR_NEW_MOD} = 0 AND bw > {_MINHASH_MAX_BUCKET}
+      WHERE doc_id % {_INCR_NEW_MOD} = 0 AND bw > {MAX_BUCKET}
         AND doc_id <> rep
     )
 """
@@ -353,15 +198,15 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     old or new — sharing a band bucket with the new doc. Existing-vs-
     existing pairs are never generated, so per-batch cost follows the
     BATCH size times bucket occupancy, not the corpus size. Oversized
-    buckets (> _MINHASH_MAX_BUCKET) degrade to matching the bucket
+    buckets (> MAX_BUCKET) degrade to matching the bucket
     representative only — the star guard's incremental form, mirrored
     in the oracle."""
     t = load_tables(spark, sf_dir)
-    docs = spread(t["documents"]).selectExpr("doc_id", f"{_TOKS} AS toks")
+    docs = spread(t["documents"]).selectExpr("doc_id", f"{TOKS} AS toks")
     banded = _minhash_banded(docs)
     new_small = banded.filter(
         (F.col("doc_id") % _INCR_NEW_MOD == 0)
-        & (F.col("bw") <= _MINHASH_MAX_BUCKET)
+        & (F.col("bw") <= MAX_BUCKET)
     ).select(F.col("doc_id").alias("new_id"), "band_id", "sig")
     matches = (
         new_small.join(
@@ -373,45 +218,14 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     star = banded.filter(
         (F.col("doc_id") % _INCR_NEW_MOD == 0)
-        & (F.col("bw") > _MINHASH_MAX_BUCKET)
+        & (F.col("bw") > MAX_BUCKET)
         & (F.col("doc_id") != F.col("rep"))
     ).select(F.col("doc_id").alias("new_id"), F.col("rep").alias("match_id"))
     return matches.unionByName(star).distinct()
 
 
-def _sliced_bands_duck(prefix: str, where: str) -> str:
-    """Prefixed docs -> shingles -> minhash -> bands CTE chain over a
-    WHERE-restricted corpus slice (used by the band-index and
-    streaming incremental-dedup oracles, which need two independent
-    chains — old corpus vs new batch — in one WITH)."""
-    p = prefix
-    mh_cols = ", ".join(
-        f"MIN({_mh_formula('h', s)}) AS mh{s}" for s in range(_MINHASH_SEEDS)
-    )
-    band_ids = ", ".join(str(b) for b in range(_MINHASH_SEEDS // 2))
-    sigs = ", ".join(
-        f"CAST(mh{2 * b} AS VARCHAR) || ':' || CAST(mh{2 * b + 1} AS VARCHAR)"
-        for b in range(_MINHASH_SEEDS // 2)
-    )
-    return f"""{p}docs AS (
-      SELECT doc_id, {_TOKS_DUCK} AS toks FROM documents {where}
-    ), {p}sh AS (
-      SELECT doc_id,
-             CAST(('0x' || substr(md5(unnest({_shingles_duck(3)})), 1, 15)) AS BIGINT) AS h
-      FROM {p}docs WHERE len(toks) >= 3
-    ), {p}mh AS (
-      SELECT doc_id, {mh_cols} FROM {p}sh GROUP BY doc_id
-    ), {p}bands AS (
-      SELECT doc_id, band_id, sig FROM (
-        SELECT doc_id,
-               unnest([{band_ids}]) AS band_id,
-               unnest([{sigs}]) AS sig
-        FROM {p}mh)
-    )"""
-
-
 _BAND_INDEX_ORACLE = f"""
-    WITH {_sliced_bands_duck("o_", f"WHERE doc_id % {_INCR_NEW_MOD} <> 0")},
+    WITH {minhash.bands_duck(f"documents WHERE doc_id % {_INCR_NEW_MOD} <> 0", "o_")},
     buckets AS (
       SELECT band_id, sig, COUNT(*) AS bw
       FROM o_bands GROUP BY band_id, sig
@@ -450,11 +264,11 @@ def dedup_band_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     old_docs = (
         spread(t["documents"])
         .filter(F.col("doc_id") % _INCR_NEW_MOD != 0)
-        .selectExpr("doc_id", f"{_TOKS} AS toks")
+        .selectExpr("doc_id", f"{TOKS} AS toks")
     )
     scratch = tempfile.mkdtemp(prefix="mrc_bandidx_")
     try:
-        _band_signatures(old_docs).write.mode("overwrite").parquet(
+        minhash.bands(minhash.signatures(old_docs)).write.mode("overwrite").parquet(
             f"{scratch}/band_index"
         )
         idx = spark.read.parquet(f"{scratch}/band_index")
@@ -507,16 +321,17 @@ def dedup_incremental_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     scratch = tempfile.mkdtemp(prefix="mrc_incrpers_")
     try:
         # Step 1 — the maintenance write (old corpus only).
-        _band_signatures(
-            docs.filter(F.col("doc_id") % _INCR_NEW_MOD != 0).selectExpr(
-                "doc_id", f"{_TOKS} AS toks"
-            )
-        ).write.mode("overwrite").parquet(f"{scratch}/band_index")
+        old_docs = docs.filter(F.col("doc_id") % _INCR_NEW_MOD != 0).selectExpr(
+            "doc_id", f"{TOKS} AS toks"
+        )
+        minhash.bands(minhash.signatures(old_docs)).write.mode("overwrite").parquet(
+            f"{scratch}/band_index"
+        )
 
         # Step 2 — incremental run: new-batch signatures vs the index.
         idx = spark.read.parquet(f"{scratch}/band_index")
         new_docs = docs.filter(F.col("doc_id") % _INCR_NEW_MOD == 0).selectExpr(
-            "doc_id", f"{_TOKS} AS toks"
+            "doc_id", f"{TOKS} AS toks"
         )
         out = _incremental_vs_index(idx, new_docs)
         # Eager checkpoint: the returned plan must not reference the
@@ -544,8 +359,8 @@ def _incremental_vs_index(idx: DataFrame, new_docs: DataFrame) -> DataFrame:
     the NEW docs only, restrict the persisted index to touched
     buckets, recompute bucket stats over index ∪ new rows there, and
     emit (new_id, match_id) with the star guard. Per-run cost tracks
-    the BATCH size times bucket occupancy, never the corpus size —
-    tools/incr_batch_sweep.py measures exactly that claim. `new_docs`
+    the BATCH size times bucket occupancy, never the corpus size
+    (measured in BASELINE.md round 5). `new_docs`
     rows must be disjoint from the indexed docs (a doc is old xor
     new)."""
     # big=True on the corpus-proportional frames below (round 7
@@ -553,7 +368,7 @@ def _incremental_vs_index(idx: DataFrame, new_docs: DataFrame) -> DataFrame:
     # default memory blocks are the measured OOM family (flagship
     # per_doc, components dn/classes); storage level never changes
     # values, only residency.
-    new_bands = materialize(_band_signatures(new_docs), big=True)
+    new_bands = materialize(minhash.bands(minhash.signatures(new_docs)), big=True)
     wb = Window.partitionBy("band_id", "sig")
     banded = materialize(
         _touched_bucket_rows(idx, new_bands).select(
@@ -567,7 +382,7 @@ def _incremental_vs_index(idx: DataFrame, new_docs: DataFrame) -> DataFrame:
         big=True,  # touched-bucket rows track the batch, which here is corpus/10
     )
     new_small = banded.filter(
-        F.col("is_new") & (F.col("bw") <= _MINHASH_MAX_BUCKET)
+        F.col("is_new") & (F.col("bw") <= MAX_BUCKET)
     ).select(F.col("doc_id").alias("new_id"), "band_id", "sig")
     matches = (
         new_small.join(
@@ -579,7 +394,7 @@ def _incremental_vs_index(idx: DataFrame, new_docs: DataFrame) -> DataFrame:
     )
     star = banded.filter(
         F.col("is_new")
-        & (F.col("bw") > _MINHASH_MAX_BUCKET)
+        & (F.col("bw") > MAX_BUCKET)
         & (F.col("doc_id") != F.col("rep"))
     ).select(F.col("doc_id").alias("new_id"), F.col("rep").alias("match_id"))
     return matches.unionByName(star).distinct()
@@ -624,7 +439,7 @@ def _collapsed_neardup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same protected-storage family as the flagship's per_doc frame.
     dn = materialize(
         docs.selectExpr(
-            "doc_id", "md5(text) AS th", f"size({_TOKS}) >= 3 AS shingled"
+            "doc_id", "md5(text) AS th", f"size({TOKS}) >= 3 AS shingled"
         ),
         big=True,
     )
@@ -634,7 +449,7 @@ def _collapsed_neardup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rep_docs = docs.select("doc_id", "text").join(
         classes.select(F.col("rep").alias("doc_id")), "doc_id"
-    ).selectExpr("doc_id", f"{_TOKS} AS toks")
+    ).selectExpr("doc_id", f"{TOKS} AS toks")
     rep_pairs = _minhash_band_pairs(rep_docs)
     member_stars = (
         dn.filter("shingled")
@@ -661,12 +476,11 @@ _JACCARD_DF_CAP = 128
 def _jaccard_oracle(src: str = "documents") -> str:
     return f"""
     WITH docs AS (
-      SELECT MIN(doc_id) AS doc_id, {_TOKS_DUCK} AS toks
+      SELECT MIN(doc_id) AS doc_id, {TOKS_DUCK} AS toks
       FROM {src} GROUP BY text
     ), sh AS (
       SELECT doc_id,
-             CAST(('0x' || substr(md5(unnest({_shingles_duck(4)})), 1, 15)) AS BIGINT)
-               AS shingle
+             {hash60_duck(f"unnest({shingles_duck(4)})")} AS shingle
       FROM docs WHERE len(toks) >= 4
     ), sizes AS (
       SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id
@@ -736,14 +550,14 @@ def _jaccard_truth_pairs(all_docs: DataFrame) -> DataFrame:
         F.min("doc_id").alias("doc_id")
     )
     docs = all_docs.join(keepers.select("doc_id"), "doc_id", "left_semi").selectExpr(
-        "doc_id", f"{_TOKS} AS toks"
+        "doc_id", f"{TOKS} AS toks"
     )
     sh = (
         docs.filter(F.expr("size(toks) >= 4"))
-        .selectExpr("doc_id", f"explode({_shingles_expr(4)}) AS shingle")
+        .selectExpr("doc_id", f"explode({shingles(4)}) AS shingle")
         .selectExpr(
             "doc_id",
-            "CAST(conv(substring(md5(shingle), 1, 15), 16, 10) AS BIGINT) AS shingle",
+            f"{hash60('shingle')} AS shingle",
         )
     )
     sh = materialize(sh, big=True)  # reused by sizes + df pass + both join branches
@@ -791,12 +605,11 @@ def _jaccard_truth_pairs(all_docs: DataFrame) -> DataFrame:
 # scorers' 100x shuffle before this (VERDICT r4 #3).
 _SHINGLE_SETS_DUCK = f"""
       SELECT doc_id,
-             list(DISTINCT CAST(('0x' || substr(md5(shingle), 1, 15)) AS BIGINT)) AS hs,
-             CAST(len(list(DISTINCT CAST(('0x' || substr(md5(shingle), 1, 15)) AS BIGINT)))
-                  AS BIGINT) AS n_sh
+             list(DISTINCT {hash60_duck("shingle")}) AS hs,
+             CAST(len(list(DISTINCT {hash60_duck("shingle")})) AS BIGINT) AS n_sh
       FROM (
-        SELECT doc_id, unnest({_shingles_duck(3)}) AS shingle
-        FROM (SELECT doc_id, {_TOKS_DUCK} AS toks FROM documents)
+        SELECT doc_id, unnest({shingles_duck(3)}) AS shingle
+        FROM (SELECT doc_id, {TOKS_DUCK} AS toks FROM documents)
         WHERE len(toks) >= 3
       ) GROUP BY doc_id
 """
@@ -880,14 +693,14 @@ def _scored_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     star pairs stream through a window over the same bucket key with
     two member payloads per row (ADVICE r5)."""
     t = load_tables(spark, sf_dir)
-    docs = spread(t["documents"]).selectExpr("doc_id", f"{_TOKS} AS toks")
+    docs = spread(t["documents"]).selectExpr("doc_id", f"{TOKS} AS toks")
     def score(a: str) -> str:
         return (
             f"struct({a}.doc_id AS doc_a, m.doc_id AS doc_b, "
             f"size(array_intersect({a}.hs, m.hs)) AS n_common, "
             f"{a}.n_sh AS na, m.n_sh AS nb, "
             f"aggregate(zip_with({a}.mhs, m.mhs, (x, y) -> IF(x = y, 1, 0)), 0, "
-            f"(acc, v) -> acc + v) / CAST({_MINHASH_SEEDS} AS DOUBLE)"
+            f"(acc, v) -> acc + v) / CAST({SEEDS} AS DOUBLE)"
             f" AS est_jaccard_raw)"
         )
 
@@ -935,7 +748,7 @@ def _minhash_member_rows(
         # storms from the sort buffer's 256 MB humongous allocations).
         # In-row at 3000x: signature stage 4.9k core-sec, ZERO spill,
         # query shuffle 45.7 -> 37.2 GB, total spill 16.3 -> 9.1 GB.
-        # VALUE-IDENTICAL: _shingles_expr is already distinct in-row,
+        # VALUE-IDENTICAL: shingles is already distinct in-row,
         # array_distinct(transform(shingles, md5->int)) equals
         # collect_set(h) as a SET (order differs; every consumer is
         # order-insensitive: array_intersect, size, min), and min over
@@ -956,22 +769,13 @@ def _minhash_member_rows(
         # this frame corpus-sized; default-storage blocks would pin
         # protected storage memory against the downstream bucket
         # aggregates, 1000x sweep), everything downstream reads them.
-        mhs_expr = (
-            "array("
-            + ", ".join(
-                f"array_min(transform(hs, h -> {_mh_formula_lambda('h', s)}))"
-                for s in range(_MINHASH_SEEDS)
-            )
-            + ") AS mhs"
-        )
         per_doc = materialize(
-            docs.filter(F.expr("size(toks) >= 3"))
-            .selectExpr(
+            minhash.hashes(docs).select(
                 "doc_id",
-                f"array_distinct(transform({_shingles_expr(3)}, "
-                "s -> CAST(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT))) AS hs",
-            )
-            .selectExpr("doc_id", "hs", "CAST(size(hs) AS BIGINT) AS n_sh", mhs_expr),
+                "hs",
+                F.expr("CAST(size(hs) AS BIGINT)").alias("n_sh"),
+                minhash.inrow_signatures().alias("mhs"),
+            ),
             big=True,
             eager=True,
         )
@@ -988,23 +792,12 @@ def _minhash_member_rows(
         # 139 s lazy vs 166 s eager); on the many-file fifth-decade
         # corpus (no spread exchange) eager's extra resident blocks
         # instead blew the single box's DISK ceiling.
-        sh = (
-            docs.filter(F.expr("size(toks) >= 3"))
-            .selectExpr("doc_id", f"explode({_shingles_expr(3)}) AS shingle")
-            .selectExpr(
-                "doc_id",
-                "CAST(conv(substring(md5(shingle), 1, 15), 16, 10) AS BIGINT) AS h",
-            )
-        )
-        mhs_agg = F.array(
-            *[F.min(F.expr(_mh_formula("h", s))) for s in range(_MINHASH_SEEDS)]
-        ).alias("mhs")
         # big=True even without the hs payload: per_doc is still one
         # row per document (narrow, but CORPUS-sized), and the round-7
         # fourth-decade run showed default MEMORY_AND_DISK blocks of
         # this frame OOM a fresh 8g JVM at 15M docs while DISK_ONLY
         # completes — same protected-storage family as the hs branch.
-        per_doc = materialize(sh.groupBy("doc_id").agg(mhs_agg), big=True, eager=staged)
+        per_doc = materialize(minhash.signatures(docs), big=True, eager=staged)
         member = F.struct("doc_id", "mhs", "bws", "reps")
     if staged:
         # Staged-sides mode (VERDICT r9 #1, the candidate_recall
@@ -1019,23 +812,9 @@ def _minhash_member_rows(
         # re-attestation (61.3 GB live vs ~55 GB free, BASELINE.md
         # round 9).
         reclaim(docs.sparkSession)
-    n_bands = _MINHASH_SEEDS // 2
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.concat_ws(
-                    ":", F.expr(f"mhs[{2 * b}]"), F.expr(f"mhs[{2 * b + 1}]")
-                ).alias("sig"),
-            )
-            for b in range(n_bands)
-        ]
-    )
     # Narrow pre-pass: per-band bucket width + representative, folded
     # back into one (bws, reps) array pair per doc.
-    band_rows = per_doc.select(
-        "doc_id", F.explode(band_structs).alias("b")
-    ).select("doc_id", "b.band_id", "b.sig")
+    band_rows = minhash.bands(per_doc)
     widths = band_rows.groupBy("band_id", "sig").agg(
         F.count("*").alias("bw"), F.min("doc_id").alias("rep")
     )
@@ -1062,7 +841,7 @@ def _minhash_member_rows(
         base = materialize(base, big=True, eager=True)
         reclaim(docs.sparkSession)
     rows = (
-        base.select(F.explode(band_structs).alias("b"), member.alias("m"))
+        base.select(F.explode(minhash.band_structs()).alias("b"), member.alias("m"))
         .select(
             "b.band_id",
             "b.sig",
@@ -1076,10 +855,10 @@ def _minhash_member_rows(
     # star branch of _emit_bucket_pairs never sorts or windows the wide
     # member rows. Broadcasting the filtered widths is safe: its rows
     # are (ids + sig string) and a corpus only has a >200-wide bucket
-    # per giant dup cluster — bounded by n_docs / _MINHASH_MAX_BUCKET
+    # per giant dup cluster — bounded by n_docs / MAX_BUCKET
     # even adversarially, and the broadcast carries no payload.
     big_buckets = F.broadcast(
-        widths.filter(F.col("bw") > _MINHASH_MAX_BUCKET).select(
+        widths.filter(F.col("bw") > MAX_BUCKET).select(
             "band_id", "sig", F.col("rep").alias("rep_doc")
         )
     )
@@ -1109,7 +888,7 @@ def _emit_sql(left: str) -> str:
         f"(band_id = 0 OR NOT exists(sequence(0, band_id - 1), bp -> "
         f"{left}.mhs[2 * bp] = m.mhs[2 * bp] "
         f"AND {left}.mhs[2 * bp + 1] = m.mhs[2 * bp + 1] "
-        f"AND ({left}.bws[bp] <= {_MINHASH_MAX_BUCKET} "
+        f"AND ({left}.bws[bp] <= {MAX_BUCKET} "
         f"OR {left}.reps[bp] = {left}.doc_id)))"
     )
 
@@ -1122,7 +901,7 @@ def _emit_bucket_pairs(
     (a SQL struct over the left member prefix and `m`,
     left.doc_id < m.doc_id).
 
-    Small buckets (width <= _MINHASH_MAX_BUCKET) are collected into
+    Small buckets (width <= MAX_BUCKET) are collected into
     one sorted array row and emit their clique pairs inside a single
     higher-order expression, so non-surviving pairs never materialize
     a row. Oversized buckets (giant exact-dup clusters) are NEVER
@@ -1150,7 +929,7 @@ def _emit_bucket_pairs(
     # without a complete-mode single agg, which Catalyst doesn't plan
     # for collect_list; the plain shape is the measured winner.
     buckets = (
-        rows.filter(F.col("width") <= _MINHASH_MAX_BUCKET)
+        rows.filter(F.col("width") <= MAX_BUCKET)
         .groupBy("band_id", "sig")
         .agg(F.sort_array(F.collect_list("m")).alias("ms"))
     )
@@ -1163,7 +942,7 @@ def _emit_bucket_pairs(
         F.explode(F.expr(clique_pairs)).alias("p")
     )
     star = (
-        rows.filter(F.col("width") > _MINHASH_MAX_BUCKET)
+        rows.filter(F.col("width") > MAX_BUCKET)
         .join(reps.hint("shuffle_hash"), ["band_id", "sig"])
         .filter(F.expr(f"m.doc_id <> rep.doc_id AND {_emit_sql('rep')}"))
         .select(F.expr(pair_struct_sql("rep")).alias("p"))
@@ -1246,7 +1025,7 @@ def dedup_candidate_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # heap with the scan/agg stages, the same split that fixed the
     # scorers' disk profile.
     cand = _minhash_band_pairs(
-        sdocs.selectExpr("doc_id", f"{_TOKS} AS toks"),
+        sdocs.selectExpr("doc_id", f"{TOKS} AS toks"),
         staged=True,
     ).select("doc_a", "doc_b")
     # Both sides are consumed twice (semi-join + count); materialize
@@ -1289,28 +1068,19 @@ def dedup_candidate_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MH_EST_ORACLE = f"""
     WITH cand AS (SELECT doc_a, doc_b FROM ({_MINHASH_ORACLE})),
-    docs3 AS (
-      SELECT doc_id, {_TOKS_DUCK} AS toks FROM documents
-    ), sh AS (
-      SELECT doc_id,
-             CAST(('0x' || substr(md5(unnest({_shingles_duck(3)})), 1, 15)) AS BIGINT) AS h
-      FROM docs3 WHERE len(toks) >= 3
-    ), mh AS (
-      SELECT doc_id,
-             {", ".join(f"MIN({_mh_formula('h', s)}) AS mh{s}" for s in range(_MINHASH_SEEDS))}
-      FROM sh GROUP BY doc_id
-    ), hs AS ({_SHINGLE_SETS_DUCK}),
+    {minhash.bands_duck(prefix="e_")},
+    hs AS ({_SHINGLE_SETS_DUCK}),
     pairs AS (
       SELECT c.doc_a, c.doc_b,
              len(list_intersect(a.hs, b.hs)) AS n_common,
              a.n_sh AS na, b.n_sh AS nb,
-             ({" + ".join(f"CASE WHEN ma.mh{s} = mb.mh{s} THEN 1 ELSE 0 END" for s in range(_MINHASH_SEEDS))})
-               / CAST({_MINHASH_SEEDS} AS DOUBLE) AS est_jaccard
+             ({" + ".join(f"CASE WHEN ma.mh{s} = mb.mh{s} THEN 1 ELSE 0 END" for s in range(SEEDS))})
+               / CAST({SEEDS} AS DOUBLE) AS est_jaccard
       FROM cand c
       JOIN hs a ON a.doc_id = c.doc_a
       JOIN hs b ON b.doc_id = c.doc_b
-      JOIN mh ma ON ma.doc_id = c.doc_a
-      JOIN mh mb ON mb.doc_id = c.doc_b
+      JOIN e_mh ma ON ma.doc_id = c.doc_a
+      JOIN e_mh mb ON mb.doc_id = c.doc_b
     )
     SELECT doc_a, doc_b,
            ROUND(est_jaccard, 6) AS est_jaccard,
@@ -1401,8 +1171,8 @@ _SW_SQL = ", ".join(f"'{w}'" for w in _STOPWORDS)
     oracle=f"""
     SELECT doc_id,
            CAST(length(text) AS INT) AS n_chars_calc,
-           CAST(len({_TOKS_DUCK}) AS INT) AS n_tokens,
-           CAST(len(list_filter({_TOKS_DUCK},
+           CAST(len({TOKS_DUCK}) AS INT) AS n_tokens,
+           CAST(len(list_filter({TOKS_DUCK},
                 x -> list_contains([{_SW_SQL}], x))) AS INT) AS n_stopwords,
            CAST(len(regexp_extract_all(text, '[^A-Za-z0-9_ ]')) AS INT) AS n_punct
     FROM documents
@@ -1415,8 +1185,8 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return t["documents"].selectExpr(
         "doc_id",
         "length(text) AS n_chars_calc",
-        f"size({_TOKS}) AS n_tokens",
-        f"size(filter({_TOKS}, x -> array_contains({sw_arr}, x))) AS n_stopwords",
+        f"size({TOKS}) AS n_tokens",
+        f"size(filter({TOKS}, x -> array_contains({sw_arr}, x))) AS n_stopwords",
         "size(regexp_extract_all(text, '[^A-Za-z0-9_ ]', 0)) AS n_punct",
     )
 
@@ -1426,8 +1196,8 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH s AS (
       SELECT doc_id,
-             CAST(len({_TOKS_DUCK}) AS INT) AS n_tokens,
-             CAST(len(list_filter({_TOKS_DUCK},
+             CAST(len({TOKS_DUCK}) AS INT) AS n_tokens,
+             CAST(len(list_filter({TOKS_DUCK},
                   x -> list_contains([{_SW_SQL}], x))) AS INT) AS n_stop
       FROM documents
     )
@@ -1444,8 +1214,8 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     sw_arr = "array(" + _SW_SQL + ")"
     s = t["documents"].selectExpr(
         "doc_id",
-        f"size({_TOKS}) AS n_tokens",
-        f"size(filter({_TOKS}, x -> array_contains({sw_arr}, x))) AS n_stop",
+        f"size({TOKS}) AS n_tokens",
+        f"size(filter({TOKS}, x -> array_contains({sw_arr}, x))) AS n_stop",
     )
     quality = F.round(
         F.least(F.col("n_tokens").cast("double") / 50.0, F.lit(1.0))
@@ -1470,9 +1240,9 @@ _LANG_SETS = {
     oracle=f"""
     WITH s AS (
       SELECT doc_id, lang,
-             CAST(len(list_filter({_TOKS_DUCK}, x -> list_contains([{", ".join(repr(w) for w in _LANG_SETS["en"])}], x))) AS INT) AS s_en,
-             CAST(len(list_filter({_TOKS_DUCK}, x -> list_contains([{", ".join(repr(w) for w in _LANG_SETS["de"])}], x))) AS INT) AS s_de,
-             CAST(len(list_filter({_TOKS_DUCK}, x -> list_contains([{", ".join(repr(w) for w in _LANG_SETS["es"])}], x))) AS INT) AS s_es
+             CAST(len(list_filter({TOKS_DUCK}, x -> list_contains([{", ".join(repr(w) for w in _LANG_SETS["en"])}], x))) AS INT) AS s_en,
+             CAST(len(list_filter({TOKS_DUCK}, x -> list_contains([{", ".join(repr(w) for w in _LANG_SETS["de"])}], x))) AS INT) AS s_de,
+             CAST(len(list_filter({TOKS_DUCK}, x -> list_contains([{", ".join(repr(w) for w in _LANG_SETS["es"])}], x))) AS INT) AS s_es
       FROM documents
     )
     SELECT doc_id, lang AS lang_labeled,
@@ -1487,7 +1257,7 @@ def lang_id_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-hit language ID heuristic (deterministic tie order)."""
     t = load_tables(spark, sf_dir)
     exprs = {
-        k: f"size(filter({_TOKS}, x -> array_contains(array({', '.join(repr(w) for w in ws)}), x)))"
+        k: f"size(filter({TOKS}, x -> array_contains(array({', '.join(repr(w) for w in ws)}), x)))"
         for k, ws in _LANG_SETS.items()
     }
     s = t["documents"].selectExpr(
@@ -1560,14 +1330,14 @@ _WINNOW_W = 4  # winnowing window (consecutive gram hashes)
     "doc_fingerprint_winnow",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, {_TOKS_DUCK} AS tk FROM documents
+      SELECT doc_id, {TOKS_DUCK} AS tk FROM documents
     ), gh AS (
       SELECT doc_id,
              list_transform(
                generate_series(1, len(tk) - {_WINNOW_K - 1}),
-               i -> CAST(('0x' || substr(md5(
-                 concat_ws(' ', {", ".join(f"tk[i + {j}]" for j in range(_WINNOW_K))}
-               )), 1, 15)) AS BIGINT)) AS gh
+               i -> {hash60_duck(
+                 "concat_ws(' ', " + ", ".join(f"tk[i + {j}]" for j in range(_WINNOW_K)) + ")"
+               )}) AS gh
       FROM toks WHERE len(tk) >= {_WINNOW_K}
     ), sel AS (
       SELECT doc_id, len(gh) AS n_grams,
@@ -1604,13 +1374,17 @@ def doc_fingerprint_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     gram = (
         "transform(sequence(1, size(tk) - "
         + str(_WINNOW_K - 1)
-        + "), i -> CAST(conv(substring(md5(concat_ws(' ', "
-        + ", ".join(f"element_at(tk, i + {j})" for j in range(_WINNOW_K))
-        + ")), 1, 15), 16, 10) AS BIGINT))"
+        + "), i -> "
+        + hash60(
+            "concat_ws(' ', "
+            + ", ".join(f"element_at(tk, i + {j})" for j in range(_WINNOW_K))
+            + ")"
+        )
+        + ")"
     )
     return (
         spread(t["documents"])
-        .selectExpr("doc_id", f"{_TOKS} AS tk")
+        .selectExpr("doc_id", f"{TOKS} AS tk")
         .filter(F.expr(f"size(tk) >= {_WINNOW_K}"))
         .selectExpr("doc_id", f"{gram} AS gh")
         .selectExpr(
@@ -2479,10 +2253,10 @@ _INVERT = 1000000000000000000
     oracle=f"""
     WITH q AS (
       SELECT doc_id,
-             ROUND(LEAST(CAST(len({_TOKS_DUCK}) AS DOUBLE) / 50.0, 1.0)
-                   * (1.0 - 0.5 * CAST(len(list_filter({_TOKS_DUCK},
+             ROUND(LEAST(CAST(len({TOKS_DUCK}) AS DOUBLE) / 50.0, 1.0)
+                   * (1.0 - 0.5 * CAST(len(list_filter({TOKS_DUCK},
                         x -> list_contains([{_SW_SQL}], x))) AS DOUBLE)
-                     / GREATEST(len({_TOKS_DUCK}), 1)), 6) AS quality
+                     / GREATEST(len({TOKS_DUCK}), 1)), 6) AS quality
       FROM documents
     )
     SELECT md5(d.text) AS text_hash,
@@ -2535,10 +2309,10 @@ def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp AS (SELECT node, MIN(label) AS component FROM reach GROUP BY node),
     q AS (
       SELECT doc_id,
-             ROUND(LEAST(CAST(len({_TOKS_DUCK}) AS DOUBLE) / 50.0, 1.0)
-                   * (1.0 - 0.5 * CAST(len(list_filter({_TOKS_DUCK},
+             ROUND(LEAST(CAST(len({TOKS_DUCK}) AS DOUBLE) / 50.0, 1.0)
+                   * (1.0 - 0.5 * CAST(len(list_filter({TOKS_DUCK},
                         x -> list_contains([{_SW_SQL}], x))) AS DOUBLE)
-                     / GREATEST(len({_TOKS_DUCK}), 1)), 6) AS quality
+                     / GREATEST(len({TOKS_DUCK}), 1)), 6) AS quality
       FROM documents
     )
     SELECT c.component,
@@ -2578,9 +2352,9 @@ _BOILER_DF = 5  # a 3-gram present in >= this many docs is boilerplate
 
 _BOILER_ORACLE = f"""
     WITH docs AS (
-      SELECT doc_id, {_TOKS_DUCK} AS toks FROM documents
+      SELECT doc_id, {TOKS_DUCK} AS toks FROM documents
     ), sh AS (
-      SELECT doc_id, unnest({_shingles_duck(3)}) AS shingle
+      SELECT doc_id, unnest({shingles_duck(3)}) AS shingle
       FROM docs WHERE len(toks) >= 3
     ), df AS (
       SELECT shingle, COUNT(*) AS df FROM sh GROUP BY shingle
@@ -2609,9 +2383,9 @@ def boilerplate_ngram_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles at shingle grain — the same scale contract as the Jaccard
     dedup, no per-doc broadcast of the global df table needed."""
     t = load_tables(spark, sf_dir)
-    docs = spread(t["documents"]).selectExpr("doc_id", f"{_TOKS} AS toks")
+    docs = spread(t["documents"]).selectExpr("doc_id", f"{TOKS} AS toks")
     sh = docs.filter(F.expr("size(toks) >= 3")).selectExpr(
-        "doc_id", f"explode({_shingles_expr(3)}) AS shingle"
+        "doc_id", f"explode({shingles(3)}) AS shingle"
     )
     sh = materialize(sh, big=True)  # exploded shingles: corpus-sized
     df = sh.groupBy("shingle").agg(F.count("*").alias("df"))
@@ -2648,7 +2422,7 @@ _GOPHER_MIN_STOP = 1
 _GOPHER_ORACLE = f"""
     WITH s AS (
       SELECT doc_id,
-             {_TOKS_DUCK} AS toks
+             {TOKS_DUCK} AS toks
       FROM documents
     ), m AS (
       SELECT doc_id,
@@ -2692,10 +2466,10 @@ def quality_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     sw_arr = "array(" + _SW_SQL + ")"
     m = t["documents"].selectExpr(
         "doc_id",
-        f"size({_TOKS}) AS n_words",
-        f"aggregate({_TOKS}, 0L, (acc, x) -> acc + length(x)) AS n_tok_chars",
-        f"size(filter({_TOKS}, x -> x rlike '[A-Za-z]')) AS n_alpha",
-        f"size(filter({_TOKS}, x -> array_contains({sw_arr}, x))) AS n_stop",
+        f"size({TOKS}) AS n_words",
+        f"aggregate({TOKS}, 0L, (acc, x) -> acc + length(x)) AS n_tok_chars",
+        f"size(filter({TOKS}, x -> x rlike '[A-Za-z]')) AS n_alpha",
+        f"size(filter({TOKS}, x -> array_contains({sw_arr}, x))) AS n_stop",
     )
     mwl = F.col("n_tok_chars").cast("double") / F.greatest("n_words", F.lit(1))
     alpha = F.col("n_alpha").cast("double") / F.greatest("n_words", F.lit(1))

@@ -24,9 +24,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreducecore_spark.catalog import load_tables
+from mapreducecore_spark.llm import minhash
+from mapreducecore_spark.llm.minhash import (
+    MAX_BUCKET,
+    TOKS,
+    TOKS_DUCK,
+    hash60,
+    shingles,
+    shingles_duck,
+)
 from mapreducecore_spark.queries import register
 from mapreducecore_spark.queries._util import expanding, materialize, spread
-from mapreducecore_spark.queries.llm import _TOKS, _TOKS_DUCK, _shingles_duck, _shingles_expr
 
 # Sequential-fold inner product — identical expression tree on both
 # engines (same pattern as llm.similarity.COS_SPARK / COS_DUCK).
@@ -41,9 +49,9 @@ _BENCH_PRED = "doc_id % 97 = 0"
 
 _DECONTAM_ORACLE = f"""
     WITH toks AS (
-      SELECT doc_id, {_TOKS_DUCK} AS toks FROM documents
+      SELECT doc_id, {TOKS_DUCK} AS toks FROM documents
     ), sh AS (
-      SELECT doc_id, unnest({_shingles_duck(5)}) AS shingle
+      SELECT doc_id, unnest({shingles_duck(5)}) AS shingle
       FROM toks WHERE len(toks) >= 5
     ), bench AS (
       SELECT DISTINCT shingle FROM sh WHERE {_BENCH_PRED}
@@ -70,9 +78,9 @@ def decontam_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     sh = (
         spread(t["documents"])
-        .selectExpr("doc_id", f"{_TOKS} AS toks")
+        .selectExpr("doc_id", f"{TOKS} AS toks")
         .filter("size(toks) >= 5")
-        .selectExpr("doc_id", f"explode({_shingles_expr(5)}) AS shingle")
+        .selectExpr("doc_id", f"explode({shingles(5)}) AS shingle")
     )
     # Shingle once, read twice. Eager (round 12): this frame feeds a
     # broadcast side AND the big side of the same query — exactly the
@@ -101,9 +109,9 @@ def decontam_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _REP_ORACLE = f"""
     WITH toks AS (
-      SELECT doc_id, {_TOKS_DUCK} AS toks FROM documents
+      SELECT doc_id, {TOKS_DUCK} AS toks FROM documents
     ), g AS (
-      SELECT doc_id, toks, {_shingles_duck(2)} AS grams2
+      SELECT doc_id, toks, {shingles_duck(2)} AS grams2
       FROM toks WHERE len(toks) >= 2
     )
     SELECT doc_id,
@@ -124,9 +132,9 @@ def quality_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     return (
         t["documents"]
-        .selectExpr("doc_id", f"{_TOKS} AS toks")
+        .selectExpr("doc_id", f"{TOKS} AS toks")
         .filter("size(toks) >= 2")
-        .selectExpr("doc_id", "toks", f"{_shingles_expr(2)} AS grams2")
+        .selectExpr("doc_id", "toks", f"{shingles(2)} AS grams2")
         .selectExpr(
             "doc_id",
             "size(toks) AS n_tokens",
@@ -145,7 +153,7 @@ def quality_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     "token_length_histogram",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, n_chars, len({_TOKS_DUCK}) AS n_tokens FROM documents
+      SELECT doc_id, n_chars, len({TOKS_DUCK}) AS n_tokens FROM documents
     )
     SELECT CAST(n_tokens // 16 * 16 AS BIGINT) AS bucket_lo,
            COUNT(*) AS n_docs,
@@ -162,7 +170,7 @@ def token_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     return (
         t["documents"]
-        .selectExpr("n_chars", f"size({_TOKS}) AS n_tokens")
+        .selectExpr("n_chars", f"size({TOKS}) AS n_tokens")
         .groupBy(
             (F.floor(F.col("n_tokens") / 16) * 16).cast("bigint").alias("bucket_lo")
         )
@@ -181,7 +189,7 @@ def token_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     "source_quality_profile",
     oracle=f"""
     WITH d AS (
-      SELECT source, lang, n_chars, len({_TOKS_DUCK}) AS n_tokens FROM documents
+      SELECT source, lang, n_chars, len({TOKS_DUCK}) AS n_tokens FROM documents
     )
     SELECT source,
            COUNT(*) AS n_docs,
@@ -201,7 +209,7 @@ def source_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     return (
         t["documents"]
-        .selectExpr("source", "lang", "n_chars", f"size({_TOKS}) AS n_tokens")
+        .selectExpr("source", "lang", "n_chars", f"size({TOKS}) AS n_tokens")
         .groupBy("source")
         .agg(
             F.count("*").alias("n_docs"),
@@ -600,7 +608,7 @@ def fuzzy_match_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey",
         "c_name",
         "blk",
-        "CAST(conv(substring(md5(var), 1, 15), 16, 10) AS BIGINT) AS vh",
+        f"{hash60('var')} AS vh",
     )
     a = b.select(
         "blk", "vh", F.col("c_custkey").alias("key_a"), F.col("c_name").alias("name_a")
@@ -729,7 +737,7 @@ def kmeans_assign_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _TFIDF_ORACLE = f"""
     WITH toks AS (
-      SELECT doc_id, unnest({_TOKS_DUCK}) AS token FROM documents
+      SELECT doc_id, unnest({TOKS_DUCK}) AS token FROM documents
     ), tf AS (
       SELECT doc_id, token, COUNT(*) AS tf FROM toks GROUP BY doc_id, token
     ), df AS (
@@ -789,7 +797,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(spark, sf_dir)
     docs = spread(t["documents"])
-    toks = docs.selectExpr("doc_id", f"explode({_TOKS}) AS token")
+    toks = docs.selectExpr("doc_id", f"explode({TOKS}) AS token")
     tf = toks.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
     # one row per (doc, token) in tf => COUNT(*) per token == the
     # oracle's COUNT(DISTINCT doc_id); the tf lineage reused here is
@@ -902,7 +910,7 @@ _ALL_BIGRAMS_DUCK = (
 
 _BIGRAM_ORACLE = f"""
     WITH toks AS (
-      SELECT doc_id, {_TOKS_DUCK} AS toks FROM documents
+      SELECT doc_id, {TOKS_DUCK} AS toks FROM documents
     ), big AS (
       SELECT unnest({_ALL_BIGRAMS_DUCK}) AS bigram
       FROM toks WHERE len(toks) >= 2
@@ -929,7 +937,7 @@ def bigram_lm_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-word totals over the (vocabulary²-sized, i.e. small) count
     table — the corpus is touched once."""
     t = load_tables(spark, sf_dir)
-    docs = spread(t["documents"]).selectExpr("doc_id", f"{_TOKS} AS toks")
+    docs = spread(t["documents"]).selectExpr("doc_id", f"{TOKS} AS toks")
     big = (
         docs.filter("size(toks) >= 2")
         .selectExpr(f"explode({_ALL_BIGRAMS_SPARK}) AS bigram")
@@ -961,7 +969,7 @@ PACK_CAPACITY = 512
 
 _PACK_ORACLE = f"""
     WITH RECURSIVE toks AS (
-      SELECT lang, doc_id, CAST(len({_TOKS_DUCK}) AS INT) AS n_tokens,
+      SELECT lang, doc_id, CAST(len({TOKS_DUCK}) AS INT) AS n_tokens,
              ROW_NUMBER() OVER (PARTITION BY lang ORDER BY doc_id) AS rn
       FROM documents
     ), pack AS (
@@ -998,7 +1006,7 @@ def pack_sequences_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(spark, sf_dir)
     narrow = spread(t["documents"]).selectExpr(
-        "lang", "doc_id", f"size({_TOKS}) AS n_tokens"
+        "lang", "doc_id", f"size({TOKS}) AS n_tokens"
     )
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1027,10 +1035,10 @@ from mapreducecore_spark.queries.llm import _SW_SQL as _SW  # noqa: E402
 _CURATION_ORACLE = f"""
     WITH q AS (
       SELECT doc_id, lang, source, text,
-             ROUND(LEAST(CAST(len({_TOKS_DUCK}) AS DOUBLE) / 50.0, 1.0)
-                   * (1.0 - 0.5 * CAST(len(list_filter({_TOKS_DUCK},
+             ROUND(LEAST(CAST(len({TOKS_DUCK}) AS DOUBLE) / 50.0, 1.0)
+                   * (1.0 - 0.5 * CAST(len(list_filter({TOKS_DUCK},
                         x -> list_contains([{_SW}], x))) AS DOUBLE)
-                     / GREATEST(len({_TOKS_DUCK}), 1)), 6) AS quality
+                     / GREATEST(len({TOKS_DUCK}), 1)), 6) AS quality
       FROM documents
     ), filtered AS (
       SELECT * FROM q WHERE quality >= 0.3
@@ -1068,10 +1076,10 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         "text",
-        f"""ROUND(LEAST(CAST(size({_TOKS}) AS DOUBLE) / 50.0, 1.0)
-             * (1.0 - 0.5 * CAST(size(filter({_TOKS},
+        f"""ROUND(LEAST(CAST(size({TOKS}) AS DOUBLE) / 50.0, 1.0)
+             * (1.0 - 0.5 * CAST(size(filter({TOKS},
                   x -> array_contains({sw_arr}, x))) AS DOUBLE)
-               / GREATEST(size({_TOKS}), 1)), 6) AS quality""",
+               / GREATEST(size({TOKS}), 1)), 6) AS quality""",
     )
     filtered = materialize(
         q.filter("quality >= 0.3").withColumn(
@@ -1213,35 +1221,9 @@ def ann_cosine_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------- near-dup decontamination + mixture sampling
 
-from mapreducecore_spark.queries.llm import (  # noqa: E402
-    _MINHASH_SEEDS as _MH_SEEDS,
-    _mh_formula as _mh_f,
-)
-
-_MH_MINS_DUCK = ", ".join(
-    f"MIN({_mh_f('h', s)}) AS mh{s}" for s in range(_MH_SEEDS)
-)
-_MH_SIGS_DUCK = ", ".join(
-    f"CAST(mh{2*b} AS VARCHAR) || ':' || CAST(mh{2*b+1} AS VARCHAR)"
-    for b in range(_MH_SEEDS // 2)
-)
-
 _NEARDUP_DECONTAM_ORACLE = f"""
-    WITH docs AS (
-      SELECT doc_id, {_TOKS_DUCK} AS toks FROM documents
-    ), sh AS (
-      SELECT doc_id,
-             CAST(('0x' || substr(md5(unnest({_shingles_duck(3)})), 1, 15)) AS BIGINT) AS h
-      FROM docs WHERE len(toks) >= 3
-    ), mh AS (
-      SELECT doc_id, {_MH_MINS_DUCK} FROM sh GROUP BY doc_id
-    ), bands AS (
-      SELECT doc_id, band_id, sig FROM (
-        SELECT doc_id,
-               unnest([{", ".join(str(b) for b in range(_MH_SEEDS // 2))}]) AS band_id,
-               unnest([{_MH_SIGS_DUCK}]) AS sig
-        FROM mh)
-    ), bench AS (
+    WITH {minhash.bands_duck()},
+    bench AS (
       SELECT doc_id AS bench_id, band_id, sig FROM bands WHERE {_BENCH_PRED}
     ), corpus AS (
       SELECT doc_id, band_id, sig FROM bands WHERE NOT ({_BENCH_PRED})
@@ -1263,35 +1245,8 @@ def decontam_neardup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus side never shuffles for the probe — one scan + one map-side
     join, the same contract as the exact decontam op."""
     t = load_tables(spark, sf_dir)
-    docs = spread(t["documents"]).selectExpr("doc_id", f"{_TOKS} AS toks")
-    sh = (
-        docs.filter(F.expr("size(toks) >= 3"))
-        .selectExpr("doc_id", f"explode({_shingles_expr(3)}) AS shingle")
-        .selectExpr(
-            "doc_id",
-            "CAST(conv(substring(md5(shingle), 1, 15), 16, 10) AS BIGINT) AS h",
-        )
-    )
-    mh = sh.groupBy("doc_id").agg(
-        *[F.min(F.expr(_mh_f("h", s))).alias(f"mh{s}") for s in range(_MH_SEEDS)]
-    )
-    bands = mh.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.concat_ws(
-                            ":", F.col(f"mh{2*b}"), F.col(f"mh{2*b+1}")
-                        ).alias("sig"),
-                    )
-                    for b in range(_MH_SEEDS // 2)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", "b.band_id", "b.sig")
-    bands = materialize(bands, big=True)  # corpus band rows
+    docs = spread(t["documents"]).selectExpr("doc_id", f"{TOKS} AS toks")
+    bands = materialize(minhash.bands(minhash.signatures(docs)), big=True)  # corpus band rows
     bench = bands.filter(_BENCH_PRED).select(
         F.col("doc_id").alias("bench_id"), "band_id", "sig"
     )
@@ -1308,7 +1263,7 @@ _MIXTURE_BUDGET = 300  # tokens per source
 _MIXTURE_ORACLE = f"""
     WITH s AS (
       SELECT doc_id, source,
-             CAST(len({_TOKS_DUCK}) AS BIGINT) AS n_tokens,
+             CAST(len({TOKS_DUCK}) AS BIGINT) AS n_tokens,
              md5(CAST(doc_id AS VARCHAR)) AS ord
       FROM documents
     ), w AS (
@@ -1338,7 +1293,7 @@ def mixture_sample_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = spread(t["documents"]).selectExpr(
         "doc_id",
         "source",
-        f"CAST(size({_TOKS}) AS BIGINT) AS n_tokens",
+        f"CAST(size({TOKS}) AS BIGINT) AS n_tokens",
         "md5(CAST(doc_id AS STRING)) AS ord",
     )
     w = (
@@ -1437,7 +1392,7 @@ def pii_redact_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and with it the rounded value — is identical cross-engine.
 _ENTROPY_ORACLE = f"""
 WITH toks AS (
-    SELECT doc_id, list_sort({_TOKS_DUCK}) AS st FROM documents
+    SELECT doc_id, list_sort({TOKS_DUCK}) AS st FROM documents
 ),
 runs AS (
     SELECT doc_id,
@@ -1488,7 +1443,7 @@ def quality_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     value — matches exactly.
     """
     t = load_tables(spark, sf_dir)
-    toks = t["documents"].selectExpr("doc_id", f"array_sort({_TOKS}) AS st")
+    toks = t["documents"].selectExpr("doc_id", f"array_sort({TOKS}) AS st")
     # Filter empty docs BEFORE the index sequence: sequence(1, 0) is
     # [1, 0] in Spark (descending default step) and element_at(st, 0)
     # throws under ANSI; the output excludes n_tokens = 0 rows anyway.
@@ -1524,7 +1479,7 @@ def quality_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # differs in low bits between engines depending on reduction order.
 _PPL_ORACLE = f"""
     WITH toks AS (
-      SELECT doc_id, {_TOKS_DUCK} AS toks FROM documents
+      SELECT doc_id, {TOKS_DUCK} AS toks FROM documents
     ), big AS (
       SELECT doc_id, unnest({_ALL_BIGRAMS_DUCK}) AS bigram
       FROM toks WHERE len(toks) >= 2
@@ -1572,7 +1527,7 @@ def quality_perplexity_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     exp() divergence sits ~5 orders of magnitude inside the rounding
     grid instead of riding its edge (ADVICE r3)."""
     t = load_tables(spark, sf_dir)
-    docs = spread(t["documents"]).selectExpr("doc_id", f"{_TOKS} AS toks")
+    docs = spread(t["documents"]).selectExpr("doc_id", f"{TOKS} AS toks")
     big = materialize(
         docs.filter("size(toks) >= 2").selectExpr(
             "doc_id", f"explode({_ALL_BIGRAMS_SPARK}) AS bigram"
@@ -1614,10 +1569,10 @@ def _gate_dedup_cap_duck(with_text: bool) -> str:
     text_col = ", text" if with_text else ""
     return f"""q AS (
       SELECT doc_id, source, text,
-             ROUND(LEAST(CAST(len({_TOKS_DUCK}) AS DOUBLE) / 50.0, 1.0)
-                   * (1.0 - 0.5 * CAST(len(list_filter({_TOKS_DUCK},
+             ROUND(LEAST(CAST(len({TOKS_DUCK}) AS DOUBLE) / 50.0, 1.0)
+                   * (1.0 - 0.5 * CAST(len(list_filter({TOKS_DUCK},
                         x -> list_contains([{_SW}], x))) AS DOUBLE)
-                     / GREATEST(len({_TOKS_DUCK}), 1)), 6) AS quality
+                     / GREATEST(len({TOKS_DUCK}), 1)), 6) AS quality
       FROM documents
     ), filtered AS (
       SELECT * FROM q WHERE quality >= 0.3
@@ -1652,10 +1607,10 @@ def _curation_v2_oracle() -> str:
     return f"""
     WITH q AS (
       SELECT doc_id, source, text,
-             ROUND(LEAST(CAST(len({_TOKS_DUCK}) AS DOUBLE) / 50.0, 1.0)
-                   * (1.0 - 0.5 * CAST(len(list_filter({_TOKS_DUCK},
+             ROUND(LEAST(CAST(len({TOKS_DUCK}) AS DOUBLE) / 50.0, 1.0)
+                   * (1.0 - 0.5 * CAST(len(list_filter({TOKS_DUCK},
                         x -> list_contains([{_SW}], x))) AS DOUBLE)
-                     / GREATEST(len({_TOKS_DUCK}), 1)), 6) AS quality
+                     / GREATEST(len({TOKS_DUCK}), 1)), 6) AS quality
       FROM documents
     ), filtered AS (
       SELECT * FROM q WHERE quality >= 0.3
@@ -1721,10 +1676,10 @@ def corpus_curation_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         "text",
-        f"""ROUND(LEAST(CAST(size({_TOKS}) AS DOUBLE) / 50.0, 1.0)
-             * (1.0 - 0.5 * CAST(size(filter({_TOKS},
+        f"""ROUND(LEAST(CAST(size({TOKS}) AS DOUBLE) / 50.0, 1.0)
+             * (1.0 - 0.5 * CAST(size(filter({TOKS},
                   x -> array_contains({sw_arr}, x))) AS DOUBLE)
-               / GREATEST(size({_TOKS}), 1)), 6) AS quality""",
+               / GREATEST(size({TOKS}), 1)), 6) AS quality""",
     )
     filtered = materialize(
         q.filter("quality >= 0.3").withColumn(
@@ -1775,10 +1730,10 @@ def _gate_dedup_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         "text",
-        f"""ROUND(LEAST(CAST(size({_TOKS}) AS DOUBLE) / 50.0, 1.0)
-             * (1.0 - 0.5 * CAST(size(filter({_TOKS},
+        f"""ROUND(LEAST(CAST(size({TOKS}) AS DOUBLE) / 50.0, 1.0)
+             * (1.0 - 0.5 * CAST(size(filter({TOKS},
                   x -> array_contains({sw_arr}, x))) AS DOUBLE)
-               / GREATEST(size({_TOKS}), 1)), 6) AS quality""",
+               / GREATEST(size({TOKS}), 1)), 6) AS quality""",
     )
     filtered = materialize(
         q.filter("quality >= 0.3").withColumn(
@@ -1860,22 +1815,18 @@ _NORM_HASH_DUCK = "md5(trim(regexp_replace(lower(text), '[ \t\n\r]+', ' ', 'g'))
 
 def _ingest_incr_oracle() -> str:
     from mapreducecore_spark.queries.curation import _dsir_oracle_xt
-    from mapreducecore_spark.queries.llm import (
-        _MINHASH_BANDED_DUCK,
-        _MINHASH_MAX_BUCKET,
-    )
 
     return f"""
-    WITH {_MINHASH_BANDED_DUCK},
+    WITH {minhash.bands_duck(banded=True)},
     incr AS (
       SELECT DISTINCT new_id, match_id FROM (
         SELECT n.doc_id AS new_id, b.doc_id AS match_id
         FROM banded n JOIN banded b
           ON n.band_id = b.band_id AND n.sig = b.sig AND n.doc_id <> b.doc_id
-        WHERE n.doc_id % 10 = 0 AND n.bw <= {_MINHASH_MAX_BUCKET}
+        WHERE n.doc_id % 10 = 0 AND n.bw <= {MAX_BUCKET}
         UNION ALL
         SELECT doc_id AS new_id, rep AS match_id FROM banded
-        WHERE doc_id % 10 = 0 AND bw > {_MINHASH_MAX_BUCKET} AND doc_id <> rep
+        WHERE doc_id % 10 = 0 AND bw > {MAX_BUCKET} AND doc_id <> rep
       )
     ),
     near AS (
@@ -1886,10 +1837,10 @@ def _ingest_incr_oracle() -> str:
     od AS (SELECT * FROM documents WHERE doc_id % 10 <> 0),
     newq AS (
       SELECT doc_id,
-             ROUND(LEAST(CAST(len({_TOKS_DUCK}) AS DOUBLE) / 50.0, 1.0)
-                   * (1.0 - 0.5 * CAST(len(list_filter({_TOKS_DUCK},
+             ROUND(LEAST(CAST(len({TOKS_DUCK}) AS DOUBLE) / 50.0, 1.0)
+                   * (1.0 - 0.5 * CAST(len(list_filter({TOKS_DUCK},
                         x -> list_contains([{_SW}], x))) AS DOUBLE)
-                     / GREATEST(len({_TOKS_DUCK}), 1)), 6) AS quality,
+                     / GREATEST(len({TOKS_DUCK}), 1)), 6) AS quality,
              {_NORM_HASH_DUCK} AS h
       FROM nd
     ),
@@ -1950,10 +1901,10 @@ def corpus_ingest_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         new.selectExpr(
             "doc_id",
             "text",
-            f"""ROUND(LEAST(CAST(size({_TOKS}) AS DOUBLE) / 50.0, 1.0)
-                 * (1.0 - 0.5 * CAST(size(filter({_TOKS},
+            f"""ROUND(LEAST(CAST(size({TOKS}) AS DOUBLE) / 50.0, 1.0)
+                 * (1.0 - 0.5 * CAST(size(filter({TOKS},
                       x -> array_contains({sw_arr}, x))) AS DOUBLE)
-                   / GREATEST(size({_TOKS}), 1)), 6) AS quality""",
+                   / GREATEST(size({TOKS}), 1)), 6) AS quality""",
         ).withColumn("h", norm_h).drop("text")
     )
     oldh = old.select(norm_h.alias("h")).distinct().withColumn(

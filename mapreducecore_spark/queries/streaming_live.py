@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreducecore_spark.catalog import tune_session
+from mapreducecore_spark.llm import minhash
+from mapreducecore_spark.llm.minhash import MAX_BUCKET, TOKS
 from mapreducecore_spark.queries import register
 
 def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -88,11 +90,19 @@ def _stream_width(in_bytes: int | None, parallelism: int) -> int:
 
 def _src_bytes(sf_dir: str, *names: str) -> int:
     """Stream-input size for _stream_width: sum of the named source
-    files (repeat a name for a query that streams it twice)."""
+    files (repeat a name for a query that streams it twice). A
+    directory-shaped source counts its data files, not its inode."""
     total = 0
     for n in names:
         p = os.path.join(sf_dir, n)
-        if os.path.exists(p):
+        if os.path.isdir(p):
+            total += sum(
+                os.path.getsize(os.path.join(r, f))
+                for r, _d, fs in os.walk(p)
+                for f in fs
+                if not f.startswith(("_", "."))
+            )
+        elif os.path.exists(p):
             total += os.path.getsize(p)
     return total
 
@@ -676,32 +686,15 @@ def stream_live_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _drain(out, spark, in_bytes=_src_bytes(sf_dir, "documents.parquet"))
 
 
-def _incr_bands_duck(prefix: str, where: str) -> str:
-    """Prefixed docs -> shingles -> in-row minhash -> bands CTE chain
-    for the streaming incremental-dedup oracle — shared with the
-    persisted band-index oracles in queries/llm.py."""
-    from mapreducecore_spark.queries.llm import _sliced_bands_duck
-
-    return _sliced_bands_duck(prefix, where)
-
-
 def _incr_stream_oracle() -> str:
-    from mapreducecore_spark.queries.llm import _MINHASH_MAX_BUCKET
-
     return f"""
-    WITH {_incr_bands_duck("o_", "WHERE doc_id % 10 <> 0")},
-    o_banded AS (
-      SELECT doc_id, band_id, sig,
-             COUNT(*) OVER (PARTITION BY band_id, sig) AS bw,
-             MIN(doc_id) OVER (PARTITION BY band_id, sig) AS rep
-      FROM o_bands
-    ),
+    WITH {minhash.bands_duck("documents WHERE doc_id % 10 <> 0", "o_", banded=True)},
     idx AS (
       SELECT DISTINCT band_id, sig,
-             CASE WHEN bw <= {_MINHASH_MAX_BUCKET} THEN doc_id ELSE rep END AS match_id
+             CASE WHEN bw <= {MAX_BUCKET} THEN doc_id ELSE rep END AS match_id
       FROM o_banded
     ),
-    {_incr_bands_duck("n_", "WHERE doc_id % 10 = 0")}
+    {minhash.bands_duck("documents WHERE doc_id % 10 = 0", "n_")}
     SELECT DISTINCT n.doc_id AS new_id, i.match_id
     FROM n_bands n JOIN idx i USING (band_id, sig)
     """
@@ -727,31 +720,22 @@ def stream_live_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     state is one (new_id, match_id) entry per emitted pair, swapped
     for dropDuplicatesWithinWatermark on an unbounded feed. Batch
     equivalence (the oracle) is exact, including the bucket guard."""
-    import os
-
-    from mapreducecore_spark.queries.llm import (
-        _MINHASH_MAX_BUCKET,
-        _MINHASH_SEEDS,
-        _TOKS,
-        _mh_formula,
-        _minhash_banded,
-        _shingles_expr,
-    )
     from mapreducecore_spark.catalog import load_tables
     from mapreducecore_spark.queries._util import spread
+    from mapreducecore_spark.queries.llm import _minhash_banded
 
     tune_session(spark)
     old_docs = (
         spread(load_tables(spark, sf_dir)["documents"])
         .filter(F.col("doc_id") % 10 != 0)
-        .selectExpr("doc_id", f"{_TOKS} AS toks")
+        .selectExpr("doc_id", f"{TOKS} AS toks")
     )
     idx = (
         _minhash_banded(old_docs)
         .selectExpr(
             "band_id",
             "sig",
-            f"CASE WHEN bw <= {_MINHASH_MAX_BUCKET} THEN doc_id ELSE rep END AS match_id",
+            f"CASE WHEN bw <= {MAX_BUCKET} THEN doc_id ELSE rep END AS match_id",
         )
         .distinct()
     )
@@ -763,38 +747,10 @@ def stream_live_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
         .option("pathGlobFilter", "documents.parquet")
         .parquet(sf_dir)
         .filter(F.col("doc_id") % 10 == 0)
-        .selectExpr("doc_id", f"{_TOKS} AS toks")
-        .filter("size(toks) >= 3")
-        .selectExpr(
-            "doc_id",
-            f"transform({_shingles_expr(3)}, s ->"
-            " CAST(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT)) AS hs",
-        )
-        .selectExpr(
-            "doc_id",
-            *[
-                f"array_min(transform(hs, h -> {_mh_formula('h', s)})) AS mh{s}"
-                for s in range(_MINHASH_SEEDS)
-            ],
-        )
+        .selectExpr("doc_id", f"{TOKS} AS toks")
     )
-    n_bands = _MINHASH_SEEDS // 2
-    bands = stream.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.concat_ws(
-                            ":", F.col(f"mh{2 * b}"), F.col(f"mh{2 * b + 1}")
-                        ).alias("sig"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("b"),
-    ).select(F.col("doc_id").alias("new_id"), "b.band_id", "b.sig")
+    sigs = minhash.hashes(stream).select("doc_id", minhash.inrow_signatures().alias("mhs"))
+    bands = minhash.bands(sigs).withColumnRenamed("doc_id", "new_id")
     out = (
         bands.join(idx, ["band_id", "sig"])
         .select("new_id", "match_id")
@@ -813,14 +769,7 @@ def _incremental_dedup_stream(
     band index, and pair dedup via dropDuplicatesWithinWatermark so
     pair state is EVICTED once the watermark passes (VERDICT r4 #6)."""
     from mapreducecore_spark.catalog import load_tables
-    from mapreducecore_spark.queries.llm import (
-        _MINHASH_MAX_BUCKET,
-        _MINHASH_SEEDS,
-        _TOKS,
-        _mh_formula,
-        _minhash_banded,
-        _shingles_expr,
-    )
+    from mapreducecore_spark.queries.llm import _minhash_banded
     from mapreducecore_spark.queries._util import materialize, spread
 
     tune_session(spark)
@@ -828,7 +777,7 @@ def _incremental_dedup_stream(
     old_docs = (
         spread(docs)
         .filter(F.col("doc_id") % 10 != 0)
-        .selectExpr("doc_id", f"{_TOKS} AS toks")
+        .selectExpr("doc_id", f"{TOKS} AS toks")
     )
     # materialize (round 12, guide §1.2): a stream-STATIC join re-plans
     # AND re-executes the static side every micro-batch — this drain
@@ -844,7 +793,7 @@ def _incremental_dedup_stream(
         .selectExpr(
             "band_id",
             "sig",
-            f"CASE WHEN bw <= {_MINHASH_MAX_BUCKET} THEN doc_id ELSE rep END AS match_id",
+            f"CASE WHEN bw <= {MAX_BUCKET} THEN doc_id ELSE rep END AS match_id",
         )
         .distinct(),
         eager=True,
@@ -901,41 +850,12 @@ def _incremental_dedup_stream(
         .option("recursiveFileLookup", "true")
         .parquet(in_dir)
         .withWatermark("ingest_ts", "30 minutes")
-        .selectExpr("doc_id", "ingest_ts", f"{_TOKS} AS toks")
-        .filter("size(toks) >= 3")
-        .selectExpr(
-            "doc_id",
-            "ingest_ts",
-            f"transform({_shingles_expr(3)}, s ->"
-            " CAST(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT)) AS hs",
-        )
-        .selectExpr(
-            "doc_id",
-            "ingest_ts",
-            *[
-                f"array_min(transform(hs, h -> {_mh_formula('h', s)})) AS mh{s}"
-                for s in range(_MINHASH_SEEDS)
-            ],
-        )
+        .selectExpr("doc_id", "ingest_ts", f"{TOKS} AS toks")
     )
-    n_bands = _MINHASH_SEEDS // 2
-    bands = stream.select(
-        "doc_id",
-        "ingest_ts",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.concat_ws(
-                            ":", F.col(f"mh{2 * b}"), F.col(f"mh{2 * b + 1}")
-                        ).alias("sig"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("b"),
-    ).select(F.col("doc_id").alias("new_id"), "ingest_ts", "b.band_id", "b.sig")
+    sigs = minhash.hashes(stream, "ingest_ts").select(
+        "doc_id", "ingest_ts", minhash.inrow_signatures().alias("mhs")
+    )
+    bands = minhash.bands(sigs, "ingest_ts").withColumnRenamed("doc_id", "new_id")
     return (
         bands.join(idx, ["band_id", "sig"])
         .select("new_id", "match_id", "ingest_ts")
@@ -970,9 +890,4 @@ def stream_live_incremental_dedup_wm(spark: SparkSession, sf_dir: str) -> DataFr
     # The stream side is the re-laid 10%-of-docs backlog written just
     # above (not the full documents file), so size the state width from
     # what was actually laid out.
-    relaid = sum(
-        os.path.getsize(os.path.join(r, f))
-        for r, _d, fs in os.walk(f"{tmp}/in")
-        for f in fs
-    )
-    return _drain(out, spark, mode="append", in_bytes=relaid)
+    return _drain(out, spark, mode="append", in_bytes=_src_bytes(tmp, "in"))

@@ -434,3 +434,27 @@ def test_stream_width_size_adaptive():
     assert _stream_width(1 << 30, 32) == 32      # capped at parallelism
     assert _stream_width(20 * mb, 8) == 8        # low-core driver run
     assert _stream_width(20 * mb, 0) == 4        # degenerate parallelism
+
+
+def test_src_bytes_sums_directory_parquet(spark, sf_dir, tmp_path):
+    """A directory-shaped parquet source (what gen_scaledata writes at
+    large copy counts) must size the stream by its part files, not by
+    the directory inode — otherwise _stream_width collapses to its
+    floor exactly where the input is largest."""
+    import os
+
+    from mapreducecore_spark.queries.streaming_live import _src_bytes
+
+    load_tables(spark, sf_dir)["documents"].repartition(3).write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    parts = [
+        os.path.join(r, f)
+        for r, _d, fs in os.walk(tmp_path / "documents.parquet")
+        for f in fs
+        if f.startswith("part-")
+    ]
+    assert len(parts) >= 2
+    want = sum(os.path.getsize(p) for p in parts)
+    assert _src_bytes(str(tmp_path), "documents.parquet") == want
+    assert _src_bytes(str(tmp_path), "documents.parquet", "documents.parquet") == 2 * want

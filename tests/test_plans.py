@@ -525,28 +525,25 @@ def test_incremental_persisted_semi_join_scopes_index(spark, sf_dir):
     RESTRICTED to touched buckets via a LeftSemi join before any
     window/pair work (the untouched majority of a 100 TB index never
     widens), and the pair joins stay equi-joins."""
-    from mapreducecore_spark.queries.llm import (
-        _TOKS,
-        _band_signatures,
-        _incremental_vs_index,
-    )
+    from mapreducecore_spark.llm.minhash import TOKS, bands, signatures
+    from mapreducecore_spark.queries.llm import _incremental_vs_index
     from mapreducecore_spark.catalog import load_tables
     from pyspark.sql import functions as F
 
     from mapreducecore_spark.queries.llm import _touched_bucket_rows
 
     docs = load_tables(spark, sf_dir)["documents"]
-    idx = _band_signatures(
-        docs.filter(F.col("doc_id") % 10 != 0).selectExpr("doc_id", f"{_TOKS} AS toks")
-    )
+    idx = bands(signatures(
+        docs.filter(F.col("doc_id") % 10 != 0).selectExpr("doc_id", f"{TOKS} AS toks")
+    ))
     new_docs = docs.filter(F.col("doc_id") % 10 == 0).selectExpr(
-        "doc_id", f"{_TOKS} AS toks"
+        "doc_id", f"{TOKS} AS toks"
     )
     # The semi-join stage sits below a localCheckpoint in the full
     # operator (which truncates the outer plan to Scan ExistingRDD),
     # so gate the stage frame directly — the operator is wired to it
     # by construction (llm._incremental_vs_index).
-    plan = plan_of(_touched_bucket_rows(idx, _band_signatures(new_docs)), "simple")
+    plan = plan_of(_touched_bucket_rows(idx, bands(signatures(new_docs))), "simple")
     assert "LeftSemi" in plan
     assert "CartesianProduct" not in plan
     full = plan_of(_incremental_vs_index(idx, new_docs), "simple")

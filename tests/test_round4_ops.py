@@ -115,7 +115,7 @@ def test_winnowing_shared_substring_guarantee(spark, sf_dir, tmp_path_factory):
     # Rebuild the fingerprint SETS via the same pipeline minus the
     # digest (the digest collapses the set; the guarantee is about
     # set intersection).
-    from mapreducecore_spark.queries.llm import _TOKS
+    from mapreducecore_spark.llm.minhash import TOKS
 
     gram = (
         "transform(sequence(1, size(tk) - "
@@ -127,7 +127,7 @@ def test_winnowing_shared_substring_guarantee(spark, sf_dir, tmp_path_factory):
     fps = {
         r["doc_id"]: set(r["fps"])
         for r in spark.read.parquet(str(root / "documents.parquet"))
-        .selectExpr("doc_id", f"{_TOKS} AS tk")
+        .selectExpr("doc_id", f"{TOKS} AS tk")
         .selectExpr("doc_id", f"{gram} AS gh")
         .selectExpr(
             "doc_id",

@@ -272,7 +272,7 @@ def test_classifier_lr_train_reduces_loss(spark, sf_dir, duck):
     recomputed independently in DuckDB from the returned weights."""
     import math
 
-    from mapreducecore_spark.queries.llm import _TOKS_DUCK
+    from mapreducecore_spark.llm.minhash import TOKS_DUCK
 
     w = REGISTRY["classifier_lr_train"].fn(spark, sf_dir).collect()
     assert len(w) > 0
@@ -280,7 +280,7 @@ def test_classifier_lr_train_reduces_loss(spark, sf_dir, duck):
     loss = duck.sql(
         f"""
         WITH w(bucket, wv) AS (VALUES {vals}),
-        toks AS (SELECT doc_id, source, unnest({_TOKS_DUCK}) AS token
+        toks AS (SELECT doc_id, source, unnest({TOKS_DUCK}) AS token
                  FROM documents),
         feats AS (
           SELECT doc_id,

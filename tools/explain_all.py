@@ -55,10 +55,10 @@ SHOWN = [
 
 def main() -> None:
     from mapreducecore_spark.queries import REGISTRY, _load_all
-    from mapreducecore_spark.session import get_spark
+    from mapreducecore_spark.session import default_master, get_spark
 
     _load_all()
-    spark = get_spark(app_name="explain-all", master="local[8]")
+    spark = get_spark(app_name="explain-all", master=default_master())
     spark.sparkContext.setLogLevel("ERROR")
     sf_dir = "/root/testdata/sf0.001"
 

@@ -18,7 +18,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mapreducecore_spark import metrics  # noqa: E402
 
@@ -28,17 +28,17 @@ def main() -> None:
     factor = float(sys.argv[3]) if len(sys.argv) > 3 else None
 
     from mapreducecore_spark.queries import REGISTRY, _load_all
-    from mapreducecore_spark.session import get_spark
+    from mapreducecore_spark.session import default_master, get_spark
 
     _load_all()
     # SPARK_GRAFT_MASTER lets the round-9 multi-executor attestation
     # reuse this exact protocol under local-cluster[W,C,M] (real
     # separate executor JVMs, cross-process shuffle). Executor sizing
     # for that mode goes through SPARK_GRAFT_EXTRA_CONF
-    # (spark.executor.memory=...); local[32] stays the default.
+    # (spark.executor.memory=...); local[SPARK_GRAFT_CPUS] is the default.
     spark = get_spark(
         app_name="run-once",
-        master=os.environ.get("SPARK_GRAFT_MASTER", "local[32]"),
+        master=default_master(),
         extra_conf={
             "spark.ui.enabled": "true",
             "spark.ui.port": str(metrics.DEFAULT_UI_PORT),

@@ -13,17 +13,19 @@ guards bound.
 Usage:
   python tools/scale_bench.py [--big DIR] [--factor N] [query ...]
   # 10x:  python tools/scale_bench.py
-  # 100x: python tools/scale_bench.py --big /root/repo/_scaledata/sf10 --factor 100
+  # 100x: python tools/scale_bench.py --big _scaledata/sf10 --factor 100
 """
 
 from __future__ import annotations
 
 import json
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from mapreducecore_spark import metrics  # noqa: E402
 
@@ -70,7 +72,7 @@ HEAVY = [
 
 def main() -> None:
     args = sys.argv[1:]
-    big = "/root/repo/_scaledata/sf1"
+    big = os.path.join(ROOT, "_scaledata", "sf1")
     factor = 10.0
     names = []
     i = 0
@@ -87,12 +89,12 @@ def main() -> None:
     names = names or HEAVY
 
     from mapreducecore_spark.queries import REGISTRY, _load_all
-    from mapreducecore_spark.session import get_spark
+    from mapreducecore_spark.session import default_master, get_spark
 
     _load_all()
     spark = get_spark(
         app_name="scale-bench",
-        master="local[32]",
+        master=default_master(),
         extra_conf={"spark.ui.enabled": "true", "spark.ui.port": str(UI_PORT)},
     )
     spark.sparkContext.setLogLevel("ERROR")

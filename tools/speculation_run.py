@@ -38,7 +38,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 QUERY = sys.argv[2] if len(sys.argv) > 2 else "dedup_minhash_lsh"
