@@ -114,16 +114,10 @@ def main() -> None:
             # stages of the current query only). Queries compute
             # identically — this changes what the DRIVER remembers
             # about finished work, not any plan or result.
-            **(
-                {}
-                if os.environ.get("SPARK_GRAFT_BENCH_UI_RETENTION") == "default"
-                else {
-                    "spark.sql.ui.retainedExecutions": "30",
-                    "spark.ui.retainedJobs": "200",
-                    "spark.ui.retainedStages": "400",
-                    "spark.ui.retainedTasks": "20000",
-                }
-            ),
+            "spark.sql.ui.retainedExecutions": "30",
+            "spark.ui.retainedJobs": "200",
+            "spark.ui.retainedStages": "400",
+            "spark.ui.retainedTasks": "20000",
         },
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -185,9 +185,9 @@ def connected_components(
             if changed == 0:
                 break
         # Eagerly checkpoint the FINAL labels before the finally block
-        # releases the edge cache. Each completed round's count()
-        # already forced the lazy checkpoint (making this a cheap
-        # narrow re-materialization of the label table), but the
+        # releases the edge cache. Each completed round's labels are
+        # already checkpointed (making this a cheap narrow
+        # re-materialization of the label table), but the
         # zero-round path (max_iter == 0 with resume_from) never did —
         # and the eager checkpoint makes the invariant structural
         # instead of incidental: the returned plan reads materialized

@@ -46,7 +46,8 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
 # The external driver verifies queries in dict order and has a bounded
 # window (~50 entries / round). Emit the registry in an explicit
 # priority order so the window always covers the flagship LLM-pipeline
-# operators (dedup/ANN) and live streaming; everything else follows.
+# operators (dedup/ANN) and live streaming; everything else follows in
+# registration order (_load_all's module order).
 # ROUND-12 ROTATION (VERDICT r11 #6, deferred from r10 #1): exactly 50
 # names, counted by tests/test_registry_window.py. Composition: 5
 # flagship keepers; all 15 stream_live entries (every one is touched
@@ -111,188 +112,7 @@ _PRIORITY: tuple[str, ...] = (
     "set_except",
     "set_intersect_all",
     "subquery_correlated_avg",
-    "subquery_scalar_threshold",  # ---- end of the exactly-50-entry driver window ----
-    "dedup_lsh_verified_pairs",
-    "minhash_estimate_accuracy",
-    "dedup_candidate_recall",
-    "dedup_connected_components",
-    "dedup_savings_report",
-    "q8_market_share",
-    "q11_important_stock",
-    "q12_shipmode_priority",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q17_small_quantity_revenue",
-    "q19_discounted_revenue",
-    "q20_potential_promotion",
-    "q21_suppliers_who_kept_waiting",
-    "scalar_date_funcs",
-    "scalar_json_funcs",
-    "scalar_array_funcs",
-    "scalar_math_funcs",
-    "scalar_conditional",
-    "scalar_regexp_funcs",
-    "scalar_map_funcs",
-    "scalar_try_cast",
-    "dq_column_profile",
-    "dq_anomaly_zscore",
-    "dq_referential_orphans",
-    "dq_mad_outliers",
-    "graph_pagerank_converged",
-    "graph_triangle_count",
-    "maintenance_compact_small_files",
-    "source_custom_pyds_scan",
-    "udtf_segment_lateral",
-    "token_count_bpe",
-    "lang_id_ngram",
-    "quality_perplexity_bigram",
-    "udf_arrow_optimized",
-    "udf_apply_in_arrow",
-    "udf_row_strmap",
-    "events_sliding_window",
-    "join_lateral_topn",
-    "table_merge_upsert",
-    "semdedup_prune",
-    "tfidf_top_terms",
-    "set_union_by_name",
-    "set_union_distinct",
-    "window_extras",
-    "agg_multi_distinct",
-    "join_cross_dims",
-    "ann_ivf_trained",
-    "ann_recall_eval",
-    "dedup_lines_ccnet",
-    "dedup_substring_spans",
-    "pii_redact_scrub",
-    "quality_token_entropy",
-    "quality_classifier_hashed",
-    "domain_cap_documents",
-    "simhash_docs",
-    "simhash_neardup_pairs",
-    "events_session_window",
-    "events_day_retention",
-    "events_cdc_latest_state",
-    "events_scd2_intervals",
-    "join_asof_last_order",
-    "join_hint_broadcast_sql",
-    "join_left_anti",
-    "fuzzy_match_blocked",
-    "set_except_all",
-    "agg_min_max_by",
-    "agg_mode_deterministic",
-    "agg_null_semantics",
-    "agg_rollup",
-    "window_moving_avg",
-    "udf_grouped_agg",
-    "q2_min_cost_supplier",
-    "q9_product_type_profit",
-    "q18_large_volume_orders",
-    "basket_part_pairs",
-    "dedup_ngram_jaccard",
-    "dedup_incremental_minhash",
-    "dedup_incremental_persisted",
-    "dedup_band_index_build",
-    "wordcount_documents",
-    "agg_count_distinct",
-    "agg_cube",
-    "agg_grouping_sets",
-    "agg_having",
-    "agg_percentiles",
-    "agg_rollup_grouping_flags",
-    "agg_salted_hot_keys",
-    "join_full_outer_counts",
-    "join_left_outer_orders",
-    "join_left_semi",
-    "join_null_safe_eq",
-    "join_range_ship_after_order",
-    "join_right_outer_lineitem",
-    "join_salted_hot_keys",
-    "join_theta_nonequi",
-    "orderby_limit_multikey",
-    "project_rename_compute",
-    "q10_returned_items",
-    "q13_customer_distribution",
-    "q16_parts_supplier_counts",
-    "q22_global_sales_opportunity",
-    "q4_order_priority_exists",
-    "q7_volume_shipping",
-    "window_ignore_nulls",
-    "window_lag_lead",
-    "window_range_between",
-    "window_range_interval_90d",
-    "window_rank_dense",
-    "window_running_sum",
-    "sample_weighted_by_source",
-    "q6_forecast_revenue",
-    "set_intersect",
-    "agg_stats_global",
-    "ann_ivf_coarse",
-    "boilerplate_ngram_flag",
-    "corpus_curation_pipeline",
-    "decontam_ngram_overlap",
-    "dedup_keep_best_quality",
-    "embedding_neardup_pairs",
-    "events_dedup",
-    "events_funnel_conversion",
-    "events_tumbling_window",
-    "join_inner_customer_orders",
-    "mr_sorted_partition_sink",
-    "mr_wordcount_contract",
-    "multimodal_audio_windows",
-    "multimodal_resize",
-    "pack_sequences_greedy",
-    "pivot_status_counts",
-    "q1_pricing_summary",
-    "q3_top_orders_by_revenue",
-    "q5_nation_revenue",
-    "quality_gopher_rules",
-    "scalar_higher_order_funcs",
-    "scalar_string_funcs",
-    "scan_filter_predicates",
-    "set_union_all",
-    "split_train_val_test",
-    "text_quality_score",
-    "text_stats",
-    "topk_per_group",
-    "udf_grouped_map_rank",
-    "udf_map_in_arrow",
-    "udf_pandas_scalar",
-    "window_row_number",
-    "agg_approx_percentile",
-    "quality_repetition_ratio",
-    "token_length_histogram",
-    "source_quality_profile",
-    "embedding_centroid_per_label",
-    "rolling_7d_distinct_users",
-    "kmeans_assign_seeded",
-    "layout_zorder_sort",
-    "bigram_lm_counts",
-    "decontam_neardup_minhash",
-    "mixture_sample_token_budget",
-    "scalar_string_funcs2",
-    "scalar_date_funcs2",
-    "scalar_bitwise_hash",
-    "scalar_struct_to_json",
-    "scalar_timestamp_diff",
-    "scalar_array_funcs2",
-    "scalar_array_funcs3",
-    "scalar_binary_funcs",
-    "scalar_date_funcs3",
-    "scalar_math_funcs2",
-    "orderby_nulls_first",
-    "unpivot_part_measures",
-    "incremental_daily_rollup",
-    "graph_pagerank_step",
-    "table_diff_rowhash",
-    "embedding_quantize_int8",
-    "ann_cosine_quantized",
-    "json_dead_letter_split",
-    "multimodal_decode",
-    "multimodal_binary_dedup",
-    "corpus_ingest_incremental",
-    "agg_approx_count_distinct",
-    "agg_hll_sketch_merge",
-    "sample_stratified",
+    "subquery_scalar_threshold",
 )
 
 

@@ -150,15 +150,11 @@ _SPREAD_SAFE_NODES = frozenset(
 
 
 def _assert_scan_adjacent(df) -> None:
-    """Mechanical guard for spread()'s invariant (VERDICT r8 #5 /
-    ADVICE r7 #2): the argument plan must be a bare relation or a
-    Project/Filter chain over one. Enforced on EVERY call — the check
-    is one render of the analyzed plan (no job), so the whole test
-    suite polices every call site for free. Opt out with
-    SPARK_GRAFT_CHECK_SPREAD=0 only if a plan shape is known-safe but
-    not yet in the allowlist."""
-    if os.environ.get("SPARK_GRAFT_CHECK_SPREAD", "1") == "0":
-        return
+    """Mechanical guard for spread()'s invariant: the argument plan must
+    be a bare relation or a Project/Filter chain over one. Enforced on
+    every call — the check is one render of the analyzed plan (no job),
+    so the whole test suite polices every call site. A new safe plan
+    shape goes into _SPREAD_SAFE_NODES."""
     plan = df._jdf.queryExecution().analyzed().toString()
     for line in plan.splitlines():
         node = line.lstrip(" +-:").split(" ", 1)[0].split("[", 1)[0]
@@ -173,59 +169,33 @@ def _assert_scan_adjacent(df) -> None:
 
 
 _EXPAND_ADVISORY_BYTES = 16 << 20  # measured best for ~3-4x expanding stages
-
-
-def _env_extra_conf_advisory() -> bool:
-    """True if the operator pinned an AQE advisory through the
-    SPARK_GRAFT_EXTRA_CONF passthrough (tools/run_once.py). ADVICE r8:
-    that knob lands in the base conf, so without this check the clone's
-    16 MB override would silently replace it on @expanding queries —
-    two documented knobs for the same conf with different precedence.
-    An explicit operator pin wins via either spelling."""
-    extra = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
-    return any(
-        kv.split("=", 1)[0].strip() == "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-        for kv in extra.split(";")
-        if "=" in kv
-    )
+_ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
 
 
 def expanding_session(spark):
     """Session clone with a 16 MB AQE advisory for queries whose hot
     reduce stage EXPANDS its input.
 
-    AQE's coalesce sizes a reduce task by the bytes it READS from the
-    previous exchange — it is expansion-blind. The minhash family's
-    bucket-collect stage inflates ~3.6x (narrow band rows collect into
-    per-bucket member arrays), so at the default 64 MB advisory each
-    task sorts ~230 MB and spills: the fourth-decade flagship measured
-    37 over-fat tasks, 18.1 GB spill, and a 16 MB advisory cut wall
-    45% (390 -> 213 s) with spill down 4.5x (BASELINE.md round 7).
-    Rather than shrink the GLOBAL advisory (wrong for every
-    non-expanding exchange), the expanding queries bind their plans to
-    a cloned session carrying the smaller advisory: DataFrames hold
-    their session, and AQE reads conf at ACTION time, so a
-    set-then-restore around plan construction would not stick — the
-    clone is the supported per-query conf scope.
+    AQE sizes a reduce task by the bytes it READS, so it is blind to
+    expansion: the minhash bucket-collect stage inflates ~3.6x, and at
+    the default 64 MB advisory its tasks spill (a 16 MB advisory cut the
+    fourth-decade flagship 390 -> 213 s; BASELINE.md round 7). The
+    clone is the per-query conf scope: DataFrames hold their session
+    and AQE reads conf at action time, so set-then-restore around plan
+    construction would not stick.
 
-    The clone is created once per underlying session and cached on it;
-    re-entry (a family helper calling another family entry point)
-    returns the same clone. An explicit SPARK_GRAFT_ADVISORY_PARTITION
-    override wins — the operator asked for a specific global value, so
-    no per-query second-guessing.
+    Any session that already carries an explicit advisory is returned
+    unchanged. That one check covers an operator pin (get_spark
+    extra_conf / SPARK_GRAFT_EXTRA_CONF) and re-entry on the clone
+    itself. Otherwise the clone is built once and cached on the base
+    session.
 
-    MEMBERSHIP IS MEASURED, NOT ASSUMED (round-8 3000x sweeps): the
-    smaller advisory means ~4x more concurrent reduce tasks, and a
-    query that runs TWO corpus text scans concurrently (tfidf's tf+df,
-    candidate_recall's truth+candidates) then OOMs — the scans' ~100 MB
-    column-batch allocations are unmanaged by the memory manager and
-    lose to the extra task concurrency (GCLocker retry storms,
-    BASELINE.md round-8 notes). Single-scan-pipeline dedup queries
-    measured 1.4-2.6x faster. Decorate a new query with @expanding
-    only after a fourth-decade run proves it survives the clone."""
-    if os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION") or _env_extra_conf_advisory():
-        return spark
-    if getattr(spark, "_graft_expanding", False):
+    Membership is measured, not assumed: the smaller advisory raises
+    reduce-task concurrency, and queries that scan the corpus twice
+    concurrently OOMed under it at 3000x (BASELINE.md round 8).
+    Decorate a new query with @expanding only after a fourth-decade run
+    proves it survives the clone."""
+    if spark.conf.get(_ADVISORY, None) is not None:
         return spark
     clone = spark.__dict__.get("_graft_expand_clone")
     if clone is None:
@@ -233,43 +203,23 @@ def expanding_session(spark):
 
         clone = spark.newSession()
         tune_session(clone)
-        clone.conf.set(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            str(_EXPAND_ADVISORY_BYTES),
-        )
+        clone.conf.set(_ADVISORY, str(_EXPAND_ADVISORY_BYTES))
         # Text scans want smaller splits than the 128 MB parquet
-        # default: a fat split's ~100 MB decoded column batches plus
-        # the per-split partial-aggregation state is what every
-        # fourth/fifth-decade OOM and GC storm in this family traced
-        # back to. On MANY-file corpora spread() is a no-op (>= 16
-        # files), so split size is the only lever — the fifth-decade
-        # flagship measured 780.8 -> 624.3 s from this alone (200
-        # x ~30 MB splits instead of 65 x ~92 MB; BASELINE.md round
-        # 8). Single-file corpora are unaffected: spread() already
-        # re-spreads them at ~32 MB/partition.
+        # default: a fat split's ~100 MB decoded column batches plus the
+        # per-split partial-aggregation state is what the fourth/fifth-
+        # decade OOMs and GC storms in this family traced back to, and on
+        # many-file corpora (spread() a no-op) split size is the only
+        # lever (fifth-decade flagship 780.8 -> 624.3 s; BASELINE.md
+        # round 8).
         clone.conf.set("spark.sql.files.maxPartitionBytes", str(32 << 20))
-        # ... and smaller READER BATCHES for the same reason: the
-        # vectorized reader's default 4096-row batch reaches ~100 MB
-        # on a long-document tail (observed as 12.5M-word single
-        # allocations), and 32 concurrent scan tasks then race the
-        # GCLocker — dedup_savings_report's 3000x run OOMed on one of
-        # two otherwise-identical attempts. 512-row batches cap the
-        # per-task allocation ~8x; reader overhead is noise next to
-        # the per-document shingle/minhash CPU this family does.
+        # Smaller reader batches for the same reason: the default
+        # 4096-row batch reaches ~100 MB on a long-document tail, and 32
+        # concurrent scan tasks then race the GCLocker.
         clone.conf.set("spark.sql.parquet.columnarReaderBatchSize", "512")
-        # NOT raised here, with the scar to prove it (round 8):
-        # spark.sql.objectHashAggregate.sortBased.fallbackThreshold.
-        # The bucket-collect's sort-based fallback (128-key default)
-        # spills the expanded payload to disk, and the fifth-decade
-        # run is disk-bound on one spindle because of it — but the
-        # threshold is ONE conf for BOTH aggregation halves, and the
-        # MAP-side partial collect reads upstream-sized input (128 MB
-        # parquet splits, no advisory bound): raising it to 2^22
-        # OOMed the 3000x flagship outright. The reduce-side-only
-        # bound that would make it safe does not exist as a conf; the
-        # spill is the correct trade on a single-disk box and a real
-        # cluster spreads it across spindles.
-        clone._graft_expanding = True
+        # Deliberately NOT raised: objectHashAggregate's sort-based
+        # fallbackThreshold. It is one conf for both aggregation halves,
+        # and raising it OOMed the 3000x flagship's map-side collect
+        # (BASELINE.md round 8).
         spark._graft_expand_clone = clone
     return clone
 
@@ -288,9 +238,8 @@ def expanding(fn):
     return wrapper
 
 
-_RECLAIM_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_RECLAIM_MIN_BYTES", str(1 << 30))
-)
+# reclaim()'s skip threshold on a local master (see _reclaim_min_bytes).
+_RECLAIM_MIN_BYTES = 1 << 30
 # reclaim()'s settle-poll sleep. Tests replace this name, not the global
 # time.sleep, which py4j's gateway threads also call.
 _sleep = time.sleep
@@ -374,6 +323,17 @@ def _scratch_bytes(
     return total
 
 
+def _reclaim_min_bytes(master: str) -> int:
+    """reclaim()'s skip threshold for `master`. On a local master the
+    driver's spool IS the block store, so scratch under 1 GiB is safe
+    to skip. On any other master the pending deletes live on executor
+    disks the driver cannot see, so the threshold is 0: always GC and
+    poll."""
+    from mapreducecore_spark.session import is_local_master
+
+    return _RECLAIM_MIN_BYTES if is_local_master(master) else 0
+
+
 def reclaim(spark, settle_secs: float = 20.0) -> None:
     """Shuffle-file reclaim point between staged jobs.
 
@@ -404,42 +364,18 @@ def reclaim(spark, settle_secs: float = 20.0) -> None:
     (the poll then only observes the driver-local spool, so treat
     remote headroom as eventually consistent there).
 
-    THE POLL IS HEADROOM-CONDITIONAL (VERDICT r10 #2): it exists to
-    stop a tens-of-GB next stage racing tens of GB of pending deletes
-    to ENOSPC, but at bench scale the block-manager scratch holds a
-    few MB and the fixed two-sample floor (~1 s per staging point) was
-    the single largest per-query cost of the staged queries at sf0.1
-    (2.6x on candidate_recall). When everything the spool COULD
-    reclaim — this session's scratch, see _scratch_bytes — is under
-    SPARK_GRAFT_RECLAIM_MIN_BYTES (default 1 GiB), skipping the wait
-    risks at most that much transient over-occupancy, three orders of
-    magnitude below the headroom the guard protects. No query PLAN
-    forks on any of this.
-
-    THE System.gc() IS ALSO HEADROOM-CONDITIONAL (round 12): a driver
-    full GC costs 150–300 ms, and with 2–4 staging points per staged
-    query it was the family's largest remaining fixed cost once the
-    poll was skipped (~3 s of the full-GC budget of an entire sf0.1
-    sweep was reclaim's own calls). It now fires only when TOTAL own
-    scratch — including rdd_* blocks, because dead dropped-checkpoint
-    blocks are indistinguishable from live ones on disk and must
-    still get their deletes enqueued eventually — crosses the same
-    threshold. Accumulation is therefore bounded at the threshold: a
-    sweep grows residue to ~1 GiB, one reclaim() then runs the full
-    GC (and, if the non-rdd share is big, the poll), and the cycle
-    resets. The Python-side gc.collect() stays unconditional — it is
-    ~10 ms and releases the Py4J proxies pinning dropped plans, so
-    both our conditional full GC and any natural JVM GC can actually
-    collect them. At scale (3000x+: tens of GB of shuffle scratch)
-    every estimate is far above threshold and the behavior is
-    byte-identical to r11's unconditional form.
-
-    CLUSTER NOTE (ADVICE r11): the estimate reads only the DRIVER-local
-    spool; with remote executors the pending shuffle deletes live on
-    executor disks, so the condition would near-always fire and
-    silently disable the settle poll. Distributed deployments should
-    set SPARK_GRAFT_RECLAIM_MIN_BYTES=0 (poll always) — same place the
-    SPARK_GRAFT_MAX_TASK_FAILURES cluster note applies (session.py)."""
+    BOTH STEPS ARE HEADROOM-CONDITIONAL (_reclaim_min_bytes): at bench
+    scale the scratch holds a few MB, and the poll's two-sample floor
+    (~1 s) plus a 150-300 ms full GC per staging point were the staged
+    queries' largest fixed costs (2.6x on candidate_recall at sf0.1).
+    The System.gc() fires only when TOTAL own scratch, rdd_* blocks
+    included (dead dropped-checkpoint blocks must still get their
+    deletes enqueued), reaches the threshold; the poll additionally
+    needs the non-rdd share over it. Residue is therefore bounded at
+    the threshold. The Python gc.collect() stays unconditional (~10 ms;
+    it releases the Py4J proxies pinning dropped plans). At scale every
+    estimate is far above the threshold. No query plan forks on any of
+    this; BASELINE.md rounds 10-12 hold the measurements."""
     import gc
     import shutil
     import tempfile
@@ -449,10 +385,11 @@ def reclaim(spark, settle_secs: float = 20.0) -> None:
         spark.sparkContext.getConf().get("spark.local.dir", tempfile.gettempdir())
     ).split(",")[0]
     own = _own_blockmgr_dirs(spark)
-    if _scratch_bytes(spool, own, include_rdd=True) < _RECLAIM_MIN_BYTES:
+    min_bytes = _reclaim_min_bytes(spark.sparkContext.master)
+    if _scratch_bytes(spool, own, include_rdd=True) < min_bytes:
         return
     spark.sparkContext._jvm.System.gc()
-    if _scratch_bytes(spool, own) < _RECLAIM_MIN_BYTES:
+    if _scratch_bytes(spool, own) < min_bytes:
         return
     try:
         free = shutil.disk_usage(spool).free
@@ -467,40 +404,8 @@ def reclaim(spark, settle_secs: float = 20.0) -> None:
         free = max(free, now_free)
 
 
-def materialize(df, big: bool = False, eager: bool = True):
+def materialize(df, big: bool = False):
     """Compute once, reuse across self-join branches.
-
-    EAGER BY DEFAULT (round 12): a LAZY localCheckpoint materializes at
-    the end of whichever job first consumes it — and under AQE that job
-    can finish on a broadcast-exchange thread while the DAG scheduler
-    is concurrently submitting another stage over the same RDD. Those
-    two paths take Spark's RDD state lock and the RDDCheckpointData
-    companion lock in OPPOSITE orders, and round 12 caught the
-    resulting JVM deadlock live in the test suite (jstack:
-    dag-scheduler-event-loop in getCacheLocs holding the RDD lock,
-    wanting RDDCheckpointData$; broadcast-exchange-113 in
-    RDDCheckpointData.checkpoint holding RDDCheckpointData$, wanting
-    markCheckpointed's RDD lock — both parked forever, query hung).
-    Eager materialization runs the checkpoint's job on the CALLING
-    thread at build time, before the query has any concurrent stage
-    submission to race, closing the window for that frame. With
-    localCheckpoint the computed work and block writes are identical
-    either way — lazy only saved one job's scheduling overhead
-    (~50 ms at toy scale, noise at the attested decades), which is not
-    worth a process-wide hang class.
-
-    eager=True forces the computation NOW as its own job
-    — a JOB BARRIER. Lazy checkpoints materialize inside the first
-    consuming job, so two INDEPENDENT consumer stages in that job can
-    both compute the parent concurrently (the cache race): for a frame
-    whose computation is a raw TEXT SCAN that is exactly the
-    concurrent-scan memory squeeze the barrier exists to prevent —
-    each 32-task scan allocates ~100 MB column batches OUTSIDE the
-    memory manager, and two at once OOMed dedup_candidate_recall's
-    fourth-decade run even at the default advisory (BASELINE.md round
-    8). Eager costs one extra pass over the frame; use it when the
-    frame's own computation is scan-heavy and it feeds >1 independent
-    branch of one action.
 
     A DataFrame referenced on both sides of a join is otherwise fully
     recomputed per branch (Spark plans are trees, not DAGs) — for the
@@ -509,30 +414,33 @@ def materialize(df, big: bool = False, eager: bool = True):
     partitions in executor block storage and truncates lineage, so both
     branches read the same materialized blocks.
 
+    Always EAGER: the checkpoint's job runs now, on the calling thread,
+    as its own job. A lazy localCheckpoint materializes inside the
+    first consuming job, where under AQE a broadcast-exchange thread
+    and the DAG scheduler can take the RDD lock and the
+    RDDCheckpointData lock in opposite orders — a JVM deadlock caught
+    live by jstack (BASELINE.md round 12). Eager also makes the frame a
+    job barrier: two independent consumer stages can no longer both
+    compute it concurrently, which for a text-scan frame was the
+    concurrent-scan OOM (BASELINE.md round 8).
+
     big=True stores the blocks DISK_ONLY. Default MEMORY_AND_DISK
     blocks occupy unified memory that `spark.memory.storageFraction`
-    PROTECTS from eviction, so a corpus-sized frame (the exploded
-    shingle index at the 1000x sweep) pins ~half the pool and starves
-    every downstream hash aggregate — the three-decade sweep measured
-    UNABLE_TO_ACQUIRE_MEMORY crashes from exactly this. A frame that
-    is read back once per consuming branch loses nothing measurable
-    from disk residency; memory caching only ever helped the small
-    scales where it doesn't matter.
+    PROTECTS from eviction, so a corpus-sized frame pins ~half the pool
+    and starves every downstream hash aggregate
+    (UNABLE_TO_ACQUIRE_MEMORY at the 1000x sweep). A frame read back
+    once per consuming branch loses nothing measurable from disk
+    residency.
 
-    CLUSTER MODE (VERDICT r6 #6): localCheckpoint blocks are NOT
-    executor-loss-safe — on a real cluster a lost executor loses its
-    blocks AND the truncated lineage needed to recompute them. Set
-    SPARK_GRAFT_RELIABLE_CHECKPOINT=<dir> (an HDFS/S3/shared path) to
-    swap in persist + RELIABLE checkpoint(): partitions are persisted
-    (so the checkpoint write doesn't recompute them), written durably
-    to the checkpoint dir, and survive executor loss. big maps to
-    DISK_ONLY persistence for the same protected-storage reason. The
-    env gate keeps local runs on the cheaper block-storage path;
+    CLUSTER MODE: localCheckpoint blocks are NOT executor-loss-safe — a
+    lost executor loses its blocks AND the truncated lineage needed to
+    recompute them. Set SPARK_GRAFT_RELIABLE_CHECKPOINT=<dir> (an
+    HDFS/S3/shared path) to swap in persist + reliable checkpoint():
+    partitions are persisted (so the checkpoint write doesn't recompute
+    them), written durably, and survive executor loss.
     tests/test_reliable_materialize.py runs the dedup flagship
-    end-to-end under the reliable mode.
+    end-to-end under that mode.
     """
-    import os
-
     from pyspark import StorageLevel
 
     level = StorageLevel.DISK_ONLY if big else StorageLevel.MEMORY_AND_DISK
@@ -540,7 +448,7 @@ def materialize(df, big: bool = False, eager: bool = True):
     if ckpt_dir:
         sc = df.sparkSession.sparkContext
         sc.setCheckpointDir(ckpt_dir)
-        return df.persist(level).checkpoint(eager=eager)
+        return df.persist(level).checkpoint(eager=True)
     if big:
-        return df.localCheckpoint(eager=eager, storageLevel=StorageLevel.DISK_ONLY)
-    return df.localCheckpoint(eager=eager)
+        return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    return df.localCheckpoint(eager=True)

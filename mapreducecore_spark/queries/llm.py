@@ -760,15 +760,11 @@ def _minhash_member_rows(
         # the plain min() aggregate is fixed-width HashAggregate with
         # no sort-fallback to save. In-row only pays off where it
         # deletes the collect_set spill.
-        # EAGER always: with the doc_id exchange gone there is no
-        # shuffle for AQE stage-reuse to dedup across the consumer
-        # branches, and a LAZY checkpoint's partitions can be computed
-        # concurrently by two consumer stages of one job (the r8 cache
-        # race / concurrent-text-scan OOM) — one solo signature job
-        # writes the DISK_ONLY blocks (big=True: the hs arrays make
+        # One solo signature job writes DISK_ONLY blocks that
+        # everything downstream reads (big=True: the hs arrays make
         # this frame corpus-sized; default-storage blocks would pin
         # protected storage memory against the downstream bucket
-        # aggregates, 1000x sweep), everything downstream reads them.
+        # aggregates, 1000x sweep).
         per_doc = materialize(
             minhash.hashes(docs).select(
                 "doc_id",
@@ -777,7 +773,6 @@ def _minhash_member_rows(
                 minhash.inrow_signatures().alias("mhs"),
             ),
             big=True,
-            eager=True,
         )
         member = F.struct("doc_id", "hs", "n_sh", "mhs", "bws", "reps")
     else:
@@ -785,19 +780,18 @@ def _minhash_member_rows(
         # rationale above): one md5 per distinct shingle through
         # whole-stage codegen, 8 allocation-free permutation mins
         # partial-aggregated map-side, one narrow (doc_id x 8 ints)
-        # exchange. NOT eager (round 8, measured both ways): when
-        # spread() has put an exchange under this pipeline, shuffle
-        # reuse already dedups the heavy map work across the consumer
-        # branches and eager only added a block write+reread (3000x:
-        # 139 s lazy vs 166 s eager); on the many-file fifth-decade
-        # corpus (no spread exchange) eager's extra resident blocks
-        # instead blew the single box's DISK ceiling.
+        # exchange. Eager like every materialize(): this frame feeds
+        # both the broadcast big_buckets side and the bucket side of
+        # one query, the lazy-checkpoint deadlock shape. Round 8
+        # measured lazy faster at 3000x (139 s vs 166 s) and eager's
+        # extra resident blocks past the single-box disk ceiling of the
+        # fifth decade; sf0.1 A/B in BASELINE.md.
         # big=True even without the hs payload: per_doc is still one
         # row per document (narrow, but CORPUS-sized), and the round-7
         # fourth-decade run showed default MEMORY_AND_DISK blocks of
         # this frame OOM a fresh 8g JVM at 15M docs while DISK_ONLY
         # completes — same protected-storage family as the hs branch.
-        per_doc = materialize(minhash.signatures(docs), big=True, eager=staged)
+        per_doc = materialize(minhash.signatures(docs), big=True)
         member = F.struct("doc_id", "mhs", "bws", "reps")
     if staged:
         # Staged-sides mode (VERDICT r9 #1, the candidate_recall
@@ -838,7 +832,7 @@ def _minhash_member_rows(
         # own 4-bands-per-doc shuffle. Both the clique and star
         # branches also stop recomputing the join (in the lazy shape
         # AQE stage reuse dedups it; here the checkpoint does).
-        base = materialize(base, big=True, eager=True)
+        base = materialize(base, big=True)
         reclaim(docs.sparkSession)
     rows = (
         base.select(F.explode(minhash.band_structs()).alias("b"), member.alias("m"))
@@ -1013,7 +1007,6 @@ def dedup_candidate_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.expr(_RECALL_SAMPLE_SPARK))
         .select("doc_id", "text"),
         big=True,
-        eager=True,
     )
     truth = _jaccard_truth_pairs(sdocs).select("doc_a", "doc_b")
     # staged=True (round 10): at 10000x the fused cand job — shingle
@@ -1046,9 +1039,9 @@ def dedup_candidate_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle-file deletion DETERMINISTIC instead of racing the
     # periodic cleaner — the first 10000x attempt lost that race by
     # 16 seconds (ENOSPC at 92 GB; curve in BASELINE.md round 9).
-    truth = materialize(truth, eager=True)
+    truth = materialize(truth)
     reclaim(spark)
-    cand = materialize(cand, eager=True)
+    cand = materialize(cand)
     reclaim(spark)
     hit = truth.join(cand, ["doc_a", "doc_b"], "left_semi")
     return (

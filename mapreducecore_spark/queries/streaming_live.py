@@ -135,16 +135,12 @@ def _drain(
     events) the interval join NEEDS width (19.7 s at 4, 10.7 at 8,
     7.2 at 16/32) and the small-state wm still prefers 4 (4.9 vs 6.4
     at 32) — a fixed width is wrong in one direction or the other.
-    SPARK_GRAFT_STREAM_SHUFFLE overrides everything for cluster runs
-    where state must spread across executors regardless of input
-    size. The conf is captured when the query starts and pinned into
+    The conf is captured when the query starts and pinned into
     its checkpoint, so the restore below cannot affect a running
     stream.
     """
     name = f"live_{uuid.uuid4().hex[:12]}"
-    width = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE") or str(
-        _stream_width(in_bytes, spark.sparkContext.defaultParallelism)
-    )
+    width = str(_stream_width(in_bytes, spark.sparkContext.defaultParallelism))
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", width)
     try:
@@ -795,8 +791,7 @@ def _incremental_dedup_stream(
             "sig",
             f"CASE WHEN bw <= {MAX_BUCKET} THEN doc_id ELSE rep END AS match_id",
         )
-        .distinct(),
-        eager=True,
+        .distinct()
     )
 
     # Re-lay the new batch as 4 sequential files, each stamped with an

@@ -35,44 +35,24 @@ RUNTIME_CONFS: dict[str, str] = {
     # Stateful STREAMING can't use AQE partition coalescing, so an
     # externally-built session's 200-partition default becomes 200 real
     # state-store tasks per micro-batch; pin a width that matches the
-    # test scale. (Batch queries are unaffected in practice — AQE
-    # coalesces either way. At cluster scale raise via get_spark.)
+    # test scale. Batch shuffles are unaffected: AQE starts them at the
+    # initial width below and coalesces.
     "spark.sql.shuffle.partitions": "32",
-    # With AQE on, the BATCH shuffle width actually used is
-    # initialPartitionNum coalesced DOWN to advisory size — so the 32
-    # above must not double as the ceiling for large shuffles. The
-    # round-6 three-decade sweep (1000x clusters corpus) caught exactly
-    # that: the Jaccard scorers pushed a linear-in-data 19 GB shuffle
-    # through 32 fixed partitions (600 MB/task), went spill-bound
-    # (5.7-6.0/decade vs <=4 at 100x), and dedup_candidate_recall's
-    # hash aggregate died with UNABLE_TO_ACQUIRE_MEMORY at default 8g
-    # heap. Starting shuffles wide and letting AQE coalesce makes the
-    # width data-adaptive: sf0.001 tests still run a handful of reduce
-    # tasks, the 1000x corpus gets ~75 MB/task. On a real cluster this
-    # number scales with executor count (env-tunable).
-    "spark.sql.adaptive.coalescePartitions.initialPartitionNum": os.environ.get(
-        "SPARK_GRAFT_INITIAL_SHUFFLE", "256"
-    ),
-    # AQE's coalesce target stays at the 64 MB default — the right
-    # size for non-expanding exchanges — but it is EXPANSION-BLIND:
-    # AQE widths a reduce stage by its INPUT bytes, and the dedup
-    # flagship's bucket-collect stage expands ~3.6x, so at the fourth
-    # decade each 64 MB-input task sorted ~230 MB and spill went
-    # super-linear (18 GB spill over 37 tasks). A 16 MB override
-    # measured 45% off the 3000x wall (390 -> 213 s, spill 4.5x
-    # lower; BASELINE.md round-7 fourth-decade notes). Override
-    # per-run with SPARK_GRAFT_ADVISORY_PARTITION (bytes); raise
-    # SPARK_GRAFT_INITIAL_SHUFFLE with it past 256-task stages.
-    **(
-        {
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes": os.environ[
-                "SPARK_GRAFT_ADVISORY_PARTITION"
-            ]
-        }
-        if os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION")
-        else {}
-    ),
+    # The batch shuffle width AQE actually uses is initialPartitionNum
+    # coalesced down to the advisory size: starting wide makes it
+    # data-adaptive (a few reduce tasks at sf0.001, ~75 MB/task on the
+    # 1000x corpus, where a 32-wide ceiling spilled and OOMed;
+    # BASELINE.md round 6). The advisory stays at Spark's 64 MB default
+    # except on @expanding queries (queries/_util.expanding_session);
+    # an advisory pinned at session build (extra_conf) wins everywhere.
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum": "256",
 }
+
+
+def is_local_master(master: str) -> bool:
+    """True for `local` / `local[N]`: one JVM, no executors of its own
+    (`local-cluster[...]` has separate executor JVMs, so it is not)."""
+    return master == "local" or master.startswith("local[")
 
 
 def default_master() -> str:
@@ -110,7 +90,7 @@ def _ship_package(spark: SparkSession) -> None:
     deleted at exit on purpose: a concurrently running sibling process
     may be serving the same zip to late-launching executors."""
     sc = spark.sparkContext
-    if sc.master == "local" or sc.master.startswith("local["):
+    if is_local_master(sc.master):
         return
     if getattr(sc, "_graft_pkg_shipped", False):
         return
@@ -164,13 +144,11 @@ def tune_session(spark: SparkSession) -> SparkSession:
 def get_spark(
     app_name: str = "mapreducecore-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or default_master())
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or 32))
         # 128 MiB splits: the Spark analogue of the reference's
         # map_kilobytes shard sizing (file_shard.h:35), newline-safe and
         # column-pruned for parquet out of the box.

@@ -22,7 +22,7 @@ REF_INPUT_GLOB = os.path.join(
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="mapreducecore-tests", shuffle_partitions=8)
+    s = get_spark(app_name="mapreducecore-tests")
     yield s
     s.stop()
 

@@ -385,6 +385,29 @@ def test_spread_width_wave_balanced():
     assert _spread_width(1_495_605_131, 16, 0) == 45
 
 
+def test_expanding_session_contract(spark):
+    """@expanding queries build on a clone with a 16 MB advisory, 32 MB
+    splits and 512-row reader batches, created once per base session.
+    A session that already carries an advisory (an operator pin, or the
+    clone itself) comes back unchanged."""
+    from mapreducecore_spark.queries._util import expanding_session
+
+    advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    base = spark.newSession()
+    clone = expanding_session(base)
+    assert clone is not base
+    assert clone.conf.get(advisory) == str(16 << 20)
+    assert clone.conf.get("spark.sql.files.maxPartitionBytes") == str(32 << 20)
+    assert clone.conf.get("spark.sql.parquet.columnarReaderBatchSize") == "512"
+    assert base.conf.get(advisory, None) is None, "clone conf leaked to the base"
+    assert expanding_session(base) is clone
+    assert expanding_session(clone) is clone
+
+    pinned = spark.newSession()
+    pinned.conf.set(advisory, "8MB")
+    assert expanding_session(pinned) is pinned
+
+
 def test_table_cache_does_not_pin_dropped_sessions(spark, sf_dir):
     """ADVICE r9 #1 (and the round-10 correction to its first fix):
     load_tables' plan cache must not keep a dropped session alive.

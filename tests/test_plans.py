@@ -174,7 +174,10 @@ def test_aqe_splits_skewed_join(spark):
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    saved = {k: spark.conf.get(k) for k in confs}
+    # get(k, None) + unset: a key that was unset must be unset again —
+    # an explicit advisory left on the shared session would turn off the
+    # @expanding clone for every later test.
+    saved = {k: spark.conf.get(k, None) for k in confs}
     try:
         for k, v in confs.items():
             spark.conf.set(k, v)
@@ -189,7 +192,10 @@ def test_aqe_splits_skewed_join(spark):
         assert "skew=true" in plan, f"AQE did not split the skewed join:\n{plan}"
     finally:
         for k, v in saved.items():
-            spark.conf.set(k, v)
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def test_tfidf_df_join_has_no_forced_broadcast(spark, sf_dir):
@@ -309,6 +315,32 @@ def test_minhash_star_branch_is_reps_join_not_window(spark, sf_dir):
     plan = plan_of(REGISTRY["dedup_minhash_lsh"].fn(spark, sf_dir))
     assert "ShuffledHashJoin" in plan, f"reps join lost its shuffle_hash hint:\n{plan[:2000]}"
     assert "Window" not in plan, "a window resurfaced in the pair-generation plan"
+
+
+def test_minhash_member_rows_checkpoints_eagerly(spark, sf_dir):
+    """The per-doc signature frame feeds both the broadcast big-bucket
+    side and the bucket side of one query, so it must be checkpointed
+    eagerly — a lazy localCheckpoint there is the AQE lock-order
+    deadlock shape. Eager means the checkpoint's blocks exist as soon as
+    the rows are built. (Counting jobs cannot tell the two apart: a lazy
+    checkpoint over an AQE plan already runs its shuffle map stages.)"""
+    from mapreducecore_spark.catalog import load_tables
+    from mapreducecore_spark.llm.minhash import TOKS
+    from mapreducecore_spark.queries.llm import _minhash_member_rows
+
+    docs = load_tables(spark, sf_dir)["documents"].selectExpr(
+        "doc_id", f"{TOKS} AS toks"
+    )
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    _minhash_member_rows(docs, with_sets=False)
+    new = set(jsc.getPersistentRDDs().keys()) - before
+    assert new, "building the member rows took no checkpoint"
+    stored = {info.id() for info in jsc.sc().getRDDStorageInfo()}
+    assert new <= stored, (
+        f"checkpoint RDDs {sorted(new - stored)} hold no blocks: per_doc is "
+        "checkpointed lazily"
+    )
 
 
 def test_jaccard_df_cap_window_precedes_join(spark, sf_dir):

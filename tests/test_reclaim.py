@@ -2,15 +2,13 @@
 
 The poll exists to stop a tens-of-GB staged job racing pending
 shuffle-file deletes to ENOSPC; when the block-manager scratch holds
-less than SPARK_GRAFT_RECLAIM_MIN_BYTES it must return immediately
-after the gc enqueue instead of paying the ~1 s two-sample floor —
+less than the master's threshold (_reclaim_min_bytes) it must return
+immediately after the gc enqueue instead of paying the ~1 s two-sample floor —
 that floor was the dominant per-query cost of the staged dedup
 queries at sf0.1 (VERDICT r10 #2).
 """
 
 from __future__ import annotations
-
-import os
 
 from mapreducecore_spark.queries import _util
 
@@ -79,15 +77,14 @@ def test_reclaim_polls_when_scratch_exceeds_threshold(spark, monkeypatch):
     assert slept, "reclaim() skipped the settle poll above threshold"
 
 
-def test_reclaim_min_bytes_default():
-    # ADVICE r11: the old form re-evaluated the module's own expression
-    # (tautology). Pin the LITERAL default when the env var is unset;
-    # when an operator has set it, pin that the module honored it.
-    env = os.environ.get("SPARK_GRAFT_RECLAIM_MIN_BYTES")
-    if env is None:
-        assert _util._RECLAIM_MIN_BYTES == 1 << 30
-    else:
-        assert _util._RECLAIM_MIN_BYTES == int(env)
+def test_reclaim_min_bytes_derived_from_master():
+    # One JVM: the driver's spool is the whole block store, skip under
+    # 1 GiB. Remote executors: the driver cannot see their scratch, so
+    # always GC and poll.
+    for master in ("local", "local[4]", "local[*]"):
+        assert _util._reclaim_min_bytes(master) == 1 << 30, master
+    for master in ("local-cluster[2,4,2048]", "spark://h:7077"):
+        assert _util._reclaim_min_bytes(master) == 0, master
 
 
 def test_scratch_bytes_scoped_to_own_dirs(tmp_path):

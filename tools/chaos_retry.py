@@ -77,7 +77,7 @@ def main() -> None:
             .appName("chaos-retry")
             .config(
                 "spark.executor.memory",
-                os.environ.get("SPARK_GRAFT_CHAOS_EXEC_MEM", "3g"),
+                os.environ.get("SPARK_GRAFT_EXECUTOR_MEM", "3g"),
             )
             .config("spark.ui.enabled", "false")
             .getOrCreate()
