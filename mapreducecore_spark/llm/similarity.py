@@ -1,39 +1,112 @@
-"""Embedding similarity: cosine expressions + multi-table sign-LSH.
+"""Embedding math — the one implementation behind every vector
+operator (`ann_*`, `kmeans_assign_seeded`, `semdedup_prune`,
+`embedding_neardup_pairs`), in Spark and in its DuckDB oracles.
+
+Contract, identical on both engines:
+- `embedding` is cast elementwise to DOUBLE (`EMB_SPARK` / `EMB_DUCK`);
+- the inner product is a left-to-right fold of the elementwise
+  products (`IP_SPARK` / `IP_DUCK`), so both engines return the same
+  double (tests/test_vector_core.py checks bit equality);
+- cosine is a.b / (|a||b|) and NULL when either norm is zero
+  (`COS_SPARK` / `COS_DUCK`);
+- squared L2 is |a|^2 - 2a.b + |b|^2 rounded to 5 decimals (`l2sq`):
+  the rounding pins argmin ties to the same candidates on both engines;
+- a Lloyd mean is the per-dimension DECIMAL(38,20) sum over the
+  members divided by their count (`centroid_means` /
+  `centroid_means_duck`): exact and order-independent, so trained
+  centroids are bit-identical across engines.
 
 Sign-LSH (random-hyperplane family, here deterministic coordinate-pair
 hyperplanes e[i] - e[i+32]): P[bit agrees] = 1 - angle/pi. One k-bit
 table has recall p^k, so L tables give 1 - (1-p^k)^L — at cosine 0.9,
 4 tables x 8 bits ≈ 0.75 recall; at 0.95 ≈ 0.9. Each table is a plain
 equi-join on (table, code): candidate count scales with bucket
-occupancy, never O(n²) — that is the 100 TB path. Brute force
-(ann_cosine_topk) stays as the exact baseline.
-
-Everything is generated SQL over array columns (JVM-side, codegen'd);
-the same generator emits the DuckDB oracle so parity holds per-table.
+occupancy, never O(n²). Brute force (ann_cosine_topk) stays as the
+exact baseline.
 """
 
 from __future__ import annotations
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 N_TABLES = 4
 BITS = 8
 MAX_BITS = 16  # widest per-table code the hyperplane pool supports
 _HALF = 32  # hyperplane pairs (i, i+32) over 64-dim embeddings
 
-# The denominator is wrapped in nullif so a zero-norm vector yields
-# NULL, matching DuckDB's division semantics (x/0 -> NULL there, but
-# IEEE NaN in Spark double math — a crafted-corpus divergence caught by
-# tests/test_crafted_embeddings.py). NULL sims sort last under DESC and
-# fail >= thresholds in BOTH engines, so zero vectors simply never rank.
+EMB_SPARK = "transform(embedding, x -> CAST(x AS DOUBLE))"
+EMB_DUCK = "list_transform(embedding, x -> CAST(x AS DOUBLE))"
+VECTORS_DUCK = f"SELECT vec_id, {EMB_DUCK} AS emb FROM embeddings"
+
+IP_SPARK = "aggregate(zip_with({a}, {b}, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
+IP_DUCK = "list_inner_product({a}, {b})"
+
+# nullif: a zero-norm vector yields NULL as in DuckDB (x/0 -> NULL),
+# not Spark's IEEE NaN. NULL sims sort last under DESC and fail >=
+# thresholds on both engines, so zero vectors never rank.
+_SUMSQ_SPARK = "aggregate(transform({a}, x -> x * x), CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
 COS_SPARK = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    " / nullif(sqrt(aggregate(transform({a}, x -> x * x), CAST(0 AS DOUBLE), (acc, v) -> acc + v))"
-    " * sqrt(aggregate(transform({b}, x -> x * x), CAST(0 AS DOUBLE), (acc, v) -> acc + v)), CAST(0 AS DOUBLE))"
+    f"{IP_SPARK} / nullif(sqrt({_SUMSQ_SPARK}) * sqrt({_SUMSQ_SPARK.format(a='{b}')}),"
+    " CAST(0 AS DOUBLE))"
+)
+COS_DUCK = (
+    f"{IP_DUCK} / (sqrt({IP_DUCK.format(a='{a}', b='{a}')})"
+    f" * sqrt({IP_DUCK.format(a='{b}', b='{b}')}))"
 )
 
-COS_DUCK = (
-    "list_inner_product({a}, {b})"
-    " / (sqrt(list_inner_product({a}, {a})) * sqrt(list_inner_product({b}, {b})))"
-)
+
+def l2sq(ip: str, a: str, b: str, bb: str | None = None) -> str:
+    """Rounded |a - b|^2 with inner product `ip` (IP_SPARK or IP_DUCK);
+    `bb` names a precomputed |b|^2 column."""
+    return (
+        f"ROUND({ip.format(a=a, b=a)} - 2 * {ip.format(a=a, b=b)}"
+        f" + {bb or ip.format(a=b, b=b)}, 5)"
+    )
+
+
+def vectors(embeddings: DataFrame) -> DataFrame:
+    """(vec_id, emb) of an embeddings table, emb as array<double>."""
+    return embeddings.selectExpr("vec_id", f"{EMB_SPARK} AS emb")
+
+
+def centroid_means(members: DataFrame, keys: list[str], vec: str) -> DataFrame:
+    """(*keys, c_<vec>): the Lloyd mean of array column `vec` over each
+    `keys` group of `members`. One (keys, pos) aggregate, partial
+    map-side, so the exchange carries groups x dims cells whatever the
+    member count; a group with no members has no row. `keys` must not
+    use the names pos, val or cv."""
+    dims = (
+        members.select(*keys, F.posexplode(vec).alias("pos", "val"))
+        .groupBy(*keys, "pos")
+        .agg(
+            (
+                F.sum(F.col("val").cast("decimal(38,20)")).cast("double") / F.count("*")
+            ).alias("cv")
+        )
+    )
+    # The lambda variable is underscored so it cannot shadow a key.
+    return dims.groupBy(*keys).agg(
+        F.expr("transform(array_sort(collect_list(struct(pos, cv))), _pc -> _pc.cv)").alias(
+            f"c_{vec}"
+        )
+    )
+
+
+def centroid_means_duck(members: str, keys: list[str], vec: str) -> str:
+    """DuckDB form of `centroid_means` over the relation `members` (a
+    CTE name or a parenthesised SELECT). DuckDB's direct DOUBLE <->
+    DECIMAL casts scale in double arithmetic and are off by an ulp on
+    about one value in five, so both conversions go through VARCHAR:
+    shortest repr in and correctly rounded out, as Spark does."""
+    k = ", ".join(keys)
+    dec = f"CAST(CAST({vec}[idx] AS VARCHAR) AS DECIMAL(38,20))"
+    return f"""SELECT {k}, list(cv ORDER BY idx) AS c_{vec} FROM (
+        SELECT {k}, idx,
+               CAST(CAST(SUM({dec}) AS VARCHAR) AS DOUBLE) / COUNT(*) AS cv
+        FROM (SELECT *, unnest(generate_series(1, len({vec}))) AS idx FROM {members})
+        GROUP BY {k}, idx)
+      GROUP BY {k}"""
 
 
 def _hyperplane(table: int, i: int) -> tuple[int, int]:

@@ -29,7 +29,10 @@ Differences by design (scale fixes, not semantic changes):
 - the shuffle is Spark's binary sort-based shuffle, not M×R
   intermediate text files (mr_tasks.h:52) — the "key value\\n" text
   round-trip (and its key-with-whitespace corruption bug,
-  worker.h:134-137) is gone.
+  worker.h:134-137) is gone;
+- input is decoded as UTF-8 by Spark's text source: the reference
+  passes raw bytes to the mapper, here each undecodable byte reaches
+  it as U+FFFD.
 """
 
 from __future__ import annotations

@@ -42,7 +42,17 @@ from pyspark.sql import functions as F
 
 from mapreducecore_spark.catalog import load_tables
 from mapreducecore_spark.llm.minhash import TOKS, TOKS_DUCK, hash60, hash60_duck
-from mapreducecore_spark.llm.similarity import add_lsh_codes, duck_tables_select
+from mapreducecore_spark.llm.similarity import (
+    IP_DUCK,
+    IP_SPARK,
+    VECTORS_DUCK,
+    add_lsh_codes,
+    centroid_means,
+    centroid_means_duck,
+    duck_tables_select,
+    l2sq,
+    vectors,
+)
 from mapreducecore_spark.queries import register
 from mapreducecore_spark.queries._util import materialize, spread
 
@@ -103,17 +113,6 @@ _SEM_MASK_CTES = (
     "    semmask AS (SELECT CAST(1 AS BIGINT) << bits AS m FROM semb)"
 )
 _SEM_MASK = "SELECT m FROM semmask"
-
-# |a-c|^2 argmin == argmin(|a|^2 - 2 a.c + |c|^2); ROUND pins the
-# cross-engine tie landscape exactly like kmeans_assign_seeded.
-_D2_SPARK = (
-    "ROUND(aggregate(zip_with(emb, emb, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    " - 2 * aggregate(zip_with(emb, c_emb, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    " + c_norm2, 5)"
-)
-_D2_DUCK = (
-    "ROUND(list_inner_product(emb, emb) - 2 * list_inner_product(emb, c_emb) + c_norm2, 5)"
-)
 
 # Per-pair cosine for the PRUNE stage, in FLOOR-QUANTIZED form
 # (round 7): the dot product is sum(floor(a_i * b_i * 2^40)) as int64
@@ -191,7 +190,7 @@ def _sem_assign_ctes(tag: str, cents: str, src: str = "e", codes: str = "vcodes"
       WHERE e.vec_id NOT IN (SELECT vec_id FROM cand{tag})
     ),
     sc{tag} AS MATERIALIZED (
-      SELECT a.vec_id, a.centroid_id, {_D2_DUCK} AS d2
+      SELECT a.vec_id, a.centroid_id, {l2sq(IP_DUCK, "emb", "c_emb", "c_norm2")} AS d2
       FROM ca{tag} a
       JOIN {src} e ON e.vec_id = a.vec_id
       JOIN {cents} c ON c.centroid_id = a.centroid_id
@@ -205,41 +204,29 @@ def _sem_assign_ctes(tag: str, cents: str, src: str = "e", codes: str = "vcodes"
 
 
 def _semdedup_oracle(iters: int) -> str:
-    """DuckDB mirror of the trained-centroid SemDeDup chain: rank-based
-    seeds, `iters` Lloyd rounds (LSH-pruned assign + DECIMAL-exact mean
-    update), final assignment, intra-cluster cosine prune."""
+    """DuckDB mirror of semdedup_prune: rank-based seeds, `iters`
+    Lloyd rounds (LSH-pruned assign, then `centroid_means_duck`), final
+    assignment, intra-cluster cosine prune. The CTEs stay MATERIALIZED:
+    inlined, the round chain grows exponentially."""
     blocks = []
     for i in range(iters):
+        members = f"(SELECT a.centroid_id, e.emb FROM asg{i} a JOIN es e ON e.vec_id = a.vec_id)"
         blocks.append(_sem_assign_ctes(str(i), f"c{i}", src="es", codes="vscodes"))
         blocks.append(f"""
-    u{i} AS MATERIALIZED (
-      SELECT centroid_id, idx, emb[idx] AS val FROM (
-        SELECT a.centroid_id, e.emb,
-               unnest(generate_series(1, len(e.emb))) AS idx
-        FROM asg{i} a JOIN es e ON e.vec_id = a.vec_id)
-    ),
     c{i + 1} AS MATERIALIZED (
-      SELECT centroid_id, c_emb, list_inner_product(c_emb, c_emb) AS c_norm2
-      FROM (
-        SELECT centroid_id, list(cv ORDER BY idx) AS c_emb FROM (
-          SELECT centroid_id, idx,
-                 CAST(SUM(CAST(val AS DECIMAL(38,20))) AS DOUBLE) / COUNT(*) AS cv
-          FROM u{i} GROUP BY centroid_id, idx)
-        GROUP BY centroid_id)
+      SELECT *, {IP_DUCK.format(a="c_emb", b="c_emb")} AS c_norm2
+      FROM ({centroid_means_duck(members, ["centroid_id"], "emb")})
     )""")
     return f"""
-    WITH e AS MATERIALIZED (SELECT vec_id,
-                      list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb,
-                      sqrt(list_inner_product(
-                          list_transform(embedding, x -> CAST(x AS DOUBLE)),
-                          list_transform(embedding, x -> CAST(x AS DOUBLE)))) AS nrm
-               FROM embeddings),
+    WITH e AS MATERIALIZED (
+      SELECT vec_id, emb, sqrt({IP_DUCK.format(a="emb", b="emb")}) AS nrm
+      FROM ({VECTORS_DUCK})),
     k AS (SELECT GREATEST({_SEM_MIN_K},
                           CAST(CEIL(COUNT(*) / {_SEM_DOCS_PER_CLUSTER}.0) AS BIGINT)) AS k
           FROM e),
     {_SEM_MASK_CTES},
     c0 AS MATERIALIZED (SELECT vec_id AS centroid_id, emb AS c_emb,
-                  list_inner_product(emb, emb) AS c_norm2
+                  {IP_DUCK.format(a="emb", b="emb")} AS c_norm2
            FROM e
            QUALIFY ROW_NUMBER() OVER (ORDER BY vec_id) <= (SELECT k FROM k)),
     vcodes AS MATERIALIZED (SELECT vec_id, {duck_tables_select("emb", mask=_SEM_MASK)} FROM e),
@@ -268,29 +255,20 @@ def _semdedup_oracle(iters: int) -> str:
 def _sem_assign(
     e: DataFrame, vcodes: DataFrame, c: DataFrame, bits: int = 8
 ) -> DataFrame:
-    """One LSH-pruned assignment round: exact distances only to
-    centroids sharing a sign-LSH bucket, full-argmin fallback for
-    vectors matching no centroid bucket, then a single-pass
-    min(struct(d2, centroid_id)) argmin — a row_number window here
-    would shuffle every scored row WITH its embedding (n x K x 550B
-    ~ 90 GB at the 100x sweep, measured heap OOM), while the struct
-    min partial-aggregates map-side so the exchange carries n rows
-    and the n x ~124 scored frame never materializes. Ties: min d2,
-    then min centroid_id (lexicographic struct order) — identical to
-    the oracle's two-phase MIN ordering."""
+    """(vec_id, centroid_id): each vector's nearest centroid by
+    `l2sq`, scored only against centroids sharing a sign-LSH bucket
+    (all centroids when none does). The argmin is min(struct(d2,
+    centroid_id)), so ties go to the lowest centroid_id as in the
+    oracle's two-phase MIN, and it partial-aggregates map-side, so the
+    scored rows never leave the map task: 1000x shuffle 6.2 -> 4.5 GB
+    (BASELINE.md "Round-7 semdedup rework")."""
     ccodes = add_lsh_codes(
         c.select(F.col("centroid_id"), F.col("c_emb").alias("emb")), bits=bits
     ).select("centroid_id", "tbl", "code")
-    # The candidate set deliberately KEEPS duplicates (a vector whose
-    # codes match a centroid in several LSH tables scores that centroid
-    # several times): the two-phase MIN argmin below is invariant to
-    # duplicate (vec_id, centroid_id) rows — identical d2, identical
-    # min — so results match the oracle's SELECT DISTINCT form exactly,
-    # while Spark skips a full n x ~124-row DISTINCT exchange AND the
-    # disk round-trip of checkpointing it (round 7: the pair cost the
-    # 1000x sweep measured in every assignment round). The broadcast
-    # hash join is map-side and cheap to recompute for the fallback's
-    # left_anti, whose right side compacts to n rows map-side anyway.
+    # Duplicate (vec_id, centroid_id) candidates (a match in several
+    # tables) are kept: the min argmin is invariant to them, so rows
+    # equal the oracle's SELECT DISTINCT form without an n x ~124-row
+    # DISTINCT exchange.
     cand = vcodes.join(F.broadcast(ccodes), ["tbl", "code"]).select(
         "vec_id", "centroid_id"
     )
@@ -300,57 +278,17 @@ def _sem_assign(
         .crossJoin(F.broadcast(c.select("centroid_id")))
     )
     cand_all = cand.unionByName(fallback)
-    # Single-pass argmin (round 7): min(struct(d2, centroid_id)) is
-    # lexicographic — min d2 first, then min centroid_id among exact
-    # d2 ties — IDENTICAL to the oracle's two-phase MIN ordering (both
-    # engines compute d2 from the same expression, so ties are the
-    # same bit-equal doubles). One map-side partial aggregation
-    # replaces the previous shape's DISK_ONLY checkpoint of the
-    # n x ~124-row scored frame PLUS its re-join against the per-vec
-    # min PLUS a second aggregation: the scored rows now collapse to n
-    # rows inside the map task and the wide frame never exists outside
-    # the pipeline. (The checkpoint itself was the round-6 fix for
-    # protected-storage pinning; not materializing at all supersedes
-    # it.)
     return (
         cand_all.join(e.select("vec_id", "emb"), "vec_id")
         .join(F.broadcast(c), "centroid_id")
         .selectExpr(
             "vec_id",
-            f"named_struct('d2', {_D2_SPARK}, 'centroid_id', centroid_id) AS s",
+            f"named_struct('d2', {l2sq(IP_SPARK, 'emb', 'c_emb', 'c_norm2')},"
+            " 'centroid_id', centroid_id) AS s",
         )
         .groupBy("vec_id")
         .agg(F.min("s").alias("s"))
         .selectExpr("vec_id", "s.centroid_id AS centroid_id")
-    )
-
-
-def _sem_mean_update(assigned: DataFrame, e: DataFrame) -> DataFrame:
-    """Lloyd mean step: recompute each centroid as its members' mean,
-    per (centroid, dim) with map-side partial aggregation. Means go
-    through DECIMAL(38,20) so the centroid doubles are bit-identical
-    across engines (same trick as ann_ivf_trained); empty cells drop
-    out of the codebook naturally."""
-    members = assigned.join(e.select("vec_id", "emb"), "vec_id").select(
-        "centroid_id", F.posexplode("emb").alias("pos", "val")
-    )
-    dims = members.groupBy("centroid_id", "pos").agg(
-        (
-            F.sum(F.col("val").cast("decimal(38,20)")).cast("double") / F.count("*")
-        ).alias("cv")
-    )
-    return materialize(
-        dims.groupBy("centroid_id")
-        .agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(pos, cv))), s -> s.cv)"
-            ).alias("c_emb")
-        )
-        .selectExpr(
-            "centroid_id",
-            "c_emb",
-            "aggregate(zip_with(c_emb, c_emb, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, v) -> acc + v) AS c_norm2",
-        )
     )
 
 
@@ -411,60 +349,24 @@ def _prune_cluster_pdf(pdf):
 @register("semdedup_prune", oracle=_semdedup_oracle(_SEM_TRAIN_ITERS))
 def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): k-means-cluster the embeddings,
-    then within each cluster prune any vector that has a lower-id
-    neighbor with cosine >= threshold (keep-lowest-id — deterministic
-    stand-in for the paper's keep-one-per-group). Output: every vec_id
-    with its cluster, kept flag, and the keeper that shadows it.
+    then within each cluster prune every vector with a lower-id member
+    at cosine >= _SEM_T. Output: every vec_id with its cluster, kept
+    flag and the keeper that shadows it.
 
-    Centroids are TRAINED, per the paper's recipe: seeds are the K
-    lowest vec_ids (rank-based — robust to sparse/offset ids, ADVICE
-    r3), then _SEM_TRAIN_ITERS Lloyd rounds reuse the ann_ivf_trained
-    loop shape on squared-Euclidean argmin (assign via the LSH-pruned
-    helper below, mean update in DECIMAL so both engines see
-    bit-identical centroids). Above _SEM_TRAIN_SAMPLE_MIN_N vectors the
-    Lloyd rounds train on a DETERMINISTIC ~1/4 md5 hash-sample of the
-    corpus (VERDICT r6 #1): training cost drops 4x per round while
-    every vector still gets a final assignment and prune pass —
-    clusters whose sampled membership is empty drop out of the
-    codebook identically on both engines. Training tightens
-    clusters — measured intra-cluster mean d2 drops vs the seeded
-    codebook (tests/test_round3_ops.py) — which is what bounds the
-    prune stage's within-cluster pair count.
-
-    Round 8: the LSH code WIDTH is corpus-adaptive (bits = 8 +
-    ladder(K), see _sem_bits) so the candidate space grows with the
-    codebook instead of saturating — the fixed 1024-slot space made
-    the fourth-decade training assignment ~n*K/64 (4.20x wall for 3x
-    data, BASELINE.md round 7). The oracle computes the same ladder
-    from its k CTE and masks MAX_BITS codes modulo 2^bits, which is
-    bit-identical to generating bits-wide codes.
-
-    Scale shape: the K centroids broadcast every round (argmin is a
-    codegen'd fold per row, big side never shuffles for assignment);
-    the prune shuffles once on centroid_id into a vectorized
-    per-cluster applyInPandas kernel (_prune_cluster_pdf — quantized
-    order-independent dot, oracle-mirrored by construction) and is
-    quadratic only within a cluster — K = max(8, ceil(n / 250)) grows
-    with the corpus (the paper's own knob) so cluster width, and with
-    it the total pair count, stays LINEAR in n; the first 10x sweep
-    with a fixed K=8 measured 30x and motivated this. Norms are
-    precomputed per vector by Spark and passed through to the kernel
-    unchanged. Assignment is LSH-pruned: brute-force n x K
-    assignment with K ~ n re-measured 9.3x/decade at the 100x sweep;
-    pruning cuts candidates ~64x and the fallback fraction decays
-    exponentially in K, so the approximation tightens exactly where it
-    is cheap (small K) and prunes exactly where it matters (large K).
-    The oracle mirrors seeds, every training round, and the pruning
-    rule bit-for-bit, so the APPROXIMATE assignment itself is
-    value-checked cross-engine."""
+    Seeds are the K = max(8, ceil(n / 250)) lowest vec_ids; then
+    _SEM_TRAIN_ITERS Lloyd rounds (`_sem_assign`, then
+    `centroid_means`) train on a deterministic ~1/4 md5 sample above
+    _SEM_TRAIN_SAMPLE_MIN_N vectors; the final assignment and the prune
+    see every vector. K grows with n, so cluster width and the total
+    pair count stay linear in n: a fixed K=8 measured 30x at 10x data
+    (BASELINE.md "Scaling slope refreshed, sf0.1 -> 10x"). The
+    prune is one shuffle on centroid_id into a vectorized per-cluster
+    kernel (`_prune_cluster_pdf`). The oracle mirrors seeds, sample,
+    every round and the LSH pruning, so the approximate assignment is
+    itself oracle-checked."""
     t = load_tables(spark, sf_dir)
-    e = spread(t["embeddings"]).selectExpr(
-        "vec_id",
-        "transform(embedding, x -> CAST(x AS DOUBLE)) AS emb",
-    ).selectExpr(
-        "vec_id",
-        "emb",
-        "sqrt(aggregate(zip_with(emb, emb, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, v) -> acc + v)) AS nrm",
+    e = vectors(spread(t["embeddings"])).selectExpr(
+        "vec_id", "emb", f"sqrt({IP_SPARK.format(a='emb', b='emb')}) AS nrm"
     )
     e = materialize(e, big=True)  # corpus-sized embedding frame
     # Single driver-side scalar (accepted pattern, cf. pipeline.py
@@ -477,7 +379,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = e.orderBy("vec_id").limit(k).selectExpr(
         "vec_id AS centroid_id",
         "emb AS c_emb",
-        "aggregate(zip_with(emb, emb, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, v) -> acc + v) AS c_norm2",
+        f"{IP_SPARK.format(a='emb', b='emb')} AS c_norm2",
     )
     vcodes = add_lsh_codes(e.select("vec_id", "emb"), bits=bits).select(
         "vec_id", "tbl", "code"
@@ -494,15 +396,15 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     else:
         es, vscodes = e, vcodes
     for _ in range(_SEM_TRAIN_ITERS):
-        c = _sem_mean_update(_sem_assign(es, vscodes, c, bits), es)
-    # The checkpoint here is a JOB BARRIER, not just reuse (round 7):
-    # the prune consumes the assignment only once, but dropping the
-    # materialize merged the final assignment's sort-based struct-min
-    # aggregation and the prune into ONE job whose independent stages
-    # ran concurrently — measured heap OOM at 1000x where the
-    # barriered form completes. DISK_ONLY per the corpus-sized-frame
-    # rule; the Arrow grouped-map below then reads compact
-    # checkpointed blocks.
+        members = _sem_assign(es, vscodes, c, bits).join(es.select("vec_id", "emb"), "vec_id")
+        c = materialize(
+            centroid_means(members, ["centroid_id"], "emb").selectExpr(
+                "centroid_id", "c_emb", f"{IP_SPARK.format(a='c_emb', b='c_emb')} AS c_norm2"
+            )
+        )
+    # A job barrier, not just reuse: without it the final assignment's
+    # aggregate and the prune ran as one job with concurrent stages and
+    # ran out of heap at 1000x. DISK_ONLY: corpus-sized frame.
     assigned = materialize(
         _sem_assign(e, vcodes, c, bits)
         .join(e, "vec_id")

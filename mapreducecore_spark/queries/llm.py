@@ -1399,94 +1399,106 @@ def doc_fingerprint_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------------- similarity search
 
 from mapreducecore_spark.llm.similarity import (  # noqa: E402
-    COS_DUCK as _COS_DUCK,
-    COS_SPARK as _COS_SPARK,
+    COS_DUCK,
+    COS_SPARK,
+    IP_DUCK,
+    IP_SPARK,
+    VECTORS_DUCK,
     add_lsh_codes,
+    centroid_means,
+    centroid_means_duck,
     duck_tables_select,
-    spark_tables_expr,
+    l2sq,
+    vectors,
 )
+from mapreducecore_spark.operators.topk import top_k_per_group  # noqa: E402
 
-
-_ANN_BRUTE_ORACLE = f"""
-    WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-               FROM embeddings),
-    q AS (SELECT vec_id AS q_id, emb AS q_emb FROM e WHERE vec_id < 8),
-    sims AS (
-      SELECT q.q_id, e.vec_id AS neighbor_id,
-             ROUND({_COS_DUCK.format(a="q.q_emb", b="e.emb")}, 6) AS sim
-      FROM q CROSS JOIN e WHERE e.vec_id <> q.q_id
-    )
-    SELECT q_id, neighbor_id, sim FROM (
+# Every search ranks the neighbors of the query vectors vec_id < 8.
+# DuckDB form of `_top_sims` over CTE `sims`.
+_TOP_SIMS_DUCK = """SELECT q_id, neighbor_id, sim FROM (
       SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
                                    ORDER BY sim DESC, neighbor_id) AS rn
       FROM sims
-    ) WHERE rn <= 5
+    ) WHERE rn <= {k}"""
+
+# Exact cosine over candidate (q_id, neighbor_id) pairs in CTE `cand`.
+_RANK_CANDIDATES_DUCK = f"""sims AS (
+      SELECT c.q_id, c.neighbor_id,
+             ROUND({COS_DUCK.format(a="qe.emb", b="ne.emb")}, 6) AS sim
+      FROM cand c JOIN e qe ON qe.vec_id = c.q_id
+                  JOIN e ne ON ne.vec_id = c.neighbor_id
+    )
+    {_TOP_SIMS_DUCK}"""
+
+
+def _top_sims(sims: DataFrame, k: int) -> DataFrame:
+    """The k highest-`sim` rows per q_id, ties to the lowest neighbor_id."""
+    return top_k_per_group(sims, ["q_id"], [F.col("sim").desc(), F.col("neighbor_id")], k)
+
+
+def _rank_candidates(e: DataFrame, cand: DataFrame, k: int) -> DataFrame:
+    """Exact cosine top-k over candidate (q_id, neighbor_id) pairs."""
+    qe = e.filter(F.col("vec_id") < 8).selectExpr("vec_id AS q_id", "emb AS q_emb")
+    ne = e.selectExpr("vec_id AS neighbor_id", "emb AS n_emb")
+    cos = COS_SPARK.format(a="q_emb", b="n_emb")
+    sims = (
+        cand.join(F.broadcast(qe), "q_id")
+        .join(ne, "neighbor_id")
+        .selectExpr("q_id", "neighbor_id", f"ROUND({cos}, 6) AS sim")
+    )
+    return _top_sims(sims, k)
+
+
+_ANN_BRUTE_ORACLE = f"""
+    WITH e AS ({VECTORS_DUCK}),
+    q AS (SELECT vec_id AS q_id, emb AS q_emb FROM e WHERE vec_id < 8),
+    sims AS (
+      SELECT q.q_id, e.vec_id AS neighbor_id,
+             ROUND({COS_DUCK.format(a="q.q_emb", b="e.emb")}, 6) AS sim
+      FROM q CROSS JOIN e WHERE e.vec_id <> q.q_id
+    )
+    {_TOP_SIMS_DUCK.format(k=5)}
     """
 
 
 @register("ann_cosine_topk", oracle=_ANN_BRUTE_ORACLE)
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k: broadcast the (small) query set against
-    the full embedding table; double-precision sequential fold keeps the
-    arithmetic engine-identical. At 100 TB the scale path is
-    ann_lsh_bucketed below — this is the exact baseline."""
-    from pyspark.sql import Window
-
+    """Exact cosine top-5 per query vector: the query set broadcasts
+    against the whole table. The baseline the approximate searches
+    below are scored against."""
     t = load_tables(spark, sf_dir)
-    e = spread(t["embeddings"]).selectExpr(
-        "vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS emb"
-    )
+    e = vectors(spread(t["embeddings"]))
     q = e.filter(F.col("vec_id") < 8).selectExpr("vec_id AS q_id", "emb AS q_emb")
-    cos = _COS_SPARK.format(a="q_emb", b="emb")
+    cos = COS_SPARK.format(a="q_emb", b="emb")
     sims = (
         e.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("q_id"))
         .selectExpr("q_id", "vec_id AS neighbor_id", f"ROUND({cos}, 6) AS sim")
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        sims.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("q_id", "neighbor_id", "sim")
-    )
+    return _top_sims(sims, 5)
 
 
 _ANN_LSH_ORACLE = f"""
-    WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-               FROM embeddings),
+    WITH e AS ({VECTORS_DUCK}),
     be AS (SELECT vec_id, emb, {duck_tables_select("emb")} FROM e),
     q AS (SELECT vec_id AS q_id, emb AS q_emb, tbl, code FROM be WHERE vec_id < 8),
     cand AS (
       SELECT DISTINCT q.q_id, be.vec_id AS neighbor_id
       FROM q JOIN be ON q.tbl = be.tbl AND q.code = be.code AND be.vec_id <> q.q_id
     ),
-    sims AS (
-      SELECT c.q_id, c.neighbor_id,
-             ROUND({_COS_DUCK.format(a="qe.emb", b="ne.emb")}, 6) AS sim
-      FROM cand c JOIN e qe ON qe.vec_id = c.q_id
-                  JOIN e ne ON ne.vec_id = c.neighbor_id
-    )
-    SELECT q_id, neighbor_id, sim FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                                   ORDER BY sim DESC, neighbor_id) AS rn
-      FROM sims
-    ) WHERE rn <= 3
+    {_RANK_CANDIDATES_DUCK.format(k=3)}
     """
 
 
 @register("ann_lsh_bucketed", oracle=_ANN_LSH_ORACLE)
 def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate top-k via multi-table sign-LSH (4 tables x 8 bits):
-    candidates = union of per-table bucket joins, then exact cosine +
-    top-k on candidates only. The scale path — candidate count follows
-    bucket occupancy, never O(n²); recall on high-sim neighbors is
-    1-(1-p^8)^4 (tested on planted vectors in test_llm_ops)."""
-    from pyspark.sql import Window
-
+    """Approximate cosine top-3 via multi-table sign-LSH (4 tables x 8
+    bits): candidates are the union of per-table bucket joins, ranked
+    by exact cosine. Candidate count follows bucket occupancy, never
+    O(n²); high-similarity recall is 1-(1-p^8)^4 (planted vectors in
+    tests/test_llm_ops.py)."""
     t = load_tables(spark, sf_dir)
-    e = spread(t["embeddings"]).selectExpr(
-        "vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS emb"
-    )
+    e = vectors(spread(t["embeddings"]))
     be = add_lsh_codes(e)
     q = be.filter(F.col("vec_id") < 8).selectExpr(
         "vec_id AS q_id", "emb AS q_emb", "tbl", "code"
@@ -1497,82 +1509,86 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("q_id", F.col("vec_id").alias("neighbor_id"))
         .distinct()
     )
-    qe = e.filter(F.col("vec_id") < 8).selectExpr("vec_id AS q_id", "emb AS q_emb")
-    ne = e.selectExpr("vec_id AS neighbor_id", "emb AS n_emb")
-    cos = _COS_SPARK.format(a="q_emb", b="n_emb")
-    sims = (
-        cand.join(F.broadcast(qe), "q_id")
-        .join(ne, "neighbor_id")
-        .selectExpr("q_id", "neighbor_id", f"ROUND({cos}, 6) AS sim")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        sims.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("q_id", "neighbor_id", "sim")
-    )
+    return _rank_candidates(e, cand, 3)
 
 
-# Product quantization: m subspaces x K codes. Codebook = subvectors
-# of the K lowest vec_ids (the deterministic seeded pick the kmeans /
-# IVF ops use); asymmetric-distance (ADC) queries never touch raw
-# index vectors — only 1-byte codes.
+# Product quantization: m subspaces x K codes. The seeded codebook is
+# the subvectors of the K lowest vec_ids.
 _PQ_M = 4  # subspaces over the 64-dim embeddings
 _PQ_SUB = 16  # dims per subspace
 _PQ_K = 16  # codes per subspace
 _PQ_TOPK = 5
-_IP_SPARK_ = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> x * y), CAST(0 AS DOUBLE),"
-    " (acc, v) -> acc + v)"
-)
-_IP_DUCK_ = "list_inner_product({a}, {b})"
-_PQ_D2 = "ROUND({aa} - 2 * {ab} + {bb}, 5)"
+_PQ_TRAIN_ITERS = 1
 
 
-def _pq_oracle() -> str:
-    sub_d = lambda emb, s: f"list_slice({emb}, {s * _PQ_SUB + 1}, {(s + 1) * _PQ_SUB})"
+def _pq_oracle(iters: int) -> str:
+    """DuckDB mirror of `_pq_codebook(iters)` + `_pq_adc_topk`: codebook
+    cb0, `iters` encode-then-mean rounds, then the ADC top-k against
+    cb<iters>. Every CTE is MATERIALIZED (DuckDB inlines CTEs, and the
+    round chain re-reads each one)."""
     subs = ", ".join(
-        f"{sub_d('emb', s)} AS sub{s}" for s in range(_PQ_M)
+        f"list_slice(emb, {s * _PQ_SUB + 1}, {(s + 1) * _PQ_SUB}) AS sub{s}"
+        for s in range(_PQ_M)
     )
     sub_rows = " UNION ALL ".join(
         f"SELECT vec_id, {s} AS s, sub{s} AS sub FROM sliced" for s in range(_PQ_M)
     )
-    d2 = _PQ_D2.format(
-        aa=_IP_DUCK_.format(a="v.sub", b="v.sub"),
-        ab=_IP_DUCK_.format(a="v.sub", b="cb.c_sub"),
-        bb="cb.c_norm2",
-    )
-    return f"""
-    WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-               FROM embeddings),
-    sliced AS (SELECT vec_id, {subs} FROM e),
-    subrows AS ({sub_rows}),
-    cb AS (
-      SELECT s, vec_id AS code_id, sub AS c_sub,
-             {_IP_DUCK_.format(a="sub", b="sub")} AS c_norm2
-      FROM subrows WHERE vec_id < {_PQ_K}
-    ),
-    codes AS (
+
+    def d2(i: int) -> str:
+        return l2sq(IP_DUCK, "v.sub", f"cb{i}.c_sub", f"cb{i}.c_norm2")
+
+    def codes(i: int) -> str:
+        return f"""codes{i} AS MATERIALIZED (
       SELECT vec_id, s, code_id FROM (
-        SELECT v.vec_id, v.s, cb.code_id,
+        SELECT v.vec_id, v.s, cb{i}.code_id,
                ROW_NUMBER() OVER (PARTITION BY v.vec_id, v.s
-                                  ORDER BY {d2}, cb.code_id) AS rn
-        FROM subrows v JOIN cb ON cb.s = v.s
+                                  ORDER BY {d2(i)}, cb{i}.code_id) AS rn
+        FROM subrows v JOIN cb{i} ON cb{i}.s = v.s
       ) WHERE rn = 1
-    ),
-    lut AS (
-      SELECT v.vec_id AS q_id, v.s, cb.code_id,
-             CAST({d2} AS DECIMAL(18,5)) AS qd
-      FROM subrows v JOIN cb ON cb.s = v.s
+    )"""
+
+    ctes = [
+        f"e AS MATERIALIZED ({VECTORS_DUCK})",
+        f"sliced AS MATERIALIZED (SELECT vec_id, {subs} FROM e)",
+        f"subrows AS MATERIALIZED ({sub_rows})",
+        f"""cb0 AS MATERIALIZED (
+      SELECT s, vec_id AS code_id, sub AS c_sub,
+             {IP_DUCK.format(a="sub", b="sub")} AS c_norm2
+      FROM subrows WHERE vec_id < {_PQ_K}
+    )""",
+    ]
+    for i in range(iters):
+        members = (
+            f"(SELECT c.s, c.code_id, v.sub FROM codes{i} c"
+            " JOIN subrows v ON v.vec_id = c.vec_id AND v.s = c.s)"
+        )
+        ctes += [
+            codes(i),
+            f"""cb{i + 1} AS MATERIALIZED (
+      SELECT *, {IP_DUCK.format(a="c_sub", b="c_sub")} AS c_norm2
+      FROM ({centroid_means_duck(members, ["s", "code_id"], "sub")})
+    )""",
+        ]
+    n = iters
+    ctes += [
+        codes(n),
+        f"""lut AS MATERIALIZED (
+      SELECT v.vec_id AS q_id, v.s, cb{n}.code_id,
+             CAST({d2(n)} AS DECIMAL(18,5)) AS qd
+      FROM subrows v JOIN cb{n} ON cb{n}.s = v.s
       WHERE v.vec_id < 8
-    ),
-    adc AS (
+    )""",
+        f"""adc AS (
       SELECT l.q_id, c.vec_id AS neighbor_id,
              CAST(SUM(l.qd) AS DOUBLE) AS pq_dist2
-      FROM codes c JOIN lut l ON l.s = c.s AND l.code_id = c.code_id
+      FROM codes{n} c JOIN lut l ON l.s = c.s AND l.code_id = c.code_id
       WHERE c.vec_id <> l.q_id
       GROUP BY l.q_id, c.vec_id
-    )
+    )""",
+    ]
+    ctes = ",\n    ".join(ctes)
+    return f"""
+    WITH {ctes}
     SELECT q_id, neighbor_id, pq_dist2 FROM (
       SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
                                    ORDER BY pq_dist2, neighbor_id) AS rn
@@ -1581,40 +1597,30 @@ def _pq_oracle() -> str:
     """
 
 
-@register("ann_pq_topk", oracle=_pq_oracle())
+@register("ann_pq_topk", oracle=_pq_oracle(0))
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN (Jégou et al. 2011) — the
-    memory-compressed scale path the ANN family was missing: each
-    64-dim vector is encoded as 4 one-byte codes (argmin to a
-    16-centroid codebook per 16-dim subspace; codebook = subvectors of
-    the 16 lowest vec_ids, the same deterministic seeded pick
-    kmeans_assign_seeded uses), and queries rank the WHOLE index
-    through an asymmetric-distance lookup table — per query, 4 x 16
-    precomputed subspace distances — summing 4 table entries per index
-    vector instead of touching any raw vector. Returns top-5 neighbors
-    per query (vec_id < 8) by estimated L2².
+    """Product-quantization ANN (Jégou et al. 2011) with the seeded
+    codebook: each 64-dim vector becomes 4 one-byte codes (nearest of
+    16 centroids per 16-dim subspace), and each query ranks the whole
+    index by asymmetric distance — the sum of 4 lookup-table entries
+    per vector — returning the top-5 by estimated L2².
 
-    Scale shape: the index side of the ADC join carries ONLY
-    (vec_id, s, code) int rows — at 100 TB that is m bytes per vector
-    against the raw 256 bytes, the whole point of PQ; the codebook
-    (64 rows) and LUT (512 rows) broadcast; the per-(query, vector)
-    sum partial-aggregates map-side; top-k rides WindowGroupLimit.
-    Determinism: each subspace distance is |v|² - 2v·c + |c|² with a
-    shared sequential-fold inner product, rounded to 5 decimals, and
-    the ADC sum is an exact DECIMAL(18,5) fold — order-independent on
-    both engines."""
+    The index side of the ADC join carries only (vec_id, s, code) ints,
+    m bytes per vector against 256 raw; codebook (64 rows) and lookup
+    table (512 rows) broadcast. Subspace distances are `l2sq` and the
+    ADC sum an exact DECIMAL(18,5) fold, so the ranking is
+    order-independent on both engines. 4.30/decade to 1000x
+    (BASELINE.md "Three-decade sweep, part 3")."""
     subrows = _pq_subrows(spark, sf_dir)
-    return _pq_adc_topk(subrows, _pq_codebook_seeded(subrows))
+    return _pq_adc_topk(subrows, _pq_codebook(subrows, 0))
 
 
 def _pq_subrows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, s, sub): every vector split into its m subvectors —
-    materialized because codebook, encoding, and query LUT all consume
+    """(vec_id, s, sub): every vector split into its m subvectors,
+    materialized because codebook, encoding and lookup table all read
     it."""
     t = load_tables(spark, sf_dir)
-    e = spread(t["embeddings"]).selectExpr(
-        "vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS emb"
-    )
+    e = vectors(spread(t["embeddings"]))
     return materialize(
         e.select(
             "vec_id",
@@ -1635,66 +1641,32 @@ def _pq_subrows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pq_codebook_seeded(subrows: DataFrame) -> DataFrame:
-    """(s, code_id, c_sub, c_norm2): subvectors of the K lowest
-    vec_ids — the deterministic seeded pick."""
-    return subrows.filter(F.col("vec_id") < _PQ_K).selectExpr(
-        "s",
-        "vec_id AS code_id",
-        "sub AS c_sub",
-        f"{_IP_SPARK_.format(a='sub', b='sub')} AS c_norm2",
+def _pq_codebook(subrows: DataFrame, iters: int) -> DataFrame:
+    """(s, code_id, c_sub, c_norm2): the seeded codebook after `iters`
+    Lloyd rounds (encode, then `centroid_means` per (subspace, code));
+    a code no subvector picks drops out."""
+    cb = subrows.filter(F.col("vec_id") < _PQ_K).selectExpr(
+        "s", "vec_id AS code_id", "sub AS c_sub", f"{IP_SPARK.format(a='sub', b='sub')} AS c_norm2"
     )
+    for _ in range(iters):
+        members = _pq_encode(subrows, materialize(cb)).join(subrows, ["vec_id", "s"])
+        cb = centroid_means(members, ["s", "code_id"], "sub").selectExpr(
+            "s", "code_id", "c_sub", f"{IP_SPARK.format(a='c_sub', b='c_sub')} AS c_norm2"
+        )
+    return cb
 
 
-_PQ_D2_EXPR = _PQ_D2.format(
-    aa=_IP_SPARK_.format(a="sub", b="sub"),
-    ab=_IP_SPARK_.format(a="sub", b="c_sub"),
-    bb="c_norm2",
-)
+_PQ_SUB_D2 = l2sq(IP_SPARK, "sub", "c_sub", "c_norm2")
 
 
 def _pq_encode(subrows: DataFrame, cb: DataFrame) -> DataFrame:
     """(vec_id, s, code_id): nearest codebook entry per subvector
     (min rounded L2², ties to the lowest code)."""
-    from pyspark.sql import Window
-
     scored = subrows.join(F.broadcast(cb), "s").selectExpr(
-        "vec_id", "s", "code_id", f"{_PQ_D2_EXPR} AS d2"
+        "vec_id", "s", "code_id", f"{_PQ_SUB_D2} AS d2"
     )
-    w_code = Window.partitionBy("vec_id", "s").orderBy("d2", "code_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w_code))
-        .filter("rn = 1")
-        .select("vec_id", "s", "code_id")
-    )
-
-
-def _pq_mean_update(subrows: DataFrame, codes: DataFrame) -> DataFrame:
-    """Lloyd mean step per (subspace, code): members' elementwise mean
-    through DECIMAL(38,20) so the centroid doubles are bit-identical
-    across engines (the semdedup/ann_ivf_trained recipe); empty codes
-    drop out of the codebook naturally."""
-    members = codes.join(subrows, ["vec_id", "s"]).select(
-        "s", "code_id", F.posexplode("sub").alias("pos", "val")
-    )
-    dims = members.groupBy("s", "code_id", "pos").agg(
-        (
-            F.sum(F.col("val").cast("decimal(38,20)")).cast("double") / F.count("*")
-        ).alias("cv")
-    )
-    return materialize(
-        dims.groupBy("s", "code_id")
-        .agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(pos, cv))), x -> x.cv)"
-            ).alias("c_sub")
-        )
-        .selectExpr(
-            "s",
-            "code_id",
-            "c_sub",
-            f"{_IP_SPARK_.format(a='c_sub', b='c_sub')} AS c_norm2",
-        )
+    return top_k_per_group(scored, ["vec_id", "s"], [F.col("d2"), F.col("code_id")], 1).drop(
+        "d2"
     )
 
 
@@ -1702,8 +1674,6 @@ def _pq_adc_topk(subrows: DataFrame, cb: DataFrame) -> DataFrame:
     """Encode the index with `cb`, build each query's
     asymmetric-distance lookup table, and rank by the exact-DECIMAL
     sum of m table entries per vector."""
-    from pyspark.sql import Window
-
     cb = materialize(cb)
     codes = _pq_encode(subrows, cb)
     lut = (
@@ -1713,7 +1683,7 @@ def _pq_adc_topk(subrows: DataFrame, cb: DataFrame) -> DataFrame:
             "vec_id AS q_id",
             "s",
             "code_id",
-            f"CAST({_PQ_D2_EXPR} AS DECIMAL(18,5)) AS qd",
+            f"CAST({_PQ_SUB_D2} AS DECIMAL(18,5)) AS qd",
         )
     )
     adc = (
@@ -1722,128 +1692,34 @@ def _pq_adc_topk(subrows: DataFrame, cb: DataFrame) -> DataFrame:
         .groupBy("q_id", "vec_id")
         .agg(F.sum("qd").cast("double").alias("pq_dist2"))
     )
-    w = Window.partitionBy("q_id").orderBy("pq_dist2", "vec_id")
-    return (
-        adc.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _PQ_TOPK)
-        .select("q_id", F.col("vec_id").alias("neighbor_id"), "pq_dist2")
-    )
+    return top_k_per_group(
+        adc, ["q_id"], [F.col("pq_dist2"), F.col("vec_id")], _PQ_TOPK
+    ).select("q_id", F.col("vec_id").alias("neighbor_id"), "pq_dist2")
 
 
-def _pq_trained_oracle() -> str:
-    sub_d = lambda emb, s: f"list_slice({emb}, {s * _PQ_SUB + 1}, {(s + 1) * _PQ_SUB})"
-    subs = ", ".join(f"{sub_d('emb', s)} AS sub{s}" for s in range(_PQ_M))
-    sub_rows = " UNION ALL ".join(
-        f"SELECT vec_id, {s} AS s, sub{s} AS sub FROM sliced" for s in range(_PQ_M)
-    )
-
-    def d2(cb: str) -> str:
-        return _PQ_D2.format(
-            aa=_IP_DUCK_.format(a="v.sub", b="v.sub"),
-            ab=_IP_DUCK_.format(a="v.sub", b=f"{cb}.c_sub"),
-            bb=f"{cb}.c_norm2",
-        )
-
-    return f"""
-    WITH e AS MATERIALIZED (SELECT vec_id,
-                 list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-               FROM embeddings),
-    sliced AS MATERIALIZED (SELECT vec_id, {subs} FROM e),
-    subrows AS MATERIALIZED ({sub_rows}),
-    cb0 AS MATERIALIZED (
-      SELECT s, vec_id AS code_id, sub AS c_sub,
-             {_IP_DUCK_.format(a="sub", b="sub")} AS c_norm2
-      FROM subrows WHERE vec_id < {_PQ_K}
-    ),
-    codes0 AS MATERIALIZED (
-      SELECT vec_id, s, code_id FROM (
-        SELECT v.vec_id, v.s, cb0.code_id,
-               ROW_NUMBER() OVER (PARTITION BY v.vec_id, v.s
-                                  ORDER BY {d2("cb0")}, cb0.code_id) AS rn
-        FROM subrows v JOIN cb0 ON cb0.s = v.s
-      ) WHERE rn = 1
-    ),
-    u AS MATERIALIZED (
-      SELECT s, code_id, idx, sub[idx] AS val FROM (
-        SELECT c.s, c.code_id, v.sub,
-               unnest(generate_series(1, len(v.sub))) AS idx
-        FROM codes0 c JOIN subrows v ON v.vec_id = c.vec_id AND v.s = c.s)
-    ),
-    cb1 AS MATERIALIZED (
-      SELECT s, code_id, c_sub,
-             {_IP_DUCK_.format(a="c_sub", b="c_sub")} AS c_norm2
-      FROM (
-        SELECT s, code_id, list(cv ORDER BY idx) AS c_sub FROM (
-          SELECT s, code_id, idx,
-                 CAST(SUM(CAST(val AS DECIMAL(38,20))) AS DOUBLE) / COUNT(*) AS cv
-          FROM u GROUP BY s, code_id, idx)
-        GROUP BY s, code_id)
-    ),
-    codes1 AS MATERIALIZED (
-      SELECT vec_id, s, code_id FROM (
-        SELECT v.vec_id, v.s, cb1.code_id,
-               ROW_NUMBER() OVER (PARTITION BY v.vec_id, v.s
-                                  ORDER BY {d2("cb1")}, cb1.code_id) AS rn
-        FROM subrows v JOIN cb1 ON cb1.s = v.s
-      ) WHERE rn = 1
-    ),
-    lut AS MATERIALIZED (
-      SELECT v.vec_id AS q_id, v.s, cb1.code_id,
-             CAST({d2("cb1")} AS DECIMAL(18,5)) AS qd
-      FROM subrows v JOIN cb1 ON cb1.s = v.s
-      WHERE v.vec_id < 8
-    ),
-    adc AS (
-      SELECT l.q_id, c.vec_id AS neighbor_id,
-             CAST(SUM(l.qd) AS DOUBLE) AS pq_dist2
-      FROM codes1 c JOIN lut l ON l.s = c.s AND l.code_id = c.code_id
-      WHERE c.vec_id <> l.q_id
-      GROUP BY l.q_id, c.vec_id
-    )
-    SELECT q_id, neighbor_id, pq_dist2 FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                                   ORDER BY pq_dist2, neighbor_id) AS rn
-      FROM adc
-    ) WHERE rn <= {_PQ_TOPK}
-    """
-
-
-@register("ann_pq_trained", oracle=_pq_trained_oracle())
+@register("ann_pq_trained", oracle=_pq_oracle(_PQ_TRAIN_ITERS))
 def ann_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ with one Lloyd round per subspace (completes the trained/
-    seeded symmetry ann_ivf_seeded / ann_ivf_trained has): assign every
-    subvector to its seeded code, recompute each (subspace, code)
-    centroid as its members' elementwise DECIMAL(38,20) mean, then
-    re-encode and ADC-rank against the trained codebook. Same plan
-    shape as ann_pq_topk plus one narrow (s, code, pos) aggregation —
-    the mean update touches m x K x 16 cells regardless of corpus
-    size; empty codes drop out of the codebook naturally (their
-    index entries re-encode to surviving codes)."""
+    """ann_pq_topk with _PQ_TRAIN_ITERS Lloyd rounds on the codebook.
+    The mean step touches m x K x 16 cells whatever the corpus size;
+    one round cuts per-subvector quantization error 28% at sf0.01
+    (tests/test_round5_ops.py; BASELINE.md "ann_pq_topk")."""
     subrows = _pq_subrows(spark, sf_dir)
-    cb0 = materialize(_pq_codebook_seeded(subrows))
-    codes0 = _pq_encode(subrows, cb0)
-    cb1 = _pq_mean_update(subrows, codes0)
-    return _pq_adc_topk(subrows, cb1)
+    return _pq_adc_topk(subrows, _pq_codebook(subrows, _PQ_TRAIN_ITERS))
 
 
 def _pq_recall_oracle() -> str:
-    d2 = _PQ_D2.format(
-        aa=_IP_DUCK_.format(a="q.q_emb", b="q.q_emb"),
-        ab=_IP_DUCK_.format(a="q.q_emb", b="e.emb"),
-        bb=_IP_DUCK_.format(a="e.emb", b="e.emb"),
-    )
     return f"""
-    WITH e2 AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-                FROM embeddings),
+    WITH e2 AS ({VECTORS_DUCK}),
     truth AS (
       SELECT q_id, neighbor_id FROM (
         SELECT q.q_id, e.vec_id AS neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY q.q_id ORDER BY {d2}, e.vec_id) AS rn
+               ROW_NUMBER() OVER (PARTITION BY q.q_id
+                 ORDER BY {l2sq(IP_DUCK, "q.q_emb", "e.emb")}, e.vec_id) AS rn
         FROM (SELECT vec_id AS q_id, emb AS q_emb FROM e2 WHERE vec_id < 8) q
         CROSS JOIN e2 e WHERE e.vec_id <> q.q_id
       ) WHERE rn <= {_PQ_TOPK}
     ),
-    pq AS (SELECT q_id, neighbor_id FROM ({_pq_oracle()})),
+    pq AS (SELECT q_id, neighbor_id FROM ({_pq_oracle(0)})),
     hits AS (
       SELECT t.q_id, COUNT(*) AS n_hit FROM truth t
       JOIN pq p ON p.q_id = t.q_id AND p.neighbor_id = t.neighbor_id
@@ -1860,36 +1736,21 @@ def _pq_recall_oracle() -> str:
 
 @register("ann_pq_recall", oracle=_pq_recall_oracle())
 def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@5 of the PQ/ADC retrieval against the exact brute-force
-    L2 top-5, per query — completes the eval trio (dedup_candidate_
-    recall, ann_recall_eval) for the compressed-index path: this is
-    the number a production migration compares against its target
-    before letting ADC serve traffic, and both retrievals are
-    deterministic and SQL-expressible, so the METRIC itself is
-    value-checked cross-engine. Seeded 4x16 codebooks measure 0.225 /
-    0.375 at sf0.001 / sf0.01 (chance 0.01); Lloyd-training the
-    codebooks is the quality path."""
-    from pyspark.sql import Window
-
+    """Recall@5 per query of ann_pq_topk against the exact L2 top-5.
+    Both retrievals are deterministic SQL, so the metric itself is
+    oracle-checked. The seeded codebook measures 0.225 / 0.375 at
+    sf0.001 / sf0.01 (chance 0.01)."""
     t = load_tables(spark, sf_dir)
-    e = spread(t["embeddings"]).selectExpr(
-        "vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS emb"
-    )
+    e = vectors(spread(t["embeddings"]))
     q = e.filter(F.col("vec_id") < 8).selectExpr("vec_id AS q_id", "emb AS q_emb")
-    d2 = _PQ_D2.format(
-        aa=_IP_SPARK_.format(a="q_emb", b="q_emb"),
-        ab=_IP_SPARK_.format(a="q_emb", b="emb"),
-        bb=_IP_SPARK_.format(a="emb", b="emb"),
-    )
-    w = Window.partitionBy("q_id").orderBy("d2", "neighbor_id")
-    truth = (
+    scored = (
         e.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("q_id"))
-        .selectExpr("q_id", "vec_id AS neighbor_id", f"{d2} AS d2")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _PQ_TOPK)
-        .select("q_id", "neighbor_id")
+        .selectExpr("q_id", "vec_id AS neighbor_id", f"{l2sq(IP_SPARK, 'q_emb', 'emb')} AS d2")
     )
+    truth = top_k_per_group(
+        scored, ["q_id"], [F.col("d2"), F.col("neighbor_id")], _PQ_TOPK
+    ).select("q_id", "neighbor_id")
     truth = materialize(truth)
     pq = ann_pq_topk(spark, sf_dir).select("q_id", "neighbor_id")
     hits = (
@@ -1915,8 +1776,7 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "embedding_neardup_pairs",
     oracle=f"""
-    WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-               FROM embeddings),
+    WITH e AS ({VECTORS_DUCK}),
     be AS (SELECT vec_id, emb, {duck_tables_select("emb")} FROM e),
     cand AS (
       SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
@@ -1925,7 +1785,7 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     pairs AS (
       SELECT c.id_a, c.id_b,
-             ROUND({_COS_DUCK.format(a="ea.emb", b="eb.emb")}, 6) AS cos_sim
+             ROUND({COS_DUCK.format(a="ea.emb", b="eb.emb")}, 6) AS cos_sim
       FROM cand c JOIN e ea ON ea.vec_id = c.id_a
                   JOIN e eb ON eb.vec_id = c.id_b
     )
@@ -1936,9 +1796,7 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs over multi-table sign-LSH
     candidates (true near-dups collide in some table w.h.p.)."""
     t = load_tables(spark, sf_dir)
-    e = spread(t["embeddings"]).selectExpr(
-        "vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS emb"
-    )
+    e = vectors(spread(t["embeddings"]))
     be = materialize(add_lsh_codes(e), big=True)  # emb payload x tables
     a = be.selectExpr("vec_id AS id_a", "tbl", "code")
     b = be.selectExpr("vec_id AS id_b", "tbl", "code")
@@ -1950,7 +1808,7 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ea = e.selectExpr("vec_id AS id_a", "emb AS emb_a")
     eb = e.selectExpr("vec_id AS id_b", "emb AS emb_b")
-    cos = _COS_SPARK.format(a="emb_a", b="emb_b")
+    cos = COS_SPARK.format(a="emb_a", b="emb_b")
     return (
         cand.join(ea, "id_a")
         .join(eb, "id_b")
@@ -1959,132 +1817,32 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-
-@register(
-    "ann_ivf_coarse",
-    oracle=f"""
-    WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-               FROM embeddings),
-    c AS (SELECT vec_id AS c_id, emb AS c_emb FROM e WHERE vec_id < 16),
-    assign AS (
-      SELECT e.vec_id, c.c_id,
-             ROW_NUMBER() OVER (
-               PARTITION BY e.vec_id
-               ORDER BY ROUND({_COS_DUCK.format(a="e.emb", b="c.c_emb")}, 6) DESC, c.c_id
-             ) AS rn
-      FROM e CROSS JOIN c
-    ),
-    cells  AS (SELECT vec_id, c_id AS cell FROM assign WHERE rn = 1),
-    probes AS (SELECT vec_id AS q_id, c_id AS cell FROM assign
-               WHERE vec_id < 8 AND rn <= 2),
-    cand AS (
-      SELECT DISTINCT p.q_id, m.vec_id AS neighbor_id
-      FROM probes p JOIN cells m ON m.cell = p.cell
-      WHERE m.vec_id <> p.q_id
-    ),
-    sims AS (
-      SELECT cand.q_id, cand.neighbor_id,
-             ROUND({_COS_DUCK.format(a="qe.emb", b="ne.emb")}, 6) AS sim
-      FROM cand
-      JOIN e qe ON qe.vec_id = cand.q_id
-      JOIN e ne ON ne.vec_id = cand.neighbor_id
-    )
-    SELECT q_id, neighbor_id, sim FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                                   ORDER BY sim DESC, neighbor_id) AS rn
-      FROM sims
-    ) WHERE rn <= 5
-    """,
-)
-def ann_ivf_coarse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style ANN: coarse-quantize every vector to its nearest
-    "centroid" (deterministic codebook = the 16 lowest vec_ids), then
-    search only the query's 2 closest cells (nprobe=2). The 100 TB
-    shape: assignment is a broadcast cross join against a CONSTANT-size
-    codebook (one map-side pass), the probe is an equi-join on cell id —
-    per-query work follows cell occupancy, never O(n2). Recall vs the
-    exact baseline is checked in tests/test_llm_ops.py."""
-    from pyspark.sql import Window
-
-    t = load_tables(spark, sf_dir)
-    e = spread(t["embeddings"]).selectExpr(
-        "vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS emb"
-    )
-    cents = e.filter(F.col("vec_id") < 16).selectExpr("vec_id AS c_id", "emb AS c_emb")
-    cos_assign = _COS_SPARK.format(a="emb", b="c_emb")
-    w_assign = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), "c_id")
-    assign = (
-        e.crossJoin(F.broadcast(cents))
-        .selectExpr("vec_id", "c_id", f"ROUND({cos_assign}, 6) AS sim")
-        .withColumn("rn", F.row_number().over(w_assign))
-    )
-    assign = materialize(assign.filter(F.col("rn") <= 2).select("vec_id", "c_id", "rn"))
-    cells = assign.filter(F.col("rn") == 1).selectExpr("vec_id", "c_id AS cell")
-    probes = assign.filter(F.col("vec_id") < 8).selectExpr("vec_id AS q_id", "c_id AS cell")
-    cand = (
-        probes.join(cells, "cell")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", F.col("vec_id").alias("neighbor_id"))
-        .distinct()
-    )
-    qe = e.filter(F.col("vec_id") < 8).selectExpr("vec_id AS q_id", "emb AS q_emb")
-    ne = e.selectExpr("vec_id AS neighbor_id", "emb AS n_emb")
-    cos = _COS_SPARK.format(a="q_emb", b="n_emb")
-    sims = (
-        cand.join(F.broadcast(qe), "q_id")
-        .join(ne, "neighbor_id")
-        .selectExpr("q_id", "neighbor_id", f"ROUND({cos}, 6) AS sim")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), "neighbor_id")
-    return (
-        sims.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("q_id", "neighbor_id", "sim")
-    )
-
-
 _IVF_TRAIN_ITERS = 2
 
 
-def _ivf_train_oracle(iters: int) -> str:
-    """DuckDB mirror of the Lloyd chain: each iteration is an
-    assign-then-mean CTE pair. Means are DECIMAL(38,20) sums divided by
-    counts — exact and order-independent, so the centroid doubles are
-    bit-identical across engines."""
-    cos_ac = _COS_DUCK.format(a="e.emb", b="c.c_emb")
-    blocks = []
-    for k in range(iters):
-        blocks.append(f"""
-    a{k} AS (
-      SELECT e.vec_id, e.emb, c.c_id,
+def _ivf_oracle(iters: int) -> str:
+    """DuckDB mirror of `_ivf_search`: `iters` assign-then-mean rounds
+    from the seeded codebook c0, then the nprobe=2 search against
+    c<iters>."""
+    cos = COS_DUCK.format(a="e.emb", b="c.c_emb")
+
+    def assign(i: int) -> str:
+        return f"""SELECT e.vec_id, e.emb, c.c_id,
              ROW_NUMBER() OVER (PARTITION BY e.vec_id
-               ORDER BY ROUND({cos_ac}, 6) DESC, c.c_id) AS rn
-      FROM e CROSS JOIN c{k} c
-    ),
-    m{k} AS (SELECT vec_id, emb, c_id AS cell FROM a{k} WHERE rn = 1),
-    u{k} AS (
-      SELECT cell, i, emb[i] AS val FROM (
-        SELECT cell, emb, unnest(generate_series(1, len(emb))) AS i FROM m{k})
-    ),
-    c{k + 1} AS (
-      SELECT cell AS c_id, list(cv ORDER BY i) AS c_emb FROM (
-        SELECT cell, i,
-               CAST(SUM(CAST(val AS DECIMAL(38,20))) AS DOUBLE) / COUNT(*) AS cv
-        FROM u{k} GROUP BY cell, i)
-      GROUP BY cell
-    )""")
+               ORDER BY ROUND({cos}, 6) DESC, c.c_id) AS rn
+      FROM e CROSS JOIN c{i} c"""
+
+    def mean(i: int) -> str:
+        members = f"(SELECT c_id, emb FROM a{i} WHERE rn = 1)"
+        return centroid_means_duck(members, ["c_id"], "emb")
+
+    rounds = "".join(
+        f"\n    a{i} AS ({assign(i)}),\n    c{i + 1} AS ({mean(i)})," for i in range(iters)
+    )
     return f"""
-    WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-               FROM embeddings),
-    c0 AS (SELECT vec_id AS c_id, emb AS c_emb FROM e WHERE vec_id < 16),
-    {",".join(blocks)},
-    af AS (
-      SELECT e.vec_id, c.c_id,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-               ORDER BY ROUND({cos_ac}, 6) DESC, c.c_id) AS rn
-      FROM e CROSS JOIN c{iters} c
-    ),
+    WITH e AS ({VECTORS_DUCK}),
+    c0 AS (SELECT vec_id AS c_id, emb AS c_emb FROM e WHERE vec_id < 16),{rounds}
+    af AS ({assign(iters)}),
     cells  AS (SELECT vec_id, c_id AS cell FROM af WHERE rn = 1),
     probes AS (SELECT vec_id AS q_id, c_id AS cell FROM af
                WHERE vec_id < 8 AND rn <= 2),
@@ -2093,75 +1851,39 @@ def _ivf_train_oracle(iters: int) -> str:
       FROM probes p JOIN cells m ON m.cell = p.cell
       WHERE m.vec_id <> p.q_id
     ),
-    sims AS (
-      SELECT cand.q_id, cand.neighbor_id,
-             ROUND({_COS_DUCK.format(a="qe.emb", b="ne.emb")}, 6) AS sim
-      FROM cand
-      JOIN e qe ON qe.vec_id = cand.q_id
-      JOIN e ne ON ne.vec_id = cand.neighbor_id
-    )
-    SELECT q_id, neighbor_id, sim FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                                   ORDER BY sim DESC, neighbor_id) AS rn
-      FROM sims
-    ) WHERE rn <= 5
+    {_RANK_CANDIDATES_DUCK.format(k=5)}
     """
 
 
-@register("ann_ivf_trained", oracle=_ivf_train_oracle(_IVF_TRAIN_ITERS))
-def ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF with TRAINED centroids: start from the deterministic seed
-    codebook (16 lowest vec_ids) and run _IVF_TRAIN_ITERS Lloyd
-    iterations — assign every vector to its max-cosine centroid, then
-    recompute each centroid as the member mean — before the same
-    nprobe=2 cell-pruned search as ann_ivf_coarse. The 100 TB shape per
-    iteration: assignment is a map-side broadcast of a constant-size
-    codebook; the mean is one (cell, dim) aggregation (map-side
-    partial); each round is materialized so the lineage stays flat
-    (same discipline as operators/components.py). Means go through
-    DECIMAL(38,20) so centroids are bit-identical across engines;
-    empty cells drop out of the codebook naturally. Training
-    monotonically improves the quantization objective (mean assignment
-    cosine 0.245 -> 0.324 after 2 iters at sf0.01; asserted against an
-    independent numpy Lloyd reference in tests/test_round3_ops.py).
-    Note the seeded codebook's recall@5 is query-biased upward (the
-    queries ARE seeds), so at fixed nprobe trained recall reads lower;
-    production tunes recall via nprobe while the trained codebook
-    balances cell sizes."""
-    from pyspark.sql import Window
+def _ivf_search(spark: SparkSession, sf_dir: str, iters: int) -> DataFrame:
+    """IVF cosine top-5: assign every vector to its nearest cell, then
+    rank each query's candidates from its 2 nearest cells (nprobe=2).
+    The codebook starts as the 16 lowest vec_ids and takes `iters`
+    Lloyd rounds (max-cosine assign, then `centroid_means`; an empty
+    cell drops out), each checkpointed so the lineage stays flat.
 
+    Assignment is a broadcast cross join against the constant-size
+    codebook and the probe an equi-join on cell id, so per-query work
+    follows cell occupancy, never O(n²). ann_ivf_trained: 3.94/decade
+    to 1000x (BASELINE.md "Three-decade sweep, part 3")."""
     t = load_tables(spark, sf_dir)
-    e = spread(t["embeddings"]).selectExpr(
-        "vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS emb"
-    )
-    e = materialize(e)
+    e = vectors(spread(t["embeddings"]))
+    if iters:
+        e = materialize(e)  # every round re-reads it
     cents = e.filter(F.col("vec_id") < 16).selectExpr("vec_id AS c_id", "emb AS c_emb")
-    cos_assign = _COS_SPARK.format(a="emb", b="c_emb")
-    w_assign = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), "c_id")
-    for _ in range(_IVF_TRAIN_ITERS):
-        members = (
-            e.crossJoin(F.broadcast(cents))
-            .selectExpr("vec_id", "emb", "c_id", f"ROUND({cos_assign}, 6) AS sim")
-            .withColumn("rn", F.row_number().over(w_assign))
-            .filter(F.col("rn") == 1)
-            .select(F.col("c_id").alias("cell"), F.posexplode("emb").alias("pos", "val"))
+    cos = COS_SPARK.format(a="emb", b="c_emb")
+    order = [F.col("sim").desc(), F.col("c_id")]
+
+    def scored(cents: DataFrame, *cols: str) -> DataFrame:
+        return e.crossJoin(F.broadcast(cents)).selectExpr(
+            *cols, "c_id", f"ROUND({cos}, 6) AS sim"
         )
-        dims = members.groupBy("cell", "pos").agg(
-            (
-                F.sum(F.col("val").cast("decimal(38,20)")).cast("double") / F.count("*")
-            ).alias("cv")
-        )
-        cents = materialize(
-            dims.groupBy("cell").agg(
-                F.expr("transform(array_sort(collect_list(struct(pos, cv))), s -> s.cv)").alias(
-                    "c_emb"
-                )
-            ).select(F.col("cell").alias("c_id"), "c_emb")
-        )
-    assign = (
-        e.crossJoin(F.broadcast(cents))
-        .selectExpr("vec_id", "c_id", f"ROUND({cos_assign}, 6) AS sim")
-        .withColumn("rn", F.row_number().over(w_assign))
+
+    for _ in range(iters):
+        members = top_k_per_group(scored(cents, "vec_id", "emb"), ["vec_id"], order, 1)
+        cents = materialize(centroid_means(members, ["c_id"], "emb"))
+    assign = scored(cents, "vec_id").withColumn(
+        "rn", F.row_number().over(Window.partitionBy("vec_id").orderBy(*order))
     )
     assign = materialize(assign.filter(F.col("rn") <= 2).select("vec_id", "c_id", "rn"))
     cells = assign.filter(F.col("rn") == 1).selectExpr("vec_id", "c_id AS cell")
@@ -2172,20 +1894,24 @@ def ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("q_id", F.col("vec_id").alias("neighbor_id"))
         .distinct()
     )
-    qe = e.filter(F.col("vec_id") < 8).selectExpr("vec_id AS q_id", "emb AS q_emb")
-    ne = e.selectExpr("vec_id AS neighbor_id", "emb AS n_emb")
-    cos = _COS_SPARK.format(a="q_emb", b="n_emb")
-    sims = (
-        cand.join(F.broadcast(qe), "q_id")
-        .join(ne, "neighbor_id")
-        .selectExpr("q_id", "neighbor_id", f"ROUND({cos}, 6) AS sim")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), "neighbor_id")
-    return (
-        sims.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("q_id", "neighbor_id", "sim")
-    )
+    return _rank_candidates(e, cand, 5)
+
+
+@register("ann_ivf_coarse", oracle=_ivf_oracle(0))
+def ann_ivf_coarse(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF search over the seeded codebook (`_ivf_search`, no Lloyd
+    round). Recall vs the exact baseline: tests/test_llm_ops.py."""
+    return _ivf_search(spark, sf_dir, 0)
+
+
+@register("ann_ivf_trained", oracle=_ivf_oracle(_IVF_TRAIN_ITERS))
+def ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF search after _IVF_TRAIN_ITERS Lloyd rounds. Training raises
+    the mean assignment cosine 0.245 -> 0.324 at sf0.01, checked
+    against a numpy Lloyd in tests/test_round3_ops.py. The seeded
+    codebook's recall is biased upward (the queries are seeds), so at
+    a fixed nprobe the trained recall reads lower."""
+    return _ivf_search(spark, sf_dir, _IVF_TRAIN_ITERS)
 
 
 # ------------------------------------------------------------ multimodal
@@ -2652,22 +2378,10 @@ def multimodal_binary_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN quality evaluation as a first-class operator: recall@3 of
-    the sign-LSH retrieval against the exact brute-force ground truth,
-    per query — the standard way an embedding-store migration is
-    signed off at scale (run the eval on a sample, compare against the
-    target recall before switching the serving path). Both retrieval
-    pipelines are deterministic and SQL-expressible, so even the
-    evaluation METRIC is value-checked cross-engine."""
-    from pyspark.sql import Window
-
-    truth = ann_cosine_topk(spark, sf_dir)
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), "neighbor_id")
-    truth3 = (
-        truth.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("q_id", "neighbor_id")
-    )
+    """Recall@3 per query of ann_lsh_bucketed against the exact
+    ann_cosine_topk. Both retrievals are deterministic SQL, so the
+    metric itself is oracle-checked."""
+    truth3 = _top_sims(ann_cosine_topk(spark, sf_dir), 3).select("q_id", "neighbor_id")
     lsh = ann_lsh_bucketed(spark, sf_dir).select("q_id", "neighbor_id")
     hits = (
         truth3.join(lsh, ["q_id", "neighbor_id"], "left_semi")

@@ -33,13 +33,20 @@ from mapreducecore_spark.llm.minhash import (
     shingles,
     shingles_duck,
 )
+from mapreducecore_spark.llm.similarity import (
+    COS_DUCK,
+    COS_SPARK,
+    EMB_DUCK,
+    EMB_SPARK,
+    IP_DUCK,
+    IP_SPARK,
+    VECTORS_DUCK,
+    l2sq,
+    vectors,
+)
+from mapreducecore_spark.operators.topk import top_k_per_group
 from mapreducecore_spark.queries import register
 from mapreducecore_spark.queries._util import expanding, materialize, spread
-
-# Sequential-fold inner product — identical expression tree on both
-# engines (same pattern as llm.similarity.COS_SPARK / COS_DUCK).
-_IP_SPARK = "aggregate(zip_with({a}, {b}, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-_IP_DUCK = "list_inner_product({a}, {b})"
 
 
 # ------------------------------------------------- decontamination
@@ -671,24 +678,16 @@ def rolling_7d_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------- seeded k-means assignment
 
-_KM_DIST = "ROUND({aa} - 2 * {ab} + {bb}, 5)"
-
-
 @register(
     "kmeans_assign_seeded",
     oracle=f"""
-    WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-               FROM embeddings),
+    WITH e AS ({VECTORS_DUCK}),
     c AS (SELECT vec_id AS centroid_id, emb AS c_emb,
-                 {_IP_DUCK.format(a="emb", b="emb")} AS c_norm2
+                 {IP_DUCK.format(a="emb", b="emb")} AS c_norm2
           FROM e WHERE vec_id < 8),
     d AS (
       SELECT e.vec_id, c.centroid_id,
-             {_KM_DIST.format(
-                 aa=_IP_DUCK.format(a="e.emb", b="e.emb"),
-                 ab=_IP_DUCK.format(a="e.emb", b="c.c_emb"),
-                 bb="c.c_norm2",
-             )} AS dist2
+             {l2sq(IP_DUCK, "e.emb", "c.c_emb", "c.c_norm2")} AS dist2
       FROM e CROSS JOIN c
     )
     SELECT vec_id, centroid_id, dist2 FROM (
@@ -700,37 +699,21 @@ _KM_DIST = "ROUND({aa} - 2 * {ab} + {bb}, 5)"
 )
 def kmeans_assign_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One k-means assignment step against K=8 seed centroids (the
-    lowest vec_ids — deterministic stand-in for sampled seeds).
-    Centroids broadcast; distance is the codegen'd fold
-    |a|² - 2a·b + |b|² with |b|² precomputed per centroid, so each row
-    costs one dot product per centroid and the big side never shuffles.
-    Iterating = alternate this with embedding_centroid_per_label's
-    aggregate."""
-    from pyspark.sql import Window
-
+    lowest vec_ids). Centroids broadcast with their squared norms
+    precomputed, so each row costs one dot product per centroid and
+    the big side never shuffles for the distance; `l2sq` rounds so
+    ties agree with the oracle."""
     t = load_tables(spark, sf_dir)
-    e = spread(t["embeddings"]).selectExpr(
-        "vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS emb"
-    )
+    e = vectors(spread(t["embeddings"]))
     c = e.filter(F.col("vec_id") < 8).selectExpr(
         "vec_id AS centroid_id",
         "emb AS c_emb",
-        f"{_IP_SPARK.format(a='emb', b='emb')} AS c_norm2",
-    )
-    dist2 = _KM_DIST.format(
-        aa=_IP_SPARK.format(a="emb", b="emb"),
-        ab=_IP_SPARK.format(a="emb", b="c_emb"),
-        bb="c_norm2",
+        f"{IP_SPARK.format(a='emb', b='emb')} AS c_norm2",
     )
     d = e.crossJoin(F.broadcast(c)).selectExpr(
-        "vec_id", "centroid_id", f"{dist2} AS dist2"
+        "vec_id", "centroid_id", f"{l2sq(IP_SPARK, 'emb', 'c_emb', 'c_norm2')} AS dist2"
     )
-    w = Window.partitionBy("vec_id").orderBy("dist2", "centroid_id")
-    return (
-        d.withColumn("rn", F.row_number().over(w))
-        .filter("rn = 1")
-        .select("vec_id", "centroid_id", "dist2")
-    )
+    return top_k_per_group(d, ["vec_id"], [F.col("dist2"), F.col("centroid_id")], 1)
 
 
 # ------------------------------------------------------- TF-IDF
@@ -1031,6 +1014,7 @@ def pack_sequences_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------- end-to-end corpus curation
 
 from mapreducecore_spark.queries.llm import _SW_SQL as _SW  # noqa: E402
+from mapreducecore_spark.queries.llm import _TOP_SIMS_DUCK, _top_sims  # noqa: E402
 
 _CURATION_ORACLE = f"""
     WITH q AS (
@@ -1104,10 +1088,10 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embedding_quantize_int8",
-    oracle="""
+    oracle=f"""
     WITH m AS (
       SELECT vec_id, label,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb,
+             {EMB_DUCK} AS emb,
              list_max(list_transform(embedding,
                                      x -> abs(CAST(x AS DOUBLE)))) AS maxabs
       FROM embeddings
@@ -1133,7 +1117,7 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spread(t["embeddings"]).selectExpr(
         "vec_id",
         "label",
-        "transform(embedding, x -> CAST(x AS DOUBLE)) AS emb",
+        f"{EMB_SPARK} AS emb",
         "array_max(transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS maxabs",
     ).selectExpr(
         "vec_id",
@@ -1147,23 +1131,14 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DEQ_COS_SPARK = (
-    # nullif guard: zero-norm (e.g. all-zero quantized) vectors yield
-    # NULL like DuckDB division, instead of an ANSI divide-by-zero.
-    "aggregate(zip_with({a}, {b}, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    " / nullif(sqrt(aggregate(transform({a}, x -> x * x), CAST(0 AS DOUBLE), (acc, v) -> acc + v))"
-    " * sqrt(aggregate(transform({b}, x -> x * x), CAST(0 AS DOUBLE), (acc, v) -> acc + v)), CAST(0 AS DOUBLE))"
-)
-
-
 @register(
     "ann_cosine_quantized",
-    oracle="""
+    oracle=f"""
     WITH m AS (
       SELECT vec_id,
              list_max(list_transform(embedding,
                                      x -> abs(CAST(x AS DOUBLE)))) AS maxabs,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
+             {EMB_DUCK} AS emb
       FROM embeddings
     ), q8 AS (
       SELECT vec_id,
@@ -1173,31 +1148,22 @@ _DEQ_COS_SPARK = (
     ), qs AS (SELECT vec_id AS q_id, deq AS q_deq FROM q8 WHERE vec_id < 8),
     sims AS (
       SELECT qs.q_id, q8.vec_id AS neighbor_id,
-             ROUND(list_inner_product(qs.q_deq, q8.deq)
-                   / (sqrt(list_inner_product(qs.q_deq, qs.q_deq))
-                      * sqrt(list_inner_product(q8.deq, q8.deq))), 6) AS sim
+             ROUND({COS_DUCK.format(a="qs.q_deq", b="q8.deq")}, 6) AS sim
       FROM qs CROSS JOIN q8 WHERE q8.vec_id <> qs.q_id
     )
-    SELECT q_id, neighbor_id, sim FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                                   ORDER BY sim DESC, neighbor_id) AS rn
-      FROM sims
-    ) WHERE rn <= 5
+    {_TOP_SIMS_DUCK.format(k=5)}
     """,
 )
 def ann_cosine_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cosine top-k over int8-quantized vectors (dequantized on the
-    fly): the accuracy/bandwidth trade a 100 TB ANN index makes — 4x
-    less data shuffled/broadcast for ~identical neighbors (recall vs
-    the exact baseline pinned in tests). Same broadcast cross-join
-    shape as ann_cosine_topk."""
-    from pyspark.sql import Window
-
+    """Cosine top-5 over int8-quantized vectors, dequantized on the
+    fly: 4x less vector data for near-identical neighbors (recall vs
+    ann_cosine_topk pinned in tests/test_pipeline_ops.py). Same
+    broadcast cross-join shape as ann_cosine_topk."""
     t = load_tables(spark, sf_dir)
     q8 = spread(t["embeddings"]).selectExpr(
         "vec_id",
         "array_max(transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS maxabs",
-        "transform(embedding, x -> CAST(x AS DOUBLE)) AS emb",
+        f"{EMB_SPARK} AS emb",
     ).selectExpr(
         "vec_id",
         "transform(emb, x -> CAST(CAST(coalesce(x * 127 / nullif(maxabs,"
@@ -1205,18 +1171,13 @@ def ann_cosine_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
         " * (maxabs / 127)) AS deq",
     )
     q = q8.filter(F.col("vec_id") < 8).selectExpr("vec_id AS q_id", "deq AS q_deq")
-    cos = _DEQ_COS_SPARK.format(a="q_deq", b="deq")
+    cos = COS_SPARK.format(a="q_deq", b="deq")
     sims = (
         q8.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("q_id"))
         .selectExpr("q_id", "vec_id AS neighbor_id", f"ROUND({cos}, 6) AS sim")
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), "neighbor_id")
-    return (
-        sims.withColumn("rn", F.row_number().over(w))
-        .filter("rn <= 5")
-        .select("q_id", "neighbor_id", "sim")
-    )
+    return _top_sims(sims, 5)
 
 
 # ------------------------- near-dup decontamination + mixture sampling

@@ -14,6 +14,7 @@ real deployment writes parquet/Kafka via the same writeStream.
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -114,32 +115,17 @@ def _drain(
     in_bytes: int | None = None,
 ) -> DataFrame:
     """Run the streaming frame to completion (availableNow) into a
-    memory sink; return the sink contents as a batch DataFrame.
+    memory sink and return the sink as a batch DataFrame. The
+    checkpoint is scratch and is freed when the drain returns.
 
-    The memory sink accumulates on the driver — test plumbing only. The
-    registry entries keep output cardinality small (windowed/grouped
-    aggregates, thousands of rows); a production drain writes
-    parquet/Kafka through the same writeStream instead.
-
-    Stateful streaming pays per-partition state-store overhead every
-    micro-batch (a stream-stream join provisions FOUR stores per
-    shuffle partition), and AQE cannot coalesce those partitions, so
-    the width is set explicitly here rather than inherited from the
-    batch-tuned session. The width is SIZE-ADAPTIVE (round 12, guide
-    §2 "make partitioning scale-adaptive"): callers pass their stream
-    input bytes and _stream_width maps ~1 MiB -> 1 partition within
-    [4, defaultParallelism]. Calibrated by interleaved same-JVM A/Bs:
-    at sf0.1 (2 MB events) 4 beats 8 on every stateful drain
-    (interval join 2.6->2.3 s, incremental wm 3.7->3.2 s — per-batch
-    store provisioning dominates small state), while at sf1 (2x10 MB
-    events) the interval join NEEDS width (19.7 s at 4, 10.7 at 8,
-    7.2 at 16/32) and the small-state wm still prefers 4 (4.9 vs 6.4
-    at 32) — a fixed width is wrong in one direction or the other.
-    The conf is captured when the query starts and pinned into
-    its checkpoint, so the restore below cannot affect a running
-    stream.
-    """
+    State width follows the input size (`_stream_width`): per-batch
+    state-store provisioning dominates small state, while the sf1
+    interval join needs width — 19.7 s at 4 partitions, 7.2 s at 16
+    (BASELINE.md "Streaming state width is now size-adaptive"). The
+    conf is pinned into the query at start, so restoring it afterwards
+    cannot affect the running stream."""
     name = f"live_{uuid.uuid4().hex[:12]}"
+    ckpt = _stream_scratch("mrc_ckpt_")
     width = str(_stream_width(in_bytes, spark.sparkContext.defaultParallelism))
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", width)
@@ -148,11 +134,11 @@ def _drain(
             out.writeStream.format("memory")
             .queryName(name)
             .outputMode(mode)
-            # Explicit tmpfs-backed checkpoint (round 12): without it
+            # Explicit tmpfs-backed checkpoint: without it
             # Spark creates the temp checkpoint under java.io.tmpdir on
             # the system disk and every micro-batch's offset/commit WAL
             # fsyncs plus state-store delta writes pay disk latency.
-            .option("checkpointLocation", _stream_scratch("mrc_ckpt_") + "/ckpt")
+            .option("checkpointLocation", ckpt + "/ckpt")
             .trigger(availableNow=True)
             .start()
         )
@@ -167,6 +153,9 @@ def _drain(
             )
     finally:
         q.stop()
+        # The result lives in the memory sink; the checkpoint is
+        # never resumed, so free it now rather than at process exit.
+        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 
 

@@ -95,6 +95,24 @@ def test_one_core_two_sinks(spark, mr_corpus, tmp_path):
     assert seen == oracle
 
 
+def test_undecodable_bytes_reach_the_mapper_as_replacement_chars(spark, tmp_path):
+    """The job path decodes its text input as UTF-8: the job completes
+    and each undecodable byte becomes one U+FFFD inside its token."""
+    src = tmp_path / "bad.txt"
+    src.write_bytes(b"alpha be\xfft gamma\nalpha \xc3( delta\n")
+    register_tasks("wordcount_bad_bytes", wordcount_mapper, wordcount_reducer)
+    out_dir = str(tmp_path / "job")
+    run_job(spark, [str(src)], "wordcount_bad_bytes", out_dir, n_outputs=2)
+    got: dict[str, int] = {}
+    for name in os.listdir(out_dir):
+        if name.startswith("part-"):
+            with open(os.path.join(out_dir, name), encoding="utf-8") as f:
+                for ln in f.read().splitlines():
+                    k, v = ln.split(" ", 1)
+                    got[k] = int(v)
+    assert got == {"alpha": 2, "be\ufffdt": 1, "gamma": 1, "\ufffd(": 1, "delta": 1}
+
+
 def test_null_lines_never_reach_the_mapper(spark):
     def strict_mapper(line):
         if not isinstance(line, str):

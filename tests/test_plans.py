@@ -400,7 +400,8 @@ def test_semdedup_broadcasts_centroids_only(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from mapreducecore_spark.catalog import load_tables
-    from mapreducecore_spark.queries.curation import _D2_SPARK, _SEM_MIN_K
+    from mapreducecore_spark.llm.similarity import IP_SPARK, l2sq
+    from mapreducecore_spark.queries.curation import _SEM_MIN_K
 
     t = load_tables(spark, sf_dir)
     e = t["embeddings"].selectExpr(
@@ -412,7 +413,7 @@ def test_semdedup_broadcasts_centroids_only(spark, sf_dir):
         "aggregate(zip_with(emb, emb, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, v) -> acc + v) AS c_norm2",
     )
     scored = e.crossJoin(F.broadcast(c)).selectExpr(
-        "vec_id", "centroid_id", f"{_D2_SPARK} AS d2"
+        "vec_id", "centroid_id", f"{l2sq(IP_SPARK, 'emb', 'c_emb', 'c_norm2')} AS d2"
     )
     best = scored.groupBy("vec_id").agg(F.min("d2").alias("d2"))
     aplan = plan_of(best)

@@ -226,13 +226,12 @@ def test_semdedup_training_tightens_clusters(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from mapreducecore_spark.catalog import load_tables
-    from mapreducecore_spark.llm.similarity import add_lsh_codes
+    from mapreducecore_spark.llm.similarity import IP_SPARK, add_lsh_codes, centroid_means, l2sq
     from mapreducecore_spark.queries.curation import (
         _SEM_DOCS_PER_CLUSTER,
         _SEM_MIN_K,
         _SEM_TRAIN_ITERS,
         _sem_assign,
-        _sem_mean_update,
     )
     from mapreducecore_spark.queries._util import materialize
 
@@ -266,13 +265,11 @@ def test_semdedup_training_tightens_clusters(spark, sf_dir):
             .join(cand.select("vec_id").distinct(), "vec_id", "left_anti")
             .crossJoin(F.broadcast(cents.select("centroid_id")))
         )
-        from mapreducecore_spark.queries.curation import _D2_SPARK
-
         scored = (
             cand.unionByName(fallback)
             .join(e.select("vec_id", "emb"), "vec_id")
             .join(F.broadcast(cents), "centroid_id")
-            .selectExpr("vec_id", f"{_D2_SPARK} AS d2")
+            .selectExpr("vec_id", f"{l2sq(IP_SPARK, 'emb', 'c_emb', 'c_norm2')} AS d2")
         )
         best = scored.groupBy("vec_id").agg(F.min("d2").alias("d2"))
         return best.agg(F.avg("d2")).collect()[0][0]
@@ -280,6 +277,11 @@ def test_semdedup_training_tightens_clusters(spark, sf_dir):
     seeded = mean_best_d2(c)
     trained_c = c
     for _ in range(_SEM_TRAIN_ITERS):
-        trained_c = _sem_mean_update(_sem_assign(e, vcodes, trained_c), e)
+        members = _sem_assign(e, vcodes, trained_c).join(e.select("vec_id", "emb"), "vec_id")
+        trained_c = materialize(
+            centroid_means(members, ["centroid_id"], "emb").selectExpr(
+                "centroid_id", "c_emb", f"{IP_SPARK.format(a='c_emb', b='c_emb')} AS c_norm2"
+            )
+        )
     trained = mean_best_d2(trained_c)
     assert trained < seeded - 1e-6, (seeded, trained)

@@ -241,26 +241,20 @@ def test_ann_pq_trained_reduces_quantization_error(spark, sf_dir):
     sf0.01). Recall on the tiny 8-query probe is NOT asserted — 40
     samples is noise; MSE is the trained codebook's actual
     objective."""
-    from mapreducecore_spark.queries.llm import (
-        _pq_codebook_seeded,
-        _pq_encode,
-        _pq_mean_update,
-        _pq_subrows,
-        _PQ_D2_EXPR,
-    )
+    from mapreducecore_spark.queries.llm import _PQ_SUB_D2, _pq_codebook, _pq_subrows
 
     subrows = _pq_subrows(spark, sf_dir).cache()
-    cb0 = _pq_codebook_seeded(subrows)
+    cb0 = _pq_codebook(subrows, 0)
 
     def mse(cb):
         scored = subrows.join(F.broadcast(cb), "s").selectExpr(
-            "vec_id", "s", f"{_PQ_D2_EXPR} AS d2"
+            "vec_id", "s", f"{_PQ_SUB_D2} AS d2"
         )
         best = scored.groupBy("vec_id", "s").agg(F.min("d2").alias("d2"))
         return best.agg(F.avg("d2")).collect()[0][0]
 
     m0 = mse(cb0)
-    cb1 = _pq_mean_update(subrows, _pq_encode(subrows, cb0))
+    cb1 = _pq_codebook(subrows, 1)
     m1 = mse(cb1)
     subrows.unpersist()
     assert m1 <= m0, (m0, m1)

@@ -476,3 +476,15 @@ def test_versioned_merge_replay_idempotent(spark, sf_dir, tmp_path):
     merge_batch_into(ev, 0, d2)
     single = sorted(tuple(r) for r in latest_merge_snapshot(spark, d2).collect())
     assert single == first
+
+
+def test_drain_frees_its_checkpoint(spark, sf_dir, tmp_path, monkeypatch):
+    """A live drain removes its checkpoint dir when it returns; the
+    rows come from the memory sink, which outlives it."""
+    from mapreducecore_spark.queries import REGISTRY, _load_all
+
+    _load_all()
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SCRATCH", str(tmp_path))
+    rows = REGISTRY["stream_live_tumbling_counts"].fn(spark, sf_dir).collect()
+    assert rows
+    assert not list(tmp_path.glob("mrc_ckpt_*"))

@@ -50,6 +50,15 @@ SHOWN = [
     "domain_cap_documents",
     "minhash_estimate_accuracy",
     "quality_perplexity_bigram",
+    # The rest of the vector family (llm/similarity.py).
+    "ann_cosine_topk",
+    "ann_lsh_bucketed",
+    "ann_pq_topk",
+    "ann_pq_trained",
+    "ann_pq_recall",
+    "ann_recall_eval",
+    "embedding_neardup_pairs",
+    "ann_cosine_quantized",
 ]
 
 

@@ -15,9 +15,10 @@ with the full protocol and context.
 
 from __future__ import annotations
 
+import os
 import re
 
-BASELINE = "/root/repo/BASELINE.md"
+BASELINE = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BASELINE.md")
 BEGIN = "<!-- CURRENT-STATE:BEGIN (generated by tools/gen_baseline_state.py) -->"
 END = "<!-- CURRENT-STATE:END -->"
 

@@ -7,7 +7,7 @@ proportional (10 identical corpora would make every doc a 10-way exact
 dup and distort the near-dup workload); the near-dup structure WITHIN
 each copy is preserved.
 
-Output: /root/repo/_scaledata/sf1/<table>.parquet (single file per
+Output: <repo>/_scaledata/sf1/<table>.parquet (single file per
 table; the engine splits parquet by row group / maxPartitionBytes, and
 spread() widens the narrow scans the same way it would real multi-file
 input). Gitignored — regenerate with: python tools/gen_scaledata.py
@@ -34,7 +34,8 @@ import sys
 import duckdb
 
 SRC = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-DST = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/_scaledata/sf1"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+DST = sys.argv[2] if len(sys.argv) > 2 else os.path.join(ROOT, "_scaledata", "sf1")
 COPIES = int(os.environ.get("SCALE_COPIES", "10"))
 MODE = os.environ.get("SCALE_MODE", "replicate")  # replicate | clusters
 # SCALE_TABLES=documents,embeddings scales ONLY those fact tables and
