@@ -12,7 +12,7 @@ Reproduces the semantics of the reference's user-facing API
 - output: ``n_outputs`` partitions, each key-sorted (mr_tasks.h:109-121,
   description.md:56).
 
-One pipeline implements it: RDD ``flatMap`` ->
+One pipeline implements it: RDD ``mapPartitions`` ->
 ``repartitionAndSortWithinPartitions`` -> a streamed sorted-run reduce.
 Two sinks sit on it: ``run_job`` (and ``run(config)``) writes the
 reference's "key value" text files, ``run_mapreduce`` returns the rows
@@ -32,13 +32,20 @@ Differences by design (scale fixes, not semantic changes):
   worker.h:134-137) is gone;
 - input is decoded as UTF-8 by Spark's text source: the reference
   passes raw bytes to the mapper, here each undecodable byte reaches
-  it as U+FFFD.
+  it as U+FFFD;
+- each map and reduce task ends by dropping the worker's zip finders,
+  because PySpark makes every task re-read each one's archive directory
+  (``_drop_zip_finders``); the reference's workers have no such cost.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable, Iterator
+import os
+import sys
+import zipimport
+from collections.abc import Callable, Hashable, Iterable, Iterator
 
+from pyspark.errors import PySparkRuntimeError
 from pyspark.rdd import RDD, portable_hash
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
@@ -74,6 +81,49 @@ PARTITIONED_KV_SCHEMA = StructType(
 )
 
 
+def _drop_zip_finders() -> None:
+    """Delete every ``zipimporter`` from ``sys.path_importer_cache``.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` before every
+    task, and on CPython 3.11 that makes each cached zipimporter re-read
+    its whole archive directory: 16 of them in a reused worker, two on
+    the spark-core jar (5,359 entries) and twelve on pyspark.zip (1,328).
+    Dropping them is safe: imported modules keep their own loaders, a
+    later import rebuilds its finder from zipimport's in-memory directory
+    cache without reading the archive, and archives on ``sys.path`` do
+    not change in a worker's life, because Spark refuses to re-register a
+    file name. Measured on a 4-vCPU VM, a task's
+    fixed cost (``PythonRunner`` total - finish) fell from ~240 ms to
+    ~20 ms (BASELINE.md "Python tasks drop their zip finders")."""
+    cache = sys.path_importer_cache
+    for path in [p for p, f in cache.items() if isinstance(f, zipimport.zipimporter)]:
+        del cache[path]
+
+
+def _route(key: Hashable) -> int:
+    """``portable_hash`` without its per-key environment lookup, which
+    ``_map_partition`` does once per task instead: the two are equal on
+    every key, because ``portable_hash`` of a ``str`` is ``hash``."""
+    return hash(key) if type(key) is str else portable_hash(key)
+
+
+def _map_partition(mapper: MapperFn):
+    """Apply the mapper to each non-null line of a partition, after the
+    hash-seed check that ``portable_hash`` would make once per key."""
+
+    def run(rows: Iterator) -> Iterator[tuple[str, str]]:
+        if "PYTHONHASHSEED" not in os.environ:
+            raise PySparkRuntimeError(errorClass="PYTHON_HASH_SEED_NOT_SET", messageParameters={})
+        try:
+            for row in rows:
+                if row[0] is not None:
+                    yield from mapper(row[0])
+        finally:
+            _drop_zip_finders()
+
+    return run
+
+
 def _grouped_reduce(reducer: ReducerFn):
     """Stream key-runs off a sorted partition iterator (bounded memory:
     only one key's values are resident, vs worker.h:127's whole-partition
@@ -82,15 +132,18 @@ def _grouped_reduce(reducer: ReducerFn):
     def run(it: Iterator[tuple[str, str]]) -> Iterator[tuple[str, str]]:
         cur_key: str | None = None
         vals: list[str] = []
-        for k, v in it:
-            if k != cur_key:
-                if cur_key is not None:
-                    yield from reducer(cur_key, vals)
-                cur_key, vals = k, [v]
-            else:
-                vals.append(v)
-        if cur_key is not None:
-            yield from reducer(cur_key, vals)
+        try:
+            for k, v in it:
+                if k != cur_key:
+                    if cur_key is not None:
+                        yield from reducer(cur_key, vals)
+                    cur_key, vals = k, [v]
+                else:
+                    vals.append(v)
+            if cur_key is not None:
+                yield from reducer(cur_key, vals)
+        finally:
+            _drop_zip_finders()
 
     return run
 
@@ -125,9 +178,9 @@ def _map_shuffle_reduce(
     Output partition ``i`` holds the reducer's output for exactly the
     keys routed to ``i`` (``portable_hash`` unless ``partition_fn`` is
     given), in ascending key order. Null lines never reach the mapper."""
-    pairs = lines.rdd.flatMap(lambda row: () if row[0] is None else mapper(row[0]))
+    pairs = lines.rdd.mapPartitions(_map_partition(mapper))
     sorted_parts = pairs.repartitionAndSortWithinPartitions(
-        numPartitions=n_outputs, partitionFunc=partition_fn or portable_hash
+        numPartitions=n_outputs, partitionFunc=partition_fn or _route
     )
     return sorted_parts.mapPartitions(_grouped_reduce(reducer), preservesPartitioning=True)
 

@@ -55,7 +55,7 @@ _MR_ORACLE = f"""
 def mr_wordcount_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same workload through the map/reduce contract layer
     (mapreduce.run_mapreduce, the pipeline run_job writes as text):
-    flatMap -> repartitionAndSortWithinPartitions -> streamed sorted
+    mapPartitions -> repartitionAndSortWithinPartitions -> streamed sorted
     reduce. Exercises the (str,str) API of mr_task_factory.h:14-43 end
     to end."""
     t = load_tables(spark, sf_dir)

@@ -49,7 +49,7 @@ def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _fix_event_ts(raw)
 
 
-def _stream_scratch(prefix: str) -> str:
+def _stream_scratch(prefix: str, need_bytes: int = 0) -> str:
     """Per-invocation scratch dir for streaming checkpoints/re-laid
     inputs, on the fastest LOCAL filesystem (round 12, guide §1.2/§7).
 
@@ -62,9 +62,10 @@ def _stream_scratch(prefix: str) -> str:
     spinning/virtual disk. A tmpfs mount (/dev/shm) makes them memory
     writes. Production streams that must survive a restart point their
     checkpoint at durable storage INSTEAD — parameterised via
-    SPARK_GRAFT_STREAM_SCRATCH (set it to a disk path to opt out, e.g.
-    when /dev/shm is too small for a large re-laid input); unset, the
-    default is /dev/shm when writable, else the system tempdir.
+    SPARK_GRAFT_STREAM_SCRATCH (set it to a disk path to opt out);
+    unset, the default is /dev/shm when it is writable and has
+    ``need_bytes`` free (callers pass the size of the input they
+    re-lay), else the system tempdir.
     Cleanup is registered at process exit like the sink tempdirs."""
     import atexit
     import shutil
@@ -72,7 +73,8 @@ def _stream_scratch(prefix: str) -> str:
 
     base = os.environ.get("SPARK_GRAFT_STREAM_SCRATCH")
     if not base:
-        base = "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
+        shm = os.access("/dev/shm", os.W_OK) and shutil.disk_usage("/dev/shm").free >= need_bytes
+        base = "/dev/shm" if shm else None
     d = tempfile.mkdtemp(prefix=prefix, dir=base)
     atexit.register(shutil.rmtree, d, ignore_errors=True)
     return d
@@ -365,7 +367,7 @@ def stream_live_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame
     # The returned DataFrame lazily reads from `tmp`, so removal must
     # wait until the caller has consumed it — _stream_scratch registers
     # process-exit cleanup instead of leaking a dir per invocation.
-    tmp = _stream_scratch("mrc_fb_sink_")
+    tmp = _stream_scratch("mrc_fb_sink_", _src_bytes(sf_dir, "events.parquet"))
     q = (
         idempotent_parquet_sink(ev, f"{tmp}/out", f"{tmp}/ckpt")
         .trigger(availableNow=True)
@@ -574,7 +576,7 @@ def stream_live_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         versioned_merge_sink,
     )
 
-    tmp = _stream_scratch("mrc_cdc_merge_")
+    tmp = _stream_scratch("mrc_cdc_merge_", _src_bytes(sf_dir, "events.parquet"))
     # Re-lay the backlog as 4 files (ts already normalized by the
     # catalog) so the file source yields 4 real micro-batches.
     from mapreducecore_spark.catalog import load_tables
@@ -869,7 +871,7 @@ def stream_live_incremental_dedup_wm(spark: SparkSession, sf_dir: str) -> DataFr
     100 TB shape: state is one row per in-flight pair per retention
     window, independent of total stream length — the property the
     unbounded form cannot offer."""
-    tmp = _stream_scratch("mrc_incr_wm_")
+    tmp = _stream_scratch("mrc_incr_wm_", _src_bytes(sf_dir, "documents.parquet"))
     out = _incremental_dedup_stream(spark, sf_dir, f"{tmp}/in")
     # The stream side is the re-laid 10%-of-docs backlog written just
     # above (not the full documents file), so size the state width from

@@ -6,8 +6,15 @@ one pipeline behind both sinks, tokenizer properties."""
 from __future__ import annotations
 
 import collections
+import importlib
+import inspect
 import os
+import sys
+import uuid
+import zipfile
+import zipimport
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -17,7 +24,14 @@ from mapreducecore_spark.functions.text import (
     wordcount_mapper,
     wordcount_reducer,
 )
-from mapreducecore_spark.mapreduce import register_tasks, run_job, run_mapreduce
+from mapreducecore_spark.mapreduce import (
+    _grouped_reduce,
+    _map_partition,
+    _route,
+    register_tasks,
+    run_job,
+    run_mapreduce,
+)
 
 
 def test_wordcount_matches_reference_inputs(spark, mr_corpus):
@@ -122,6 +136,77 @@ def test_null_lines_never_reach_the_mapper(spark):
     lines = spark.createDataFrame([("a b",), (None,), ("b",)], "value string")
     out = run_mapreduce(spark, lines, strict_mapper, wordcount_reducer, n_outputs=2)
     assert sorted(map(tuple, out.collect())) == [("a", "1"), ("b", "2")]
+
+
+def _zip_finders() -> list[str]:
+    return [p for p, f in sys.path_importer_cache.items() if isinstance(f, zipimport.zipimporter)]
+
+
+@pytest.mark.parametrize("close_early", [False, True], ids=["to_the_end", "closed_early"])
+def test_partition_functions_leave_no_zip_finder(tmp_path, monkeypatch, close_early):
+    """Both partition functions drop every zip finder when they finish
+    or are closed, so the worker's next task has no archive to re-read;
+    modules imported from a zip before the drop keep working, and a
+    zip module first imported after it still imports."""
+    pkg = f"zpkg_{uuid.uuid4().hex[:8]}"
+    zpath = str(tmp_path / "lib.zip")
+    with zipfile.ZipFile(zpath, "w") as zf:
+        zf.writestr(f"{pkg}/__init__.py", "")
+        zf.writestr(f"{pkg}/before.py", "def value():\n    return 'before'\n")
+        zf.writestr(f"{pkg}/after.py", "VALUE = 'after'\n")
+    # The map side checks PYTHONHASHSEED, which Spark sets on its workers.
+    monkeypatch.setenv("PYTHONHASHSEED", os.environ.get("PYTHONHASHSEED", "0"))
+    monkeypatch.syspath_prepend(zpath)
+    try:
+        before = importlib.import_module(f"{pkg}.before")
+        runs = [
+            (_map_partition(wordcount_mapper), [("a b",), (None,), ("c",)]),
+            (_grouped_reduce(wordcount_reducer), [("a", "1"), ("a", "1"), ("b", "1")]),
+        ]
+        for fn, rows in runs:
+            sys.path_importer_cache[zpath] = zipimport.zipimporter(zpath)
+            assert zpath in _zip_finders()
+            gen = fn(iter(rows))
+            if close_early:
+                next(gen)
+                gen.close()
+            else:
+                assert list(gen)
+            assert _zip_finders() == []
+        assert before.value() == "before"
+        assert "def value" in before.__loader__.get_source(before.__name__)
+        assert importlib.import_module(f"{pkg}.after").VALUE == "after"
+    finally:
+        for name in [m for m in sys.modules if m == pkg or m.startswith(pkg + ".")]:
+            del sys.modules[name]
+
+
+def test_pyspark_still_invalidates_import_caches_per_task():
+    """Pins why ``_drop_zip_finders`` exists: PySpark's worker calls
+    ``importlib.invalidate_caches()`` before every task. When this
+    fails, PySpark has stopped per-task invalidation, so delete
+    ``_drop_zip_finders`` and this test."""
+    from pyspark import worker_util
+
+    assert "invalidate_caches" in inspect.getsource(worker_util.setup_spark_files)
+
+
+def test_route_matches_portable_hash(spark):
+    """The default route equals ``portable_hash`` on every key type, so
+    each key lands in the same partition. Checked inside a Spark task,
+    where PYTHONHASHSEED is set as on any worker."""
+    from pyspark.rdd import portable_hash
+
+    keys = ["", "alpha", "Grüße 日本", "\ufffd", "be\ufffdt", None, 42, ("a", None, 7)]
+
+    def both(_):
+        assert "PYTHONHASHSEED" in os.environ
+        return [(repr(k), _route(k), portable_hash(k)) for k in keys]
+
+    got = spark.sparkContext.parallelize([0], 1).flatMap(both).collect()
+    assert len(got) == len(keys)
+    for key, routed, portable in got:
+        assert routed == portable, key
 
 
 def test_reducer_sees_ascending_keys(spark):

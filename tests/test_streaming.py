@@ -5,6 +5,7 @@ dedup, stateful counts."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import uuid
 from datetime import datetime
@@ -488,3 +489,17 @@ def test_drain_frees_its_checkpoint(spark, sf_dir, tmp_path, monkeypatch):
     rows = REGISTRY["stream_live_tumbling_counts"].fn(spark, sf_dir).collect()
     assert rows
     assert not list(tmp_path.glob("mrc_ckpt_*"))
+
+
+def test_stream_scratch_falls_back_to_disk_when_shm_is_short():
+    """A re-laid input that does not fit the free space of /dev/shm gets
+    its scratch dir on disk (the system tempdir) instead."""
+    from mapreducecore_spark.queries.streaming_live import _stream_scratch
+
+    need = shutil.disk_usage("/dev/shm").free + 1
+    d = _stream_scratch("mrc_fit_test_", need)
+    try:
+        assert os.path.isdir(d)
+        assert not os.path.realpath(d).startswith("/dev/shm" + os.sep)
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
