@@ -25,7 +25,9 @@ from mapreducecore_spark.functions.text import (
     wordcount_reducer,
 )
 from mapreducecore_spark.mapreduce import (
+    _BLOCK_LINES,
     _grouped_reduce,
+    _lines,
     _map_partition,
     _route,
     register_tasks,
@@ -138,6 +140,74 @@ def test_null_lines_never_reach_the_mapper(spark):
     assert sorted(map(tuple, out.collect())) == [("a", "1"), ("b", "2")]
 
 
+def test_text_sink_is_byte_identical_across_blocks(spark, tmp_path):
+    """run_job writes its lines in newline-joined blocks; each part file
+    still equals, byte for byte, one "key value\\n" per partition_id == i
+    row of run_mapreduce, across several blocks in one partition, and an
+    empty partition gives an empty file."""
+    r, empty = 3, 2
+    words = [f"w{i:05d}" for i in range(4 * r * _BLOCK_LINES)]
+    routed = spark.sparkContext.parallelize([0], 1).flatMap(
+        lambda _: [(w, _route(w) % r) for w in words]
+    )
+    kept = [w for w, pid in routed.collect() if pid != empty]
+    src = tmp_path / "words.txt"
+    src.write_text("".join(f"{w} {w}\n" for w in kept), encoding="utf-8")
+    register_tasks("text_blocks_wordcount", wordcount_mapper, wordcount_reducer)
+    out_dir = str(tmp_path / "job")
+    run_job(spark, [str(src)], "text_blocks_wordcount", out_dir, n_outputs=r)
+
+    rows = run_mapreduce(
+        spark,
+        spark.read.text(str(src)),
+        wordcount_mapper,
+        wordcount_reducer,
+        n_outputs=r,
+        with_partition_id=True,
+    ).collect()
+    sizes = collections.Counter(row["partition_id"] for row in rows)
+    assert max(sizes.values()) > 2 * _BLOCK_LINES, sizes
+    assert sizes[empty] == 0
+    files = sorted(f for f in os.listdir(out_dir) if f.startswith("part-"))
+    assert len(files) == r
+    for i, name in enumerate(files):
+        with open(os.path.join(out_dir, name), "rb") as f:
+            got = f.read()
+        want = "".join(f"{row['key']} {row['value']}\n" for row in rows if row["partition_id"] == i)
+        assert got == want.encode("utf-8"), name
+    assert os.path.getsize(os.path.join(out_dir, files[empty])) == 0
+
+
+def test_lines_keeps_scan_splits_and_feeds_first_column(spark, mr_corpus):
+    """_lines has the scan's partitions at every split size, so the map
+    tasks are the same as the DataFrame's, and it feeds the mapper only
+    the first column, nulls skipped."""
+    paths, oracle = mr_corpus
+    assert oracle, "empty input proves nothing"
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key, None)
+    counts = []
+    try:
+        for split in ("4k", "64k", "128m"):
+            spark.conf.set(key, split)
+            df = spark.read.text(paths)
+            counts.append(df.rdd.getNumPartitions())
+            assert _lines(df).getNumPartitions() == counts[-1], split
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    assert len(set(counts)) == 3, counts
+
+    two = spark.createDataFrame(
+        [("a b", "x y"), (None, "z"), ("b", "x")], "text string, other string"
+    )
+    assert _lines(two).collect() == ["a b", None, "b"]
+    out = run_mapreduce(spark, two, wordcount_mapper, wordcount_reducer, n_outputs=2)
+    assert sorted(map(tuple, out.collect())) == [("a", "1"), ("b", "2")]
+
+
 def _zip_finders() -> list[str]:
     return [p for p, f in sys.path_importer_cache.items() if isinstance(f, zipimport.zipimporter)]
 
@@ -160,7 +230,7 @@ def test_partition_functions_leave_no_zip_finder(tmp_path, monkeypatch, close_ea
     try:
         before = importlib.import_module(f"{pkg}.before")
         runs = [
-            (_map_partition(wordcount_mapper), [("a b",), (None,), ("c",)]),
+            (_map_partition(wordcount_mapper), ["a b", None, "c"]),
             (_grouped_reduce(wordcount_reducer), [("a", "1"), ("a", "1"), ("b", "1")]),
         ]
         for fn, rows in runs:
