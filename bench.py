@@ -64,11 +64,8 @@ def _count_other_jvms() -> int:
 
 def main() -> None:
     global _concurrent_jvms
-    from mapreducecore_spark.queries import REGISTRY, _load_all
-    from mapreducecore_spark.session import get_spark
-
     from mapreducecore_spark import metrics
-
+    from mapreducecore_spark.queries import REGISTRY
     from mapreducecore_spark.streaming.tws import HAS_TWS_PROTOCOL as _tws_native
 
     # Wait for a solo slot instead of recording a noisy run (VERDICT
@@ -93,64 +90,10 @@ def main() -> None:
             "timings will carry their load",
             file=sys.stderr,
         )
-    _load_all()
-    spark = get_spark(
-        app_name="mapreducecore-bench",
-        master=f"local[{CPUS}]",
-        extra_conf={
-            # UI on so the stage REST API can report measured shuffle
-            # bytes for the headline queries (metrics.py).
-            "spark.ui.enabled": "true",
-            "spark.ui.port": str(metrics.DEFAULT_UI_PORT),
-            # Measurement stability (round 11): with the UI on, the
-            # default retention (1000 SQL executions with full plan
-            # graphs, 1000 jobs/stages, 100k tasks) accumulates across
-            # the 231-query sweep into driver old-gen, and the full GCs
-            # it forces land on whatever query is running — the r11
-            # before-baseline measured a 16.3 s q1 run (median 0.8 s)
-            # and 9 outlier re-times from exactly this. Bounding
-            # retention caps listener-state growth; the windows are
-            # far wider than any single query needs (metrics.py reads
-            # stages of the current query only). Queries compute
-            # identically — this changes what the DRIVER remembers
-            # about finished work, not any plan or result.
-            "spark.sql.ui.retainedExecutions": "30",
-            "spark.ui.retainedJobs": "200",
-            "spark.ui.retainedStages": "400",
-            "spark.ui.retainedTasks": "20000",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    app_id = spark.sparkContext.applicationId
-
-    def run_once(fn) -> float:
-        t0 = time.time()
-        fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        return time.time() - t0
-
-    shuffle_bytes: dict[str, dict[str, float]] = {}
-
-    def run_measured(name, fn) -> float:
-        """One timed run that also records shuffle volume (REST calls
-        happen outside the timed window)."""
-        try:
-            before_max, _ = metrics.snapshot(app_id)
-        except Exception:
-            before_max = None
-        dt = run_once(fn)
-        if before_max is not None:
-            try:
-                total, peak = metrics.delta(app_id, before_max)
-                shuffle_bytes[name] = {
-                    "shuffle_mb": round(total / 1e6, 2),
-                    "peak_stage_shuffle_mb": round(peak / 1e6, 2),
-                }
-            except Exception:
-                pass
-        return dt
+    spark = metrics.timing_session("mapreducecore-bench", f"local[{CPUS}]")
 
     # Warm the JVM + parquet footers once before timing anything.
-    run_once(REGISTRY["q1_pricing_summary"].fn)
+    metrics.timed(spark, "q1_pricing_summary", SF_DIR)
 
     # Warm the Python/Arrow worker pools too: the first use of each UDF
     # eval type forks workers and imports pandas/pyarrow (~3-5 s across
@@ -182,8 +125,8 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     headline_runs: dict[str, list[float]] = {}
+    shuffle_bytes: dict[str, dict[str, float]] = {}
     for name in sorted(REGISTRY):
-        fn = REGISTRY[name].fn
         try:
             if name in HEADLINE:
                 # median-of-5 (VERDICT r3 #8): the round-2/3 protocol's
@@ -193,14 +136,14 @@ def main() -> None:
                 # run list is published so the spread is auditable.
                 # Shuffle volume is measured on the first run (bytes
                 # are identical across runs).
-                runs = sorted(
-                    [run_measured(name, fn)] + [run_once(fn) for _ in range(4)]
-                )
-                headline_runs[name] = [round(r, 3) for r in runs]
-                t = runs[len(runs) // 2]
+                runs = [metrics.timed(spark, name, SF_DIR) for _ in range(5)]
+                shuffle_bytes[name] = {
+                    k: runs[0][k] for k in ("shuffle_mb", "peak_stage_shuffle_mb")
+                }
+                headline_runs[name] = sorted(r["sec"] for r in runs)
+                timings[name] = headline_runs[name][2]
             else:
-                t = run_once(fn)
-            timings[name] = round(t, 3)
+                timings[name] = metrics.timed(spark, name, SF_DIR)["sec"]
         except Exception as e:  # a broken query must not kill the bench
             print(f"bench: {name} failed: {e}", file=sys.stderr)
             timings[name] = -1.0
@@ -218,7 +161,7 @@ def main() -> None:
         for name, t in list(timings.items()):
             if t > cutoff:
                 try:
-                    rerun = round(run_once(REGISTRY[name].fn), 3)
+                    rerun = metrics.timed(spark, name, SF_DIR)["sec"]
                 except Exception:
                     continue
                 # Keep the record auditable: both values are published

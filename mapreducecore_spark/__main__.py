@@ -2,7 +2,7 @@
 (`mrdemo <config>`, test/main.cc): parse+validate the INI spec, build
 the session it asks for, run the registered job, report the output.
 
-    python -m mapreducecore_spark <config.ini> [--user-id wordcount]
+    python -m mapreducecore_spark <config.ini> [--master URL]
 
 The default registered task is the reference's tokenizer/summing
 wordcount pair (test/user_tasks.cc:12-33 semantics); users register

@@ -1,8 +1,8 @@
 """Scaling-slope spot bench (VERDICT r2 items 1/2/4): run the heavy-tail
-queries at sf0.1 and at a generated scaled copy (tools/gen_scaledata.py),
-print per-query times, the big/small ratio, and MEASURED shuffle volume
-(total + peak single stage) from Spark's stage REST API — so scale
-claims ride on shuffle bytes, not wall-time alone.
+queries at $SPARK_GRAFT_SF_DIR (sf0.1) and at a generated scaled copy
+(tools/gen_scaledata.py), print per-query times, the big/small ratio,
+and MEASURED shuffle volume (total + peak single stage, metrics.timed)
+— so scale claims ride on shuffle bytes, not wall-time alone.
 
 A ratio near the data factor is linear; super-linear ratios flag an
 operator whose plan won't survive a further scale-up. The scaled
@@ -22,15 +22,12 @@ import json
 import math
 import os
 import sys
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 from mapreducecore_spark import metrics  # noqa: E402
-
-SMALL = "/root/testdata/sf0.1"
-UI_PORT = metrics.DEFAULT_UI_PORT
+from mapreducecore_spark.catalog import DEFAULT_SF_DIR as SMALL  # noqa: E402
 
 HEAVY = [
     "dedup_minhash_lsh",
@@ -88,37 +85,16 @@ def main() -> None:
             i += 1
     names = names or HEAVY
 
-    from mapreducecore_spark.queries import REGISTRY, _load_all
-    from mapreducecore_spark.session import default_master, get_spark
-
-    _load_all()
-    spark = get_spark(
-        app_name="scale-bench",
-        master=default_master(),
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.port": str(UI_PORT)},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    app_id = spark.sparkContext.applicationId
-
-    def run(name: str, sf: str) -> tuple[float, int, int]:
-        """(seconds, total shuffle-write bytes, peak single-stage bytes)."""
-        fn = REGISTRY[name].fn
-        before_max, _ = metrics.snapshot(app_id)
-        t0 = time.time()
-        fn(spark, sf).write.format("noop").mode("overwrite").save()
-        dt = time.time() - t0
-        total, peak = metrics.delta(app_id, before_max)
-        return dt, total, peak
-
+    spark = metrics.timing_session("scale-bench")
     # Warm JVM + both catalogs + Python worker pools.
-    run("q1_pricing_summary", SMALL)
-    run("q1_pricing_summary", big)
+    for sf in (SMALL, big):
+        metrics.timed(spark, "q1_pricing_summary", sf)
 
     out = {}
     for name in names:
-        t_small = min(run(name, SMALL)[0], run(name, SMALL)[0])
-        t_big, shuf, peak = run(name, big)
-        t_big = min(t_big, run(name, big)[0])
+        t_small = min(metrics.timed(spark, name, SMALL)["sec"] for _ in range(2))
+        first, second = (metrics.timed(spark, name, big) for _ in range(2))
+        t_big = min(first["sec"], second["sec"])
         ratio = round(t_big / t_small, 2) if t_small > 0 else None
         # Per-decade slope: linear scaling is 10x per decade of data, so
         # a factor-100 run has two decades -> slope = sqrt(ratio).
@@ -132,13 +108,13 @@ def main() -> None:
             "big_sec": round(t_big, 2),
             f"ratio_{int(factor)}x": ratio,
             "ratio_per_decade": per_decade,
-            "shuffle_mb": round(shuf / 1e6, 1),
-            "peak_stage_shuffle_mb": round(peak / 1e6, 1),
+            "shuffle_mb": first["shuffle_mb"],
+            "peak_stage_shuffle_mb": first["peak_stage_shuffle_mb"],
         }
         print(
             f"{name:32s} {t_small:6.2f}s -> {t_big:7.2f}s  ratio {ratio}"
-            f"  (per-decade {per_decade})  shuffle {shuf / 1e6:.1f} MB"
-            f"  peak-stage {peak / 1e6:.1f} MB"
+            f"  (per-decade {per_decade})  shuffle {first['shuffle_mb']} MB"
+            f"  peak-stage {first['peak_stage_shuffle_mb']} MB"
         )
     print(json.dumps({"big_dir": big, "factor": factor, "queries": out}))
 
