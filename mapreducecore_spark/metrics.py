@@ -65,15 +65,16 @@ def _stages(spark: SparkSession) -> list[dict]:
 
 
 def _summary(stages: list[dict], before_max: int) -> dict:
-    """Shuffle MB (total, peak stage) and the 8 completed stages with the
-    most executor run time, over the stages with id > `before_max`."""
+    """Shuffle MB (total, peak stage; to the byte, so a small shuffle
+    does not read 0) and the 8 completed stages with the most executor
+    run time, over the stages with id > `before_max`."""
     new = {s["stageId"]: s for s in stages if s["stageId"] > before_max}
     written = [int(s.get("shuffleWriteBytes", 0) or 0) for s in new.values()]
     done = [s for s in new.values() if s.get("status") == "COMPLETE"]
     top = sorted(done, key=lambda s: -s.get("executorRunTime", 0))[:8]
     return {
-        "shuffle_mb": round(sum(written) / 1e6, 2),
-        "peak_stage_shuffle_mb": round(max(written, default=0) / 1e6, 2),
+        "shuffle_mb": round(sum(written) / 1e6, 6),
+        "peak_stage_shuffle_mb": round(max(written, default=0) / 1e6, 6),
         "top_stages": [
             {
                 "id": s["stageId"],

@@ -26,6 +26,8 @@ from mapreducecore_spark.functions.text import (
 )
 from mapreducecore_spark.mapreduce import (
     _BLOCK_LINES,
+    _FLUSH_VALUES,
+    _PROBE_EMITS,
     _grouped_reduce,
     _lines,
     _map_partition,
@@ -217,7 +219,9 @@ def test_partition_functions_leave_no_zip_finder(tmp_path, monkeypatch, close_ea
     """Both partition functions drop every zip finder when they finish
     or are closed, so the worker's next task has no archive to re-read;
     modules imported from a zip before the drop keep working, and a
-    zip module first imported after it still imports."""
+    zip module first imported after it still imports. The map side is
+    closed early both while it yields groups and after a distinct-key
+    probe has switched it to plain pairs."""
     pkg = f"zpkg_{uuid.uuid4().hex[:8]}"
     zpath = str(tmp_path / "lib.zip")
     with zipfile.ZipFile(zpath, "w") as zf:
@@ -227,18 +231,24 @@ def test_partition_functions_leave_no_zip_finder(tmp_path, monkeypatch, close_ea
     # The map side checks PYTHONHASHSEED, which Spark sets on its workers.
     monkeypatch.setenv("PYTHONHASHSEED", os.environ.get("PYTHONHASHSEED", "0"))
     monkeypatch.syspath_prepend(zpath)
+    distinct = [f"d{i}" for i in range(2 * _PROBE_EMITS)]
     try:
         before = importlib.import_module(f"{pkg}.before")
+        # (partition function, input, records to take before closing)
         runs = [
-            (_map_partition(wordcount_mapper), ["a b", None, "c"]),
-            (_grouped_reduce(wordcount_reducer), [("a", "1"), ("a", "1"), ("b", "1")]),
+            (_map_partition(wordcount_mapper), ["a b", None, "c"], 1),
+            (_map_partition(wordcount_mapper), distinct, 1),
+            (_map_partition(wordcount_mapper), distinct, _PROBE_EMITS + 1),
+            (_grouped_reduce(wordcount_reducer), [("a", "1"), ("a", ["1"]), ("b", "1")], 1),
         ]
-        for fn, rows in runs:
+        for fn, rows, steps in runs:
             sys.path_importer_cache[zpath] = zipimport.zipimporter(zpath)
             assert zpath in _zip_finders()
             gen = fn(iter(rows))
             if close_early:
-                next(gen)
+                taken = [next(gen) for _ in range(steps)]
+                if steps > _PROBE_EMITS:
+                    assert type(taken[-1][1]) is str, "not yet switched to plain pairs"
                 gen.close()
             else:
                 assert list(gen)
@@ -249,6 +259,139 @@ def test_partition_functions_leave_no_zip_finder(tmp_path, monkeypatch, close_ea
     finally:
         for name in [m for m in sys.modules if m == pkg or m.startswith(pkg + ".")]:
             del sys.modules[name]
+
+
+def _strict_mapper(line):
+    """Emits each token after the line's first under the value
+    "<first token>.<position>", so a value names its emit."""
+    if not isinstance(line, str):
+        raise TypeError(f"mapper got {line!r}")
+    tag, *toks = line.split()
+    for j, tok in enumerate(toks):
+        yield tok, f"{tag}.{j}"
+
+
+def _values_by_key(records) -> dict[str, list[str]]:
+    """Each key's values in record order, list records flattened."""
+    got: dict[str, list[str]] = collections.defaultdict(list)
+    for k, v in records:
+        if type(v) is list:
+            got[k].extend(v)
+        else:
+            got[k].append(v)
+    return dict(got)
+
+
+def _emits(lines) -> dict[str, list[str]]:
+    return _values_by_key(kv for line in lines if line is not None for kv in _strict_mapper(line))
+
+
+def test_map_partition_groups_repeated_keys(monkeypatch):
+    """A task whose keys repeat ships fewer records than emits; each
+    key's values, flattened, are its emits in emission order. ``None``
+    lines, inside the probe and after it, never reach the mapper."""
+    monkeypatch.setenv("PYTHONHASHSEED", "0")
+    lines = [f"l{i} w{i % 5} w{i % 3} w{i % 5}" for i in range(3 * _PROBE_EMITS)]
+    lines[7] = lines[-7] = None
+    records = list(_map_partition(_strict_mapper)(iter(lines)))
+    n_emits = sum(len(vs) for vs in _emits(lines).values())
+    assert len(records) < n_emits / 100, (len(records), n_emits)
+    assert all(type(v) is list for _, v in records)
+    assert _values_by_key(records) == _emits(lines)
+
+
+def test_map_partition_ships_plain_pairs_after_a_distinct_probe(monkeypatch):
+    """A task whose first emits are mostly distinct keys yields its
+    probe's groups, then every later emit as a plain ``(key, str)``.
+    ``None`` lines, before the switch and after it, never reach the
+    mapper."""
+    monkeypatch.setenv("PYTHONHASHSEED", "0")
+    lines = [f"l{i} k{i} j{i}" for i in range(3 * _PROBE_EMITS)]
+    lines[3] = lines[-3] = None
+    records = list(_map_partition(_strict_mapper)(iter(lines)))
+    kinds = [type(v) for _, v in records]
+    switch = kinds.index(str)
+    assert switch == _PROBE_EMITS
+    assert set(kinds[:switch]) == {list} and set(kinds[switch:]) == {str}
+    assert len(records) - switch > _PROBE_EMITS
+    assert _values_by_key(records) == _emits(lines)
+
+
+def test_map_partition_flushes_bounded_groups(monkeypatch):
+    """Past ``_FLUSH_VALUES`` held values a grouping task flushes, so a
+    hot key leaves in several records and no list outgrows the bound."""
+    monkeypatch.setenv("PYTHONHASHSEED", "0")
+    lines = [f"l{i} hot w{i % 7}" for i in range(_FLUSH_VALUES)]
+    records = list(_map_partition(_strict_mapper)(iter(lines)))
+    hot = [v for k, v in records if k == "hot"]
+    assert len(hot) > 1
+    assert max(len(v) for _, v in records) <= _FLUSH_VALUES
+    assert _values_by_key(records) == _emits(lines)
+
+
+def test_grouped_reduce_merges_both_record_forms():
+    """Plain and list records of one key, interleaved, reach the reducer
+    in one call holding every value, in record order."""
+    calls = []
+
+    def spy(key, values):
+        calls.append((key, list(values)))
+        yield key, str(len(values))
+
+    records = [
+        ("a", ["1", "2"]),
+        ("a", "3"),
+        ("a", ["4"]),
+        ("a", "5"),
+        ("b", "6"),
+        ("c", ["7", "8"]),
+        ("c", "9"),
+    ]
+    out = list(_grouped_reduce(spy)(iter(records)))
+    assert calls == [("a", ["1", "2", "3", "4", "5"]), ("b", ["6"]), ("c", ["7", "8", "9"])]
+    assert out == [("a", "5"), ("b", "1"), ("c", "3")]
+
+
+def test_run_job_mixes_grouped_and_plain_map_tasks(spark, tmp_path, monkeypatch):
+    """One split whose keys repeat (grouped) and one whose keys are all
+    distinct (plain after the probe), sharing keys: the part files equal
+    a pure-Python word count, each key in its routed, key-sorted file."""
+    monkeypatch.setenv("PYTHONHASHSEED", os.environ.get("PYTHONHASHSEED", "0"))
+    repeated = [f"s{i % 9} r{i % 4} s{i % 9}" for i in range(2 * _PROBE_EMITS)]
+    distinct = [f"u{i}" if i % 50 else f"s{i % 9} u{i}" for i in range(3 * _PROBE_EMITS)]
+    paths = []
+    for name, lines in (("repeated.txt", repeated), ("distinct.txt", distinct)):
+        path = tmp_path / name
+        path.write_text("\n".join(lines) + "\n", encoding="utf-8")
+        paths.append(str(path))
+        forms = {type(v) for _, v in _map_partition(wordcount_mapper)(iter(lines))}
+        assert forms == ({list} if name == "repeated.txt" else {list, str}), name
+    r = 4
+    out_dir = tmp_path / "job"
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, str(64 * 1024))
+    try:
+        assert _lines(spark.read.text(paths)).getNumPartitions() == 2
+        register_tasks("mixed_forms", wordcount_mapper, wordcount_reducer)
+        run_job(spark, paths, "mixed_forms", str(out_dir), n_outputs=r)
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+    counts = collections.Counter(tok for ln in repeated + distinct for tok in tokenize(ln))
+    keys = sorted(counts)
+    # Routed inside a Spark task, where PYTHONHASHSEED is the workers'.
+    one = spark.sparkContext.parallelize([0], 1)
+    routed = dict(one.flatMap(lambda _: [(k, _route(k) % r) for k in keys]).collect())
+    files = sorted(f for f in os.listdir(out_dir) if f.startswith("part-"))
+    assert len(files) == r
+    for i, name in enumerate(files):
+        with open(out_dir / name, encoding="utf-8") as f:
+            got = f.read()
+        assert got == "".join(f"{k} {counts[k]}\n" for k in keys if routed[k] == i), name
 
 
 def test_pyspark_still_invalidates_import_caches_per_task():
