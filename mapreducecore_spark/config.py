@@ -6,8 +6,8 @@ Reproduces MapReduceSpec (`mapreduce_spec.h:18-26`) and its
 
 - n_workers / worker_ipaddr_ports -> master URL & executor confs (the
   gRPC worker pool is Spark's scheduler now, SURVEY §2.C);
-- map_kilobytes (shard size, file_shard.h:35) -> spark.sql.files.maxPartitionBytes,
-  set by mapreduce.run for the job's duration;
+- map_kilobytes (shard size, file_shard.h:35) -> the byte-range shards
+  that mapreduce.run_job cuts and its map tasks read (no session conf);
 - n_output_files (R) -> the partition count of run_job's shuffle.
 """
 
@@ -37,9 +37,26 @@ class JobSpec:
     def master_url(self) -> str:
         return f"local[{self.n_workers}]" if self.n_workers > 0 else "local[*]"
 
-    @property
-    def max_partition_bytes(self) -> int:
-        return self.map_kilobytes * 1024
+
+# The job path reads plain files by byte range, as the reference does;
+# Spark's text source would decompress these, a byte range cannot.
+COMPRESSED_SUFFIXES = (".gz", ".bz2", ".deflate", ".zst", ".lz4", ".snappy")
+
+
+def check_input_file(path: str, check_path: bool = True) -> str:
+    """``path`` as an absolute path, after the checks that let a map task
+    read it by byte range: not compressed and, with ``check_path``, an
+    existing regular file. Raises ``SpecError`` naming the path."""
+    if path.lower().endswith(COMPRESSED_SUFFIXES):
+        raise SpecError(f"input file is compressed: {path}")
+    if check_path:
+        if not os.path.exists(path):
+            raise SpecError(f"input file does not exist: {path}")
+        if os.path.isdir(path):
+            raise SpecError(f"input file is a directory: {path}")
+        if not os.path.isfile(path):
+            raise SpecError(f"input file is not a regular file: {path}")
+    return os.path.abspath(path)
 
 
 _LIST_KEYS = {"worker_ipaddr_ports", "input_files"}
@@ -75,8 +92,9 @@ def parse_spec(path: str) -> JobSpec:
 
 def validate_spec(spec: JobSpec, check_paths: bool = True) -> JobSpec:
     """The reference's validation set (mapreduce_spec.h:87-157):
-    positive counts, worker list length == n_workers, inputs exist,
-    output dir usable."""
+    positive counts, worker list length == n_workers, inputs are
+    existing plain files (not directories, not compressed), output dir
+    usable."""
     if spec.n_workers <= 0:
         raise SpecError("n_workers must be > 0")
     if len(spec.worker_ipaddr_ports) != spec.n_workers:
@@ -93,10 +111,9 @@ def validate_spec(spec: JobSpec, check_paths: bool = True) -> JobSpec:
         raise SpecError("input_files must be non-empty")
     if not spec.output_dir:
         raise SpecError("output_dir must be set")
+    for p in spec.input_files:
+        check_input_file(p, check_path=check_paths)
     if check_paths:
-        for p in spec.input_files:
-            if not os.path.exists(p):
-                raise SpecError(f"input file does not exist: {p}")
         parent = os.path.dirname(spec.output_dir.rstrip("/")) or "."
         if not os.path.isdir(parent):
             raise SpecError(f"output_dir parent does not exist: {parent}")

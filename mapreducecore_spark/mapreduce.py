@@ -12,13 +12,16 @@ Reproduces the semantics of the reference's user-facing API
 - output: ``n_outputs`` partitions, each key-sorted (mr_tasks.h:109-121,
   description.md:56).
 
-One pipeline implements it: the input's first column as an RDD of plain
-UTF-8 strings (``_lines``) -> ``mapPartitions`` ->
-``repartitionAndSortWithinPartitions`` -> a streamed sorted-run reduce.
-Two sinks sit on it: ``run_job`` (and ``run(config)``) writes the
-reference's "key value" text files in newline-joined blocks
-(``_text_blocks``), ``run_mapreduce`` returns the rows as a DataFrame
-for the query registry.
+One pipeline implements it: an RDD of input lines as plain ``str`` ->
+``mapPartitions`` -> ``repartitionAndSortWithinPartitions`` -> a
+streamed sorted-run reduce. Two sinks sit on it: ``run_job`` (and
+``run(config)``) reads its text files the way the reference's workers
+do, each map task reading its own shard of byte ranges
+(``_shards`` / ``_shard_lines``, worker.h:89-103, file_shard.h:28-94),
+and writes the reference's "key value" text files in newline-joined
+blocks (``_text_blocks``); ``run_mapreduce`` takes the first column of
+a DataFrame (``_lines``) and returns the rows as a DataFrame for the
+query registry.
 
 Differences by design (scale fixes, not semantic changes):
 - grouping streams over a sorted partition iterator with bounded
@@ -32,9 +35,18 @@ Differences by design (scale fixes, not semantic changes):
   intermediate text files (mr_tasks.h:52) — the "key value\\n" text
   round-trip (and its key-with-whitespace corruption bug,
   worker.h:134-137) is gone;
-- input is decoded as UTF-8 by Spark's text source: the reference
-  passes raw bytes to the mapper, here each undecodable byte reaches
-  it as U+FFFD;
+- a shard's ranges are cut at exact byte offsets and a range owns the
+  lines that start in it (Hadoop's ``LineRecordReader`` rule,
+  ``_range_lines``), where the reference moves each shard's end back to
+  a ``\\n`` (file_shard.h:73-86, which assumes one-byte line ends); each
+  line is read once either way;
+- input is decoded as UTF-8: the reference passes raw bytes to the
+  mapper, here each undecodable byte reaches it as U+FFFD. The job
+  path decodes with Python's ``errors="replace"``, which differs from
+  Spark's text source (Java's decoder) only on invalid sequences such as
+  an encoded surrogate: ``\\xed\\xa0\\x80`` gives three U+FFFD here and one
+  in Java. Like Hadoop's reader, and unlike the reference, a UTF-8 BOM
+  at a file's offset 0 is dropped and ``\\r`` and ``\\r\\n`` end lines too;
 - each map and reduce task ends by dropping the worker's zip finders,
   because PySpark makes every task re-read each one's archive directory
   (``_drop_zip_finders``); the reference's workers have no such cost;
@@ -52,13 +64,15 @@ import sys
 import zipimport
 from collections import defaultdict
 from collections.abc import Callable, Hashable, Iterable, Iterator
-from itertools import islice
+from itertools import chain, islice
 
 from pyspark.errors import PySparkRuntimeError
 from pyspark.rdd import RDD, portable_hash
 from pyspark.serializers import UTF8Deserializer
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+
+from mapreducecore_spark.config import check_input_file
 
 MapperFn = Callable[[str], Iterable[tuple[str, str]]]
 ReducerFn = Callable[[str, list[str]], Iterable[tuple[str, str]]]
@@ -119,8 +133,8 @@ def _route(key: Hashable) -> int:
 
 def _lines(df: DataFrame) -> RDD:
     """The first column of ``df`` as an RDD of ``str`` (``None`` for a
-    null), with the scan's partitions unchanged, so
-    ``spark.sql.files.maxPartitionBytes`` still sets the map splits.
+    null), with the scan's partitions unchanged: ``run_mapreduce``'s map
+    tasks are the DataFrame's partitions.
 
     The JVM hands each value over as length-prefixed UTF-8
     (``Encoders.STRING()`` + ``UTF8Deserializer``, the pattern of
@@ -133,6 +147,124 @@ def _lines(df: DataFrame) -> RDD:
     sc = df.sparkSession.sparkContext
     strings = getattr(one._jdf, "as")(sc._jvm.org.apache.spark.sql.Encoders.STRING())
     return RDD(strings.javaRDD(), sc, UTF8Deserializer())
+
+
+# One shard: the byte ranges ``(path, start, end)`` one map task reads.
+Shard = tuple[tuple[str, int, int], ...]
+
+
+def _shards(paths: list[str], shard_bytes: int) -> list[Shard]:
+    """The reference's input shards (file_shard.h:28-94): the files,
+    taken in order as one byte stream, cut into M = ceil(total bytes /
+    ``shard_bytes``) ranges, so a shard can span files (file_shard.h:35,
+    :48-65). A range is never empty, so an empty file gets none; empty
+    input gives no shard.
+
+    Each path is checked here, on the driver, and made absolute
+    (``check_input_file``): a map task reads a plain local file by byte
+    range, so a directory, a compressed file or a missing one raises
+    ``SpecError`` before any task runs."""
+    shards: list[Shard] = []
+    cur: list[tuple[str, int, int]] = []
+    room = shard_bytes
+    for path in map(check_input_file, paths):
+        size, pos = os.path.getsize(path), 0
+        while pos < size:
+            take = min(room, size - pos)
+            cur.append((path, pos, pos + take))
+            pos, room = pos + take, room - take
+            if room == 0:
+                shards.append(tuple(cur))
+                cur, room = [], shard_bytes
+    if cur:
+        shards.append(tuple(cur))
+    return shards
+
+
+# ``_range_lines``' read sizes: a range in blocks, the rest of its last
+# line in smaller steps.
+_READ_BLOCK = 1 << 20
+_TAIL_BLOCK = 4096
+
+
+def _first_break(data: bytes) -> int:
+    """Index of the first ``\\n`` or ``\\r`` in ``data``, or -1."""
+    n = data.find(b"\n")
+    r = data.find(b"\r", 0, n if n >= 0 else len(data))
+    return r if r >= 0 else n
+
+
+def _owned_bytes(path: str, start: int, end: int) -> Iterator[bytes]:
+    """The bytes of ``path`` from ``start`` (past a UTF-8 BOM at offset
+    0) through the first line terminator at or after ``end``, in blocks
+    of at most ``_READ_BLOCK``."""
+    with open(path, "rb") as f:
+        f.seek(start)
+        if start == 0 and f.read(3) != b"\xef\xbb\xbf":
+            f.seek(0)
+        left = end - f.tell()
+        while left > 0 and (block := f.read(min(left, _READ_BLOCK))):
+            left -= len(block)
+            yield block
+        while block := f.read(_TAIL_BLOCK):
+            cut = _first_break(block)
+            if cut >= 0:
+                yield block[: cut + 1]
+                return
+            yield block
+
+
+def _split_lines(blocks: Iterable[bytes]) -> Iterator[str]:
+    """The lines of a byte stream given in blocks; ``\\n``, ``\\r\\n`` and
+    ``\\r`` end lines. Each block's complete lines are decoded once with
+    ``errors="replace"`` and split in C; the rest of the block is carried
+    into the next one. Decoding in pieces cut after a terminator gives
+    the same text as decoding the whole, because a terminator is ASCII
+    and never part of an invalid sequence."""
+    carry: list[bytes] = []
+    after_cr = False
+    for block in blocks:
+        if after_cr and block[:1] == b"\n":
+            block = block[1:]  # the LF of a CRLF cut between blocks
+        after_cr = block.endswith(b"\r")
+        cut = max(block.rfind(b"\n"), block.rfind(b"\r"))
+        if cut < 0:
+            carry.append(block)
+            continue
+        carry.append(block[: cut + 1])
+        text = b"".join(carry).decode("utf-8", "replace")
+        carry = [block[cut + 1 :]]
+        if "\r" in text:
+            text = text.replace("\r\n", "\n").replace("\r", "\n")
+        lines = text.split("\n")
+        lines.pop()  # the text ends with a terminator
+        yield from lines
+    if rest := b"".join(carry):
+        yield rest.decode("utf-8", "replace")  # a last line with no terminator
+
+
+def _range_lines(path: str, start: int, end: int) -> Iterator[str]:
+    """The lines that byte range ``[start, end)`` of ``path`` owns, by
+    Hadoop's ``LineRecordReader`` rule, which Spark's text source uses:
+    every line that starts in ``(start, end]``, plus the line at offset
+    0. A UTF-8 BOM at offset 0 is dropped.
+
+    ``_owned_bytes`` stops after the last such line. When ``start > 0``
+    the first line read began before ``start`` or at it, so it is the
+    previous range's and is skipped. The range streams in blocks, so a
+    map task holds about one block of its shard at a time."""
+    lines = _split_lines(_owned_bytes(path, start, end))
+    if start > 0:
+        next(lines, None)
+    return lines
+
+
+def _shard_lines(shards: Iterable[Shard]) -> Iterator[str]:
+    """The lines of each shard's ranges, in order: the reader of one
+    ``run_job`` map task."""
+    return chain.from_iterable(
+        _range_lines(path, start, end) for shard in shards for path, start, end in shard
+    )
 
 
 # ``_map_partition``'s probe length and its bound on held values.
@@ -238,18 +370,19 @@ def md5_partitioner(n_outputs: int) -> Callable[[str], int]:
 
 
 def _map_shuffle_reduce(
-    lines: DataFrame,
+    lines: RDD,
     mapper: MapperFn,
     reducer: ReducerFn,
     n_outputs: int,
     partition_fn: Callable[[str], int] | None = None,
 ) -> RDD:
-    """The one map -> shuffle -> sorted reduce pipeline behind both sinks.
+    """The one map -> shuffle -> sorted reduce pipeline behind both sinks,
+    over an RDD of ``str`` lines (``None`` for a null line).
 
     Output partition ``i`` holds the reducer's output for exactly the
     keys routed to ``i`` (``portable_hash`` unless ``partition_fn`` is
     given), in ascending key order. Null lines never reach the mapper."""
-    pairs = _lines(lines).mapPartitions(_map_partition(mapper))
+    pairs = lines.mapPartitions(_map_partition(mapper))
     sorted_parts = pairs.repartitionAndSortWithinPartitions(
         numPartitions=n_outputs, partitionFunc=partition_fn or _route
     )
@@ -273,7 +406,7 @@ def run_mapreduce(
     It shares run_job's RDD pipeline because that measured faster than
     an Arrow ``mapInArrow`` map and reduce on every workload tried
     (word count over sf0.1 documents, local[4]: median 1.91 s vs 2.25 s)."""
-    out = _map_shuffle_reduce(lines, mapper, reducer, n_outputs, partition_fn)
+    out = _map_shuffle_reduce(_lines(lines), mapper, reducer, n_outputs, partition_fn)
     if with_partition_id:
         rows = out.mapPartitionsWithIndex(lambda i, it: ((i, k, v) for k, v in it))
         return spark.createDataFrame(rows, PARTITIONED_KV_SCHEMA)
@@ -305,40 +438,38 @@ def run_job(
     user_id: str,
     output_dir: str,
     n_outputs: int = 8,
+    map_kilobytes: int = 512,
 ) -> None:
     """End-to-end job like MapReduce::run (mapreduce_impl.cc:8-26):
     text inputs -> registered (mapper, reducer) -> n_outputs key-sorted
-    text files formatted "key value" (mr_tasks.h:118 format)."""
+    text files formatted "key value" (mr_tasks.h:118 format).
+
+    The inputs are cut into ``map_kilobytes`` shards (``_shards``; 512 is
+    the spec's default) and each map task reads its own, as the
+    reference's workers do, with no Catalyst scan. On the ``mr_index``
+    benchmark this cut the driver time before the job from 96 to 42 ms and
+    the map stage's JVM CPU from 533 to 290 ms (BASELINE.md "Job path:
+    map tasks read their own shards")."""
     mapper, reducer = get_tasks(user_id)
-    lines = spark.read.text(list(input_paths))
-    out = _map_shuffle_reduce(lines, mapper, reducer, n_outputs)
+    shards = _shards(input_paths, map_kilobytes * 1024)
+    lines = spark.sparkContext.parallelize(shards, max(1, len(shards)))
+    out = _map_shuffle_reduce(lines.mapPartitions(_shard_lines), mapper, reducer, n_outputs)
     out.mapPartitions(_text_blocks).saveAsTextFile(output_dir)
 
 
 def run(spark: SparkSession, config_path: str) -> None:
     """The reference's public entry point, MapReduce::run(config)
     (mapreduce.h:15 -> mapreduce_impl.cc:8-26): read+validate spec ->
-    run the job with the spec's shard size and R. Shard creation and
-    the master loop are Spark's file-source partitioning and scheduler."""
+    run the job with the spec's shard size and R. It sets no session
+    conf; the master loop is Spark's scheduler."""
     from mapreducecore_spark.config import read_and_validate_spec
 
     spec = read_and_validate_spec(config_path)
-    # A session conf, because the text reader's maxPartitionBytes option
-    # does not change its splits; restored so the job leaves the
-    # caller's session as it found it.
-    key = "spark.sql.files.maxPartitionBytes"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, str(spec.max_partition_bytes))
-    try:
-        run_job(
-            spark,
-            spec.input_files,
-            spec.user_id,
-            spec.output_dir,
-            n_outputs=spec.n_output_files,
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    run_job(
+        spark,
+        spec.input_files,
+        spec.user_id,
+        spec.output_dir,
+        n_outputs=spec.n_output_files,
+        map_kilobytes=spec.map_kilobytes,
+    )

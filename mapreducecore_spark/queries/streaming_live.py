@@ -66,18 +66,15 @@ def _stream_scratch(prefix: str, need_bytes: int = 0) -> str:
     unset, the default is /dev/shm when it is writable and has
     ``need_bytes`` free (callers pass the size of the input they
     re-lay), else the system tempdir.
-    Cleanup is registered at process exit like the sink tempdirs."""
-    import atexit
-    import shutil
+    The caller removes the dir before it returns, so a long sweep holds
+    no more than one call's scratch."""
     import tempfile
 
     base = os.environ.get("SPARK_GRAFT_STREAM_SCRATCH")
     if not base:
         shm = os.access("/dev/shm", os.W_OK) and shutil.disk_usage("/dev/shm").free >= need_bytes
         base = "/dev/shm" if shm else None
-    d = tempfile.mkdtemp(prefix=prefix, dir=base)
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    return d
+    return tempfile.mkdtemp(prefix=prefix, dir=base)
 
 
 def _stream_width(in_bytes: int | None, parallelism: int) -> int:
@@ -127,36 +124,38 @@ def _drain(
     conf is pinned into the query at start, so restoring it afterwards
     cannot affect the running stream."""
     name = f"live_{uuid.uuid4().hex[:12]}"
-    ckpt = _stream_scratch("mrc_ckpt_")
     width = str(_stream_width(in_bytes, spark.sparkContext.defaultParallelism))
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", width)
+    ckpt = _stream_scratch("mrc_ckpt_")
+    # The result lives in the memory sink; the checkpoint is never
+    # resumed, so it is freed when the drain returns.
     try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            # Explicit tmpfs-backed checkpoint: without it
-            # Spark creates the temp checkpoint under java.io.tmpdir on
-            # the system disk and every micro-batch's offset/commit WAL
-            # fsyncs plus state-store delta writes pay disk latency.
-            .option("checkpointLocation", ckpt + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    try:
-        finished = q.awaitTermination(120)
-        if not finished:
-            raise RuntimeError(
-                f"streaming drain {name!r} did not finish within 120s; "
-                "memory sink holds a partial result"
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", width)
+        try:
+            q = (
+                out.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(mode)
+                # Explicit tmpfs-backed checkpoint: without it
+                # Spark creates the temp checkpoint under java.io.tmpdir on
+                # the system disk and every micro-batch's offset/commit WAL
+                # fsyncs plus state-store delta writes pay disk latency.
+                .option("checkpointLocation", ckpt + "/ckpt")
+                .trigger(availableNow=True)
+                .start()
             )
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        try:
+            finished = q.awaitTermination(120)
+            if not finished:
+                raise RuntimeError(
+                    f"streaming drain {name!r} did not finish within 120s; "
+                    "memory sink holds a partial result"
+                )
+        finally:
+            q.stop()
     finally:
-        q.stop()
-        # The result lives in the memory sink; the checkpoint is
-        # never resumed, so free it now rather than at process exit.
         shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 
@@ -361,28 +360,32 @@ def stream_live_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame
     contract the memory-sink entries can't test. Scratch dirs are
     per-call tempdirs (test plumbing; production points out_dir at the
     lake path and keeps the same checkpoint across runs)."""
+    from mapreducecore_spark.queries._util import materialize
     from mapreducecore_spark.streaming.sinks import idempotent_parquet_sink
 
     ev = _event_stream(spark, sf_dir).select("event_id", "event_type", "value")
-    # The returned DataFrame lazily reads from `tmp`, so removal must
-    # wait until the caller has consumed it — _stream_scratch registers
-    # process-exit cleanup instead of leaking a dir per invocation.
     tmp = _stream_scratch("mrc_fb_sink_", _src_bytes(sf_dir, "events.parquet"))
-    q = (
-        idempotent_parquet_sink(ev, f"{tmp}/out", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
     try:
-        if not q.awaitTermination(120):
-            raise RuntimeError("foreachBatch sink drain did not finish in 120s")
+        q = (
+            idempotent_parquet_sink(ev, f"{tmp}/out", f"{tmp}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            if not q.awaitTermination(120):
+                raise RuntimeError("foreachBatch sink drain did not finish in 120s")
+        finally:
+            q.stop()
+        written = spark.read.parquet(f"{tmp}/out")  # partition col `batch` added
+        # Materialized, so the rows outlive `tmp`.
+        return materialize(
+            written.groupBy("event_type").agg(
+                F.count("*").alias("n"),
+                F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
+            )
+        )
     finally:
-        q.stop()
-    written = spark.read.parquet(f"{tmp}/out")  # partition col `batch` added
-    return written.groupBy("event_type").agg(
-        F.count("*").alias("n"),
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
-    )
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @register(
@@ -576,44 +579,51 @@ def stream_live_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         versioned_merge_sink,
     )
 
-    tmp = _stream_scratch("mrc_cdc_merge_", _src_bytes(sf_dir, "events.parquet"))
-    # Re-lay the backlog as 4 files (ts already normalized by the
-    # catalog) so the file source yields 4 real micro-batches.
     from mapreducecore_spark.catalog import load_tables
+    from mapreducecore_spark.queries._util import materialize
 
-    tune_session(spark)
-    load_tables(spark, sf_dir)["events"].select(
-        "event_id", "user_id", "event_type", "ts", "value"
-    ).repartition(4).write.mode("overwrite").parquet(f"{tmp}/in")
-    stream = (
-        spark.readStream.schema(spark.read.parquet(f"{tmp}/in").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{tmp}/in")
-    )
-    ordkey = F.format_string(
-        "%019d|%019d",
-        F.unix_timestamp(F.date_trunc("second", F.col("ts").cast("timestamp"))),
-        F.col("event_id"),
-    )
-    prepared = stream.select(
-        "user_id", "event_type", "value", ordkey.alias("ordkey")
-    )
-    q = (
-        versioned_merge_sink(prepared, f"{tmp}/state", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
+    tmp = _stream_scratch("mrc_cdc_merge_", _src_bytes(sf_dir, "events.parquet"))
     try:
-        if not q.awaitTermination(120):
-            raise RuntimeError("cdc merge drain did not finish in 120s")
+        # Re-lay the backlog as 4 files (ts already normalized by the
+        # catalog) so the file source yields 4 real micro-batches.
+        tune_session(spark)
+        load_tables(spark, sf_dir)["events"].select(
+            "event_id", "user_id", "event_type", "ts", "value"
+        ).repartition(4).write.mode("overwrite").parquet(f"{tmp}/in")
+        stream = (
+            spark.readStream.schema(spark.read.parquet(f"{tmp}/in").schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(f"{tmp}/in")
+        )
+        ordkey = F.format_string(
+            "%019d|%019d",
+            F.unix_timestamp(F.date_trunc("second", F.col("ts").cast("timestamp"))),
+            F.col("event_id"),
+        )
+        prepared = stream.select(
+            "user_id", "event_type", "value", ordkey.alias("ordkey")
+        )
+        q = (
+            versioned_merge_sink(prepared, f"{tmp}/state", f"{tmp}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            if not q.awaitTermination(120):
+                raise RuntimeError("cdc merge drain did not finish in 120s")
+        finally:
+            q.stop()
+        # Materialized, so the rows outlive `tmp`.
+        return materialize(
+            latest_merge_snapshot(spark, f"{tmp}/state").select(
+                "user_id",
+                "last_type",
+                F.col("last_value").cast("double").alias("last_value"),
+                "n_events",
+            )
+        )
     finally:
-        q.stop()
-    return latest_merge_snapshot(spark, f"{tmp}/state").select(
-        "user_id",
-        "last_type",
-        F.col("last_value").cast("double").alias("last_value"),
-        "n_events",
-    )
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @register(
@@ -872,8 +882,12 @@ def stream_live_incremental_dedup_wm(spark: SparkSession, sf_dir: str) -> DataFr
     window, independent of total stream length — the property the
     unbounded form cannot offer."""
     tmp = _stream_scratch("mrc_incr_wm_", _src_bytes(sf_dir, "documents.parquet"))
-    out = _incremental_dedup_stream(spark, sf_dir, f"{tmp}/in")
-    # The stream side is the re-laid 10%-of-docs backlog written just
-    # above (not the full documents file), so size the state width from
-    # what was actually laid out.
-    return _drain(out, spark, mode="append", in_bytes=_src_bytes(tmp, "in"))
+    try:
+        out = _incremental_dedup_stream(spark, sf_dir, f"{tmp}/in")
+        # The stream side is the re-laid 10%-of-docs backlog written just
+        # above (not the full documents file), so size the state width from
+        # what was actually laid out. The drained rows live in the memory
+        # sink, which outlives `tmp`.
+        return _drain(out, spark, mode="append", in_bytes=_src_bytes(tmp, "in"))
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)

@@ -2,9 +2,8 @@
 
 The reference's runtime knobs (`mapreduce_spec.h:18-26`: n_workers,
 map_kilobytes shard size, n_output_files R) map onto Spark: worker
-count -> master URL / executor confs, shard size ->
-spark.sql.files.maxPartitionBytes, R -> the partition count that
-mapreduce.run_job passes to its shuffle (no session conf).
+count -> master URL / executor confs; shard size and R are arguments of
+mapreduce.run_job (its shards and its shuffle width), not session confs.
 
 Settings are chosen for a large cluster and scale down fine to local[N]:
 AQE handles partition coalescing and skew joins at runtime, so a fixed
@@ -149,10 +148,16 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or default_master())
-        # 128 MiB splits: the Spark analogue of the reference's
-        # map_kilobytes shard sizing (file_shard.h:35), newline-safe and
-        # column-pruned for parquet out of the box.
+        # 128 MiB file-source splits for the registry's scans.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # Python workers on Unix sockets: on loopback TCP, a job-path map
+        # task that reads its own shard (no input stream carrying ACKs
+        # back) waits on its output, and in mr_index's same-JVM A/B the
+        # shard reader cut the map stage by 34 ms instead of 155 ms. The
+        # registry's Python-worker queries stayed within +-5 % (BASELINE.md
+        # "Job path: map tasks read their own shards"). extra_conf can
+        # turn it off.
+        .config("spark.python.unix.domain.socket.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

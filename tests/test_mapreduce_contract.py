@@ -18,6 +18,8 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from mapreducecore_spark import mapreduce
+from mapreducecore_spark.config import SpecError
 from mapreducecore_spark.functions.text import (
     STRTOK_DELIMS,
     tokenize,
@@ -32,6 +34,8 @@ from mapreducecore_spark.mapreduce import (
     _lines,
     _map_partition,
     _route,
+    _shard_lines,
+    _shards,
     register_tasks,
     run_job,
     run_mapreduce,
@@ -368,18 +372,13 @@ def test_run_job_mixes_grouped_and_plain_map_tasks(spark, tmp_path, monkeypatch)
         assert forms == ({list} if name == "repeated.txt" else {list, str}), name
     r = 4
     out_dir = tmp_path / "job"
-    key = "spark.sql.files.maxPartitionBytes"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, str(64 * 1024))
-    try:
-        assert _lines(spark.read.text(paths)).getNumPartitions() == 2
-        register_tasks("mixed_forms", wordcount_mapper, wordcount_reducer)
-        run_job(spark, paths, "mixed_forms", str(out_dir), n_outputs=r)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    # 36 KB shards: the first is exactly repeated.txt, the second all of
+    # distinct.txt, so each file is one map task.
+    sizes = [os.path.getsize(p) for p in paths]
+    assert sizes[0] == 36 * 1024 and sizes[1] <= 36 * 1024, sizes
+    assert _shards(paths, 36 * 1024) == [((paths[0], 0, sizes[0]),), ((paths[1], 0, sizes[1]),)]
+    register_tasks("mixed_forms", wordcount_mapper, wordcount_reducer)
+    run_job(spark, paths, "mixed_forms", str(out_dir), n_outputs=r, map_kilobytes=36)
 
     counts = collections.Counter(tok for ln in repeated + distinct for tok in tokenize(ln))
     keys = sorted(counts)
@@ -392,6 +391,165 @@ def test_run_job_mixes_grouped_and_plain_map_tasks(spark, tmp_path, monkeypatch)
         with open(out_dir / name, encoding="utf-8") as f:
             got = f.read()
         assert got == "".join(f"{k} {counts[k]}\n" for k in keys if routed[k] == i), name
+
+
+_FUZZ_PIECES = ["a", "b c", " ", "é", "日本", "🙂", "\n", "\r", "\r\n", "\n\n", "\r\r\n"]
+
+
+# ``(_READ_BLOCK, _TAIL_BLOCK)``: the defaults, and reads small enough
+# that lines, multi-byte characters and CRLFs are cut between blocks.
+_READ_SIZES = [(mapreduce._READ_BLOCK, mapreduce._TAIL_BLOCK), (1, 1), (3, 2)]
+
+
+def test_shard_reader_matches_spark_text_source(spark, tmp_path, monkeypatch):
+    """Seeded byte fuzz: for shards of 1, 2, 3, 7 and 64 bytes laid
+    across 1-4 files, the lines the map tasks read equal, in order,
+    the lines ``spark.read.text`` gives each file. The files are valid
+    UTF-8 with all three terminators and empty lines, some with a
+    leading BOM (one is a BOM alone), some empty, some without a final
+    terminator; small shards cut multi-byte characters and CRLFs. Each
+    shard is read with the default block sizes and with blocks of a few
+    bytes, so most ranges stream in many blocks."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    rng = random.Random(20261019)
+    fuzz = tmp_path / "fuzz"
+    fuzz.mkdir()
+    cases = []
+    for c in range(40):
+        paths = []
+        for j in range(rng.randint(1, 4)):
+            data = "".join(rng.choice(_FUZZ_PIECES) for _ in range(rng.randint(0, 40))).encode()
+            if rng.random() < 0.3:
+                data = b"\xef\xbb\xbf" + data
+            if c == 0 and j == 0:
+                data = b"\xef\xbb\xbf"
+            path = fuzz / f"c{c:02d}_{j}.txt"
+            path.write_bytes(data)
+            paths.append(str(path))
+        cases.append(paths)
+    # One scan: each small file is one split, read in order.
+    by_file = collections.defaultdict(list)
+    for row in spark.read.text(str(fuzz)).select(F.input_file_name(), "value").collect():
+        by_file[os.path.basename(row[0])].append(row[1])
+    assert sum(map(len, by_file.values())) > 500
+    spanned = 0
+    for paths in cases:
+        want = [ln for p in paths for ln in by_file[os.path.basename(p)]]
+        for n in (1, 2, 3, 7, 64):
+            shards = _shards(paths, n)
+            spanned += any(len({p for p, _, _ in shard}) > 1 for shard in shards)
+            for block, tail in _READ_SIZES:
+                monkeypatch.setattr(mapreduce, "_READ_BLOCK", block)
+                monkeypatch.setattr(mapreduce, "_TAIL_BLOCK", tail)
+                got = list(_shard_lines(shards))
+                assert got == want, (n, block, [open(p, "rb").read() for p in paths])
+    assert spanned, "no shard spanned two files"
+
+
+def test_shard_reader_replaces_each_byte_of_an_encoded_surrogate(tmp_path, monkeypatch):
+    """Pins the job path's invalid-UTF-8 rule, Python's: the encoded
+    surrogate ``\\xed\\xa0\\x80`` becomes three U+FFFD (Spark's text
+    source, decoding in Java, gives one), also when the bytes are read
+    in blocks that cut the sequence."""
+    src = tmp_path / "surrogate.txt"
+    src.write_bytes(b"a\xed\xa0\x80b\nc\n")
+    for block, tail in _READ_SIZES:
+        monkeypatch.setattr(mapreduce, "_READ_BLOCK", block)
+        monkeypatch.setattr(mapreduce, "_TAIL_BLOCK", tail)
+        for n in (1, 2, 1024):
+            assert list(_shard_lines(_shards([str(src)], n))) == ["a\ufffd\ufffd\ufffdb", "c"]
+
+
+def test_shard_reader_holds_one_block_of_a_long_range(tmp_path, monkeypatch):
+    """A range many blocks long streams: it is read in blocks of at most
+    ``_READ_BLOCK`` bytes, and its first line comes out after the first
+    block, while the rest of the range is still on disk."""
+    monkeypatch.setattr(mapreduce, "_READ_BLOCK", 1024)
+    src = tmp_path / "long.txt"
+    want = [f"line {i:05d} " + "x" * (i % 37) for i in range(20000)]
+    src.write_text("\n".join(want) + "\n", encoding="utf-8")
+    size = src.stat().st_size
+    pulled = []
+
+    def blocks():
+        for block in mapreduce._owned_bytes(str(src), 0, size):
+            pulled.append(len(block))
+            yield block
+
+    lines = mapreduce._split_lines(blocks())
+    assert next(lines) == want[0]
+    assert pulled == [1024]
+    assert [want[0], *lines] == want
+    assert len(pulled) == -(-size // 1024) > 400 and max(pulled) == 1024
+
+
+@pytest.mark.parametrize("name", ["a_dir", "part-0.txt.gz", "missing.txt", "a_fifo"])
+def test_run_job_rejects_an_input_no_map_task_can_read(spark, tmp_path, name):
+    """``run_job`` checks its inputs on the driver as ``run()`` does: a
+    directory, a compressed file, a missing path or a file that is not
+    regular raises ``SpecError`` naming it before any task runs."""
+    (tmp_path / "a_dir").mkdir()
+    os.mkfifo(tmp_path / "a_fifo")
+    (tmp_path / "part-0.txt.gz").write_bytes(b"\x1f\x8b\x08\x00")
+    register_tasks("reject_wordcount", wordcount_mapper, wordcount_reducer)
+    with pytest.raises(SpecError, match=name):
+        run_job(spark, [str(tmp_path / name)], "reject_wordcount", str(tmp_path / "job"))
+    assert not (tmp_path / "job").exists()
+
+
+def test_shards_use_absolute_paths(tmp_path, monkeypatch):
+    """A relative input path is resolved against the driver's working
+    directory, not a worker's."""
+    (tmp_path / "in.txt").write_bytes(b"a\nb\n")
+    monkeypatch.chdir(tmp_path)
+    assert _shards(["in.txt"], 1024) == [((str(tmp_path / "in.txt"), 0, 4),)]
+
+
+def test_shards_span_files_so_small_files_share_map_tasks(spark, tmp_path):
+    """40 files of 1 KB with ``map_kilobytes=16`` run as 3 map tasks
+    (M = ceil(40 KB / 16 KB), file_shard.h:35), not one per file, and
+    every line is mapped once."""
+
+    # Closures, so Spark's workers get them by value.
+    def task_mapper(line):
+        from pyspark import TaskContext
+
+        yield "task", str(TaskContext.get().partitionId())
+        yield "lines", "1"
+
+    def task_reducer(key, values):
+        yield key, ",".join(sorted(set(values))) if key == "task" else str(len(values))
+
+    paths = []
+    for i in range(40):
+        path = tmp_path / f"f{i:02d}.txt"
+        path.write_bytes(b"".join(b"%02d line %03d....\n" % (i, j) for j in range(64)))
+        assert path.stat().st_size == 1024
+        paths.append(str(path))
+    assert len(_shards(paths, 16 * 1024)) == 3
+    register_tasks("map_task_ids", task_mapper, task_reducer)
+    out_dir = tmp_path / "job"
+    run_job(spark, paths, "map_task_ids", str(out_dir), n_outputs=1, map_kilobytes=16)
+    got = dict(ln.split(" ", 1) for ln in (out_dir / "part-00000").read_text().splitlines())
+    assert got == {"lines": str(40 * 64), "task": "0,1,2"}
+
+
+def test_empty_inputs_give_r_empty_part_files(spark, tmp_path):
+    """Empty input files make no shard; the job still writes R part
+    files, all empty."""
+    paths = [tmp_path / "a.txt", tmp_path / "b.txt"]
+    for p in paths:
+        p.write_bytes(b"")
+    assert _shards([str(p) for p in paths], 1024) == []
+    register_tasks("empty_wordcount", wordcount_mapper, wordcount_reducer)
+    out_dir = tmp_path / "job"
+    run_job(spark, [str(p) for p in paths], "empty_wordcount", str(out_dir), n_outputs=3)
+    files = sorted(out_dir.glob("part-*"))
+    assert len(files) == 3
+    assert [f.stat().st_size for f in files] == [0, 0, 0]
 
 
 def test_pyspark_still_invalidates_import_caches_per_task():

@@ -343,6 +343,33 @@ def test_minhash_member_rows_checkpoints_eagerly(spark, sf_dir):
     )
 
 
+def test_every_checkpoint_call_is_eager():
+    """Static pin of the eager-only rule: every ``checkpoint`` or
+    ``localCheckpoint`` call under ``mapreducecore_spark/`` passes
+    ``eager=True`` (``materialize()``'s own calls included, so a site
+    that goes through it is eager too). A lazy checkpoint over an AQE
+    plan is the lock-order deadlock shape ``materialize`` documents."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent / "mapreducecore_spark"
+    calls, lazy = 0, []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("checkpoint", "localCheckpoint")
+            ):
+                continue
+            calls += 1
+            eager = [k.value for k in node.keywords if k.arg == "eager"]
+            if not (eager and isinstance(eager[0], ast.Constant) and eager[0].value is True):
+                lazy.append(f"{path.relative_to(root.parent)}:{node.lineno}")
+    assert calls >= 5, f"found only {calls} checkpoint calls: is the scan broken?"
+    assert not lazy, f"checkpoint calls without eager=True: {lazy}"
+
+
 def test_jaccard_df_cap_window_precedes_join(spark, sf_dir):
     """The df-cap window keys on `shingle` — the same key the
     inverted-index equi-join uses — and the join is never cartesian."""

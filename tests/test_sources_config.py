@@ -55,7 +55,6 @@ def test_parse_reference_config_format(tmp_path, mr_corpus):
     assert spec.map_kilobytes == 500
     assert spec.user_id == "cs6210"
     assert spec.master_url == "local[6]"
-    assert spec.max_partition_bytes == 500 * 1024
 
 
 @pytest.mark.parametrize(
@@ -68,6 +67,8 @@ def test_parse_reference_config_format(tmp_path, mr_corpus):
         ({"input_files": []}, "input_files"),
         ({"worker_ipaddr_ports": ["only:1"]}, "worker address count"),
         ({"input_files": ["/does/not/exist.txt"]}, "does not exist"),
+        ({"input_files": [str(Path(__file__).parent)]}, "is a directory"),
+        ({"input_files": ["/data/part-0.txt.gz"]}, "compressed: /data/part-0.txt.gz"),
     ],
 )
 def test_spec_validation_rejects(mutation, msg, mr_corpus):
