@@ -1,4 +1,7 @@
-"""LLM-data-pipeline operator implementations: MinHash signatures and
-LSH bands (minhash.py, the one core behind every near-dup query and its
-DuckDB oracle), SimHash, sign-LSH/IVF similarity and multimodal decode.
-The query registry in queries/ wraps these."""
+"""LLM-data-pipeline operator implementations, each core written once
+for Spark and once for the DuckDB oracles: MinHash signatures and LSH
+bands (minhash.py, behind every near-dup query), the vector math
+(similarity.py, behind every ANN/k-means query) and the curation rules
+(curation.py: quality score, normalized content hash, doc-id split).
+Also SimHash and multimodal decode. The query registry in queries/
+wraps these."""

@@ -1,7 +1,8 @@
-"""Corpus-curation operators, round 3 part 3: semantic dedup
-(SemDeDup), substring-span dedup (Lee et al. 2022 style), a hashed
-linear quality classifier (fastText-shaped), and per-domain document
-caps.
+"""Corpus-curation operators: semantic dedup (SemDeDup),
+substring-span dedup (Lee et al. 2022 style), a hashed linear quality
+classifier (fastText-shaped), per-domain document caps and DSIR
+importance weights. The family's scalar rules (quality score, content
+hash, doc-id split) live in llm/curation.py.
 
 Reference has no analogue (its only data operators are S1-S6/D1-D7,
 `mr_tasks.h:43-121` / `worker.h:73-160`); these extend the [EXT]
@@ -741,57 +742,13 @@ def domain_cap_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DSIR_TARGET = "src1"
 
 
-def _dsir_oracle_sql(table: str = "documents") -> str:
-    """The DSIR scoring chain over an arbitrary (doc_id, source, text)
-    relation — `documents` for the standalone entry, the curated
-    survivor set for corpus_curation_pipeline_v3."""
-    return f"""
-    WITH toks AS (
-      SELECT doc_id, source, unnest({TOKS_DUCK}) AS token FROM {table}
-    ), feats AS (
-      SELECT doc_id, source,
-             {hash60_duck("token")} % {_CLS_BUCKETS} AS bucket
-      FROM toks
-    ), raw AS (
-      SELECT bucket, COUNT(*) AS cr FROM feats GROUP BY bucket
-    ), tgt AS (
-      SELECT bucket, COUNT(*) AS ct FROM feats
-      WHERE source = '{_DSIR_TARGET}' GROUP BY bucket
-    ), nt AS (SELECT COUNT(*) AS n FROM feats WHERE source = '{_DSIR_TARGET}'),
-    nr AS (SELECT COUNT(*) AS n FROM feats),
-    lr AS (
-      SELECT r.bucket,
-             ROUND(ln(COALESCE(t.ct, 0) + 1) - ln(nt.n + {_CLS_BUCKETS})
-                   - ln(r.cr + 1) + ln(nr.n + {_CLS_BUCKETS}), 6) AS lnr
-      FROM raw r LEFT JOIN tgt t USING (bucket) CROSS JOIN nt CROSS JOIN nr
-    ), scored AS (
-      SELECT f.doc_id, CAST(lr.lnr AS DECIMAL(28,9)) AS lnr
-      FROM feats f JOIN lr USING (bucket)
-    ), agg AS (
-      SELECT doc_id, COUNT(*) AS n_toks,
-             ROUND(CAST(SUM(lnr) AS DOUBLE), 6) AS log_weight
-      FROM scored GROUP BY doc_id
-    )
-    SELECT d.doc_id,
-           CAST(COALESCE(a.n_toks, 0) AS BIGINT) AS n_toks,
-           COALESCE(a.log_weight, 0.0) AS log_weight,
-           COALESCE(a.log_weight, 0.0) >= 0 AS selected
-    FROM {table} d LEFT JOIN agg a USING (doc_id)
-"""
-
-
-_DSIR_ORACLE = _dsir_oracle_sql()
-
-
 def _dsir_oracle_xt(train_table: str, score_table: str) -> str:
-    """Cross-trained DSIR oracle: raw/target unigram models fit on
-    `train_table`, every `score_table` row scored — the production
-    ingest shape where models are trained once on the existing corpus
-    and each arriving batch is scored against them. Unlike the
-    same-table form, a scored token can hash to a bucket the training
-    corpus never produced, so the log-ratio table is built over the
-    full 0..N-1 bucket spine with COALESCE(0) counts (add-one
-    smoothing keeps every bucket finite)."""
+    """The DSIR oracle: raw/target unigram models fit on `train_table`,
+    every `score_table` row scored (the same relation for
+    dsir_importance_weights and corpus_curation_pipeline_v3). A scored
+    token can hash to a bucket the training rows never produced, so the
+    log-ratio table spans the full 0..N-1 bucket spine with COALESCE(0)
+    counts (add-one smoothing keeps every bucket finite)."""
     return f"""
     WITH t_toks AS (
       SELECT doc_id, source, unnest({TOKS_DUCK}) AS token FROM {train_table}
@@ -892,40 +849,32 @@ def _dsir_scores_xt(train_docs: DataFrame, score_docs: DataFrame) -> DataFrame:
     )
 
 
-@register("dsir_importance_weights", oracle=_DSIR_ORACLE)
+@register("dsir_importance_weights", oracle=_dsir_oracle_xt("documents", "documents"))
 def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR (Xie et al. 2023): per-document log importance weight
     ln p_target(doc) - ln p_raw(doc) under add-one-smoothed hashed
-    unigram models, the standard importance-resampling score for
-    steering a 100 TB raw crawl toward a high-quality seed
-    distribution. `selected` marks docs the target model likes at
-    least as much as the raw model (the deterministic stand-in for
-    the paper's Gumbel-top-k resample).
+    unigram models; `selected` marks docs the target model likes at
+    least as much as the raw one (a deterministic stand-in for the
+    paper's Gumbel-top-k resample). Both bucket tables hold at most
+    _CLS_BUCKETS rows and are broadcast; the one corpus-wide shuffle is
+    the per-doc DECIMAL sum, keyed by doc_id.
 
-    Scale shape: both bucket tables are bounded at _CLS_BUCKETS rows
-    regardless of corpus size — one map-side-partial count pass each,
-    then broadcast; scoring is a broadcast join per token with a
-    DECIMAL map-side-partial sum per doc (one shuffle keyed by
-    doc_id). Per-bucket log-ratios are rounded to 6 decimals BEFORE
-    the decimal sum — coarse enough that a 1-ulp JVM-vs-libm ln()
-    divergence (4 ln calls x 1024 buckets; a 9-decimal grid measured a
-    real flip at sf0.1) sits ~9 orders inside the rounding grid — and
-    the order-independent DECIMAL sum is emitted at the SAME 6-decimal
-    scale (an identity round): a COARSER final round would land on
-    exact .5 half-cases of the decimal grid, which Spark (BigDecimal
-    HALF_UP on the decimal string) and DuckDB (binary-double rounding)
-    break differently — measured as 42 one-ulp-of-grid mismatches at
-    sf0.1 before this was pinned."""
+    Per-bucket log-ratios are rounded to 6 decimals before the
+    order-independent DECIMAL sum, and the sum is emitted at that same
+    scale: a 1-ulp JVM-vs-libm ln() difference sits far inside the
+    grid, while a coarser final round lands on exact .5 cases that
+    Spark (HALF_UP on the decimal) and DuckDB (binary double) break
+    differently — 42 one-ulp-of-grid mismatches at sf0.1 before."""
     t = load_tables(spark, sf_dir)
     return _dsir_scores(spread(t["documents"]))
 
 
 def _dsir_scores(docs: DataFrame) -> DataFrame:
-    """The DSIR scoring chain over an arbitrary (doc_id, source, text)
-    frame — raw and target unigram models are trained on THIS corpus,
-    every row of it is scored. corpus_curation_pipeline_v3 feeds the
-    gated+deduped+capped survivor set here (the order Xie et al. run);
-    the standalone entry feeds the whole documents table."""
+    """DSIR over a (doc_id, source, text) frame: the models are fit on
+    `docs` and every row of it is scored — the rows of
+    _dsir_scores_xt(docs, docs), tokenizing `docs` once instead of
+    twice. dsir_importance_weights feeds the documents table,
+    corpus_curation_pipeline_v3 its capped survivors."""
     feats = materialize(
         docs.selectExpr("doc_id", "source", f"explode({TOKS}) AS token").selectExpr(
             "doc_id",

@@ -21,6 +21,14 @@ from pyspark.sql import functions as F
 
 from mapreducecore_spark.catalog import load_tables
 from mapreducecore_spark.llm import minhash
+from mapreducecore_spark.llm.curation import (
+    NORM_HASH,
+    NORM_HASH_DUCK,
+    QUALITY_DUCK,
+    n_stop,
+    n_stop_duck,
+    quality,
+)
 from mapreducecore_spark.llm.minhash import (
     MAX_BUCKET,
     SEEDS,
@@ -58,8 +66,8 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_exact_normalized",
-    oracle="""
-    SELECT md5(trim(regexp_replace(lower(text), '[ \t\n\r]+', ' ', 'g'))) AS norm_hash,
+    oracle=f"""
+    SELECT {NORM_HASH_DUCK} AS norm_hash,
            MIN(doc_id) AS keeper_doc_id,
            COUNT(*) AS n_copies
     FROM documents
@@ -67,12 +75,11 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup after lowercase + whitespace normalization."""
+    """Exact dedup on the normalized content hash (llm/curation.py)."""
     t = load_tables(spark, sf_dir)
-    norm = F.trim(F.regexp_replace(F.lower("text"), "[ \t\n\r]+", " "))
     return (
         spread(t["documents"])
-        .groupBy(F.md5(norm).alias("norm_hash"))
+        .groupBy(F.expr(NORM_HASH).alias("norm_hash"))
         .agg(F.min("doc_id").alias("keeper_doc_id"), F.count("*").alias("n_copies"))
     )
 
@@ -1155,18 +1162,13 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------- text analysis
 
-_STOPWORDS = ("the", "a", "of", "and", "to")
-_SW_SQL = ", ".join(f"'{w}'" for w in _STOPWORDS)
-
-
 @register(
     "text_stats",
     oracle=f"""
     SELECT doc_id,
            CAST(length(text) AS INT) AS n_chars_calc,
            CAST(len({TOKS_DUCK}) AS INT) AS n_tokens,
-           CAST(len(list_filter({TOKS_DUCK},
-                x -> list_contains([{_SW_SQL}], x))) AS INT) AS n_stopwords,
+           CAST({n_stop_duck(TOKS_DUCK)} AS INT) AS n_stopwords,
            CAST(len(regexp_extract_all(text, '[^A-Za-z0-9_ ]')) AS INT) AS n_punct
     FROM documents
     """,
@@ -1174,12 +1176,11 @@ _SW_SQL = ", ".join(f"'{w}'" for w in _STOPWORDS)
 def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document stats: chars, strtok tokens, stopword hits, punct."""
     t = load_tables(spark, sf_dir)
-    sw_arr = "array(" + _SW_SQL + ")"
     return t["documents"].selectExpr(
         "doc_id",
         "length(text) AS n_chars_calc",
         f"size({TOKS}) AS n_tokens",
-        f"size(filter({TOKS}, x -> array_contains({sw_arr}, x))) AS n_stopwords",
+        f"{n_stop(TOKS)} AS n_stopwords",
         "size(regexp_extract_all(text, '[^A-Za-z0-9_ ]', 0)) AS n_punct",
     )
 
@@ -1190,35 +1191,20 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH s AS (
       SELECT doc_id,
              CAST(len({TOKS_DUCK}) AS INT) AS n_tokens,
-             CAST(len(list_filter({TOKS_DUCK},
-                  x -> list_contains([{_SW_SQL}], x))) AS INT) AS n_stop
+             CAST({n_stop_duck(TOKS_DUCK)} AS INT) AS n_stop
       FROM documents
     )
-    SELECT doc_id,
-           ROUND(LEAST(CAST(n_tokens AS DOUBLE) / 50.0, 1.0)
-                 * (1.0 - 0.5 * CAST(n_stop AS DOUBLE) / GREATEST(n_tokens, 1)), 6)
-             AS quality
+    SELECT doc_id, {quality("n_tokens", "n_stop")} AS quality
     FROM s
     """,
 )
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic heuristic quality score from length + stopword ratio."""
+    """The heuristic quality score (llm/curation.py) of every document."""
     t = load_tables(spark, sf_dir)
-    sw_arr = "array(" + _SW_SQL + ")"
     s = t["documents"].selectExpr(
-        "doc_id",
-        f"size({TOKS}) AS n_tokens",
-        f"size(filter({TOKS}, x -> array_contains({sw_arr}, x))) AS n_stop",
+        "doc_id", f"size({TOKS}) AS n_tokens", f"{n_stop(TOKS)} AS n_stop"
     )
-    quality = F.round(
-        F.least(F.col("n_tokens").cast("double") / 50.0, F.lit(1.0))
-        * (
-            1.0
-            - 0.5 * F.col("n_stop").cast("double") / F.greatest(F.col("n_tokens"), F.lit(1))
-        ),
-        6,
-    )
-    return s.select("doc_id", quality.alias("quality"))
+    return s.selectExpr("doc_id", f"{quality('n_tokens', 'n_stop')} AS quality")
 
 
 _LANG_SETS = {
@@ -1970,14 +1956,7 @@ _INVERT = 1000000000000000000
 @register(
     "dedup_keep_best_quality",
     oracle=f"""
-    WITH q AS (
-      SELECT doc_id,
-             ROUND(LEAST(CAST(len({TOKS_DUCK}) AS DOUBLE) / 50.0, 1.0)
-                   * (1.0 - 0.5 * CAST(len(list_filter({TOKS_DUCK},
-                        x -> list_contains([{_SW_SQL}], x))) AS DOUBLE)
-                     / GREATEST(len({TOKS_DUCK}), 1)), 6) AS quality
-      FROM documents
-    )
+    WITH q AS (SELECT doc_id, {QUALITY_DUCK} AS quality FROM documents)
     SELECT md5(d.text) AS text_hash,
            count(*) AS n_copies,
            max_by(d.doc_id, printf('{_QUALITY_KEY_FMT}', q.quality,
@@ -2026,14 +2005,7 @@ def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT e.v, r.label FROM reach r JOIN edges e ON e.u = r.node
     ),
     comp AS (SELECT node, MIN(label) AS component FROM reach GROUP BY node),
-    q AS (
-      SELECT doc_id,
-             ROUND(LEAST(CAST(len({TOKS_DUCK}) AS DOUBLE) / 50.0, 1.0)
-                   * (1.0 - 0.5 * CAST(len(list_filter({TOKS_DUCK},
-                        x -> list_contains([{_SW_SQL}], x))) AS DOUBLE)
-                     / GREATEST(len({TOKS_DUCK}), 1)), 6) AS quality
-      FROM documents
-    )
+    q AS (SELECT doc_id, {QUALITY_DUCK} AS quality FROM documents)
     SELECT c.component,
            count(*) AS cluster_size,
            max_by(c.node, printf('{_QUALITY_KEY_FMT}', q.quality,
@@ -2150,8 +2122,7 @@ _GOPHER_ORACLE = f"""
                AS BIGINT) AS n_tok_chars,
              len(list_filter(toks, x -> regexp_matches(x, '[A-Za-z]')))
                AS n_alpha,
-             len(list_filter(toks, x -> list_contains([{{SW}}], x)))
-               AS n_stop
+             {n_stop_duck("toks")} AS n_stop
       FROM s
     )
     SELECT doc_id,
@@ -2173,7 +2144,7 @@ _GOPHER_ORACLE = f"""
 
 @register(
     "quality_gopher_rules",
-    oracle=_GOPHER_ORACLE.replace("{SW}", _SW_SQL),
+    oracle=_GOPHER_ORACLE,
 )
 def quality_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style rule filter (Rae et al. 2021's repetition-free
@@ -2182,13 +2153,12 @@ def quality_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     stopword floor -> one boolean keep flag per document. All
     higher-order array functions, JVM-side, single scan, no shuffle."""
     t = load_tables(spark, sf_dir)
-    sw_arr = "array(" + _SW_SQL + ")"
     m = t["documents"].selectExpr(
         "doc_id",
         f"size({TOKS}) AS n_words",
         f"aggregate({TOKS}, 0L, (acc, x) -> acc + length(x)) AS n_tok_chars",
         f"size(filter({TOKS}, x -> x rlike '[A-Za-z]')) AS n_alpha",
-        f"size(filter({TOKS}, x -> array_contains({sw_arr}, x))) AS n_stop",
+        f"{n_stop(TOKS)} AS n_stop",
     )
     mwl = F.col("n_tok_chars").cast("double") / F.greatest("n_words", F.lit(1))
     alpha = F.col("n_alpha").cast("double") / F.greatest("n_words", F.lit(1))

@@ -25,6 +25,16 @@ from pyspark.sql import functions as F
 
 from mapreducecore_spark.catalog import load_tables
 from mapreducecore_spark.llm import minhash
+from mapreducecore_spark.llm.curation import (
+    COIN,
+    COIN_DUCK,
+    GATE,
+    NORM_HASH,
+    NORM_HASH_DUCK,
+    QUALITY,
+    QUALITY_DUCK,
+    split_case,
+)
 from mapreducecore_spark.llm.minhash import (
     MAX_BUCKET,
     TOKS,
@@ -47,6 +57,7 @@ from mapreducecore_spark.llm.similarity import (
 from mapreducecore_spark.operators.topk import top_k_per_group
 from mapreducecore_spark.queries import register
 from mapreducecore_spark.queries._util import expanding, materialize, spread
+from mapreducecore_spark.queries.llm import _TOP_SIMS_DUCK, _top_sims
 
 
 # ------------------------------------------------- decontamination
@@ -510,13 +521,12 @@ def basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sample_weighted_by_source",
-    oracle="""
+    oracle=f"""
     WITH w AS (
       SELECT doc_id, source,
              (COALESCE(TRY_CAST(regexp_extract(source, '([0-9]+)', 1) AS INT), 0)
                 % 10 + 1) / 10.0 AS keep_w,
-             CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-               / 4294967296.0 AS u
+             {COIN_DUCK} AS u
       FROM documents
     )
     SELECT doc_id, source, ROUND(keep_w, 6) AS keep_w
@@ -526,8 +536,9 @@ def basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sample_weighted_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source weighted sampling (the source-mixing step of a
     training-data pipeline): keep probability comes from the source's
-    weight, the coin flip is a hash of the doc id — reproducible across
-    runs and engines, pure map-side, no rand() seed coordination.
+    weight, the coin flip is the doc-id coin (llm/curation.py) —
+    reproducible across runs and engines, pure map-side, no rand()
+    seed coordination.
 
     Digit-less source names weigh in at 0 (keep_w 0.1) via try_cast:
     a plain CAST of regexp_extract's empty-string miss throws under
@@ -542,17 +553,9 @@ def sample_weighted_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         % 10
         + 1
     ) / 10.0
-    u = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast(
-        "bigint"
-    ) / F.lit(4294967296.0)
     return (
         t["documents"]
-        .select(
-            "doc_id",
-            "source",
-            keep_w.alias("keep_w"),
-            u.alias("u"),
-        )
+        .select("doc_id", "source", keep_w.alias("keep_w"), F.expr(COIN).alias("u"))
         .filter(F.col("u") < F.col("keep_w"))
         .select("doc_id", "source", F.round("keep_w", 6).alias("keep_w"))
     )
@@ -806,33 +809,19 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "split_train_val_test",
-    oracle="""
-    WITH u AS (
-      SELECT doc_id, lang,
-             CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-               / 4294967296.0 AS u
-      FROM documents
-    )
-    SELECT doc_id, lang,
-           CASE WHEN u < 0.8 THEN 'train'
-                WHEN u < 0.9 THEN 'val'
-                ELSE 'test' END AS split
-    FROM u
+    oracle=f"""
+    SELECT doc_id, lang, {split_case("u")} AS split
+    FROM (SELECT doc_id, lang, {COIN_DUCK} AS u FROM documents)
     """,
 )
 def split_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 80/10/10 split by hashing the doc id — stable
-    under reruns, engine-independent, and membership is decidable for
-    one doc without seeing the corpus (the property that matters when
-    the corpus is 100 TB and re-splits must not leak val into train)."""
+    """Deterministic 80/10/10 split on the doc-id coin (llm/curation.py)
+    — stable under reruns, engine-independent, and membership is
+    decidable for one doc without seeing the corpus (re-splits never
+    leak val into train)."""
     t = load_tables(spark, sf_dir)
-    u = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast(
-        "bigint"
-    ) / F.lit(4294967296.0)
     return t["documents"].select(
-        "doc_id",
-        "lang",
-        F.when(u < 0.8, "train").when(u < 0.9, "val").otherwise("test").alias("split"),
+        "doc_id", "lang", F.expr(split_case(COIN)).alias("split")
     )
 
 
@@ -1013,74 +1002,49 @@ def pack_sequences_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------- end-to-end corpus curation
 
-from mapreducecore_spark.queries.llm import _SW_SQL as _SW  # noqa: E402
-from mapreducecore_spark.queries.llm import _TOP_SIMS_DUCK, _top_sims  # noqa: E402
-
-_CURATION_ORACLE = f"""
-    WITH q AS (
-      SELECT doc_id, lang, source, text,
-             ROUND(LEAST(CAST(len({TOKS_DUCK}) AS DOUBLE) / 50.0, 1.0)
-                   * (1.0 - 0.5 * CAST(len(list_filter({TOKS_DUCK},
-                        x -> list_contains([{_SW}], x))) AS DOUBLE)
-                     / GREATEST(len({TOKS_DUCK}), 1)), 6) AS quality
-      FROM documents
-    ), filtered AS (
-      SELECT * FROM q WHERE quality >= 0.3
-    ), keepers AS (
-      SELECT md5(trim(regexp_replace(lower(text), '[ \t\n\r]+', ' ', 'g'))) AS h,
-             MIN(doc_id) AS doc_id
-      FROM filtered GROUP BY 1
-    ), kept AS (
-      SELECT f.doc_id, f.lang, f.quality FROM filtered f
-      JOIN keepers k ON k.doc_id = f.doc_id
-    )
-    SELECT doc_id, lang, quality,
-           CASE WHEN u < 0.8 THEN 'train' WHEN u < 0.9 THEN 'val'
-                ELSE 'test' END AS split
-    FROM (
-      SELECT *,
-             CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-               / 4294967296.0 AS u
-      FROM kept
-    )
-"""
-
-
-@register("corpus_curation_pipeline", oracle=_CURATION_ORACLE)
-def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The north-star composition in one plan: quality-score every doc
-    (map-side), drop low-quality, keep the lowest-id doc per normalized
-    content hash (one shuffle on the hash), assign the reproducible
-    train/val/test split (map-side) — crawl to training-ready corpus
-    with exactly ONE wide exchange. Each stage is individually
-    oracle-checked elsewhere; this pins their composition."""
+def _gate_dedup(spark: SparkSession, sf_dir: str, key: str) -> DataFrame:
+    """(doc_id, `key`, text, quality, h) of the documents that pass the
+    quality gate and hold the lowest doc_id of their normalized content
+    hash h (llm/curation.py): one wide exchange, on h."""
     t = load_tables(spark, sf_dir)
-    sw_arr = "array(" + _SW + ")"
-    q = spread(t["documents"]).selectExpr(
-        "doc_id",
-        "lang",
-        "text",
-        f"""ROUND(LEAST(CAST(size({TOKS}) AS DOUBLE) / 50.0, 1.0)
-             * (1.0 - 0.5 * CAST(size(filter({TOKS},
-                  x -> array_contains({sw_arr}, x))) AS DOUBLE)
-               / GREATEST(size({TOKS}), 1)), 6) AS quality""",
-    )
+    q = spread(t["documents"]).selectExpr("doc_id", key, "text", f"{QUALITY} AS quality")
     filtered = materialize(
-        q.filter("quality >= 0.3").withColumn(
-            "h", F.md5(F.trim(F.regexp_replace(F.lower("text"), "[ \t\n\r]+", " ")))
-        ),
+        q.filter(GATE).withColumn("h", F.expr(NORM_HASH)),
         big=True,  # survivors carry text: corpus-sized
     )
     keepers = filtered.groupBy("h").agg(F.min("doc_id").alias("doc_id"))
-    kept = filtered.join(keepers.select("doc_id"), "doc_id", "left_semi")
-    u = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast(
-        "bigint"
-    ) / F.lit(4294967296.0)
+    return filtered.join(keepers.select("doc_id"), "doc_id", "left_semi")
+
+
+def _gate_dedup_duck(key: str) -> str:
+    """DuckDB side of _gate_dedup: CTEs ending in `kept`."""
+    return f"""q AS (
+      SELECT doc_id, {key}, text, {QUALITY_DUCK} AS quality FROM documents
+    ), filtered AS (
+      SELECT * FROM q WHERE {GATE}
+    ), keepers AS (
+      SELECT {NORM_HASH_DUCK} AS h, MIN(doc_id) AS doc_id
+      FROM filtered GROUP BY 1
+    ), kept AS (
+      SELECT f.* FROM filtered f JOIN keepers k ON k.doc_id = f.doc_id
+    )"""
+
+
+@register(
+    "corpus_curation_pipeline",
+    oracle=f"""
+    WITH {_gate_dedup_duck("lang")}
+    SELECT doc_id, lang, quality, {split_case("u")} AS split
+    FROM (SELECT *, {COIN_DUCK} AS u FROM kept)
+""",
+)
+def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quality gate -> normalized exact dedup -> doc-id split in one
+    plan, with ONE wide exchange (the content-hash keeper). Each stage
+    is oracle-checked alone elsewhere; this pins their composition."""
+    kept = _gate_dedup(spark, sf_dir, "lang")
     return kept.select(
-        "doc_id",
-        "lang",
-        "quality",
-        F.when(u < 0.8, "train").when(u < 0.9, "val").otherwise("test").alias("split"),
+        "doc_id", "lang", "quality", F.expr(split_case(COIN)).alias("split")
     )
 
 
@@ -1519,34 +1483,32 @@ def quality_perplexity_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------- full curation composition v2 (round 4)
+# ------------------------------------- curation compositions v2, v3
 
-def _gate_dedup_cap_duck(with_text: bool) -> str:
-    """Shared DuckDB CTE chain for the v2/v3 pipelines' first three
-    stages: quality gate -> normalized exact dedup -> per-domain cap.
-    v3 carries text through so DSIR can train on the survivors."""
+def _gate_dedup_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, source, quality, text, rank): _gate_dedup's survivors,
+    each source capped at its _DOMAIN_CAP best by (quality DESC,
+    doc_id). The rank <= cap filter rides WindowGroupLimit's partial
+    top-k below the exchange."""
+    from pyspark.sql import Window
+
     from mapreducecore_spark.queries.curation import _DOMAIN_CAP
 
-    text_col = ", text" if with_text else ""
-    return f"""q AS (
-      SELECT doc_id, source, text,
-             ROUND(LEAST(CAST(len({TOKS_DUCK}) AS DOUBLE) / 50.0, 1.0)
-                   * (1.0 - 0.5 * CAST(len(list_filter({TOKS_DUCK},
-                        x -> list_contains([{_SW}], x))) AS DOUBLE)
-                     / GREATEST(len({TOKS_DUCK}), 1)), 6) AS quality
-      FROM documents
-    ), filtered AS (
-      SELECT * FROM q WHERE quality >= 0.3
-    ), keepers AS (
-      SELECT md5(trim(regexp_replace(lower(text), '[ \t\n\r]+', ' ', 'g'))) AS h,
-             MIN(doc_id) AS doc_id
-      FROM filtered GROUP BY 1
-    ), kept AS (
-      SELECT f.doc_id, f.source, f.quality{text_col.replace('text', 'f.text')}
-      FROM filtered f
-      JOIN keepers k ON k.doc_id = f.doc_id
-    ), capped AS (
-      SELECT doc_id, source, quality{text_col}, rank FROM (
+    w_cap = Window.partitionBy("source").orderBy(F.col("quality").desc(), "doc_id")
+    return (
+        _gate_dedup(spark, sf_dir, "source")
+        .select("doc_id", "source", "quality", "text")
+        .withColumn("rank", F.row_number().over(w_cap))
+        .filter(F.col("rank") <= _DOMAIN_CAP)
+    )
+
+
+def _gate_dedup_cap_duck() -> str:
+    """DuckDB side of _gate_dedup_cap: CTEs ending in `capped`."""
+    from mapreducecore_spark.queries.curation import _DOMAIN_CAP
+
+    return f"""{_gate_dedup_duck("source")}, capped AS (
+      SELECT doc_id, source, quality, text, rank FROM (
         SELECT *,
                ROW_NUMBER() OVER (PARTITION BY source
                                   ORDER BY quality DESC, doc_id) AS rank
@@ -1555,204 +1517,9 @@ def _gate_dedup_cap_duck(with_text: bool) -> str:
     )"""
 
 
-_SPLIT_DUCK = """
-      SELECT *,
-             CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-               / 4294967296.0 AS u
-      FROM capped"""
-
-
-def _curation_v2_oracle() -> str:
-    from mapreducecore_spark.queries.curation import _DOMAIN_CAP, _DSIR_ORACLE
-
-    return f"""
-    WITH q AS (
-      SELECT doc_id, source, text,
-             ROUND(LEAST(CAST(len({TOKS_DUCK}) AS DOUBLE) / 50.0, 1.0)
-                   * (1.0 - 0.5 * CAST(len(list_filter({TOKS_DUCK},
-                        x -> list_contains([{_SW}], x))) AS DOUBLE)
-                     / GREATEST(len({TOKS_DUCK}), 1)), 6) AS quality
-      FROM documents
-    ), filtered AS (
-      SELECT * FROM q WHERE quality >= 0.3
-    ), keepers AS (
-      SELECT md5(trim(regexp_replace(lower(text), '[ \t\n\r]+', ' ', 'g'))) AS h,
-             MIN(doc_id) AS doc_id
-      FROM filtered GROUP BY 1
-    ), kept AS (
-      SELECT f.doc_id, f.source, f.quality FROM filtered f
-      JOIN keepers k ON k.doc_id = f.doc_id
-    ), capped AS (
-      SELECT doc_id, source, quality, rank FROM (
-        SELECT doc_id, source, quality,
-               ROW_NUMBER() OVER (PARTITION BY source
-                                  ORDER BY quality DESC, doc_id) AS rank
-        FROM kept)
-      WHERE rank <= {_DOMAIN_CAP}
-    ), dsir AS (
-      SELECT * FROM ({_DSIR_ORACLE})
-    )
-    SELECT c.doc_id, c.source, c.quality, c.rank, d.log_weight,
-           CASE WHEN u < 0.8 THEN 'train' WHEN u < 0.9 THEN 'val'
-                ELSE 'test' END AS split
-    FROM (
-      SELECT *,
-             CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-               / 4294967296.0 AS u
-      FROM capped) c
-    JOIN dsir d ON d.doc_id = c.doc_id
-    WHERE d.selected
-"""
-
-
-@register("corpus_curation_pipeline_v2", oracle=_curation_v2_oracle())
-def corpus_curation_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FULL round-4 curation stack composed end-to-end: quality
-    gate (map-side heuristics) -> normalized exact dedup (one shuffle
-    on the content hash, keep lowest doc_id) -> per-domain cap (top-N
-    per source by quality; the rank <= cap filter rides
-    WindowGroupLimit's partial top-k below the exchange) -> DSIR
-    importance selection (corpus-level hashed-unigram models, bounded
-    bucket tables broadcast) -> reproducible train/val/test split
-    (map-side md5 arithmetic). Every stage is individually
-    oracle-checked elsewhere (corpus_curation_pipeline, dedup_exact_
-    normalized, domain_cap_kept, dsir_importance_weights,
-    split_train_val_test); this entry pins their COMPOSITION — the
-    crawl-to-training-mix pipeline a 100 TB run executes as one job.
-
-    Scale shape: two corpus-wide shuffles total (content-hash keeper,
-    DSIR per-doc sum) plus the capped window's partial top-k and two
-    1024-row broadcast model tables; no stage widens the data beyond
-    the surviving rows."""
-    from pyspark.sql import Window
-
-    from mapreducecore_spark.queries.curation import (
-        _DOMAIN_CAP,
-        dsir_importance_weights,
-    )
-
-    t = load_tables(spark, sf_dir)
-    sw_arr = "array(" + _SW + ")"
-    q = spread(t["documents"]).selectExpr(
-        "doc_id",
-        "source",
-        "text",
-        f"""ROUND(LEAST(CAST(size({TOKS}) AS DOUBLE) / 50.0, 1.0)
-             * (1.0 - 0.5 * CAST(size(filter({TOKS},
-                  x -> array_contains({sw_arr}, x))) AS DOUBLE)
-               / GREATEST(size({TOKS}), 1)), 6) AS quality""",
-    )
-    filtered = materialize(
-        q.filter("quality >= 0.3").withColumn(
-            "h", F.md5(F.trim(F.regexp_replace(F.lower("text"), "[ \t\n\r]+", " ")))
-        ),
-        big=True,  # survivors carry text: corpus-sized
-    )
-    keepers = filtered.groupBy("h").agg(F.min("doc_id").alias("doc_id"))
-    kept = filtered.join(keepers.select("doc_id"), "doc_id", "left_semi")
-    w_cap = Window.partitionBy("source").orderBy(F.col("quality").desc(), "doc_id")
-    capped = (
-        kept.select("doc_id", "source", "quality")
-        .withColumn("rank", F.row_number().over(w_cap))
-        .filter(F.col("rank") <= _DOMAIN_CAP)
-    )
-    dsir = dsir_importance_weights(spark, sf_dir)
-    u = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast(
-        "bigint"
-    ) / F.lit(4294967296.0)
-    return (
-        capped.join(dsir.filter("selected").select("doc_id", "log_weight"), "doc_id")
-        .select(
-            "doc_id",
-            "source",
-            "quality",
-            "rank",
-            "log_weight",
-            F.when(u < 0.8, "train").when(u < 0.9, "val").otherwise("test").alias(
-                "split"
-            ),
-        )
-    )
-
-
-def _gate_dedup_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark side of _gate_dedup_cap_duck: quality gate -> normalized
-    exact dedup -> per-domain cap, with text carried through (v3
-    trains DSIR on these survivors). Same stage logic as v2 inlines —
-    the rank <= cap filter still rides WindowGroupLimit's partial
-    top-k below the exchange."""
-    from pyspark.sql import Window
-
-    from mapreducecore_spark.queries.curation import _DOMAIN_CAP
-
-    t = load_tables(spark, sf_dir)
-    sw_arr = "array(" + _SW + ")"
-    q = spread(t["documents"]).selectExpr(
-        "doc_id",
-        "source",
-        "text",
-        f"""ROUND(LEAST(CAST(size({TOKS}) AS DOUBLE) / 50.0, 1.0)
-             * (1.0 - 0.5 * CAST(size(filter({TOKS},
-                  x -> array_contains({sw_arr}, x))) AS DOUBLE)
-               / GREATEST(size({TOKS}), 1)), 6) AS quality""",
-    )
-    filtered = materialize(
-        q.filter("quality >= 0.3").withColumn(
-            "h", F.md5(F.trim(F.regexp_replace(F.lower("text"), "[ \t\n\r]+", " ")))
-        ),
-        big=True,  # survivors carry text: corpus-sized
-    )
-    keepers = filtered.groupBy("h").agg(F.min("doc_id").alias("doc_id"))
-    kept = filtered.join(keepers.select("doc_id"), "doc_id", "left_semi")
-    w_cap = Window.partitionBy("source").orderBy(F.col("quality").desc(), "doc_id")
-    return (
-        kept.select("doc_id", "source", "quality", "text")
-        .withColumn("rank", F.row_number().over(w_cap))
-        .filter(F.col("rank") <= _DOMAIN_CAP)
-    )
-
-
-def _curation_v3_oracle() -> str:
-    from mapreducecore_spark.queries.curation import _dsir_oracle_sql
-
-    return f"""
-    WITH {_gate_dedup_cap_duck(with_text=True)},
-    dsir AS (
-      SELECT * FROM ({_dsir_oracle_sql("capped")})
-    )
-    SELECT c.doc_id, c.source, c.quality, c.rank, d.log_weight,
-           CASE WHEN u < 0.8 THEN 'train' WHEN u < 0.9 THEN 'val'
-                ELSE 'test' END AS split
-    FROM ({_SPLIT_DUCK}) c
-    JOIN dsir d ON d.doc_id = c.doc_id
-    WHERE d.selected
-"""
-
-
-@register("corpus_curation_pipeline_v3", oracle=_curation_v3_oracle())
-def corpus_curation_pipeline_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Curation composition v3 — v2 with DSIR trained on the SURVIVOR
-    set (VERDICT r4 #5): gate -> normalized dedup -> per-domain cap
-    first, THEN raw/target hashed-unigram models are fit on the
-    gated+deduped+capped survivors and every survivor is scored
-    against them — the order Xie et al. (2023) actually run, where
-    importance resampling sees a corpus already scrubbed of junk and
-    near-copies instead of letting boilerplate mass distort the raw
-    model. This is the pipeline's RECOMMENDED default: v2 (full-corpus
-    models) remains as the one-pass variant for when the gate stages
-    and DSIR must share a single corpus scan.
-
-    Scale shape: identical to v2 — two corpus-wide shuffles plus the
-    capped window's partial top-k — except the DSIR passes now run
-    over the survivor subset (strictly less data), and the two model
-    tables stay bounded at 1024 rows and broadcast."""
-    from mapreducecore_spark.queries.curation import _dsir_scores
-
-    capped = materialize(_gate_dedup_cap(spark, sf_dir))
-    dsir = _dsir_scores(capped.select("doc_id", "source", "text"))
-    u = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast(
-        "bigint"
-    ) / F.lit(4294967296.0)
+def _selected_split(capped: DataFrame, dsir: DataFrame) -> DataFrame:
+    """The `capped` rows that DSIR frame `dsir` selects, with their log
+    weight and doc-id split."""
     return (
         capped.select("doc_id", "source", "quality", "rank")
         .join(dsir.filter("selected").select("doc_id", "log_weight"), "doc_id")
@@ -1762,17 +1529,55 @@ def corpus_curation_pipeline_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
             "quality",
             "rank",
             "log_weight",
-            F.when(u < 0.8, "train").when(u < 0.9, "val").otherwise("test").alias(
-                "split"
-            ),
+            F.expr(split_case(COIN)).alias("split"),
         )
     )
 
 
-# --------------- incremental ingest composition (round 5)
+def _selected_split_duck(train: str) -> str:
+    """DuckDB side of _selected_split over _gate_dedup_cap_duck, with
+    DSIR trained on relation `train` and scoring `capped`."""
+    from mapreducecore_spark.queries.curation import _dsir_oracle_xt
 
-_NORM_HASH_DUCK = "md5(trim(regexp_replace(lower(text), '[ \t\n\r]+', ' ', 'g')))"
+    return f"""
+    WITH {_gate_dedup_cap_duck()},
+    dsir AS (SELECT * FROM ({_dsir_oracle_xt(train, "capped")}))
+    SELECT c.doc_id, c.source, c.quality, c.rank, d.log_weight,
+           {split_case("u")} AS split
+    FROM (SELECT *, {COIN_DUCK} AS u FROM capped) c
+    JOIN dsir d ON d.doc_id = c.doc_id
+    WHERE d.selected
+"""
 
+
+@register("corpus_curation_pipeline_v2", oracle=_selected_split_duck("documents"))
+def corpus_curation_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gate -> normalized dedup -> per-domain cap (_gate_dedup_cap) ->
+    DSIR selection with models fit on the whole corpus -> doc-id split.
+    The one-pass variant: the gate stages and DSIR share one corpus
+    scan. Two corpus-wide shuffles (content-hash keeper, DSIR per-doc
+    sum), the cap's partial top-k and two 1024-row broadcast model
+    tables; no stage widens the data beyond the surviving rows."""
+    from mapreducecore_spark.queries.curation import dsir_importance_weights
+
+    return _selected_split(
+        _gate_dedup_cap(spark, sf_dir), dsir_importance_weights(spark, sf_dir)
+    )
+
+
+@register("corpus_curation_pipeline_v3", oracle=_selected_split_duck("capped"))
+def corpus_curation_pipeline_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """v2 with DSIR fit on the gated, deduped and capped survivors, the
+    order Xie et al. (2023) run: junk and near-copies no longer skew
+    the raw model. The recommended default. Same shuffles as v2; the
+    DSIR passes read only the survivors."""
+    from mapreducecore_spark.queries.curation import _dsir_scores
+
+    capped = materialize(_gate_dedup_cap(spark, sf_dir))
+    return _selected_split(capped, _dsir_scores(capped.select("doc_id", "source", "text")))
+
+
+# ------------------------------------ incremental ingest composition
 
 def _ingest_incr_oracle() -> str:
     from mapreducecore_spark.queries.curation import _dsir_oracle_xt
@@ -1797,24 +1602,18 @@ def _ingest_incr_oracle() -> str:
     nd AS (SELECT * FROM documents WHERE doc_id % 10 = 0),
     od AS (SELECT * FROM documents WHERE doc_id % 10 <> 0),
     newq AS (
-      SELECT doc_id,
-             ROUND(LEAST(CAST(len({TOKS_DUCK}) AS DOUBLE) / 50.0, 1.0)
-                   * (1.0 - 0.5 * CAST(len(list_filter({TOKS_DUCK},
-                        x -> list_contains([{_SW}], x))) AS DOUBLE)
-                     / GREATEST(len({TOKS_DUCK}), 1)), 6) AS quality,
-             {_NORM_HASH_DUCK} AS h
-      FROM nd
+      SELECT doc_id, {QUALITY_DUCK} AS quality, {NORM_HASH_DUCK} AS h FROM nd
     ),
-    oldh AS (SELECT DISTINCT {_NORM_HASH_DUCK} AS h FROM od),
+    oldh AS (SELECT DISTINCT {NORM_HASH_DUCK} AS h FROM od),
     minh AS (SELECT h, MIN(doc_id) AS keeper FROM newq GROUP BY h),
     dsir AS (SELECT * FROM ({_dsir_oracle_xt("od", "nd")}))
     SELECT n.doc_id,
-           n.quality >= 0.3 AS gate_pass,
+           {GATE} AS gate_pass,
            (oh.h IS NOT NULL OR n.doc_id > m.keeper) AS exact_dup,
            (nr.doc_id IS NOT NULL) AS near_dup,
            d.selected AS selected,
            d.log_weight,
-           (n.quality >= 0.3
+           ({GATE}
             AND NOT (oh.h IS NOT NULL OR n.doc_id > m.keeper)
             AND nr.doc_id IS NULL AND d.selected) AS accepted
     FROM newq n
@@ -1827,28 +1626,18 @@ def _ingest_incr_oracle() -> str:
 
 @register("corpus_ingest_incremental", oracle=_ingest_incr_oracle())
 def corpus_ingest_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PER-BATCH INGEST job — the incremental counterpart of
-    corpus_curation_pipeline_v3, composing the round-4/5 incremental
-    machinery into the job a 100 TB pipeline runs on every arriving
-    crawl batch (new batch = doc_id % 10 == 0, existing corpus = the
-    rest): stateless quality gate -> exact dedup against the existing
-    corpus's normalized-hash set AND within-batch (min-doc_id keeper)
-    -> near-dedup against the LSH band index (dedup_incremental_
-    minhash's pair set; a new doc is a near-dup if it matches any
-    existing doc or a smaller-id batch doc) -> DSIR scoring under
-    models PRE-TRAINED on the existing corpus (_dsir_scores_xt:
-    production trains once, scores every batch; full-spine log-ratio
-    table handles tokens the training corpus never saw). Output is the
-    AUDIT form: one row per new doc with each stage's flag computed
-    independently plus the conjunction `accepted` — production
-    short-circuits (each stage filters before the next pays), audit
-    keeps the full disposition for acceptance-rate monitoring.
+    """The per-batch ingest audit: the new batch is doc_id % 10 == 0,
+    the existing corpus the rest. One row per new doc with each stage's
+    flag computed on its own — quality gate, exact dup (its normalized
+    hash is in the corpus, or a smaller batch doc has it), near dup
+    (dedup_incremental_minhash pairs it with a corpus doc or a smaller
+    batch doc), DSIR `selected` under models fit on the corpus
+    (_dsir_scores_xt) — and their conjunction `accepted`.
 
-    Scale shape: every stage is the measured-incremental shape — gate
-    is row-local; the old-hash anti-set is a 16-byte-key semi/left
-    join; near-dup pairs are batch-scoped (BASELINE.md round-5
-    batch-size sweep: per-run cost tracks batch size, not corpus
-    size); DSIR model tables are 1024-row broadcasts."""
+    Every stage scales with the batch, not the corpus: the gate is
+    row-local, the old-hash set a 16-byte-key left join, the model
+    tables 1024-row broadcasts, and near-dup pairs are batch-scoped
+    (BASELINE.md "Incremental dedup batch-size sensitivity")."""
     from mapreducecore_spark.queries.curation import _dsir_scores_xt
     from mapreducecore_spark.queries.llm import dedup_incremental_minhash
 
@@ -1856,19 +1645,10 @@ def corpus_ingest_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(t["documents"])
     new = docs.filter(F.col("doc_id") % 10 == 0)
     old = docs.filter(F.col("doc_id") % 10 != 0)
-    sw_arr = "array(" + _SW + ")"
-    norm_h = F.md5(F.trim(F.regexp_replace(F.lower("text"), "[ \t\n\r]+", " ")))
     newq = materialize(
-        new.selectExpr(
-            "doc_id",
-            "text",
-            f"""ROUND(LEAST(CAST(size({TOKS}) AS DOUBLE) / 50.0, 1.0)
-                 * (1.0 - 0.5 * CAST(size(filter({TOKS},
-                      x -> array_contains({sw_arr}, x))) AS DOUBLE)
-                   / GREATEST(size({TOKS}), 1)), 6) AS quality""",
-        ).withColumn("h", norm_h).drop("text")
+        new.selectExpr("doc_id", f"{QUALITY} AS quality", f"{NORM_HASH} AS h")
     )
-    oldh = old.select(norm_h.alias("h")).distinct().withColumn(
+    oldh = old.selectExpr(f"{NORM_HASH} AS h").distinct().withColumn(
         "in_old", F.lit(True)
     )
     minh = newq.groupBy("h").agg(F.min("doc_id").alias("keeper"))
@@ -1888,7 +1668,7 @@ def corpus_ingest_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(near, "doc_id", "left")
         .join(dsir.select("doc_id", "selected", "log_weight"), "doc_id")
     )
-    gate = F.col("quality") >= 0.3
+    gate = F.expr(GATE)
     exact = F.coalesce(F.col("in_old"), F.lit(False)) | (
         F.col("doc_id") > F.col("keeper")
     )

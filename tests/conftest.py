@@ -67,3 +67,58 @@ def mr_corpus(tmp_path_factory) -> tuple[list[str], dict[str, int]]:
 
     c = corpus.generate(str(tmp_path_factory.mktemp("mr_corpus")), seed=7, target_mb=0.3)
     return c.paths, c.word_counts
+
+
+def _curation_documents():
+    """120 docs over sources src1..src3 (the DSIR target is src1; each
+    source has its own 40-word vocabulary plus a shared 20-word pool).
+    Every 7th doc has 8 tokens and fails the quality gate (a doc passes
+    at >= 15 tokens that are not stopwords); every 11th is stopword-
+    heavy. Batch docs (doc_id % 10 == 0) include a case/whitespace
+    variant of a corpus doc (20 of 21), a within-batch copy (40 of 30)
+    and a one-token edit of a corpus doc (50 of 51)."""
+    import random
+
+    import pandas as pd
+
+    rng = random.Random(2023)
+    vocab = {
+        s: [f"{stem}{k}" for k in range(40)]
+        for s, stem in (("src1", "river"), ("src2", "stone"), ("src3", "cloud"))
+    }
+    shared = [f"word{k}" for k in range(20)]
+
+    def words(src, n):
+        return " ".join(
+            rng.choice(shared if rng.random() < 0.25 else vocab[src]) for _ in range(n)
+        )
+
+    docs = {}
+    for i in range(120):
+        src = f"src{1 + i % 3}"
+        text = words(src, 8 if i % 7 == 3 else 16 + (i * 5) % 30)
+        if i % 11 == 5:
+            text = " ".join(w + " the of" for w in text.split()[:12])
+        docs[i] = (text, src)
+    docs[20] = ("  " + docs[21][0].upper().replace(" ", " \t\n "), docs[21][1])
+    docs[40] = docs[30]
+    docs[50] = (" ".join(docs[51][0].split()[:-1] + ["stray"]), docs[51][1])
+    df = pd.DataFrame(
+        [(i, t, "en", s, len(t)) for i, (t, s) in sorted(docs.items())],
+        columns=["doc_id", "text", "lang", "source", "n_chars"],
+    )
+    return df.astype({"doc_id": "int64", "n_chars": "int64"})
+
+
+@pytest.fixture(scope="session")
+def curation_dir(sf_dir, tmp_path_factory) -> str:
+    """A tmp sf_dir whose crafted documents table gives every curation
+    composition a non-empty result (the generated test documents
+    leave corpus_curation_pipeline_v2/_v3 empty); other tables are sf_dir's."""
+    import shutil
+
+    root = tmp_path_factory.mktemp("curation_sf")
+    for name in "region nation customer supplier part orders lineitem events embeddings".split():
+        shutil.copy(f"{sf_dir}/{name}.parquet", root / f"{name}.parquet")
+    _curation_documents().to_parquet(root / "documents.parquet", index=False)
+    return str(root)

@@ -16,6 +16,21 @@ _load_all()
 ORACLE_QUERIES = sorted(n for n, s in REGISTRY.items() if s.oracle is not None)
 NO_ORACLE_QUERIES = sorted(n for n, s in REGISTRY.items() if s.oracle is None)
 
+# Oracles that return no rows at the test scale, so the check below
+# compares two empty results. Each names the test that compares the
+# query on a non-empty result, or "open" while it has none (ROADMAP
+# Direction 3). This set may only shrink.
+EMPTY_ORACLES = {
+    "corpus_curation_pipeline_v2": "tests/test_crafted_curation.py",
+    "corpus_curation_pipeline_v3": "tests/test_crafted_curation.py",
+    "join_left_anti": "open",
+    "q20_potential_promotion": "open",
+    "q22_global_sales_opportunity": "open",
+    "q2_min_cost_supplier": "open",
+    "q7_volume_shipping": "open",
+    "subquery_scalar_threshold": "open",
+}
+
 
 def _normalize(rows, colnames):
     """Order-insensitive canonical form: rows as tuples of repr-stable
@@ -50,6 +65,9 @@ def test_query_matches_oracle(name, spark, duck, sf_dir):
     duck_cols = [c for c in rel.columns]
     duck_rows = rel.fetchall()
 
+    assert duck_rows or name in EMPTY_ORACLES, (
+        f"{name}: the oracle returns no rows, so this check compares nothing"
+    )
     assert sorted(spark_cols) == sorted(duck_cols), (
         f"{name}: column mismatch spark={spark_cols} duck={duck_cols}"
     )

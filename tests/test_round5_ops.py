@@ -42,13 +42,12 @@ def test_band_index_build_stats_consistent(spark, sf_dir):
     assert 1 <= row.max_bucket_width <= row.n_index_rows
 
 
-def test_pipeline_v3_dsir_trained_on_survivors(spark, sf_dir):
+def _check_v3_on_survivors(spark, sf_dir):
     """v3 = v2's gate/dedup/cap stages + DSIR models fit on the
-    SURVIVOR set. Checked structurally (robust at sf0.001, where the
-    selected set is legitimately empty): survivor-trained scores must
-    differ from full-corpus-trained scores for some survivor, and v3's
-    output must be exactly the survivor rows whose survivor-trained
-    weight selects them."""
+    SURVIVOR set: survivor-trained scores must differ from
+    full-corpus-trained scores for some survivor, and v3's output must
+    be exactly the survivor rows whose survivor-trained weight selects
+    them. Returns that expected doc_id list."""
     from mapreducecore_spark.catalog import load_tables
     from mapreducecore_spark.queries.curation import _dsir_scores
     from mapreducecore_spark.queries.pipeline import _gate_dedup_cap
@@ -76,6 +75,17 @@ def test_pipeline_v3_dsir_trained_on_survivors(spark, sf_dir):
     got = sorted(r.doc_id for r in v3.select("doc_id").collect())
     assert got == expect
     capped.unpersist()
+    return expect
+
+
+def test_pipeline_v3_dsir_trained_on_survivors(spark, sf_dir):
+    """Structural at the test scale, where the selected set is empty."""
+    _check_v3_on_survivors(spark, sf_dir)
+
+
+def test_pipeline_v3_dsir_trained_on_survivors_crafted(spark, curation_dir):
+    """The same check on the crafted corpus, where v3 selects rows."""
+    assert _check_v3_on_survivors(spark, curation_dir)
 
 
 def test_write_exact_files_boundary_multipartition(spark, tmp_path):

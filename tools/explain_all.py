@@ -59,6 +59,16 @@ SHOWN = [
     "ann_recall_eval",
     "embedding_neardup_pairs",
     "ann_cosine_quantized",
+    # The curation family (llm/curation.py).
+    "text_quality_score",
+    "dedup_exact_normalized",
+    "dedup_keep_best_quality",
+    "split_train_val_test",
+    "sample_weighted_by_source",
+    "corpus_curation_pipeline_v2",
+    "corpus_curation_pipeline_v3",
+    "corpus_ingest_incremental",
+    "dsir_importance_weights",
 ]
 
 
