@@ -11,8 +11,15 @@ Contract, identical on both engines:
   DECIMAL); signature component s is the min over the document's h;
 - SEEDS = 8 components form 4 bands of 2 rows: band b's signature is
   the string mhs[2b] || ':' || mhs[2b+1] (`bands`, `bands_duck`);
-- buckets wider than MAX_BUCKET are guarded by the callers (star edges
-  to the bucket's min doc_id instead of the quadratic clique).
+- a (band_id, sig) bucket has width `bw` and representative `rep`,
+  its min doc_id (`bucket_stats`, `bands_duck(banded=True)`); a
+  document matches every other member of a bucket of width
+  <= MAX_BUCKET but only the `rep` of a wider one (`MATCHABLE`: the
+  match index keeps a wide bucket's `rep` row alone; `match_index`,
+  `matches`, `matches_duck`), so a giant exact-dup cluster yields star
+  edges, not a quadratic clique. `pairs_duck` is every such candidate
+  pair, the oracle of the Spark pair emitter in queries/llm.py (which
+  decides the same rule in-row).
 
 Two Spark signature builders, picked by the call site:
 - `signatures(docs)`: explode + one min() per seed aggregate —
@@ -26,7 +33,7 @@ Two Spark signature builders, picked by the call site:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from mapreducecore_spark.functions.text import SPLIT_REGEX, SPLIT_REGEX_SQL
@@ -48,6 +55,10 @@ P = 2305843009213693951
 # every other member) instead: O(n) edges, identical connected
 # components downstream (llm.py dedup_connected_components).
 MAX_BUCKET = 200
+
+# The star guard as one SQL predicate over bucket-annotated band rows,
+# the same text on both engines: the rows a match index keeps.
+MATCHABLE = f"bw <= {MAX_BUCKET} OR doc_id = rep"
 
 # Tokens as a SQL expression shared by the shingle-based ops.
 # (backslash-escape the single quote for Spark SQL string literals)
@@ -201,3 +212,68 @@ def bands_duck(src: str = "documents", prefix: str = "", banded: bool = False) -
              MIN(doc_id) OVER (PARTITION BY band_id, sig) AS rep
       FROM {p}bands
     )"""
+
+
+def bucket_stats(bands: DataFrame) -> DataFrame:
+    """(doc_id, band_id, sig, bw, rep): band rows annotated with their
+    bucket's width and representative, one window pass keyed on
+    (band_id, sig)."""
+    wb = Window.partitionBy("band_id", "sig")
+    return bands.select(
+        "doc_id",
+        "band_id",
+        "sig",
+        F.count("*").over(wb).alias("bw"),
+        F.min("doc_id").over(wb).alias("rep"),
+    )
+
+
+def match_index(banded: DataFrame) -> DataFrame:
+    """(band_id, sig, match_id): the MATCHABLE rows of a `bucket_stats`
+    frame. A wide bucket contributes one row, so the index holds no
+    duplicate (band_id, sig, match_id)."""
+    return banded.filter(MATCHABLE).select("band_id", "sig", F.col("doc_id").alias("match_id"))
+
+
+def match_index_duck(banded: str) -> str:
+    """DuckDB SELECT of `match_index` over relation `banded`."""
+    return f"SELECT band_id, sig, doc_id AS match_id FROM {banded} WHERE {MATCHABLE}"
+
+
+def matches(new_bands: DataFrame, index: DataFrame) -> DataFrame:
+    """(new_id, *keep, match_id): band rows (doc_id, band_id, sig,
+    *keep) of the documents to check, joined to a match index, self-
+    matches dropped. Not de-duplicated (a pair can share several
+    bands): batch callers distinct(), streams dropDuplicates."""
+    return (
+        new_bands.join(index, ["band_id", "sig"])
+        .filter(F.col("doc_id") != F.col("match_id"))
+        .withColumnRenamed("doc_id", "new_id")
+        .drop("band_id", "sig")
+    )
+
+
+def matches_duck(src: str = "documents", new: str | None = None) -> str:
+    """DuckDB query (new_id, match_id), de-duplicated: the documents of
+    relation `new` (default: `src` itself) against the match index of
+    `src` (a relation, optionally with a WHERE)."""
+    chain = bands_duck(src, banded=True)
+    if new is not None:
+        chain += ", " + bands_duck(new, "n_")
+    return f"""
+    WITH {chain}, idx AS ({match_index_duck("banded")})
+    SELECT DISTINCT n.doc_id AS new_id, i.match_id
+    FROM {"bands" if new is None else "n_bands"} n JOIN idx i USING (band_id, sig)
+    WHERE n.doc_id <> i.match_id
+"""
+
+
+def pairs_duck(src: str = "documents") -> str:
+    """DuckDB query (doc_a, doc_b), doc_a < doc_b: every guarded
+    candidate pair of `src` — each small bucket's clique and each wide
+    bucket's star to its `rep`, de-duplicated across bands."""
+    return f"""
+    SELECT DISTINCT least(new_id, match_id) AS doc_a,
+                    greatest(new_id, match_id) AS doc_b
+    FROM ({matches_duck(src)})
+"""

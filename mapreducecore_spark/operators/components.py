@@ -193,8 +193,8 @@ def connected_components(
         # instead of incidental: the returned plan reads materialized
         # label blocks and provably no longer references the
         # unpersisted edge exchange, so the cache benefit can't
-        # silently disappear into a full recomputation (ADVICE r4).
-        labels = labels.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        # silently disappear into a full recomputation.
+        labels = materialize(labels, big=True)
     finally:
         # The eager checkpoint above guarantees the returned labels no
         # longer reference the cached edge exchange — release the

@@ -22,15 +22,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreducecore_spark.llm import minhash
 from mapreducecore_spark.operators.graph import pagerank, triangle_count
 from mapreducecore_spark.queries import register
-from mapreducecore_spark.queries.llm import _MINHASH_ORACLE, dedup_minhash_lsh
+from mapreducecore_spark.queries.llm import dedup_minhash_lsh
 
 
 @register(
     "graph_triangle_count",
     oracle=f"""
-    WITH p AS ({_MINHASH_ORACLE})
+    WITH p AS ({minhash.pairs_duck()})
     SELECT COUNT(*) AS n_triangles FROM p e1
     JOIN p e2 ON e2.doc_a = e1.doc_a AND e2.doc_b > e1.doc_b
     JOIN p e3 ON e3.doc_a = e1.doc_b AND e3.doc_b = e2.doc_b
@@ -48,7 +49,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "graph_pagerank_step",
     oracle=f"""
-    WITH p AS ({_MINHASH_ORACLE}),
+    WITH p AS ({minhash.pairs_duck()}),
     edges AS (
       SELECT doc_a AS u, doc_b AS v FROM p
       UNION ALL
@@ -96,7 +97,7 @@ def _pr_oracle() -> str:
         prev = f"pr{i-1}"
         steps.append(f"pr{i} AS ({_PR_STEP_DUCK.format(prev=prev)})")
     return f"""
-    WITH p AS ({_MINHASH_ORACLE}),
+    WITH p AS ({minhash.pairs_duck()}),
     edges AS (
       SELECT doc_a AS u, doc_b AS v FROM p
       UNION ALL

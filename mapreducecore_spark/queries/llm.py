@@ -14,7 +14,10 @@ Design rules for 100 TB:
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import contextlib
+import shutil
+import tempfile
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -84,25 +87,7 @@ def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_oracle(src: str = "documents") -> str:
-    return f"""
-    WITH {minhash.bands_duck(src, banded=True)}
-    SELECT DISTINCT doc_a, doc_b FROM (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM banded a JOIN banded b
-        ON a.band_id = b.band_id AND a.sig = b.sig AND a.doc_id < b.doc_id
-      WHERE a.bw <= {MAX_BUCKET}
-      UNION ALL
-      SELECT rep AS doc_a, doc_id AS doc_b FROM banded
-      WHERE bw > {MAX_BUCKET} AND doc_id <> rep
-    )
-"""
-
-
-_MINHASH_ORACLE = _minhash_oracle()
-
-
-@register("dedup_minhash_lsh", oracle=_MINHASH_ORACLE)
+@register("dedup_minhash_lsh", oracle=minhash.pairs_duck())
 @expanding
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + LSH near-dup candidates: 3-token shingles -> 8 md5
@@ -113,8 +98,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Buckets wider than MAX_BUCKET (giant exact-dup clusters)
     emit star edges (bucket representative x member) instead of the
     O(n^2) clique — bounded fan-out, identical connected components;
-    only the explicit pair list differs inside oversized buckets, and
-    the DuckDB oracle mirrors the same rule."""
+    only the explicit pair list differs inside oversized buckets. The
+    oracle is the core's minhash.pairs_duck."""
     t = load_tables(spark, sf_dir)
     docs = spread(t["documents"]).selectExpr("doc_id", f"{TOKS} AS toks")
     return _minhash_band_pairs(docs)
@@ -148,47 +133,9 @@ def _minhash_band_pairs(docs: DataFrame, staged: bool = False) -> DataFrame:
     )
 
 
-def _bucket_stats(bands: DataFrame) -> DataFrame:
-    """Annotate band rows with bucket width + representative via one
-    window pass (shuffle keyed on the same (band_id, sig) the pair
-    joins use)."""
-    wb = Window.partitionBy("band_id", "sig")
-    return bands.select(
-        "doc_id",
-        "band_id",
-        "sig",
-        F.count("*").over(wb).alias("bw"),
-        F.min("doc_id").over(wb).alias("rep"),
-    )
-
-
-def _minhash_banded(docs: DataFrame) -> DataFrame:
-    """(doc_id, band_id, sig, bw, rep): every document's LSH band
-    signatures annotated with bucket width and bucket representative —
-    the materialized index stage both pair generators join against.
-    Materialize: both join branches and the star branch reuse the
-    computed signatures instead of re-running the shingle+minhash
-    stage. big=True: 4 band rows per document makes this frame
-    corpus-sized (60M rows at the fourth decade) — DISK_ONLY per the
-    materialize() protected-storage rule."""
-    return materialize(_bucket_stats(minhash.bands(minhash.signatures(docs))), big=True)
-
-
 _INCR_NEW_MOD = 10  # docs with doc_id % 10 == 0 form the "new batch"
 
-_INCR_MINHASH_ORACLE = f"""
-    WITH {minhash.bands_duck(banded=True)}
-    SELECT DISTINCT new_id, match_id FROM (
-      SELECT n.doc_id AS new_id, b.doc_id AS match_id
-      FROM banded n JOIN banded b
-        ON n.band_id = b.band_id AND n.sig = b.sig AND n.doc_id <> b.doc_id
-      WHERE n.doc_id % {_INCR_NEW_MOD} = 0 AND n.bw <= {MAX_BUCKET}
-      UNION ALL
-      SELECT doc_id AS new_id, rep AS match_id FROM banded
-      WHERE doc_id % {_INCR_NEW_MOD} = 0 AND bw > {MAX_BUCKET}
-        AND doc_id <> rep
-    )
-"""
+_INCR_MINHASH_ORACLE = minhash.matches_duck(new=f"documents WHERE doc_id % {_INCR_NEW_MOD} = 0")
 
 
 @register("dedup_incremental_minhash", oracle=_INCR_MINHASH_ORACLE)
@@ -204,31 +151,42 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     document: output is (new_id, match_id) for every corpus document —
     old or new — sharing a band bucket with the new doc. Existing-vs-
     existing pairs are never generated, so per-batch cost follows the
-    BATCH size times bucket occupancy, not the corpus size. Oversized
-    buckets (> MAX_BUCKET) degrade to matching the bucket
-    representative only — the star guard's incremental form, mirrored
-    in the oracle."""
+    BATCH size times bucket occupancy, not the corpus size. A bucket
+    wider than MAX_BUCKET is matched through its representative only
+    (the core's match index, llm/minhash.py)."""
     t = load_tables(spark, sf_dir)
     docs = spread(t["documents"]).selectExpr("doc_id", f"{TOKS} AS toks")
-    banded = _minhash_banded(docs)
-    new_small = banded.filter(
-        (F.col("doc_id") % _INCR_NEW_MOD == 0)
-        & (F.col("bw") <= MAX_BUCKET)
-    ).select(F.col("doc_id").alias("new_id"), "band_id", "sig")
-    matches = (
-        new_small.join(
-            banded.select(F.col("doc_id").alias("match_id"), "band_id", "sig"),
-            ["band_id", "sig"],
-        )
-        .filter(F.col("new_id") != F.col("match_id"))
-        .select("new_id", "match_id")
+    # Read twice (new side and index). big=True: 4 band rows per
+    # document make this frame corpus-sized — DISK_ONLY per the
+    # materialize() protected-storage rule.
+    banded = materialize(
+        minhash.bucket_stats(minhash.bands(minhash.signatures(docs))), big=True
     )
-    star = banded.filter(
-        (F.col("doc_id") % _INCR_NEW_MOD == 0)
-        & (F.col("bw") > MAX_BUCKET)
-        & (F.col("doc_id") != F.col("rep"))
-    ).select(F.col("doc_id").alias("new_id"), F.col("rep").alias("match_id"))
-    return matches.unionByName(star).distinct()
+    new = banded.filter(F.col("doc_id") % _INCR_NEW_MOD == 0).select(
+        "doc_id", "band_id", "sig"
+    )
+    return minhash.matches(new, minhash.match_index(banded)).distinct()
+
+
+@contextlib.contextmanager
+def _persisted_band_index(
+    spark: SparkSession, sf_dir: str
+) -> Iterator[tuple[DataFrame, DataFrame]]:
+    """Writes the band index (doc_id, band_id, sig) of the existing
+    corpus (doc_id % 10 != 0) to a scratch parquet table and yields
+    (documents, the index read back from the files); the table is
+    deleted on exit, so a frame returned from inside must not read it."""
+    docs = spread(load_tables(spark, sf_dir)["documents"])
+    old_docs = docs.filter(F.col("doc_id") % _INCR_NEW_MOD != 0).selectExpr(
+        "doc_id", f"{TOKS} AS toks"
+    )
+    scratch = tempfile.mkdtemp(prefix="mrc_bandidx_")
+    try:
+        path = f"{scratch}/band_index"
+        minhash.bands(minhash.signatures(old_docs)).write.mode("overwrite").parquet(path)
+        yield docs, spark.read.parquet(path)
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
 
 
 _BAND_INDEX_ORACLE = f"""
@@ -256,7 +214,7 @@ def dedup_band_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     write. This is the maintenance job behind dedup_incremental_
     persisted: production keeps this table up to date (append new
     docs' bands after each ingest) so an incremental run never re-pays
-    the corpus-wide shingle+minhash CPU (VERDICT r4 #4).
+    the corpus-wide shingle+minhash CPU.
 
     Scale shape: the index is 4 rows x ~30 bytes per document
     regardless of text size; the build is the standard single-shuffle
@@ -264,21 +222,7 @@ def dedup_band_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     upstream shuffle produced. At 100 TB, bucket the table by
     (band_id, sig) at write time so incremental probes co-partition
     with zero index-side shuffle."""
-    import shutil
-    import tempfile
-
-    t = load_tables(spark, sf_dir)
-    old_docs = (
-        spread(t["documents"])
-        .filter(F.col("doc_id") % _INCR_NEW_MOD != 0)
-        .selectExpr("doc_id", f"{TOKS} AS toks")
-    )
-    scratch = tempfile.mkdtemp(prefix="mrc_bandidx_")
-    try:
-        minhash.bands(minhash.signatures(old_docs)).write.mode("overwrite").parquet(
-            f"{scratch}/band_index"
-        )
-        idx = spark.read.parquet(f"{scratch}/band_index")
+    with _persisted_band_index(spark, sf_dir) as (_, idx):
         buckets = idx.groupBy("band_id", "sig").agg(F.count("*").alias("bw"))
         row = buckets.agg(
             F.sum("bw").cast("bigint").alias("n_index_rows"),
@@ -291,18 +235,14 @@ def dedup_band_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select("n_docs_indexed", "n_index_rows", "n_buckets", "max_bucket_width")
         # Materialize the 1-row summary BEFORE dropping the scratch dir
         # (the lazy plan reads the written index).
-        collected = row.collect()
-        return spark.createDataFrame(collected, row.schema)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+        return spark.createDataFrame(row.collect(), row.schema)
 
 
 @register("dedup_incremental_persisted", oracle=_INCR_MINHASH_ORACLE)
 @expanding
 def dedup_incremental_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental near-dedup against a PERSISTED band index — the
-    two-step production path dedup_incremental_minhash's docstring
-    promises (VERDICT r4 #4): step 1 writes the existing corpus's band
+    two-step production path: step 1 writes the existing corpus's band
     index to parquet (dedup_band_index_build's artifact); step 2 runs
     the new batch (doc_id % 10 == 0) against the index READ FROM DISK,
     paying shingle+minhash CPU only for the new documents. Bucket
@@ -310,42 +250,23 @@ def dedup_incremental_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     new-batch rows RESTRICTED to buckets a new document touches
     (left-semi on the new batch's signatures), so untouched buckets —
     the overwhelming majority at scale — are never widened or
-    windowed. Output is provably identical to dedup_incremental_
-    minhash (same oracle; tests/test_llm_pipeline.py asserts frame
-    equality), because touched buckets have identical membership
-    either way.
+    windowed. Output equals dedup_incremental_minhash's (same oracle;
+    tests/test_round5_ops.py::test_persisted_incremental_equals_one_shot
+    asserts frame equality), because touched buckets have identical
+    membership either way.
 
     Scale shape: per-run cost = new-batch signature CPU + one
     co-partitionable semi-join against the index + a window over
     touched-bucket rows only. The index read is a column-pruned
     parquet scan; at 100 TB the table is bucketed by (band_id, sig)
     so the probe join is shuffle-free on the index side."""
-    import shutil
-    import tempfile
-
-    t = load_tables(spark, sf_dir)
-    docs = spread(t["documents"])
-    scratch = tempfile.mkdtemp(prefix="mrc_incrpers_")
-    try:
-        # Step 1 — the maintenance write (old corpus only).
-        old_docs = docs.filter(F.col("doc_id") % _INCR_NEW_MOD != 0).selectExpr(
-            "doc_id", f"{TOKS} AS toks"
-        )
-        minhash.bands(minhash.signatures(old_docs)).write.mode("overwrite").parquet(
-            f"{scratch}/band_index"
-        )
-
-        # Step 2 — incremental run: new-batch signatures vs the index.
-        idx = spark.read.parquet(f"{scratch}/band_index")
+    with _persisted_band_index(spark, sf_dir) as (docs, idx):
         new_docs = docs.filter(F.col("doc_id") % _INCR_NEW_MOD == 0).selectExpr(
             "doc_id", f"{TOKS} AS toks"
         )
-        out = _incremental_vs_index(idx, new_docs)
-        # Eager checkpoint: the returned plan must not reference the
-        # scratch index once it is deleted below.
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+        # Eager: the returned plan must not read the scratch index,
+        # which is deleted on return.
+        return materialize(_incremental_vs_index(idx, new_docs))
 
 
 def _touched_bucket_rows(idx: DataFrame, new_bands: DataFrame) -> DataFrame:
@@ -355,56 +276,22 @@ def _touched_bucket_rows(idx: DataFrame, new_bands: DataFrame) -> DataFrame:
     the plan gate can assert the LeftSemi below the checkpoint
     boundary (tests/test_plans.py)."""
     touched = new_bands.select("band_id", "sig").distinct()
-    tagged = idx.withColumn("is_new", F.lit(False)).unionByName(
-        new_bands.withColumn("is_new", F.lit(True))
-    )
-    return tagged.join(touched, ["band_id", "sig"], "left_semi")
+    return idx.unionByName(new_bands).join(touched, ["band_id", "sig"], "left_semi")
 
 
 def _incremental_vs_index(idx: DataFrame, new_docs: DataFrame) -> DataFrame:
     """The per-ingest incremental stage: compute band signatures for
     the NEW docs only, restrict the persisted index to touched
     buckets, recompute bucket stats over index ∪ new rows there, and
-    emit (new_id, match_id) with the star guard. Per-run cost tracks
-    the BATCH size times bucket occupancy, never the corpus size
-    (measured in BASELINE.md round 5). `new_docs`
-    rows must be disjoint from the indexed docs (a doc is old xor
-    new)."""
-    # big=True on the corpus-proportional frames below (round 7
-    # fourth-decade audit): narrow-but-corpus-sized checkpoints in
-    # default memory blocks are the measured OOM family (flagship
-    # per_doc, components dn/classes); storage level never changes
-    # values, only residency.
+    match the new docs against that match index (llm/minhash.py).
+    Per-run cost tracks the BATCH size times bucket occupancy, never
+    the corpus size (measured in BASELINE.md round 5). `new_docs` rows
+    must be disjoint from the indexed docs (a doc is old xor new)."""
+    # Read three times (touched keys, union, new side); big=True as
+    # the batch is corpus-proportional (here corpus/10).
     new_bands = materialize(minhash.bands(minhash.signatures(new_docs)), big=True)
-    wb = Window.partitionBy("band_id", "sig")
-    banded = materialize(
-        _touched_bucket_rows(idx, new_bands).select(
-            "doc_id",
-            "band_id",
-            "sig",
-            "is_new",
-            F.count("*").over(wb).alias("bw"),
-            F.min("doc_id").over(wb).alias("rep"),
-        ),
-        big=True,  # touched-bucket rows track the batch, which here is corpus/10
-    )
-    new_small = banded.filter(
-        F.col("is_new") & (F.col("bw") <= MAX_BUCKET)
-    ).select(F.col("doc_id").alias("new_id"), "band_id", "sig")
-    matches = (
-        new_small.join(
-            banded.select(F.col("doc_id").alias("match_id"), "band_id", "sig"),
-            ["band_id", "sig"],
-        )
-        .filter(F.col("new_id") != F.col("match_id"))
-        .select("new_id", "match_id")
-    )
-    star = banded.filter(
-        F.col("is_new")
-        & (F.col("bw") > MAX_BUCKET)
-        & (F.col("doc_id") != F.col("rep"))
-    ).select(F.col("doc_id").alias("new_id"), F.col("rep").alias("match_id"))
-    return matches.unionByName(star).distinct()
+    banded = minhash.bucket_stats(_touched_bucket_rows(idx, new_bands))
+    return minhash.matches(new_bands, minhash.match_index(banded)).distinct()
 
 
 def _collapsed_neardup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -622,7 +509,7 @@ _SHINGLE_SETS_DUCK = f"""
 """
 
 _LSH_VERIFIED_ORACLE = f"""
-    WITH cand AS (SELECT doc_a, doc_b FROM ({_MINHASH_ORACLE})),
+    WITH cand AS (SELECT doc_a, doc_b FROM ({minhash.pairs_duck()})),
     hs AS ({_SHINGLE_SETS_DUCK}),
     pairs AS (
       SELECT c.doc_a, c.doc_b,
@@ -648,17 +535,17 @@ def dedup_lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted-index join (dedup_ngram_jaccard enumerates globally; at
     100 TB you generate candidates with LSH — 4.1x/decade measured —
     then verify each with one bounded intersection). Scoring happens
-    IN-BUCKET (VERDICT r4 #3): each doc's hashed shingle set rides the
-    band exchange once per band — 4x corpus arrays, never pairs x
-    arrays — pairs are formed by the bucket-local self-join and
-    intersected in-row before any further exchange, and the star
-    guard's representative arrays arrive via a window first_value with
-    no join. The previous pair-keyed array joins shuffled 8 GB and
-    needed a 16g heap at the 100x sweep because the replicated corpus
-    is candidate-bound (25.7M true pairs); this shape's exchanges are
-    corpus-propotional (arrays) + candidate-proportional (narrow
-    scored rows only). Emits candidates whose true 3-token-shingle
-    Jaccard >= 0.5."""
+    IN-BUCKET (_scored_candidate_pairs): each doc's hashed shingle set
+    rides the band exchange once per band — 4x corpus arrays, never
+    pairs x arrays — each small bucket's pairs are intersected in-row
+    before any further exchange, and an oversized bucket's star pairs
+    get the representative's arrays from a shuffle-hash join against
+    the tiny `reps` frame (one row per oversized bucket). The previous
+    pair-keyed array joins shuffled 8 GB and needed a 16g heap at the
+    100x sweep because the replicated corpus is candidate-bound (25.7M
+    true pairs); this shape's exchanges are corpus-proportional
+    (arrays) + candidate-proportional (narrow scored rows only). Emits
+    candidates whose true 3-token-shingle Jaccard >= 0.5."""
     scored = _scored_candidate_pairs(spark, sf_dir)
     jac = F.col("n_common").cast("double") / (F.col("na") + F.col("nb") - F.col("n_common"))
     return (
@@ -675,10 +562,10 @@ def _scored_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     across bands); scores are pure per-pair functions of the docs'
     full shingle sets and signatures.
 
-    Plan shape (VERDICT r4 #3): no pair-keyed join, no global
-    distinct. Each doc's struct carries its hashed shingle set, its
-    8-minhash signature vector, AND its four per-band bucket widths +
-    representatives (one narrow pre-pass); each SMALL bucket is
+    Plan shape: no pair-keyed join, no global distinct. Each doc's
+    struct carries its hashed shingle set, its 8-minhash signature
+    vector, AND its four per-band bucket widths + representatives (one
+    narrow pre-pass); each SMALL bucket is
     collected into one sorted array row. A pair is emitted ONLY from
     its MINIMAL GENERATING BAND — for any two co-bucketed docs the
     emission test is in-row decidable: band b' generates the pair iff
@@ -697,8 +584,8 @@ def _scored_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-bucket self-join 6.1 GB; exploded (doc, shingle) join 24.6 GB
     in one stage. Bucket memory is bounded even for arbitrarily large
     exact-dup clusters: oversized buckets are never collected — their
-    star pairs stream through a window over the same bucket key with
-    two member payloads per row (ADVICE r5)."""
+    star pairs stream through the shuffle-hash join against `reps`
+    with two member payloads per row."""
     t = load_tables(spark, sf_dir)
     docs = spread(t["documents"]).selectExpr("doc_id", f"{TOKS} AS toks")
     def score(a: str) -> str:
@@ -970,7 +857,7 @@ _RECALL_SAMPLE_DUCK = "substr(md5(text), 1, 1) < '8'"
 _DEDUP_RECALL_ORACLE = f"""
     WITH sdocs AS (SELECT * FROM documents WHERE {_RECALL_SAMPLE_DUCK}),
     truth AS (SELECT doc_a, doc_b FROM ({_jaccard_oracle("sdocs")})),
-    cand AS (SELECT doc_a, doc_b FROM ({_minhash_oracle("sdocs")})),
+    cand AS (SELECT doc_a, doc_b FROM ({minhash.pairs_duck("sdocs")})),
     hit AS (
       SELECT t.doc_a, t.doc_b FROM truth t
       JOIN cand c ON c.doc_a = t.doc_a AND c.doc_b = t.doc_b
@@ -1067,7 +954,7 @@ def dedup_candidate_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _MH_EST_ORACLE = f"""
-    WITH cand AS (SELECT doc_a, doc_b FROM ({_MINHASH_ORACLE})),
+    WITH cand AS (SELECT doc_a, doc_b FROM ({minhash.pairs_duck()})),
     {minhash.bands_duck(prefix="e_")},
     hs AS ({_SHINGLE_SETS_DUCK}),
     pairs AS (
@@ -1104,18 +991,17 @@ def minhash_estimate_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity at 100 TB, where exact verification of every pair is
     unaffordable.
 
-    Scale shape: the fused in-bucket scorer (_banded_sets /
-    _scored_candidate_pairs — VERDICT r4 #3): arrays and signatures
-    come out of ONE map-side-partial aggregation, ride the band
-    exchange once per (doc, band), and every pair is scored inside its
-    bucket with only narrow (doc_a, doc_b, ints) rows reaching the
-    distinct — exchanges are corpus-proportional, never pairs x
-    arrays. The previous pair-keyed array joins measured 9.7 GB
-    shuffle / a 16g heap at the candidate-bound 100x sweep; the
-    exploded (doc, shingle) join variant before THAT measured 24.6 GB
-    in one stage / 14.4x per decade. Star-edge pairs from oversized
-    buckets are scored like any other candidate (representative
-    payloads via window first_value, no join)."""
+    Scale shape: the fused in-bucket scorer (_scored_candidate_pairs):
+    in-row shingle sets and signatures ride the band exchange once per
+    (doc, band), and every pair is scored inside its bucket, emitted
+    once from its minimal generating band — exchanges are
+    corpus-proportional, never pairs x arrays. The previous pair-keyed
+    array joins measured 9.7 GB shuffle / a 16g heap at the
+    candidate-bound 100x sweep; the exploded (doc, shingle) join
+    variant before THAT measured 24.6 GB in one stage / 14.4x per
+    decade. Star-edge pairs from oversized buckets are scored like any
+    other candidate (the representative's payload comes from a
+    shuffle-hash join against the tiny `reps` frame)."""
     pairs = _scored_candidate_pairs(spark, sf_dir)
     jac = F.col("n_common").cast("double") / (F.col("na") + F.col("nb") - F.col("n_common"))
     return pairs.select(
@@ -1128,7 +1014,7 @@ def minhash_estimate_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _COMPONENTS_ORACLE = f"""
-    WITH RECURSIVE pairs AS ({_MINHASH_ORACLE}),
+    WITH RECURSIVE pairs AS ({minhash.pairs_duck()}),
     edges AS (
       SELECT doc_a AS u, doc_b AS v FROM pairs
       UNION
@@ -1992,7 +1878,7 @@ def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_neardup_keeper",
     oracle=f"""
-    WITH RECURSIVE pairs AS ({_MINHASH_ORACLE}),
+    WITH RECURSIVE pairs AS ({minhash.pairs_duck()}),
     edges AS (
       SELECT doc_a AS u, doc_b AS v FROM pairs
       UNION

@@ -36,7 +36,6 @@ from mapreducecore_spark.llm.curation import (
     split_case,
 )
 from mapreducecore_spark.llm.minhash import (
-    MAX_BUCKET,
     TOKS,
     TOKS_DUCK,
     hash60,
@@ -100,11 +99,10 @@ def decontam_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter("size(toks) >= 5")
         .selectExpr("doc_id", f"explode({shingles(5)}) AS shingle")
     )
-    # Shingle once, read twice. Eager (round 12): this frame feeds a
-    # broadcast side AND the big side of the same query — exactly the
-    # lazy-checkpoint/AQE lock-order deadlock shape _util.materialize's
-    # docstring documents; materializing on the calling thread closes it.
-    sh = sh.localCheckpoint(eager=True)
+    # Shingle once, read twice. This frame feeds a broadcast side AND
+    # the big side of the same query — the lazy-checkpoint/AQE
+    # lock-order deadlock shape materialize() (always eager) closes.
+    sh = materialize(sh)
     bench = sh.filter(_BENCH_PRED).select("shingle").distinct()
     corpus = sh.filter(f"NOT ({_BENCH_PRED})")
     n_sh = corpus.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
@@ -1583,18 +1581,7 @@ def _ingest_incr_oracle() -> str:
     from mapreducecore_spark.queries.curation import _dsir_oracle_xt
 
     return f"""
-    WITH {minhash.bands_duck(banded=True)},
-    incr AS (
-      SELECT DISTINCT new_id, match_id FROM (
-        SELECT n.doc_id AS new_id, b.doc_id AS match_id
-        FROM banded n JOIN banded b
-          ON n.band_id = b.band_id AND n.sig = b.sig AND n.doc_id <> b.doc_id
-        WHERE n.doc_id % 10 = 0 AND n.bw <= {MAX_BUCKET}
-        UNION ALL
-        SELECT doc_id AS new_id, rep AS match_id FROM banded
-        WHERE doc_id % 10 = 0 AND bw > {MAX_BUCKET} AND doc_id <> rep
-      )
-    ),
+    WITH incr AS ({minhash.matches_duck(new="documents WHERE doc_id % 10 = 0")}),
     near AS (
       SELECT DISTINCT new_id AS doc_id FROM incr
       WHERE match_id % 10 <> 0 OR match_id < new_id

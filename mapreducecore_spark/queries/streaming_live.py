@@ -20,10 +20,11 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreducecore_spark.catalog import tune_session
+from mapreducecore_spark.catalog import load_tables, tune_session
 from mapreducecore_spark.llm import minhash
-from mapreducecore_spark.llm.minhash import MAX_BUCKET, TOKS
+from mapreducecore_spark.llm.minhash import TOKS
 from mapreducecore_spark.queries import register
+from mapreducecore_spark.queries._util import materialize, spread
 
 def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming read of the driver's events table. The file source
@@ -360,7 +361,6 @@ def stream_live_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame
     contract the memory-sink entries can't test. Scratch dirs are
     per-call tempdirs (test plumbing; production points out_dir at the
     lake path and keeps the same checkpoint across runs)."""
-    from mapreducecore_spark.queries._util import materialize
     from mapreducecore_spark.streaming.sinks import idempotent_parquet_sink
 
     ev = _event_stream(spark, sf_dir).select("event_id", "event_type", "value")
@@ -407,7 +407,6 @@ def stream_live_enrich_static(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch join+GROUP BY; stream-equals-batch through a stream-static
     join is the property under test (streaming/windows.py
     enrich_with_static)."""
-    from mapreducecore_spark.catalog import load_tables
     from mapreducecore_spark.streaming.windows import enrich_with_static
 
     dim = load_tables(spark, sf_dir)["customer"].select(
@@ -579,9 +578,6 @@ def stream_live_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         versioned_merge_sink,
     )
 
-    from mapreducecore_spark.catalog import load_tables
-    from mapreducecore_spark.queries._util import materialize
-
     tmp = _stream_scratch("mrc_cdc_merge_", _src_bytes(sf_dir, "events.parquet"))
     try:
         # Re-lay the backlog as 4 files (ts already normalized by the
@@ -683,21 +679,28 @@ def stream_live_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _drain(out, spark, in_bytes=_src_bytes(sf_dir, "documents.parquet"))
 
 
-def _incr_stream_oracle() -> str:
-    return f"""
-    WITH {minhash.bands_duck("documents WHERE doc_id % 10 <> 0", "o_", banded=True)},
-    idx AS (
-      SELECT DISTINCT band_id, sig,
-             CASE WHEN bw <= {MAX_BUCKET} THEN doc_id ELSE rep END AS match_id
-      FROM o_banded
-    ),
-    {minhash.bands_duck("documents WHERE doc_id % 10 = 0", "n_")}
-    SELECT DISTINCT n.doc_id AS new_id, i.match_id
-    FROM n_bands n JOIN idx i USING (band_id, sig)
-    """
+_INCR_STREAM_ORACLE = minhash.matches_duck(
+    "documents WHERE doc_id % 10 <> 0", "documents WHERE doc_id % 10 = 0"
+)
 
 
-@register("stream_live_incremental_dedup", oracle=_incr_stream_oracle())
+def _old_match_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The LSH match index (llm/minhash.py) of the existing corpus
+    (doc_id % 10 != 0), materialized: a stream-static join re-plans
+    and re-executes its static side every micro-batch, which re-ran
+    the whole shingle/minhash/band pipeline per batch. Eager, so the
+    index job runs (and is charged) before the stream starts;
+    big=True as the index is corpus-sized."""
+    old_docs = (
+        spread(load_tables(spark, sf_dir)["documents"])
+        .filter(F.col("doc_id") % 10 != 0)
+        .selectExpr("doc_id", f"{TOKS} AS toks")
+    )
+    banded = minhash.bucket_stats(minhash.bands(minhash.signatures(old_docs)))
+    return materialize(minhash.match_index(banded), big=True)
+
+
+@register("stream_live_incremental_dedup", oracle=_INCR_STREAM_ORACLE)
 def stream_live_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING incremental near-dedup — the live form of
     dedup_incremental_minhash: new documents (doc_id % 10 == 0) arrive
@@ -707,36 +710,18 @@ def stream_live_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     the shingle array — no explode/groupBy, so computing 8 minhashes
     per document is stateless, shuffle-free expression work inside the
     micro-batch); the only stateful operator is the pair
-    dropDuplicates. The static index pre-collapses oversized buckets
-    to their representative (the star guard's index form), so a
-    degenerate bucket contributes ONE index row instead of thousands
-    of join partners.
+    dropDuplicates. The static index keeps only the representative of
+    an oversized bucket (the core's match index), so a degenerate
+    bucket contributes ONE index row instead of thousands of join
+    partners.
 
     100 TB shape: the index is (band_id, sig, match_id) — broadcast at
     test scale, a co-partitioned shuffle join on a real cluster; dedup
     state is one (new_id, match_id) entry per emitted pair, swapped
     for dropDuplicatesWithinWatermark on an unbounded feed. Batch
     equivalence (the oracle) is exact, including the bucket guard."""
-    from mapreducecore_spark.catalog import load_tables
-    from mapreducecore_spark.queries._util import spread
-    from mapreducecore_spark.queries.llm import _minhash_banded
-
     tune_session(spark)
-    old_docs = (
-        spread(load_tables(spark, sf_dir)["documents"])
-        .filter(F.col("doc_id") % 10 != 0)
-        .selectExpr("doc_id", f"{TOKS} AS toks")
-    )
-    idx = (
-        _minhash_banded(old_docs)
-        .selectExpr(
-            "band_id",
-            "sig",
-            f"CASE WHEN bw <= {MAX_BUCKET} THEN doc_id ELSE rep END AS match_id",
-        )
-        .distinct()
-    )
-
+    idx = _old_match_index(spark, sf_dir)
     schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
     stream = (
         spark.readStream.schema(schema)
@@ -747,12 +732,7 @@ def stream_live_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
         .selectExpr("doc_id", f"{TOKS} AS toks")
     )
     sigs = minhash.hashes(stream).select("doc_id", minhash.inrow_signatures().alias("mhs"))
-    bands = minhash.bands(sigs).withColumnRenamed("doc_id", "new_id")
-    out = (
-        bands.join(idx, ["band_id", "sig"])
-        .select("new_id", "match_id")
-        .dropDuplicates(["new_id", "match_id"])
-    )
+    out = minhash.matches(minhash.bands(sigs), idx).dropDuplicates(["new_id", "match_id"])
     return _drain(out, spark, mode="append", in_bytes=_src_bytes(sf_dir, "documents.parquet"))
 
 
@@ -762,49 +742,23 @@ def _incremental_dedup_stream(
     """The watermarked incremental-dedup streaming frame (shared by the
     registry entry below and the bounded-state test): 4 sequential
     ingest files with a synthetic hour-apart ingest_ts per file, in-row
-    minhash signatures, stream-static join against the pre-collapsed
-    band index, and pair dedup via dropDuplicatesWithinWatermark so
-    pair state is EVICTED once the watermark passes (VERDICT r4 #6)."""
-    from mapreducecore_spark.catalog import load_tables
-    from mapreducecore_spark.queries.llm import _minhash_banded
-    from mapreducecore_spark.queries._util import materialize, spread
-
+    minhash signatures, stream-static join against the old corpus's
+    match index, and pair dedup via dropDuplicatesWithinWatermark so
+    pair state is EVICTED once the watermark passes."""
     tune_session(spark)
     docs = load_tables(spark, sf_dir)["documents"]
-    old_docs = (
-        spread(docs)
-        .filter(F.col("doc_id") % 10 != 0)
-        .selectExpr("doc_id", f"{TOKS} AS toks")
-    )
-    # materialize (round 12, guide §1.2): a stream-STATIC join re-plans
-    # AND re-executes the static side every micro-batch — this drain
-    # runs 4 batches (4 hour-apart ingest files), so the whole
-    # shingle/minhash/band pipeline over 90% of the corpus ran FOUR
-    # times. Checkpointing the compact (band_id, sig, match_id) index
-    # once makes batches 2-4 read materialized blocks instead; eager so
-    # the index job finishes before the stream starts (and is charged
-    # visibly, not inside batch 1). Rows identical — the oracle and the
-    # eviction test (numRowsRemoved > 0) pin both output and semantics.
-    idx = materialize(
-        _minhash_banded(old_docs)
-        .selectExpr(
-            "band_id",
-            "sig",
-            f"CASE WHEN bw <= {MAX_BUCKET} THEN doc_id ELSE rep END AS match_id",
-        )
-        .distinct()
-    )
+    idx = _old_match_index(spark, sf_dir)
 
     # Re-lay the new batch as 4 sequential files, each stamped with an
     # ingest_ts one hour after the previous — a compressed stand-in for
     # an unbounded feed where ingest time advances monotonically, so
     # the watermark actually moves and state actually expires.
     #
-    # ONE job, not four (round 12, guide §1.2): the old per-batch loop
-    # ran 4 sequential repartition(1)+write jobs (~0.8 s of the wm
-    # drain's profile was these jobs plus their scheduling gaps). A
-    # single partitionBy("grp") write of one task lays out the same 4
-    # files in one job. The file source replays files in MODIFICATION-
+    # ONE job, not four: a per-batch loop ran 4 sequential
+    # repartition(1)+write jobs (~0.8 s of the wm drain's profile was
+    # these jobs plus their scheduling gaps). A single
+    # partitionBy("grp") write of one task lays out the same 4 files in
+    # one job. The file source replays files in MODIFICATION-
     # TIME order (FileStreamSource sorts by timestamp), which the old
     # sequential writes guaranteed implicitly; one job writes all 4
     # within the same clock tick, so the order the watermark semantics
@@ -851,20 +805,18 @@ def _incremental_dedup_stream(
     sigs = minhash.hashes(stream, "ingest_ts").select(
         "doc_id", "ingest_ts", minhash.inrow_signatures().alias("mhs")
     )
-    bands = minhash.bands(sigs, "ingest_ts").withColumnRenamed("doc_id", "new_id")
     return (
-        bands.join(idx, ["band_id", "sig"])
-        .select("new_id", "match_id", "ingest_ts")
+        minhash.matches(minhash.bands(sigs, "ingest_ts"), idx)
         .dropDuplicatesWithinWatermark(["new_id", "match_id"])
         .select("new_id", "match_id")
     )
 
 
-@register("stream_live_incremental_dedup_wm", oracle=_incr_stream_oracle())
+@register("stream_live_incremental_dedup_wm", oracle=_INCR_STREAM_ORACLE)
 def stream_live_incremental_dedup_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming incremental near-dedup with WATERMARK-BOUNDED state —
-    the unbounded-feed form of stream_live_incremental_dedup (VERDICT
-    r4 #6): identical stream-static band-index join, but pair dedup
+    the unbounded-feed form of stream_live_incremental_dedup:
+    identical stream-static band-index join, but pair dedup
     uses dropDuplicatesWithinWatermark(new_id, match_id) over a
     30-minute watermark on ingest time, so a pair's state row is
     dropped once the watermark passes its ingest_ts + delay instead of

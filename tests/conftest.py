@@ -122,3 +122,38 @@ def curation_dir(sf_dir, tmp_path_factory) -> str:
         shutil.copy(f"{sf_dir}/{name}.parquet", root / f"{name}.parquet")
     _curation_documents().to_parquet(root / "documents.parquet", index=False)
     return str(root)
+
+
+def _lsh_star_documents() -> list[tuple[int, str]]:
+    """(doc_id, text) rows on both sides of the LSH star guard
+    (llm/minhash.py MAX_BUCKET = 200). Each cluster is byte-identical
+    text, so its docs share one bucket in every band; the batch is
+    doc_id % 10 == 0, as in the incremental queries.
+    - 1000..1200: 201 docs, guarded; its rep 1000 is a batch doc.
+    - 2000..2199: exactly 200 docs, not guarded; rep 2000 is a batch doc.
+    - 3001..3223: 201 corpus docs (+22 batch), guarded also in an index
+      built from the corpus docs alone (the streaming queries').
+    - 4001..4222: exactly 200 corpus docs (+22 batch), guarded over all
+      docs but not in a corpus-only index.
+    - a near-dup pair across batch and corpus (5000, 5001) that shares
+      a band, and a batch doc with fewer than 3 tokens (5010)."""
+
+    def cluster(word: str, ids: range) -> list[tuple[int, str]]:
+        return [(i, " ".join(f"{word}{k}" for k in range(8))) for i in ids]
+
+    return (
+        cluster("wide", range(1000, 1201))
+        + cluster("edge", range(2000, 2200))
+        + cluster("olds", range(3001, 3224))
+        + cluster("oldf", range(4001, 4223))
+        + [
+            (5000, "near one two three four five six seven"),
+            (5001, "near one two three four five six eight"),
+            (5010, "too short"),
+        ]
+    )
+
+
+@pytest.fixture(scope="session")
+def lsh_docs() -> list[tuple[int, str]]:
+    return _lsh_star_documents()

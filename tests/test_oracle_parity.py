@@ -23,7 +23,7 @@ NO_ORACLE_QUERIES = sorted(n for n, s in REGISTRY.items() if s.oracle is None)
 EMPTY_ORACLES = {
     "corpus_curation_pipeline_v2": "tests/test_crafted_curation.py",
     "corpus_curation_pipeline_v3": "tests/test_crafted_curation.py",
-    "join_left_anti": "open",
+    "join_left_anti": "tests/test_crafted_relational.py",
     "q20_potential_promotion": "open",
     "q22_global_sales_opportunity": "open",
     "q2_min_cost_supplier": "open",

@@ -4,7 +4,9 @@ persist + reliable checkpoint() into a durable directory (VERDICT r6
 #6). The whole MinHash-LSH dedup flagship — the heaviest materialize()
 user (band index, bucket stats, pair branches) — must produce the
 identical pair set in both modes, and the reliable run must actually
-write checkpoint data to the directory.
+write checkpoint data to the directory. dedup_incremental_persisted
+returns a checkpoint itself, so under the knob the frame it returns
+must read a reliable checkpoint file, not executor blocks.
 """
 
 from __future__ import annotations
@@ -40,3 +42,23 @@ def test_dedup_flagship_under_reliable_checkpoint(spark, tmp_path, monkeypatch):
         for f in files
     ]
     assert written, "reliable mode wrote no checkpoint data"
+
+
+def _rdd_dirs(ckpt):
+    return [
+        d for _, dirs, _ in os.walk(ckpt) for d in dirs if d.startswith("rdd-")
+    ]
+
+
+def test_incremental_persisted_under_reliable_checkpoint(spark, tmp_path, monkeypatch):
+    name = "dedup_incremental_persisted"
+    local_mode = sorted(tuple(r) for r in REGISTRY[name].fn(spark, SF).collect())
+    ckpt = str(tmp_path / "reliable_ckpt")
+    monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", ckpt)
+    out = REGISTRY[name].fn(spark, SF)
+    assert sorted(tuple(r) for r in out.collect()) == local_mode and local_mode
+    assert _rdd_dirs(ckpt), "reliable mode wrote no rdd-* checkpoint dirs"
+    # The returned frame is the query's final checkpoint: a LogicalRDD
+    # whose RDD has a reliable checkpoint file (localCheckpoint has none).
+    rdd = out._jdf.queryExecution().analyzed().rdd()
+    assert rdd.getCheckpointFile().isDefined(), "the final checkpoint is local"

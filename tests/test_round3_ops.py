@@ -107,6 +107,46 @@ def test_minhash_star_guard_bounds_giant_dup_cluster(spark, tmp_path):
     assert comp[500] == comp[501] == 500
 
 
+@pytest.fixture(scope="module")
+def lsh_sf(tmp_path_factory, lsh_docs):
+    return _write_sf_dir(tmp_path_factory.mktemp("lsh_star_sf"), lsh_docs)
+
+
+# Each batch doc's matches on conftest's _lsh_star_documents: a set is
+# the exact match set (a guarded bucket's rep), an int its size.
+_ALL_DOCS_INDEX = {1000: set(), 1010: {1000}, 2010: 199, 3010: {3001}, 4010: {4001}, 5000: {5001}}
+_CORPUS_INDEX = {1000: 180, 1010: 180, 2010: 180, 3010: {3001}, 4010: 200, 5000: {5001}}
+
+
+@pytest.mark.parametrize(
+    "name, partners",
+    [
+        ("dedup_incremental_minhash", _ALL_DOCS_INDEX),
+        ("dedup_incremental_persisted", _ALL_DOCS_INDEX),
+        ("corpus_ingest_incremental", None),
+        ("stream_live_incremental_dedup", _CORPUS_INDEX),
+        ("stream_live_incremental_dedup_wm", _CORPUS_INDEX),
+    ],
+)
+def test_incremental_star_guard_on_rows(name, partners, spark, lsh_sf):
+    """The incremental near-dup queries on exact-dup clusters of 201
+    docs (guarded: a batch doc matches the bucket's rep only) and of
+    exactly 200 (not guarded: every other member), over all docs and
+    over a corpus-only index: Spark equals DuckDB, and the rows land on
+    the side of the guard the bucket width puts them."""
+    rows, cols = _assert_oracle_parity(name, spark, lsh_sf)
+    assert rows, name
+    if partners is None:
+        return
+    got: dict[int, set[int]] = {}
+    for r in rows:
+        got.setdefault(r[cols.index("new_id")], set()).add(r[cols.index("match_id")])
+    assert 5010 not in got  # fewer than 3 tokens: no bands
+    for new_id, want in partners.items():
+        have = got.get(new_id, set())
+        assert (have if isinstance(want, set) else len(have)) == want, (name, new_id)
+
+
 def test_jaccard_guards_hot_shingles_and_exact_dup_collapse(spark, tmp_path):
     """Three guards in one corpus: (a) 140 docs share six common tokens
     (3 shingles with df=140 > cap 128) — uncapped that is 9,730 pairs

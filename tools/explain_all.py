@@ -26,6 +26,7 @@ SHOWN = [
     "topk_per_group",
     "orderby_limit_multikey",
     "dedup_minhash_lsh",
+    "dedup_incremental_minhash",
     "ann_ivf_coarse",
     "tfidf_top_terms",
     "decontam_ngram_overlap",
