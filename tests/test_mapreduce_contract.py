@@ -33,6 +33,7 @@ from mapreducecore_spark.mapreduce import (
     _grouped_reduce,
     _lines,
     _map_partition,
+    _part_writer,
     _route,
     _shard_lines,
     _shards,
@@ -147,8 +148,8 @@ def test_null_lines_never_reach_the_mapper(spark):
 
 
 def test_text_sink_is_byte_identical_across_blocks(spark, tmp_path):
-    """run_job writes its lines in newline-joined blocks; each part file
-    still equals, byte for byte, one "key value\\n" per partition_id == i
+    """run_job's reduce tasks write their lines in newline-joined blocks;
+    each part file equals, byte for byte, one "key value\\n" per partition_id == i
     row of run_mapreduce, across several blocks in one partition, and an
     empty partition gives an empty file."""
     r, empty = 3, 2
@@ -550,6 +551,131 @@ def test_empty_inputs_give_r_empty_part_files(spark, tmp_path):
     files = sorted(out_dir.glob("part-*"))
     assert len(files) == 3
     assert [f.stat().st_size for f in files] == [0, 0, 0]
+
+
+def test_run_job_leaves_only_the_part_files(spark, tmp_path):
+    """Like the reference's workers, the job leaves exactly R files
+    named part-00000 ... part-<R-1>: no ``_SUCCESS``, no ``.crc`` and
+    no attempt's hidden file."""
+    src = tmp_path / "in.txt"
+    src.write_text("a b c\nb c d\n" * 50, encoding="utf-8")
+    register_tasks("only_parts_wordcount", wordcount_mapper, wordcount_reducer)
+    out_dir = tmp_path / "job"
+    run_job(spark, [str(src)], "only_parts_wordcount", str(out_dir), n_outputs=3)
+    assert sorted(os.listdir(out_dir)) == ["part-00000", "part-00001", "part-00002"]
+    got = dict(ln.split(" ") for f in out_dir.iterdir() for ln in f.read_text().splitlines())
+    assert got == {"a": "50", "b": "100", "c": "100", "d": "50"}
+
+
+def test_run_job_refuses_an_existing_output_dir(spark, tmp_path):
+    """An existing ``output_dir`` raises before any Spark job runs and
+    keeps its contents; the same call into a new dir does run a job in
+    the group, so the empty group is not vacuous."""
+    src = tmp_path / "in.txt"
+    src.write_text("a b\n", encoding="utf-8")
+    register_tasks("existing_dir_wordcount", wordcount_mapper, wordcount_reducer)
+    out_dir = tmp_path / "job"
+    out_dir.mkdir()
+    (out_dir / "part-00000").write_text("keep me\n")
+    sc = spark.sparkContext
+    group = f"existing-dir-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "run_job into an existing dir")
+    try:
+        with pytest.raises(FileExistsError):
+            run_job(spark, [str(src)], "existing_dir_wordcount", str(out_dir), n_outputs=2)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        run_job(spark, [str(src)], "existing_dir_wordcount", str(tmp_path / "new"), n_outputs=2)
+        assert sc.statusTracker().getJobIdsForGroup(group) != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert os.listdir(out_dir) == ["part-00000"]
+    assert (out_dir / "part-00000").read_text() == "keep me\n"
+
+
+def test_run_job_removes_its_output_dir_when_a_reducer_fails(spark, tmp_path):
+    """A reducer that raises on one key fails the job, and the dir the
+    job made is gone."""
+
+    def failing_reducer(key, values):
+        if key == "boom":
+            raise ValueError("reducer failed on purpose")
+        yield key, str(len(values))
+
+    src = tmp_path / "in.txt"
+    src.write_text("".join(f"w{i} boom\n" for i in range(200)), encoding="utf-8")
+    register_tasks("failing_reducer", wordcount_mapper, failing_reducer)
+    out_dir = tmp_path / "job"
+    with pytest.raises(Exception, match="reducer failed on purpose"):
+        run_job(spark, [str(src)], "failing_reducer", str(out_dir), n_outputs=4)
+    assert os.listdir(tmp_path) == ["in.txt"]
+
+
+class _Attempt:
+    """A task context that only knows its attempt id."""
+
+    def __init__(self, attempt: int):
+        self.attempt = attempt
+
+    def taskAttemptId(self) -> int:
+        return self.attempt
+
+
+def test_part_writer_attempts_each_replace_a_whole_file(tmp_path, monkeypatch):
+    """No Spark: three attempts of one reduce task, each checked while
+    it is mid-file. The first leaves no part file yet; during a retry
+    the first's whole file is still there; a speculative copy that
+    runs to its end inside the third attempt leaves a whole file that
+    stays whole. After each, one complete part file and no hidden one."""
+    from pyspark import TaskContext
+
+    pairs = [(f"k{i:04d}", str(i)) for i in range(3 * _BLOCK_LINES)]
+    want = "".join(f"{k} {v}\n" for k, v in pairs)
+    write = _part_writer(str(tmp_path))
+    part = tmp_path / "part-00003"
+
+    def whole() -> bool:
+        return part.read_text(encoding="utf-8") == want
+
+    def speculative_copy() -> bool:
+        monkeypatch.setattr(TaskContext, "_taskContext", _Attempt(4))
+        write(3, iter(pairs))
+        return whole()
+
+    checks = [lambda: not part.exists(), whole, speculative_copy]
+    for attempt, check in enumerate(checks, 1):
+        seen = []
+
+        def midway():
+            for n, pair in enumerate(pairs):
+                if n == 2 * _BLOCK_LINES:
+                    seen.append(check())
+                yield pair
+
+        monkeypatch.setattr(TaskContext, "_taskContext", _Attempt(attempt))
+        assert write(3, midway()) == []
+        assert seen == [True], attempt
+        assert os.listdir(tmp_path) == ["part-00003"]
+        assert whole()
+
+
+def test_part_writer_leaves_nothing_when_its_input_fails(tmp_path, monkeypatch):
+    """No Spark: an attempt whose input raises midway leaves no part
+    file and no hidden file; another index's part file is untouched."""
+    from pyspark import TaskContext
+
+    monkeypatch.setattr(TaskContext, "_taskContext", _Attempt(9))
+    (tmp_path / "part-00000").write_text("done\n")
+
+    def failing_input():
+        for i in range(2 * _BLOCK_LINES):
+            yield f"k{i}", "v"
+        raise RuntimeError("input failed on purpose")
+
+    with pytest.raises(RuntimeError, match="input failed on purpose"):
+        _part_writer(str(tmp_path))(1, failing_input())
+    assert os.listdir(tmp_path) == ["part-00000"]
+    assert (tmp_path / "part-00000").read_text() == "done\n"
 
 
 def test_pyspark_still_invalidates_import_caches_per_task():

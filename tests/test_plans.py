@@ -9,7 +9,9 @@ partial-aggregated map-side, codegen covering the hot path.
 from __future__ import annotations
 
 import contextlib
+import importlib.util
 import io
+import os
 
 import pytest
 
@@ -644,3 +646,30 @@ def test_curation_v3_shares_v2_plan_shape(spark, sf_dir):
     assert "CartesianProduct" not in plan
     assert plan.count("HashAggregate") >= 4
     assert "WindowGroupLimit" in plan_of(_gate_dedup_cap(spark, sf_dir), "simple")
+
+
+def test_explain_all_prints_a_stable_plan():
+    """No Spark: the two forms a Python-made RDD's call site takes in a
+    plan print alike in PLANS.md, the session's counters (attribute ids,
+    RDD ids, plan ids) print the same whatever ran before, equal ids stay
+    equal, and nothing else is touched."""
+    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools", "explain_all.py")
+    spec = importlib.util.spec_from_file_location("explain_all", path)
+    tool = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tool)
+    plan = (
+        "Arguments: [doc_id#{a}L, shingle#{b}L], MapPartitionsRDD[{r}] at localCheckpoint at {site}:0\n"
+        "Arguments: hashpartitioning(shingle#{b}L, 256), ENSURE_REQUIREMENTS, [plan_id={p}]"
+    )
+    want = (
+        "Arguments: [doc_id#1L, shingle#2L], MapPartitionsRDD[1] at localCheckpoint\n"
+        "Arguments: hashpartitioning(shingle#2L, 256), ENSURE_REQUIREMENTS, [plan_id=1]"
+    )
+    runs = [
+        dict(a=43, b=1573, r=339, p=4698, site="NativeMethodAccessorImpl.java"),
+        dict(a=43, b=1576, r=343, p=4688, site="<unknown>"),
+    ]
+    for run in runs:
+        assert tool.stable_plan(plan.format(**run)) == want
+    kept = "(3) Scan ExistingRDD\nLocation: InMemoryFileIndex [file:/data/at <unknown>.parquet]"
+    assert tool.stable_plan(kept) == kept

@@ -13,6 +13,7 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -73,6 +74,32 @@ SHOWN = [
 ]
 
 
+# Parts of a printed plan that differ from run to run of one tree. An RDD's
+# call site from Python reads ``<op> at NativeMethodAccessorImpl.java:0`` or
+# ``<op> at <unknown>:0`` depending on how the JVM dispatched that call. An
+# attribute's ``#id``, an RDD's ``[id]`` and an exchange's ``plan_id`` count
+# everything the session has built, which earlier queries move (adaptive
+# re-planning, iterations run to convergence).
+_PY4J_CALL_SITE = re.compile(r"\b(\w+) at (?:NativeMethodAccessorImpl\.java|<unknown>):0\b")
+_SESSION_COUNTERS = (
+    re.compile(r"(?<=#)\d+"),
+    re.compile(r"(?<=RDD\[)\d+(?=\])"),
+    re.compile(r"(?<=\[plan_id=)\d+(?=\])"),
+)
+
+
+def stable_plan(plan: str) -> str:
+    """``plan`` with each Python-made RDD's call site cut to its operation
+    (``localCheckpoint``) and each session counter renumbered 1, 2, ... in
+    order of first appearance, so one tree always gives the same PLANS.md
+    and equal ids stay equal."""
+    plan = _PY4J_CALL_SITE.sub(r"\1", plan)
+    for counter in _SESSION_COUNTERS:
+        ids: dict[str, int] = {}
+        plan = counter.sub(lambda m: str(ids.setdefault(m.group(), len(ids) + 1)), plan)
+    return plan
+
+
 def main() -> None:
     from mapreducecore_spark.queries import REGISTRY, _load_all
     from mapreducecore_spark.session import default_master, get_spark
@@ -96,7 +123,7 @@ def main() -> None:
             df.explain("formatted")
         out.append(f"## {name}\n")
         out.append("```")
-        out.append(buf.getvalue().rstrip())
+        out.append(stable_plan(buf.getvalue().rstrip()))
         out.append("```")
         out.append("")
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
